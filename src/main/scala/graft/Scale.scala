@@ -786,8 +786,6 @@ object Scale {
         f"quadratic would be ${edgeFactor * edgeFactor}%.0fx)")
     }
 
-    // ---- planted-entropy perceptual-blocking probe (m09/m11) ----
-    graft.tools.PerceptualBlockingProbe.run(spark, Seq(100000L, 400000L))
     spark.stop()
   }
 }

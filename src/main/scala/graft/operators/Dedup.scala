@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
+import graft.sources.{BucketedStore, Tables}
 import graft.functions.fnv64
 import graft.functions.simhash64
 
@@ -483,16 +483,6 @@ object Dedup {
       .filter(col("jaccard") >= jaccardMin)
   }
 
-  /** Materialize the corpus signature store that makes incremental
-    * dedup cost ∝ batch size: the band table keyed by a single
-    * `skey = xxhash64(band, bkey)` and the per-doc shingle sets for
-    * the verify stage, both written as BUCKETED+SORTED tables. Every
-    * subsequent batch join then reads the store with ZERO exchange on
-    * the store side — only the (small) batch shuffles. skey folding
-    * band into one column is what lets the store bucket on one key;
-    * cross-band skey collisions can only ADD candidates, and the
-    * exact-jaccard verify removes them.
-    */
   /** (bands keyed by skey, per-doc shingle sets) for a document set —
     * the two frames a signature store holds. */
   private def storeFrames(documents: DataFrame): (DataFrame, DataFrame) = {
@@ -502,10 +492,22 @@ object Dedup {
     (bands, cd)
   }
 
+  private def signatureTables(name: String) = Seq(s"${name}_bands", s"${name}_shingles")
+
+  /** Materialize the corpus signature store that makes incremental
+    * dedup cost ∝ batch size: the band table keyed by a single
+    * `skey = xxhash64(band, bkey)` and the per-doc shingle sets for
+    * the verify stage, both [[BucketedStore]] tables. Every subsequent
+    * batch join then reads the store with ZERO exchange on the store
+    * side — only the (small) batch shuffles. skey folding band into
+    * one column is what lets the store bucket on one key; cross-band
+    * skey collisions can only ADD candidates, and the exact-jaccard
+    * verify removes them.
+    */
   def writeSignatureStore(corpus: DataFrame, name: String, buckets: Int = 8): Unit = {
     val (bands, cd) = storeFrames(corpus)
-    graft.sources.Sinks.writeBucketed(bands, s"${name}_bands", buckets, "skey")
-    graft.sources.Sinks.writeBucketed(cd, s"${name}_shingles", buckets, "doc_id")
+    BucketedStore.create(bands, s"${name}_bands", buckets, "skey")
+    BucketedStore.create(cd, s"${name}_shingles", buckets, "doc_id")
     // a full rebuild is a NEW store generation: the suppression-list
     // contract ("a retired id stays dead") is scoped to one
     // generation — carrying the previous generation's tombstones
@@ -515,180 +517,47 @@ object Dedup {
   }
 
   /** RETIRE documents from a signature store (takedown / TTL / GDPR):
-    * append their ids to the KB tombstone table. Deletion is LAZY —
-    * the same economics as the label store's remap: no store rewrite
-    * here, every read anti-joins the tombstone set (broadcast — zero
-    * store-side exchange — up to the [[tombstoneBroadcastMax]] byte
-    * ceiling, shuffle-hash beyond it), and [[compactSignatureStore]] drops
-    * the rows physically at the next maintenance pass. The tombstone
-    * table is retained after compaction as a SUPPRESSION LIST: a
-    * retired id stays dead — crash-replayed batches cannot re-append
-    * its signatures and it never classifies as a match again (ids are
+    * [[BucketedStore.delete]]'s lazy tombstones — every read anti-joins
+    * them, [[compactSignatureStore]] drops the rows physically, and the
+    * tombstone table survives as a SUPPRESSION LIST: a retired id
+    * stays dead, so crash-replayed batches cannot re-append its
+    * signatures and it never classifies as a match again (ids are
     * immutable per the store contract, so suppression-by-id is safe).
     * Labels retire with the same tombstones ([[clusterLabels]] filters
     * them; [[compactLabelStore]] drops them physically).
     */
   def deleteFromSignatureStore(spark: SparkSession, name: String,
-      ids: DataFrame): Unit = {
-    import org.apache.spark.sql.SaveMode
-    graft.sources.Sinks.clearOrphanLocation(spark, s"${name}_tombstones")
-    ids.select(col("doc_id").cast("bigint")).coalesce(1)
-      .write.mode(SaveMode.Append).format("parquet")
-      .saveAsTable(s"${name}_tombstones")
-  }
-
-  /** The store's tombstoned ids, if any deletion has ever happened. */
-  private def tombstoneIds(spark: SparkSession, name: String): Option[DataFrame] =
-    if (spark.catalog.tableExists(s"${name}_tombstones"))
-      Some(spark.table(s"${name}_tombstones")) else None
-
-  /** TOMBSTONE BROADCAST CEILING — the size contract of lazy deletion.
-    * A tombstone set up to this many bytes (sidecar parquet size, a
-    * pure filesystem listing — no job) ships as a broadcast anti-join:
-    * zero added exchange, the claim the store docs make. BEYOND the
-    * ceiling (a whole-source takedown — think one crawl domain
-    * retired — can produce tombstone sets far past any broadcast
-    * threshold) reads fall back to a SHUFFLE-HASH anti-join: the
-    * tombstone side builds the hash table, the store side streams, at
-    * the cost of one exchange of each — correctness never depends on
-    * the set fitting in driver/executor memory. Reclaim the read-side
-    * cost by compacting (rows drop physically; the sidecar survives as
-    * a suppression list, so a store that retired a large fraction of
-    * itself pays the shuffle until its ids age out of the contract).
-    * Tunable per session via `graft.tombstone.broadcastMaxBytes`
-    * (specs set 0 to force the fallback path). */
-  private[operators] def tombstoneBroadcastMax(spark: SparkSession): Long =
-    spark.conf.getOption("graft.tombstone.broadcastMaxBytes")
-      .map(_.toLong).getOrElse(8L << 20)
-
-  /** `df` minus tombstoned docs — a broadcast anti-join on the KB
-    * tombstone set when it is under [[tombstoneBroadcastMax]], a
-    * shuffle-hash anti-join beyond it, or `df` unchanged when nothing
-    * was ever deleted (no plan change for stores that never delete). */
-  private[operators] def dropTombstoned(spark: SparkSession, name: String,
-      df: DataFrame, idCol: String): DataFrame =
-    tombstoneIds(spark, name).fold(df) { t =>
-      val tt = t.select(col("doc_id").as(idCol))
-      val bytes = tableDataFiles(spark, s"${name}_tombstones").map(_.getLen).sum
-      if (bytes <= tombstoneBroadcastMax(spark))
-        df.join(broadcast(tt), Seq(idCol), "left_anti")
-      else df.join(tt.hint("shuffle_hash"), Seq(idCol), "left_anti")
-    }
+      ids: DataFrame): Unit =
+    BucketedStore.delete(spark, name, ids)
 
   /** APPEND a batch's bands+shingles to an existing signature store —
     * the store-maintenance half of the production loop (classify →
     * append uniques → next batch sees them), with no overwrite and no
-    * rebuild. Append-mode saveAsTable validates the bucket spec
-    * against the catalog and writes one more file per bucket: reads
+    * rebuild. Each append lands at most one file per bucket: reads
     * stay bucketed (zero store-side exchange; with >1 file per bucket
-    * the join adds a per-bucket sort, never a shuffle). Compact
-    * per-bucket files periodically if append cadence is high.
+    * the join adds a per-bucket sort, never a shuffle). Compact on
+    * cadence ([[maybeCompactSignatureStore]]).
     */
   def appendToSignatureStore(batch: DataFrame, name: String): Unit = {
-    import org.apache.spark.sql.SaveMode
-    // the store's own bucket count, from the catalog — append-mode
-    // saveAsTable rejects a mismatched spec, so don't make callers
-    // re-supply what the table already knows
-    val buckets = {
-      val rows = batch.sparkSession.sql(s"DESCRIBE TABLE EXTENDED ${name}_bands").collect()
-      rows.find(_.getString(0) == "Num Buckets").map(_.getString(1).trim.toInt)
-        .getOrElse(sys.error(s"${name}_bands is not a bucketed signature store"))
-    }
     val (bands, cd) = storeFrames(batch)
-    bands.write.mode(SaveMode.Append)
-      .bucketBy(buckets, "skey").sortBy("skey")
-      .format("parquet").saveAsTable(s"${name}_bands")
-    cd.write.mode(SaveMode.Append)
-      .bucketBy(buckets, "doc_id").sortBy("doc_id")
-      .format("parquet").saveAsTable(s"${name}_shingles")
+    BucketedStore.append(bands, s"${name}_bands")
+    BucketedStore.append(cd, s"${name}_shingles")
   }
 
-  /** Compact a signature store in place: every append lands one more
-    * file per bucket, and once buckets span many files the store-side
-    * merge join pays a per-bucket sort (never a shuffle — but sorts
-    * cost too). Rewriting each table through a bucketed temp table +
-    * catalog rename restores one-sorted-file-per-bucket. Run on the
-    * maintenance cadence appends warrant; readers started mid-swap see
-    * the old or new table atomically per-name (the rename pair is not
-    * one transaction — schedule in the ingest's quiet window, or move
-    * to a transactional table format for concurrent readers).
-    */
+  /** Compact a signature store in place back to one sorted file per
+    * bucket, tombstoned docs dropped physically (reads have been
+    * filtering them since the delete) — [[BucketedStore.compact]]. */
   def compactSignatureStore(spark: SparkSession, name: String): Unit =
-    Seq(s"${name}_bands" -> "skey", s"${name}_shingles" -> "doc_id")
-      .foreach { case (table, key) => compactStoreTable(spark, name, table, key) }
-
-  /** The per-table half of [[compactSignatureStore]], shared with the
-    * perceptual fingerprint store ([[MediaDedup]]): bucketed rewrite
-    * through a temp table + catalog rename, tombstones dropped
-    * physically. `name` scopes the tombstone suppression list. */
-  private[operators] def compactStoreTable(spark: SparkSession, name: String,
-      table: String, key: String): Unit = {
-        val buckets = {
-          val rows = spark.sql(s"DESCRIBE TABLE EXTENDED $table").collect()
-          rows.find(_.getString(0) == "Num Buckets").map(_.getString(1).trim.toInt)
-            .getOrElse(sys.error(s"$table is not a bucketed signature store"))
-        }
-        // the write reads the OLD table and lands in the temp table's
-        // own location — saveAsTable is an action, so the read
-        // completes before the catalog swap below. Repartition on the
-        // writer's own bucket-id EXPRESSION (pmod(murmur3(key), n) —
-        // the id the filename suffix carries): equal ids must land in
-        // one task whatever partition indexing the shuffle uses, so
-        // each bucket's rows are written by exactly one task → exactly
-        // one sorted file per bucket. (Repartitioning on the raw key
-        // column does NOT guarantee task↔bucket alignment — observed
-        // on Spark 4: same-bucket keys split across tasks, re-mixing
-        // files.) One maintenance shuffle of the store, the price of
-        // the rewrite.
-        // tombstoned docs drop out PHYSICALLY here (reads have been
-        // filtering them since the delete; this reclaims the bytes).
-        // The tombstone table itself survives as a suppression list —
-        // a retired id must stay dead under crash-replayed appends.
-        graft.sources.Sinks.writeBucketed(
-          dropTombstoned(spark, name, spark.table(table), "doc_id")
-            .repartition(buckets, pmod(hash(col(key)), lit(buckets))),
-          s"${table}_compact", buckets, key)
-        spark.sql(s"DROP TABLE $table")
-        spark.sql(s"ALTER TABLE ${table}_compact RENAME TO $table")
-  }
+    signatureTables(name).foreach(BucketedStore.compact(spark, _, name))
 
   /** Compaction CADENCE policy: compact the signature store only when
-    * some table's files-per-bucket exceed `maxFilesPerBucket` (every
-    * append lands one more file per bucket, so this is the append
-    * count since the last compact). Returns whether it compacted —
-    * the streaming loops call this per micro-batch and the threshold
-    * turns "compact periodically" into a self-triggering invariant:
-    * bounded read amplification with compaction cost amortized over
-    * exactly the appends that caused it.
-    */
+    * some table's deepest bucket holds more than `maxFilesPerBucket`
+    * files — [[BucketedStore.maybeCompact]]. Returns whether it
+    * compacted. */
   def maybeCompactSignatureStore(spark: SparkSession, name: String,
-      maxFilesPerBucket: Int): Boolean = {
-    require(maxFilesPerBucket >= 1, s"need maxFilesPerBucket >= 1, got $maxFilesPerBucket")
-    val buckets = bucketsOf(spark, s"${name}_bands")
-    val worst = Seq(s"${name}_bands", s"${name}_shingles")
-      .map(t => tableFileCount(spark, t)).max
-    if (worst > buckets.toLong * maxFilesPerBucket) {
-      compactSignatureStore(spark, name); true
-    } else false
-  }
-
-  /** Data-file statuses under a catalog table's location. A KB-sized
-    * listing — never reads the files. */
-  private[graft] def tableDataFiles(spark: SparkSession,
-      table: String): Array[org.apache.hadoop.fs.FileStatus] = {
-    val loc = spark.sql(s"DESCRIBE TABLE EXTENDED $table").collect()
-      .find(_.getString(0) == "Location").map(_.getString(1))
-      .getOrElse(sys.error(s"no location for $table"))
-    val p = new org.apache.hadoop.fs.Path(loc)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(p).filter(_.getPath.getName.endsWith(".parquet"))
-  }
-
-  /** Data-file count under a catalog table's location (each bucketed
-    * append adds one file per bucket, so count/buckets is the append
-    * depth). */
-  private[graft] def tableFileCount(spark: SparkSession, table: String): Long =
-    tableDataFiles(spark, table).length.toLong
+      maxFilesPerBucket: Int): Boolean =
+    BucketedStore.maybeCompact(spark, signatureTables(name), maxFilesPerBucket)(
+      compactSignatureStore(spark, name))
 
   /** One production ingest step: classify `batch` against the store
     * (near-dup at `jaccardMin` → the smallest matching corpus id),
@@ -717,20 +586,19 @@ object Dedup {
         when(col("match_id").isNotNull, "near").otherwise("unique").as("status"),
         coalesce(col("match_id"), lit(-1L)).as("match_id"))
       .transform(Cut(_))
-    val uniques = batch.join(
-      classified.filter(col("status") === "unique").select("doc_id"), "doc_id")
-    // append-side dedup: a retried batch whose append landed before
-    // the crash must not land its signatures twice — anti-join against
-    // the store's own ids (bucketed by doc_id: zero store-side
-    // exchange, only the batch-sized left side shuffles). Tombstoned
-    // ids are suppressed too: a retired doc must not resurrect via a
-    // crash-replayed batch after compaction dropped its rows.
-    val fresh = dropTombstoned(spark, name, uniques.join(
-      spark.table(s"${name}_shingles").select("doc_id"), Seq("doc_id"), "left_anti"),
-      "doc_id")
-    appendToSignatureStore(fresh, name)
+    appendUniqueSignatures(spark, name, batch.join(
+      classified.filter(col("status") === "unique").select("doc_id"), "doc_id"))
     classified
   }
+
+  /** Append the batch's unique docs the store does not hold yet —
+    * [[BucketedStore.unseen]]: a retried batch whose append landed
+    * before the crash must not land its signatures twice, and a retired
+    * doc must not resurrect after compaction dropped its rows. */
+  private def appendUniqueSignatures(spark: SparkSession, name: String,
+      uniques: DataFrame): Unit =
+    appendToSignatureStore(
+      BucketedStore.unseen(spark, uniques, s"${name}_shingles", name), name)
 
   /** [[minhashPairsAgainst]] against a materialized signature store
     * (see [[writeSignatureStore]]): the corpus is never re-shingled,
@@ -743,7 +611,7 @@ object Dedup {
     val bb = minhashBands(bd)
       .select(col("doc_id").as("batch_id"),
         xxhash64(col("band"), col("bkey")).as("skey"))
-    val cb = dropTombstoned(spark, name, spark.table(s"${name}_bands"), "doc_id")
+    val cb = BucketedStore.read(spark, s"${name}_bands", name)
       .select(col("doc_id").as("corpus_id"), col("skey"))
     // corpus_id =!= batch_id: a retried micro-batch whose signatures
     // were already appended (crash between result write and append)
@@ -756,7 +624,7 @@ object Dedup {
       .filter(col("corpus_id") =!= col("batch_id"))
       .select(col("batch_id"), col("corpus_id")).distinct()
     val a = bd.select(col("doc_id").as("batch_id"), col("sh").as("sh_a"))
-    val c = dropTombstoned(spark, name, spark.table(s"${name}_shingles"), "doc_id")
+    val c = BucketedStore.read(spark, s"${name}_shingles", name)
       .select(col("doc_id").as("corpus_id"), col("sh").as("sh_b"))
     cands.join(a, "batch_id").join(c, "corpus_id")
       .select(col("batch_id"), col("corpus_id"),
@@ -766,12 +634,14 @@ object Dedup {
 
   // -------------------------------------------------------------------
   // Incremental cluster labels: connected-component ids maintained
-  // batch-by-batch ALONGSIDE the signature store, so near-dup cluster
-  // resolution (d07) never needs a full corpus rerun. Layout mirrors
-  // the store's append/compact economics:
+  // batch-by-batch ALONGSIDE a pair-producing store (signature,
+  // fingerprint, video or ER blocks), so cluster resolution never
+  // needs a full corpus rerun. Layout mirrors the store's
+  // append/compact economics; `key` is the label key column (doc_id,
+  // or rkey for ER):
   //
-  //   `${name}_labels` — (doc_id, root) appended per batch, the root
-  //     resolved AT APPEND TIME; bucketed by doc_id.
+  //   `${name}_labels` — (key, root) appended per batch, the root
+  //     resolved AT APPEND TIME; a BucketedStore table on key.
   //   `${name}_remap`  — (old_root, new_root), broadcast-sized: the
   //     lazy half of a union-find. When a batch doc bridges two
   //     existing clusters nobody rewrites the big labels table — the
@@ -786,16 +656,23 @@ object Dedup {
   // collide and one hop always fully resolves.
   // -------------------------------------------------------------------
 
-  private[operators] def emptyRemap(spark: SparkSession): DataFrame = {
+  private def writeRemap(name: String, remap: DataFrame): Unit =
+    remap.write.mode(org.apache.spark.sql.SaveMode.Overwrite).format("parquet")
+      .saveAsTable(s"${name}_remap")
+
+  private def emptyRemap(spark: SparkSession): DataFrame = {
     import spark.implicits._
     Seq.empty[(Long, Long)].toDF("old_root", "new_root")
   }
 
-  /** Bucket count of an existing bucketed table, from the catalog. */
-  private[graft] def bucketsOf(spark: SparkSession, table: String): Int = {
-    val rows = spark.sql(s"DESCRIBE TABLE EXTENDED $table").collect()
-    rows.find(_.getString(0) == "Num Buckets").map(_.getString(1).trim.toInt)
-      .getOrElse(sys.error(s"$table is not a bucketed table"))
+  /** Land a label store's initial (key, root) rows and an empty remap —
+    * the one label-store creation every labeled store shares. */
+  private[operators] def createLabelStore(labels: DataFrame, name: String,
+      buckets: Int, key: String = "doc_id"): Unit = {
+    val spark = labels.sparkSession
+    BucketedStore.create(labels, s"${name}_labels", buckets, key)
+    graft.sources.Sinks.clearOrphanLocation(spark, s"${name}_remap")
+    writeRemap(name, emptyRemap(spark))
   }
 
   /** Initialize the label store for a corpus: one d07 connected-
@@ -806,8 +683,6 @@ object Dedup {
     */
   def writeLabelStore(corpus: DataFrame, name: String, jaccardMin: Double,
       buckets: Int = 8): Unit = {
-    import org.apache.spark.sql.SaveMode
-    val spark = corpus.sparkSession
     // bounded closure (r19): pair sets under the 100k ceiling run the
     // one-collect driver union-find; larger corpora fall through to
     // the distributed fixpoint unchanged (labels proven identical)
@@ -816,27 +691,23 @@ object Dedup {
     val labels = corpus.select(col("doc_id"))
       .join(cc, col("doc_id") === col("id"), "left")
       .select(col("doc_id"), coalesce(col("lab"), col("doc_id")).as("root"))
-    graft.sources.Sinks.writeBucketed(labels, s"${name}_labels", buckets, "doc_id")
-    graft.sources.Sinks.clearOrphanLocation(spark, s"${name}_remap")
-    emptyRemap(spark).write.mode(SaveMode.Overwrite).format("parquet")
-      .saveAsTable(s"${name}_remap")
+    createLabelStore(labels, name, buckets)
   }
 
-  /** Current (doc_id, root) assignment: the labels table resolved one
+  /** Current (key, root) assignment: the labels table resolved one
     * hop through the broadcast remap — the labels side never shuffles.
     */
-  def clusterLabels(spark: SparkSession, name: String): DataFrame = {
-    // ingest overwrites the remap and appends to the labels, possibly
-    // from a streaming clone session whose writes invalidate only its
-    // OWN relation cache — refresh ours or a cached listing points at
-    // deleted remap files / silently misses appended label files
-    // (same class as Er.entityLabels). Metadata-only calls.
+  def clusterLabels(spark: SparkSession, name: String,
+      key: String = "doc_id"): DataFrame = {
+    // ingest overwrites the remap, possibly from a streaming clone
+    // session whose writes invalidate only its OWN relation cache —
+    // refresh ours or a cached listing points at deleted remap files
+    // (the labels refresh in BucketedStore.read). Metadata-only.
     spark.catalog.refreshTable(s"${name}_remap")
-    spark.catalog.refreshTable(s"${name}_labels")
     val remap = spark.table(s"${name}_remap")
-    dropTombstoned(spark, name, spark.table(s"${name}_labels"), "doc_id")
+    BucketedStore.read(spark, s"${name}_labels", name, key)
       .join(broadcast(remap), col("root") === col("old_root"), "left")
-      .select(col("doc_id"), coalesce(col("new_root"), col("root")).as("root"))
+      .select(col(key), coalesce(col("new_root"), col("root")).as("root"))
   }
 
   /** [[ingestBatch]] + incremental cluster-label maintenance: classify
@@ -858,23 +729,23 @@ object Dedup {
       jaccardMin: Double): DataFrame =
     labeledIngest(spark, name, batch,
       minhashPairsAgainstStore(spark, name, batch, jaccardMin),
-      uniques => appendToSignatureStore(dropTombstoned(spark, name,
-        uniques.join(spark.table(s"${name}_shingles").select("doc_id"),
-          Seq("doc_id"), "left_anti"), "doc_id"), name))
+      appendUniqueSignatures(spark, name, _))
 
   /** The label half of [[ingestBatchLabeled]], parameterized by the
-    * (batch_id, corpus_id) match-pair frame and the store-specific
-    * unique-append — the attach/merge/remap machinery is
-    * pair-source-agnostic, so the MEDIA fingerprint store
-    * ([[MediaDedup.ingestFingerprintBatchLabeled]]) maintains live
-    * cluster ids through this exact code path. */
+    * (batch_id, corpus_id) match-pair frame, the store-specific append
+    * and the label key column — the attach/merge/remap machinery is
+    * pair-source-agnostic, so the MEDIA stores ([[MediaDedup]]) and
+    * the ER store ([[Er.ingestBatch]]) maintain live cluster ids
+    * through this exact code path. `appendStore` receives the batch's
+    * `unique` rows and runs before the labels append, so it still sees
+    * the labels table without this batch. Returns (key, status
+    * near|unique, match_id, cluster_id). */
   private[operators] def labeledIngest(spark: SparkSession, name: String,
-      batch: DataFrame, pairs: DataFrame,
-      appendUniques: DataFrame => Unit): DataFrame = {
-    import org.apache.spark.sql.SaveMode
-    val lab = clusterLabels(spark, name)
+      batch: DataFrame, pairs: DataFrame, appendStore: DataFrame => Unit,
+      key: String = "doc_id"): DataFrame = {
+    val lab = clusterLabels(spark, name, key)
     val matched = pairs
-      .join(lab, pairs("corpus_id") === lab("doc_id"))
+      .join(lab, pairs("corpus_id") === lab(key))
       .select(col("batch_id"), col("corpus_id"), col("root"))
       .transform(Cut(_))
     val attach = matched.groupBy(col("batch_id"))
@@ -901,76 +772,58 @@ object Dedup {
       .select(col("old_root"), coalesce(col("n2"), col("new_root")).as("new_root"))
       .unionAll(remapNew)
       .transform(Cut(_))
-    val labeled = batch.select(col("doc_id"))
-      .join(attach, col("doc_id") === col("batch_id"), "left")
-      .select(col("doc_id"),
+    val labeled = batch.select(col(key))
+      .join(attach, col(key) === col("batch_id"), "left")
+      .select(col(key),
         when(col("match_id").isNotNull, "near").otherwise("unique").as("status"),
         coalesce(col("match_id"), lit(-1L)).as("match_id"),
-        coalesce(col("aroot"), col("doc_id")).as("root0"))
+        coalesce(col("aroot"), col(key)).as("root0"))
       .join(remapNew, col("root0") === col("old_root"), "left")
-      .select(col("doc_id"), col("status"), col("match_id"),
+      .select(col(key), col("status"), col("match_id"),
         coalesce(col("new_root"), col("root0")).as("cluster_id"))
       .transform(Cut(_))
-    // store maintenance, all replay-safe: unique signatures (next
-    // batch dedups against them), batch labels, re-resolved remap
-    val uniques = batch.join(
-      labeled.filter(col("status") === "unique").select("doc_id"), "doc_id")
-    appendUniques(uniques)
-    val freshLabels = dropTombstoned(spark, name, labeled
-      .select(col("doc_id"), col("cluster_id").as("root"))
-      .join(spark.table(s"${name}_labels").select("doc_id"), Seq("doc_id"), "left_anti"),
-      "doc_id")
-    freshLabels.write.mode(SaveMode.Append)
-      .bucketBy(bucketsOf(spark, s"${name}_labels"), "doc_id").sortBy("doc_id")
-      .format("parquet").saveAsTable(s"${name}_labels")
-    remapAll.write.mode(SaveMode.Overwrite).format("parquet")
-      .saveAsTable(s"${name}_remap")
+    // store maintenance, all replay-safe: the store's rows (next
+    // batch matches against them), batch labels, re-resolved remap
+    appendStore(batch.join(
+      labeled.filter(col("status") === "unique").select(key), key))
+    BucketedStore.append(BucketedStore.unseen(spark,
+      labeled.select(col(key), col("cluster_id").as("root")),
+      s"${name}_labels", name, key), s"${name}_labels")
+    writeRemap(name, remapAll)
     labeled
   }
 
-  /** Fold the remap into the labels table (bucketed rewrite, same
-    * task-alignment trick as compactSignatureStore) and empty it —
-    * run on a maintenance cadence to keep the broadcast tiny and the
-    * label reads one-hop. */
-  def compactLabelStore(spark: SparkSession, name: String): Unit = {
-    import org.apache.spark.sql.SaveMode
-    val buckets = bucketsOf(spark, s"${name}_labels")
-    graft.sources.Sinks.writeBucketed(
-      clusterLabels(spark, name)
-        .repartition(buckets, pmod(hash(col("doc_id")), lit(buckets))),
-      s"${name}_labels_compact", buckets, "doc_id")
-    spark.sql(s"DROP TABLE ${name}_labels")
-    spark.sql(s"ALTER TABLE ${name}_labels_compact RENAME TO ${name}_labels")
-    emptyRemap(spark).write.mode(SaveMode.Overwrite).format("parquet")
-      .saveAsTable(s"${name}_remap")
+  /** Fold the remap into the labels table (an aligned
+    * [[BucketedStore.rewrite]]) and empty it — run on a maintenance
+    * cadence to keep the broadcast tiny and the label reads one-hop. */
+  def compactLabelStore(spark: SparkSession, name: String,
+      key: String = "doc_id"): Unit = {
+    BucketedStore.rewrite(spark, s"${name}_labels", clusterLabels(spark, name, key))
+    writeRemap(name, emptyRemap(spark))
   }
 
-  /** Self-triggering compaction cadence for the LABEL store —
-    * [[graft.operators.Er.maybeCompactEntityStore]]'s double trigger
-    * applied here: compact when the labels table's files-per-bucket
-    * exceed `maxFilesPerBucket` (each labeled ingest appends one file
-    * per bucket, so this is the ingest count since the last compact)
-    * OR the remap outgrew `maxRemapRows` (every label read pays the
-    * remap broadcast, so remap growth taxes reads even when file
-    * counts are fine). Returns whether it compacted — the labeled
-    * streaming loops call this per micro-batch in the single writer's
-    * quiet window, turning "compact periodically" into a bounded
-    * invariant: a months-long labeled stream keeps both the file
-    * count and the broadcast size capped. */
-  def maybeCompactLabelStore(spark: SparkSession, name: String,
-      maxFilesPerBucket: Int, maxRemapRows: Long = 100000L): Boolean = {
-    require(maxFilesPerBucket >= 1,
-      s"need maxFilesPerBucket >= 1, got $maxFilesPerBucket")
-    val over = tableFileCount(spark, s"${name}_labels") >
-      bucketsOf(spark, s"${name}_labels").toLong * maxFilesPerBucket
-    // the remap was just overwritten by this session's own ingest, but
-    // refresh anyway: a caller outside the writing (possibly cloned)
-    // session would otherwise count a deleted file listing
+  /** Remap rows — the broadcast every label read pays. Refreshed: a
+    * caller outside the writing (possibly cloned) session would
+    * otherwise count a deleted file listing. */
+  private[operators] def remapRows(spark: SparkSession, name: String): Long = {
     spark.catalog.refreshTable(s"${name}_remap")
-    if (over || spark.table(s"${name}_remap").count() > maxRemapRows) {
-      compactLabelStore(spark, name); true
-    } else false
+    spark.table(s"${name}_remap").count()
   }
+
+  /** Self-triggering compaction cadence for the LABEL store: compact
+    * when the labels table's deepest bucket exceeds `maxFilesPerBucket`
+    * files (each labeled ingest appends at most one file per bucket, so
+    * this is the ingest count since the last compact) OR the remap
+    * outgrew `maxRemapRows` (every label read pays the remap
+    * broadcast, so remap growth taxes reads even when file counts are
+    * fine). Returns whether it compacted — the labeled streaming loops
+    * call this per micro-batch in the single writer's quiet window,
+    * so a months-long labeled stream keeps both the file count and the
+    * broadcast size capped. */
+  def maybeCompactLabelStore(spark: SparkSession, name: String,
+      maxFilesPerBucket: Int, maxRemapRows: Long = 100000L): Boolean =
+    BucketedStore.maybeCompact(spark, Seq(s"${name}_labels"), maxFilesPerBucket,
+      remapRows(spark, name) > maxRemapRows)(compactLabelStore(spark, name))
 
   /** SimHash near-duplicate pairs over (doc_id, text): Manku-style
     * (WWW'07) blocking — split the 64-bit signature into 8 chunks of

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
+import graft.sources.{BucketedStore, Tables}
 
 /** Entity resolution (record linkage): blocked candidate generation,
   * per-field similarity scoring, match classification, transitive
@@ -201,8 +201,6 @@ object Er {
     */
   def writeEntityStore(records: DataFrame, name: String, spec: LinkSpec,
       buckets: Int = 8): Unit = {
-    import org.apache.spark.sql.SaveMode
-    val spark = records.sparkSession
     val matches = candidatePairsMulti(records, spec.keyCol, spec.blockKeys,
       spec.features, spec.keep).filter(spec.isMatch)
     // bounded closure — entityClusters' r19 rationale
@@ -211,41 +209,26 @@ object Er {
     val labels = records.select(col(spec.keyCol).as("rkey"))
       .join(cc, col("rkey") === col("id"), "left")
       .select(col("rkey"), coalesce(col("lab"), col("rkey")).as("root"))
-    graft.sources.Sinks.writeBucketed(blockRows(records, spec),
-      s"${name}_blocks", buckets, "skey")
-    graft.sources.Sinks.writeBucketed(labels, s"${name}_labels", buckets, "rkey")
-    graft.sources.Sinks.clearOrphanLocation(spark, s"${name}_remap")
-    Dedup.emptyRemap(spark).write.mode(SaveMode.Overwrite).format("parquet")
-      .saveAsTable(s"${name}_remap")
+    BucketedStore.create(blockRows(records, spec), s"${name}_blocks", buckets, "skey")
+    Dedup.createLabelStore(labels, name, buckets, "rkey")
   }
 
-  /** Current (rkey, root) entity assignment: the labels table resolved
-    * one hop through the broadcast remap — the labels side never
-    * shuffles ([[Dedup.clusterLabels]]' discipline).
+  /** Current (rkey, root) entity assignment — [[Dedup.clusterLabels]]
+    * keyed on rkey: the labels table resolved one hop through the
+    * broadcast remap, the labels side never shuffles.
     */
-  def entityLabels(spark: SparkSession, name: String): DataFrame = {
-    // every ingest OVERWRITES the remap and APPENDS to the labels,
-    // possibly from a cloned session (streaming foreachBatch) whose
-    // writes invalidate only its own relation cache — refresh ours or
-    // a cached listing points at deleted remap files
-    // (FAILED_READ_FILE) / silently misses appended label files.
-    // Metadata-only calls.
-    spark.catalog.refreshTable(s"${name}_remap")
-    spark.catalog.refreshTable(s"${name}_labels")
-    val remap = spark.table(s"${name}_remap")
-    spark.table(s"${name}_labels")
-      .join(broadcast(remap), col("root") === col("old_root"), "left")
-      .select(col("rkey"), coalesce(col("new_root"), col("root")).as("root"))
-  }
+  def entityLabels(spark: SparkSession, name: String): DataFrame =
+    Dedup.clusterLabels(spark, name, "rkey")
 
   /** One ER production ingest step: block `batch` against the store
     * (zero store-side exchange — the bucketed blocks table IS the
-    * exchange, written once), link with `spec.isMatch`, attach each
-    * matched record to the SMALLEST matched entity root, merge
-    * entities a record bridges (remap rows only — the labels table is
-    * never rewritten), and append the batch's blocks + labels so the
-    * NEXT batch resolves against them too. Returns
-    * (keyCol, status matched|unique, match_id, entity_id).
+    * exchange, written once), link with `spec.isMatch`, then
+    * [[Dedup.labeledIngest]] keyed on rkey: attach each matched record
+    * to the SMALLEST matched entity root, merge entities a record
+    * bridges (remap rows only — the labels table is never rewritten),
+    * and append the batch's blocks + labels so the NEXT batch resolves
+    * against them too. Returns (keyCol, status matched|unique,
+    * match_id, entity_id).
     *
     * Contract mirrors [[Dedup.ingestBatch]]: the store, not the batch,
     * is the frame of reference (intra-batch pairs link on the next
@@ -255,12 +238,11 @@ object Er {
     */
   def ingestBatch(spark: SparkSession, name: String, batch: DataFrame,
       spec: LinkSpec): DataFrame = {
-    import org.apache.spark.sql.SaveMode
     val cols = batch.columns.toSeq
     val bb = blockRows(batch, spec)
       .select(col("skey") +: cols.map(c => col(c).as(s"_a_$c")): _*)
     // projection/rename keeps the store scan bucketed (skey survives)
-    val sbr = spark.table(s"${name}_blocks")
+    val sbr = BucketedStore.read(spark, s"${name}_blocks", name)
       .select(col("skey") +: cols.map(c => col(c).as(s"_b_$c")): _*)
     val feats = spec.features.map { case (n, f) =>
       f((c: String) => col(s"_a_$c"), (c: String) => col(s"_b_$c")).as(n)
@@ -270,111 +252,46 @@ object Er {
       // self-exclusion = replay idempotence: a retried batch whose
       // append landed must not match itself and reclassify
       .filter(col(s"_a_$k") =!= col(s"_b_$k"))
-      .select(col(s"_a_$k").as("b_key") +: col(s"_b_$k").as("s_key") +: feats: _*)
+      .select(col(s"_a_$k").as("batch_id") +: col(s"_b_$k").as("corpus_id") +: feats: _*)
       .filter(spec.keep && spec.isMatch)
-      .dropDuplicates("b_key", "s_key")
-    val lab = entityLabels(spark, name)
-    val matched = pairs.join(lab, pairs("s_key") === lab("rkey"))
-      .select(col("b_key"), col("s_key"), col("root"))
-      .transform(Cut(_))
-    val attach = matched.groupBy(col("b_key"))
-      .agg(min(col("root")).as("aroot"), min(col("s_key")).as("match_id"))
-      .transform(Cut(_))
-    // one batch record matching entities r1 < r2 merges r2 into r1;
-    // closure over the batch-sized merge graph, remap rows only
-    val mergeEdges = matched.join(attach, "b_key")
-      .filter(col("root") =!= col("aroot"))
-      .select(col("aroot").as("id_a"), col("root").as("id_b")).distinct()
-    // bounded closure (Dedup.ingestBatchLabeled's rationale): the
-    // merge graph is batch-bridge-sized, so the driver union-find
-    // replaces the empty-probe + distributed-CC job tail with ONE
-    // collect; past the ceiling it falls back to distributed CC
-    val remapNew = broadcast(
-      Dedup.connectedComponentsBounded(mergeEdges)
-        .filter(col("id") =!= col("lab"))
-        .select(col("id").as("old_root"), col("lab").as("new_root"))
-        .transform(Cut(_)))
-    // old remap rows re-resolve through the new merges; new rows join
-    val remapAll = spark.table(s"${name}_remap")
-      .join(remapNew.select(col("old_root").as("o2"), col("new_root").as("n2")),
-        col("new_root") === col("o2"), "left")
-      .select(col("old_root"), coalesce(col("n2"), col("new_root")).as("new_root"))
-      .unionAll(remapNew)
-      .transform(Cut(_))
-    val labeled = batch.select(col(k).as("rkey"))
-      .join(attach, col("rkey") === col("b_key"), "left")
-      .select(col("rkey"),
-        when(col("match_id").isNotNull, "matched").otherwise("unique").as("status"),
-        coalesce(col("match_id"), lit(-1L)).as("match_id"),
-        coalesce(col("aroot"), col("rkey")).as("root0"))
-      .join(remapNew, col("root0") === col("old_root"), "left")
-      .select(col("rkey"), col("status"), col("match_id"),
-        coalesce(col("new_root"), col("root0")).as("entity_id"))
-      .transform(Cut(_))
-    // append EVERY fresh batch record's blocks and labels (see the
-    // store preamble: matched records stay linkable), replay-safe via
-    // the anti-join on keys the store already holds
-    val fresh = batch.join(
-      spark.table(s"${name}_labels").select(col("rkey").as(k)),
-      Seq(k), "left_anti")
-    blockRows(fresh, spec).write.mode(SaveMode.Append)
-      .bucketBy(Dedup.bucketsOf(spark, s"${name}_blocks"), "skey").sortBy("skey")
-      .format("parquet").saveAsTable(s"${name}_blocks")
-    labeled.join(fresh.select(col(k).as("rkey")), Seq("rkey"))
-      .select(col("rkey"), col("entity_id").as("root"))
-      .write.mode(SaveMode.Append)
-      .bucketBy(Dedup.bucketsOf(spark, s"${name}_labels"), "rkey").sortBy("rkey")
-      .format("parquet").saveAsTable(s"${name}_labels")
-    remapAll.write.mode(SaveMode.Overwrite).format("parquet")
-      .saveAsTable(s"${name}_remap")
-    labeled.withColumnRenamed("rkey", k)
+      .dropDuplicates("batch_id", "corpus_id")
+      .select(col("batch_id"), col("corpus_id"))
+    // append EVERY fresh batch record's blocks, not just the uniques
+    // the fold hands over (see the store preamble: matched records
+    // stay linkable) — replay-safe via the anti-join on keys the
+    // labels table already holds (the fold appends labels after this)
+    val appendBlocks = (_: DataFrame) => BucketedStore.append(blockRows(
+      batch.join(BucketedStore.read(spark, s"${name}_labels", name, "rkey")
+        .select(col("rkey").as(k)), Seq(k), "left_anti"), spec), s"${name}_blocks")
+    Dedup.labeledIngest(spark, name, batch.select(col(k).as("rkey")), pairs,
+        appendBlocks, "rkey")
+      .select(col("rkey").as(k),
+        when(col("status") === "near", "matched").otherwise(col("status")).as("status"),
+        col("match_id"), col("cluster_id").as("entity_id"))
   }
 
   /** Fold the remap into the labels table and re-land one sorted file
-    * per bucket for both store tables (the append/compact economics of
-    * [[Dedup.compactSignatureStore]] / [[Dedup.compactLabelStore]]).
+    * per bucket for both store tables ([[Dedup.compactLabelStore]] +
+    * [[BucketedStore.compact]]).
     */
   def compactEntityStore(spark: SparkSession, name: String): Unit = {
-    import org.apache.spark.sql.SaveMode
-    val lb = Dedup.bucketsOf(spark, s"${name}_labels")
-    graft.sources.Sinks.writeBucketed(
-      entityLabels(spark, name)
-        .repartition(lb, pmod(hash(col("rkey")), lit(lb))),
-      s"${name}_labels_compact", lb, "rkey")
-    spark.sql(s"DROP TABLE ${name}_labels")
-    spark.sql(s"ALTER TABLE ${name}_labels_compact RENAME TO ${name}_labels")
-    val bb = Dedup.bucketsOf(spark, s"${name}_blocks")
-    graft.sources.Sinks.writeBucketed(
-      spark.table(s"${name}_blocks")
-        .repartition(bb, pmod(hash(col("skey")), lit(bb))),
-      s"${name}_blocks_compact", bb, "skey")
-    spark.sql(s"DROP TABLE ${name}_blocks")
-    spark.sql(s"ALTER TABLE ${name}_blocks_compact RENAME TO ${name}_blocks")
-    Dedup.emptyRemap(spark).write.mode(SaveMode.Overwrite).format("parquet")
-      .saveAsTable(s"${name}_remap")
+    Dedup.compactLabelStore(spark, name, "rkey")
+    BucketedStore.compact(spark, s"${name}_blocks", name)
   }
 
-  /** Self-triggering compaction cadence (the signature store's
-    * discipline): compact when any store table's files-per-bucket
-    * exceed `maxFilesPerBucket` (each ingest appends one file per
-    * bucket, so this is the ingest count since the last compact) OR
+  /** Self-triggering compaction cadence ([[BucketedStore.maybeCompact]]):
+    * compact when any store table's deepest bucket exceeds
+    * `maxFilesPerBucket` files (each ingest appends at most one file
+    * per bucket, so this is the ingest count since the last compact) OR
     * the remap outgrew `maxRemapRows` (every read pays the broadcast).
     * Returns whether it compacted — streaming loops call this per
     * micro-batch in the writer's quiet window.
     */
   def maybeCompactEntityStore(spark: SparkSession, name: String,
-      maxFilesPerBucket: Int, maxRemapRows: Long = 100000L): Boolean = {
-    require(maxFilesPerBucket >= 1,
-      s"need maxFilesPerBucket >= 1, got $maxFilesPerBucket")
-    val over = Seq(s"${name}_blocks" -> "skey", s"${name}_labels" -> "rkey")
-      .exists { case (t, _) =>
-        Dedup.tableFileCount(spark, t) >
-          Dedup.bucketsOf(spark, t).toLong * maxFilesPerBucket
-      }
-    if (over || spark.table(s"${name}_remap").count() > maxRemapRows) {
-      compactEntityStore(spark, name); true
-    } else false
-  }
+      maxFilesPerBucket: Int, maxRemapRows: Long = 100000L): Boolean =
+    BucketedStore.maybeCompact(spark, Seq(s"${name}_blocks", s"${name}_labels"),
+      maxFilesPerBucket, Dedup.remapRows(spark, name) > maxRemapRows)(
+      compactEntityStore(spark, name))
 
   // ---------------- entries ----------------
   // (Golden-record election is a one-liner on the clustered frame —

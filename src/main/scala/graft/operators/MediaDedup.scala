@@ -3,13 +3,15 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.BucketedStore
+
 /** Incremental perceptual dedup — d09's signature-store loop at the
   * media layer, so a production media pipeline pays per BATCH, never
   * per corpus: the 64-bit fingerprints (image dHash m08, audio
   * Haitsma–Kalker m10, video frame hashes) live in a bucketed store
   * and each new batch classifies against it with zero store-side
   * exchange, appends its uniques, and rides the shared tombstone +
-  * compaction machinery ([[Dedup]]'s).
+  * compaction machinery ([[BucketedStore]]).
   *
   * Store layout for `name`:
   *   - `${name}_fpblocks` (skey, doc_id, hash_hi, hash_lo) BUCKETED
@@ -22,8 +24,8 @@ import org.apache.spark.sql.functions._
   *   - `${name}_fps` (doc_id, hash_hi, hash_lo) bucketed by doc_id —
   *     the append-side dedup frame (anti-join target for crash
   *     replays) and the media_type-free canonical hash table.
-  *   - `${name}_tombstones` — [[Dedup]]'s suppression list, shared
-  *     verbatim (retire via [[deleteFromFingerprintStore]]).
+  *   - `${name}_tombstones` — the shared suppression list (retire
+  *     via [[deleteFromFingerprintStore]]).
   *   - `${name}_fpdial` — one row recording the blocking scheme. The
   *     scheme is FIXED per store (StoreFold's dial discipline): a
   *     store blocked with 2-of-8 chunk-pair keys probed with 3-chunk
@@ -52,9 +54,9 @@ object MediaDedup {
     * tombstones reset with it (writeSignatureStore's contract). */
   def writeFingerprintStore(spark: SparkSession, name: String,
       fps: DataFrame, maxHamming: Int, buckets: Int = 8): Unit = {
-    graft.sources.Sinks.writeBucketed(
+    BucketedStore.create(
       blocksOf(fps, maxHamming), s"${name}_fpblocks", buckets, "skey")
-    graft.sources.Sinks.writeBucketed(
+    BucketedStore.create(
       fps.select(col("doc_id"), col("hash_hi"), col("hash_lo")),
       s"${name}_fps", buckets, "doc_id")
     graft.sources.Sinks.clearOrphanLocation(spark, s"${name}_fpdial")
@@ -102,8 +104,7 @@ object MediaDedup {
       .select(xxhash64(col("j"), col("bk")).as("skey"),
         col("doc_id").as("batch_id"),
         col("hash_hi").as("bh"), col("hash_lo").as("bl"))
-    val cb = Dedup.dropTombstoned(spark, name,
-        spark.table(s"${name}_fpblocks"), "doc_id")
+    val cb = BucketedStore.read(spark, s"${name}_fpblocks", name)
       .join(broadcast(batch.select(col("doc_id")).distinct()),
         Seq("doc_id"), "left_anti")
       .select(col("skey"), col("doc_id").as("corpus_id"),
@@ -134,12 +135,8 @@ object MediaDedup {
         when(col("match_id").isNotNull, "near").otherwise("unique").as("status"),
         coalesce(col("match_id"), lit(-1L)).as("match_id"))
       .transform(Cut(_))
-    val uniques = batch.join(
-      classified.filter(col("status") === "unique").select("doc_id"), "doc_id")
-    val fresh = Dedup.dropTombstoned(spark, name, uniques.join(
-      spark.table(s"${name}_fps").select("doc_id"), Seq("doc_id"), "left_anti"),
-      "doc_id")
-    appendToFingerprintStore(spark, name, fresh)
+    appendUniqueFingerprints(spark, name, batch.join(
+      classified.filter(col("status") === "unique").select("doc_id"), "doc_id"))
     classified
   }
 
@@ -151,15 +148,17 @@ object MediaDedup {
       batch: DataFrame): Unit = {
     val maxHamming =
       spark.table(s"${name}_fpdial").collect()(0).getAs[Int]("max_hamming")
-    val buckets = Dedup.bucketsOf(spark, s"${name}_fpblocks")
-    blocksOf(batch, maxHamming).write.mode(SaveMode.Append)
-      .bucketBy(buckets, "skey").sortBy("skey")
-      .format("parquet").saveAsTable(s"${name}_fpblocks")
-    batch.select(col("doc_id"), col("hash_hi"), col("hash_lo"))
-      .write.mode(SaveMode.Append)
-      .bucketBy(buckets, "doc_id").sortBy("doc_id")
-      .format("parquet").saveAsTable(s"${name}_fps")
+    BucketedStore.append(blocksOf(batch, maxHamming), s"${name}_fpblocks")
+    BucketedStore.append(batch.select(col("doc_id"), col("hash_hi"), col("hash_lo")),
+      s"${name}_fps")
   }
+
+  /** Append the unique docs the store does not hold yet — the
+    * replay-safe filter of [[BucketedStore.unseen]]. */
+  private def appendUniqueFingerprints(spark: SparkSession, name: String,
+      uniques: DataFrame): Unit =
+    appendToFingerprintStore(spark, name,
+      BucketedStore.unseen(spark, uniques, s"${name}_fps", name))
 
   /** Initialize the cluster-label store for a fingerprint corpus —
     * [[Dedup.writeLabelStore]]'s shape with the hamming join as the
@@ -179,10 +178,7 @@ object MediaDedup {
     val labels = fps.select(col("doc_id"))
       .join(cc, col("doc_id") === col("id"), "left")
       .select(col("doc_id"), coalesce(col("lab"), col("doc_id")).as("root"))
-    graft.sources.Sinks.writeBucketed(labels, s"${name}_labels", buckets, "doc_id")
-    graft.sources.Sinks.clearOrphanLocation(spark, s"${name}_remap")
-    Dedup.emptyRemap(spark).write.mode(SaveMode.Overwrite).format("parquet")
-      .saveAsTable(s"${name}_remap")
+    Dedup.createLabelStore(labels, name, buckets)
   }
 
   /** [[ingestFingerprintBatch]] + incremental cluster-label
@@ -197,37 +193,27 @@ object MediaDedup {
       batch: DataFrame, maxHamming: Int): DataFrame =
     Dedup.labeledIngest(spark, name, batch,
       fingerprintPairsAgainstStore(spark, name, batch, maxHamming),
-      uniques => appendToFingerprintStore(spark, name,
-        Dedup.dropTombstoned(spark, name,
-          uniques.join(spark.table(s"${name}_fps").select("doc_id"),
-            Seq("doc_id"), "left_anti"), "doc_id")))
+      appendUniqueFingerprints(spark, name, _))
 
-  /** Retire fingerprints (takedown / TTL): [[Dedup]]'s lazy tombstone
-    * machinery verbatim — reads anti-join, compaction reclaims. */
+  /** Retire fingerprints (takedown / TTL): the shared lazy tombstones —
+    * reads anti-join, compaction reclaims. */
   def deleteFromFingerprintStore(spark: SparkSession, name: String,
       ids: DataFrame): Unit =
-    Dedup.deleteFromSignatureStore(spark, name, ids)
+    BucketedStore.delete(spark, name, ids)
 
-  /** Bucketed in-place rewrite of both store tables (one sorted file
-    * per bucket restored, tombstoned rows dropped physically) —
-    * [[Dedup.compactStoreTable]]'s swap, fingerprint tables. */
+  private def fingerprintTables(name: String) = Seq(s"${name}_fpblocks", s"${name}_fps")
+
+  /** Rewrite both store tables to one sorted file per bucket,
+    * tombstoned rows dropped physically — [[BucketedStore.compact]]. */
   def compactFingerprintStore(spark: SparkSession, name: String): Unit =
-    Seq(s"${name}_fpblocks" -> "skey", s"${name}_fps" -> "doc_id")
-      .foreach { case (t, k) => Dedup.compactStoreTable(spark, name, t, k) }
+    fingerprintTables(name).foreach(BucketedStore.compact(spark, _, name))
 
-  /** Threshold-triggered compaction — [[Dedup.maybeCompactSignatureStore]]'s
-    * cadence invariant on the fingerprint tables. */
+  /** Threshold-triggered compaction — [[BucketedStore.maybeCompact]]
+    * on the fingerprint tables. */
   def maybeCompactFingerprintStore(spark: SparkSession, name: String,
-      maxFilesPerBucket: Int): Boolean = {
-    require(maxFilesPerBucket >= 1,
-      s"need maxFilesPerBucket >= 1, got $maxFilesPerBucket")
-    val buckets = Dedup.bucketsOf(spark, s"${name}_fpblocks")
-    val worst = Seq(s"${name}_fpblocks", s"${name}_fps")
-      .map(t => Dedup.tableFileCount(spark, t)).max
-    if (worst > buckets.toLong * maxFilesPerBucket) {
-      compactFingerprintStore(spark, name); true
-    } else false
-  }
+      maxFilesPerBucket: Int): Boolean =
+    BucketedStore.maybeCompact(spark, fingerprintTables(name), maxFilesPerBucket)(
+      compactFingerprintStore(spark, name))
 
   // -------------------------------------------------------------------
   // Incremental VIDEO-signature store — the same d09 loop for m12's
@@ -249,7 +235,7 @@ object MediaDedup {
   //     before anything is counted.
   //   - `${name}_vdocs` (doc_id) bucketed by doc_id — the append-side
   //     dedup frame (crash-replay anti-join target).
-  //   - `${name}_tombstones` — [[Dedup]]'s suppression list, shared.
+  //   - `${name}_tombstones` — the shared suppression list.
   //
   // NO dial table: unlike the hamming tiers there is only one blocking
   // layout (the exact 64-bit frame hash), and minShared / maxDf are
@@ -272,8 +258,8 @@ object MediaDedup {
   def writeVideoSignatureStore(spark: SparkSession, name: String,
       frames: DataFrame, buckets: Int = 8): Unit = {
     val sig = vframesOf(frames)
-    graft.sources.Sinks.writeBucketed(sig, s"${name}_vframes", buckets, "fkey")
-    graft.sources.Sinks.writeBucketed(
+    BucketedStore.create(sig, s"${name}_vframes", buckets, "fkey")
+    BucketedStore.create(
       sig.select(col("doc_id")).distinct(), s"${name}_vdocs", buckets, "doc_id")
     spark.sql(s"DROP TABLE IF EXISTS ${name}_tombstones")
   }
@@ -312,8 +298,7 @@ object MediaDedup {
       batch: DataFrame, minShared: Int, maxDf: Int): DataFrame = {
     require(minShared >= 1, s"need minShared >= 1, got $minShared")
     require(maxDf >= 1, s"need maxDf >= 1, got $maxDf")
-    val corpus = Dedup.dropTombstoned(spark, name,
-        spark.table(s"${name}_vframes"), "doc_id")
+    val corpus = BucketedStore.read(spark, s"${name}_vframes", name)
       .join(broadcast(batch.select(col("doc_id")).distinct()),
         Seq("doc_id"), "left_anti")
     val hot = corpus.groupBy(col("fkey"), col("hash_hi"), col("hash_lo"))
@@ -358,11 +343,8 @@ object MediaDedup {
         when(col("match_id").isNotNull, "near").otherwise("unique").as("status"),
         coalesce(col("match_id"), lit(-1L)).as("match_id"))
       .transform(Cut(_))
-    val uniques = batch.join(
-      classified.filter(col("status") === "unique").select("doc_id"), "doc_id")
-    val fresh = Dedup.dropTombstoned(spark, name, uniques.join(
-      spark.table(s"${name}_vdocs"), Seq("doc_id"), "left_anti"), "doc_id")
-    appendVideoSignatures(spark, name, fresh)
+    appendUniqueVideos(spark, name, batch.join(
+      classified.filter(col("status") === "unique").select("doc_id"), "doc_id"))
     classified
   }
 
@@ -372,15 +354,17 @@ object MediaDedup {
     * valve honest as the corpus grows. */
   def appendVideoSignatures(spark: SparkSession, name: String,
       frames: DataFrame): Unit = {
-    val buckets = Dedup.bucketsOf(spark, s"${name}_vframes")
     val sig = vframesOf(frames)
-    sig.write.mode(SaveMode.Append)
-      .bucketBy(buckets, "fkey").sortBy("fkey")
-      .format("parquet").saveAsTable(s"${name}_vframes")
-    sig.select(col("doc_id")).distinct().write.mode(SaveMode.Append)
-      .bucketBy(buckets, "doc_id").sortBy("doc_id")
-      .format("parquet").saveAsTable(s"${name}_vdocs")
+    BucketedStore.append(sig, s"${name}_vframes")
+    BucketedStore.append(sig.select(col("doc_id")).distinct(), s"${name}_vdocs")
   }
+
+  /** Append the frame rows of unique videos the store does not hold
+    * yet — the replay-safe filter of [[BucketedStore.unseen]]. */
+  private def appendUniqueVideos(spark: SparkSession, name: String,
+      frames: DataFrame): Unit =
+    appendVideoSignatures(spark, name,
+      BucketedStore.unseen(spark, frames, s"${name}_vdocs", name))
 
   /** Initialize the cluster-label store for a video corpus —
     * [[writeFingerprintLabelStore]]'s shape with the shared-frame
@@ -400,10 +384,7 @@ object MediaDedup {
     val labels = sig.select(col("doc_id")).distinct()
       .join(cc, col("doc_id") === col("id"), "left")
       .select(col("doc_id"), coalesce(col("lab"), col("doc_id")).as("root"))
-    graft.sources.Sinks.writeBucketed(labels, s"${name}_labels", buckets, "doc_id")
-    graft.sources.Sinks.clearOrphanLocation(spark, s"${name}_remap")
-    Dedup.emptyRemap(spark).write.mode(SaveMode.Overwrite).format("parquet")
-      .saveAsTable(s"${name}_remap")
+    Dedup.createLabelStore(labels, name, buckets)
   }
 
   /** [[ingestVideoSignatureBatch]] + incremental cluster-label
@@ -419,33 +400,24 @@ object MediaDedup {
       batch.select(col("doc_id")).distinct(),
       videoPairsAgainstStore(spark, name, batch, minShared, maxDf)
         .select(col("batch_id"), col("corpus_id")),
-      uniqueDocs => appendVideoSignatures(spark, name,
-        Dedup.dropTombstoned(spark, name,
-          batch.join(uniqueDocs.select("doc_id"), "doc_id")
-            .join(spark.table(s"${name}_vdocs"), Seq("doc_id"), "left_anti"),
-          "doc_id")))
+      uniqueDocs => appendUniqueVideos(spark, name,
+        batch.join(uniqueDocs.select("doc_id"), "doc_id")))
 
   /** Retire videos (takedown / TTL) — the shared lazy tombstones. */
   def deleteFromVideoSignatureStore(spark: SparkSession, name: String,
       ids: DataFrame): Unit =
-    Dedup.deleteFromSignatureStore(spark, name, ids)
+    BucketedStore.delete(spark, name, ids)
 
-  /** Bucketed in-place rewrite of both video-store tables —
-    * [[Dedup.compactStoreTable]]'s swap. */
+  private def videoTables(name: String) = Seq(s"${name}_vframes", s"${name}_vdocs")
+
+  /** Rewrite both video-store tables to one sorted file per bucket —
+    * [[BucketedStore.compact]]. */
   def compactVideoSignatureStore(spark: SparkSession, name: String): Unit =
-    Seq(s"${name}_vframes" -> "fkey", s"${name}_vdocs" -> "doc_id")
-      .foreach { case (t, k) => Dedup.compactStoreTable(spark, name, t, k) }
+    videoTables(name).foreach(BucketedStore.compact(spark, _, name))
 
   /** Threshold-triggered compaction for the video store. */
   def maybeCompactVideoSignatureStore(spark: SparkSession, name: String,
-      maxFilesPerBucket: Int): Boolean = {
-    require(maxFilesPerBucket >= 1,
-      s"need maxFilesPerBucket >= 1, got $maxFilesPerBucket")
-    val buckets = Dedup.bucketsOf(spark, s"${name}_vframes")
-    val worst = Seq(s"${name}_vframes", s"${name}_vdocs")
-      .map(t => Dedup.tableFileCount(spark, t)).max
-    if (worst > buckets.toLong * maxFilesPerBucket) {
-      compactVideoSignatureStore(spark, name); true
-    } else false
-  }
+      maxFilesPerBucket: Int): Boolean =
+    BucketedStore.maybeCompact(spark, videoTables(name), maxFilesPerBucket)(
+      compactVideoSignatureStore(spark, name))
 }

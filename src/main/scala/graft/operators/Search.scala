@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
+import graft.sources.{BucketedStore, Tables}
 
 /** Exact-match retrieval over an inverted index: positional postings,
   * boolean conjunctive search, and exact phrase search — the
@@ -54,24 +54,18 @@ object Search {
     size(filter(split(trim(col("text")), " "),
       w => w =!= "")).cast("bigint").as("dl")
 
-  /** Postings landed bucketed+sorted by word: bucket pruning makes a
-    * term lookup read only the buckets its words hash to, and the
-    * in-bucket sort keeps a word's posting list contiguous. One
-    * bucket-aligned shuffle at build time (pmod(hash(word), n) — the
-    * repartition MUST colocate equal bucket ids per the Spark 4
-    * task-alignment gotcha), paid once, amortized over every query.
+  /** Postings landed bucketed+sorted by word (an external
+    * [[BucketedStore]] table at `path`): bucket pruning makes a term
+    * lookup read only the buckets its words hash to, and the in-bucket
+    * (word, doc_id, pos) sort keeps a word's posting list contiguous.
+    * One bucket-aligned shuffle at build time, paid once, amortized
+    * over every query.
     */
   def writePostingsStore(docs: DataFrame, path: String, table: String,
       nBuckets: Int = 16): Unit = {
     val spark = docs.sparkSession
-    // DROP on an external table removes only metadata — overwrite
-    // mode clears the path too, so a rebuild never mixes stale files
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    postings(docs)
-      .repartition(nBuckets, pmod(hash(col("word")), lit(nBuckets)))
-      .write.mode("overwrite")
-      .bucketBy(nBuckets, "word").sortBy("word", "doc_id", "pos")
-      .option("path", path).saveAsTable(table)
+    BucketedStore.create(postings(docs), table, nBuckets, "word",
+      Seq("word", "doc_id", "pos"), Some(path))
     // the store's doc registry (doc_id, dl), bucketed by doc_id:
     // appends anti-join against it with zero store-side exchange (the
     // postings table buckets on WORD, so it cannot answer "is this
@@ -79,7 +73,7 @@ object Search {
     // and dl (token count, computed from the text column so a
     // zero-token doc still registers) is the document-length sidecar
     // ranked retrieval needs without a corpus-wide postings groupBy
-    graft.sources.Sinks.writeBucketed(docs.select(col("doc_id"), docLen),
+    BucketedStore.create(docs.select(col("doc_id"), docLen),
       s"${table}_docs", nBuckets, "doc_id")
     // a full rebuild is a NEW store generation: prior tombstones
     // applied to content this build no longer carries
@@ -87,45 +81,27 @@ object Search {
   }
 
   /** The store's postings minus tombstoned docs — every query over a
-    * maintained store reads through here ([[Dedup.dropTombstoned]]'s
-    * economics: broadcast anti-join under the byte ceiling,
+    * maintained store reads through here ([[BucketedStore.read]]:
+    * refreshed, broadcast anti-join under the tombstone byte ceiling,
     * shuffle-hash beyond it, untouched plan when nothing was ever
     * deleted). Bucket pruning on word predicates survives the
     * anti-join (the filter sits above the pruned scan).
     */
-  def readPostings(spark: SparkSession, table: String): DataFrame = {
-    // appends/compactions may come from another session (a streaming
-    // writer) — refresh or a cached listing silently misses appended
-    // files / points at compacted-away ones. Metadata-only call.
-    spark.catalog.refreshTable(table)
-    Dedup.dropTombstoned(spark, table, spark.table(table), "doc_id")
-  }
+  def readPostings(spark: SparkSession, table: String): DataFrame =
+    BucketedStore.read(spark, table, table)
 
   /** Append new documents' postings — the maintenance half of the
     * production loop (crawl batch lands → postings appended → the
-    * next contamination audit sees them). Each append writes one more
-    * file per bucket: reads stay bucketed (per-bucket sort, never a
-    * shuffle); compact on cadence. Replay-safe: docs the registry
-    * already holds are skipped (anti-join, zero store-side exchange),
-    * and tombstoned ids stay dead (suppression list — a retired doc
-    * cannot resurrect via a crash-replayed append).
+    * next contamination audit sees them). Each append writes at most
+    * one file per bucket: reads stay bucketed (per-bucket sort, never
+    * a shuffle); compact on cadence. Replay-safe
+    * ([[BucketedStore.unseen]] against the registry): docs it already
+    * holds are skipped, and tombstoned ids stay dead.
     */
   def appendToPostingsStore(batch: DataFrame, table: String): Unit = {
-    import org.apache.spark.sql.SaveMode
-    val spark = batch.sparkSession
-    val fresh = Dedup.dropTombstoned(spark, table,
-      batch.join(spark.table(s"${table}_docs"), Seq("doc_id"), "left_anti"),
-      "doc_id")
-    postings(fresh)
-      .write.mode(SaveMode.Append)
-      .bucketBy(Dedup.bucketsOf(spark, table), "word")
-      .sortBy("word", "doc_id", "pos")
-      .format("parquet").saveAsTable(table)
-    fresh.select(col("doc_id"), docLen)
-      .write.mode(SaveMode.Append)
-      .bucketBy(Dedup.bucketsOf(spark, s"${table}_docs"), "doc_id")
-      .sortBy("doc_id")
-      .format("parquet").saveAsTable(s"${table}_docs")
+    val fresh = BucketedStore.unseen(batch.sparkSession, batch, s"${table}_docs", table)
+    BucketedStore.append(postings(fresh), table)
+    BucketedStore.append(fresh.select(col("doc_id"), docLen), s"${table}_docs")
   }
 
   /** BM25 (k1=1.2, b=0.75) top-k over a postings relation: rank the
@@ -176,74 +152,38 @@ object Search {
     */
   def rankedSearch(spark: SparkSession, table: String,
       terms: Seq[String], k: Int): DataFrame = {
-    spark.catalog.refreshTable(s"${table}_docs")
     bm25Rank(readPostings(spark, table),
-      Dedup.dropTombstoned(spark, table,
-        spark.table(s"${table}_docs"), "doc_id"),
-      terms, k)
+      BucketedStore.read(spark, s"${table}_docs", table), terms, k)
   }
 
-  /** RETIRE documents (takedown / TTL): append their ids to the KB
-    * tombstone table. Lazy like the signature store's — reads filter
-    * ([[readPostings]]), [[compactPostingsStore]] drops the rows
-    * physically, the tombstone table survives as a suppression list.
+  /** RETIRE documents (takedown / TTL): the shared lazy tombstones —
+    * reads filter ([[readPostings]]), [[compactPostingsStore]] drops
+    * the rows physically, the tombstone table survives as a
+    * suppression list.
     */
   def deleteFromPostingsStore(spark: SparkSession, table: String,
-      ids: DataFrame): Unit = {
-    import org.apache.spark.sql.SaveMode
-    graft.sources.Sinks.clearOrphanLocation(spark, s"${table}_tombstones")
-    ids.select(col("doc_id").cast("bigint")).coalesce(1)
-      .write.mode(SaveMode.Append).format("parquet")
-      .saveAsTable(s"${table}_tombstones")
-  }
+      ids: DataFrame): Unit =
+    BucketedStore.delete(spark, table, ids)
+
+  private def postingsTables(table: String) = Seq(table, s"${table}_docs")
 
   /** Compact back to ONE sorted file per bucket (postings and
-    * registry), dropping tombstoned rows physically — same
-    * task-alignment discipline as `Dedup.compactSignatureStore`
-    * (repartition on the writer's own bucket-id expression). The
-    * compacted tables are MANAGED; when the original was external
-    * (writePostingsStore's `path`), its now-dead files are removed —
-    * from here on the catalog name, not the build path, is the
-    * store's identity.
+    * registry), dropping tombstoned rows physically —
+    * [[BucketedStore.compact]]: the catalog entries and the postings'
+    * build path stay the store's identity.
     */
-  def compactPostingsStore(spark: SparkSession, table: String): Unit = {
-    Seq((table, Seq("word", "doc_id", "pos"), "word"),
-        (s"${table}_docs", Seq("doc_id"), "doc_id"))
-      .foreach { case (t, sortCols, key) =>
-        val buckets = Dedup.bucketsOf(spark, t)
-        val loc = spark.sql(s"DESCRIBE TABLE EXTENDED $t").collect()
-          .find(_.getString(0) == "Location").map(_.getString(1))
-        graft.sources.Sinks.clearOrphanLocation(spark, s"${t}_compact")
-        Dedup.dropTombstoned(spark, table, spark.table(t), "doc_id")
-          .repartition(buckets, pmod(hash(col(key)), lit(buckets)))
-          .write.bucketBy(buckets, key)
-          .sortBy(sortCols.head, sortCols.tail: _*)
-          .format("parquet").saveAsTable(s"${t}_compact")
-        spark.sql(s"DROP TABLE $t")
-        loc.foreach { l =>
-          val p = new org.apache.hadoop.fs.Path(l)
-          val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (fs.exists(p)) fs.delete(p, true)
-        }
-        spark.sql(s"ALTER TABLE ${t}_compact RENAME TO $t")
-      }
-  }
+  def compactPostingsStore(spark: SparkSession, table: String): Unit =
+    postingsTables(table).foreach(BucketedStore.compact(spark, _, table))
 
-  /** Self-triggering compaction cadence: compact when either store
-    * table's files-per-bucket exceed `maxFilesPerBucket` (each append
-    * lands one file per bucket, so this is the append count since the
-    * last compact). Returns whether it compacted.
+  /** Self-triggering compaction cadence ([[BucketedStore.maybeCompact]]):
+    * compact when either store table's deepest bucket exceeds
+    * `maxFilesPerBucket` files (the appends since the last compact).
+    * Returns whether it compacted.
     */
   def maybeCompactPostingsStore(spark: SparkSession, table: String,
-      maxFilesPerBucket: Int): Boolean = {
-    require(maxFilesPerBucket >= 1,
-      s"need maxFilesPerBucket >= 1, got $maxFilesPerBucket")
-    val over = Seq(table, s"${table}_docs").exists { t =>
-      Dedup.tableFileCount(spark, t) >
-        Dedup.bucketsOf(spark, t).toLong * maxFilesPerBucket
-    }
-    if (over) { compactPostingsStore(spark, table); true } else false
-  }
+      maxFilesPerBucket: Int): Boolean =
+    BucketedStore.maybeCompact(spark, postingsTables(table), maxFilesPerBucket)(
+      compactPostingsStore(spark, table))
 
   /** Documents containing ALL of `terms` (boolean AND). Term filter
     * is a map-only IN-list over the scan (bucket-pruned on a stored

@@ -285,29 +285,30 @@ object Similarity {
       .sortWithinPartitions("vec_id")
       .withColumn("fv", array_to_vector(col("embedding")))
       .cache()
-    val model = new KMeans().setK(k).setSeed(7L).setMaxIter(20)
-      .setFeaturesCol("fv").fit(fv)
-    val qd = embeddings.filter(col("vec_id") === queryId)
-      .select(col("embedding")).head().getSeq[Float](0).map(_.toDouble).toArray
-    def cosArr(a: Array[Double], b: Array[Double]): Double = {
-      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < a.length) { dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
-      dot / (math.sqrt(na) * math.sqrt(nb))
-    }
-    val probes = model.clusterCenters.zipWithIndex
-      .map { case (c, i) => (i, cosArr(c.toArray, qd)) }
-      .sortBy { case (i, s) => (-s, i) }.take(nprobe).map(_._1)
-    val q = embeddings.filter(col("vec_id") === queryId).select(col("embedding").as("qe"))
-    val ivfTop = model.transform(fv)
-      .filter(col("prediction").isin(probes: _*))
-      .crossJoin(broadcast(q))
-      .select(col("vec_id"), round(vectorCosine(col("embedding"), col("qe")), 6).as("cos"))
-      .filter(col("vec_id") =!= queryId)
-      .orderBy(desc("cos"), col("vec_id")).limit(topK)
-    val recall = ivfTop.select("vec_id")
-      .intersect(cosineTopK(embeddings, queryId, topK).select("vec_id"))
-      .count().toDouble / topK
-    fv.unpersist()
+    val recall = try {
+      val model = new KMeans().setK(k).setSeed(7L).setMaxIter(20)
+        .setFeaturesCol("fv").fit(fv)
+      val qd = embeddings.filter(col("vec_id") === queryId)
+        .select(col("embedding")).head().getSeq[Float](0).map(_.toDouble).toArray
+      def cosArr(a: Array[Double], b: Array[Double]): Double = {
+        var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
+        while (i < a.length) { dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
+        dot / (math.sqrt(na) * math.sqrt(nb))
+      }
+      val probes = model.clusterCenters.zipWithIndex
+        .map { case (c, i) => (i, cosArr(c.toArray, qd)) }
+        .sortBy { case (i, s) => (-s, i) }.take(nprobe).map(_._1)
+      val q = embeddings.filter(col("vec_id") === queryId).select(col("embedding").as("qe"))
+      val ivfTop = model.transform(fv)
+        .filter(col("prediction").isin(probes: _*))
+        .crossJoin(broadcast(q))
+        .select(col("vec_id"), round(vectorCosine(col("embedding"), col("qe")), 6).as("cos"))
+        .filter(col("vec_id") =!= queryId)
+        .orderBy(desc("cos"), col("vec_id")).limit(topK)
+      ivfTop.select("vec_id")
+        .intersect(cosineTopK(embeddings, queryId, topK).select("vec_id"))
+        .count().toDouble / topK
+    } finally fv.unpersist()
     spark.range(1).select(
       lit(k).cast("bigint").as("k"),
       lit(nprobe).cast("bigint").as("nprobe"),
@@ -670,7 +671,7 @@ object Similarity {
     * stored-search paths ship in the plan — the driver-side
     * materialization bound that keeps "KB at serving batch sizes" an
     * enforced contract instead of an assertion
-    * ([[Dedup.tombstoneBroadcastMax]] precedent). The default 1M
+    * ([[graft.sources.BucketedStore.tombstoneBroadcastMax]] precedent). The default 1M
     * doubles (8 MB of plan literals ≈ 8192 queries at m=8,k=16) is the
     * point past which a single plan's LUT state stops being serving
     * metadata; shard the query table over multiple calls beyond it —
@@ -783,7 +784,7 @@ object Similarity {
     * append their ids to the KB tombstone sidecar at
     * `$path/tombstones`. Lazy, mirroring the signature store's
     * pattern: searches anti-join the tombstone set (a zero-shuffle
-    * broadcast filter up to the [[Dedup.tombstoneBroadcastMax]] byte
+    * broadcast filter up to the [[graft.sources.BucketedStore.tombstoneBroadcastMax]] byte
     * ceiling, a shuffle-hash anti-join beyond it — the codes-only scan
     * shape is unchanged), [[compactIvfPqIndex]] drops the code rows physically,
     * and the sidecar survives compaction as a suppression list so a
@@ -797,7 +798,7 @@ object Similarity {
   }
 
   /** `codes` minus tombstoned vectors — broadcast anti-join against
-    * the sidecar when it is under the [[Dedup.tombstoneBroadcastMax]]
+    * the sidecar when it is under the [[graft.sources.BucketedStore.tombstoneBroadcastMax]]
     * byte ceiling, a shuffle-hash anti-join beyond it (a whole-index
     * takedown can outgrow any broadcast threshold; the codes-only
     * partition-pruned scan shape is unchanged either way, the fallback
@@ -816,7 +817,7 @@ object Similarity {
       val t = spark.read.parquet(s"$path/tombstones")
       val bytes = fs.listStatus(tp)
         .filter(_.getPath.getName.endsWith(".parquet")).map(_.getLen).sum
-      if (bytes <= Dedup.tombstoneBroadcastMax(spark))
+      if (bytes <= graft.sources.BucketedStore.tombstoneBroadcastMax(spark))
         codes.join(broadcast(t), Seq("vec_id"), "left_anti")
       else codes.join(t.hint("shuffle_hash"), Seq("vec_id"), "left_anti")
     }
@@ -2423,32 +2424,31 @@ object Similarity {
     //      order ----
     ("s18_opq_recall", (s: SparkSession, d: String) => {
       val corpus = opqGateCorpus(s).cache()
-      val rot = opqParametricRotation(corpus, 8)
-      // rotated is re-read by the centroid, codebook, query-vector and
-      // count jobs of its foundSum — cache so the MatVec rotation runs
-      // once (KB-sized, unpersisted with its parent below)
-      val rotated = rotateEmbeddings(corpus, rot).cache()
-      // batched gate: per corpus, ONE centroid job + ONE codebook
-      // collect + ONE query-vector collect + ONE union-count — vs the
-      // per-query ivfPqRerankRecall's ~9 actions × 4 queries × 2
-      // corpora (bit-identical n_found sum; PqStoredSpec asserts)
-      def sumFound(c: DataFrame): Long =
-        ivfPqRerankFoundSum(c, Seq(100L, 101L, 102L, 103L), 2, 30, 10, 8, 16)
-      // the plain and rotated gate measurements are INDEPENDENT job
-      // chains over KB-sized cached frames — overlap them (guide-
-      // sanctioned driver-thread concurrency) so one's scheduling
-      // latency backfills the other's; counts are unaffected by
-      // interleaving
-      val (fPlain, fOpq) = {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        import scala.concurrent.ExecutionContext.Implicits.global
-        val a = Future(sumFound(corpus))
-        val b = Future(sumFound(rotated))
-        (Await.result(a, Duration.Inf), Await.result(b, Duration.Inf))
-      }
-      rotated.unpersist()
-      corpus.unpersist()
+      val (fPlain, fOpq) = try {
+        val rot = opqParametricRotation(corpus, 8)
+        // rotated is re-read by the centroid, codebook, query-vector and
+        // count jobs of its foundSum — cache so the MatVec rotation runs
+        // once (KB-sized, unpersisted before its parent)
+        val rotated = rotateEmbeddings(corpus, rot).cache()
+        try {
+          // batched gate: per corpus, ONE centroid job + ONE codebook
+          // collect + ONE query-vector collect + ONE union-count — vs the
+          // per-query ivfPqRerankRecall's ~9 actions × 4 queries × 2
+          // corpora (bit-identical n_found sum; PqStoredSpec asserts)
+          def sumFound(c: DataFrame): Long =
+            ivfPqRerankFoundSum(c, Seq(100L, 101L, 102L, 103L), 2, 30, 10, 8, 16)
+          // the plain and rotated gate measurements are INDEPENDENT job
+          // chains over KB-sized cached frames — overlap them on two
+          // threads so one's scheduling latency backfills the other's;
+          // counts are unaffected by interleaving
+          import scala.concurrent.{Await, Future}
+          import scala.concurrent.duration.Duration
+          import scala.concurrent.ExecutionContext.Implicits.global
+          val a = Future(sumFound(corpus))
+          val b = Future(sumFound(rotated))
+          (Await.result(a, Duration.Inf), Await.result(b, Duration.Inf))
+        } finally rotated.unpersist()
+      } finally corpus.unpersist()
       // Gate CONTRACT columns only: the raw found counts depend on
       // distributed float reduction order and shortlist near-ties, so
       // pinning the measured integers (the old found_plain = 37)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Session-catalog surface (reference: /root/reference/src/catalog/
   * mod.rs:1 — schemas, tables, indexes). graft maps schemas/tables to
   * Spark's session catalog views and index support to bucketed layout
-  * (see Sinks.writeBucketed).
+  * (see BucketedStore).
   */
 object Catalog {
 

@@ -20,19 +20,6 @@ object Sinks {
   def writePartitioned(df: DataFrame, path: String, partitionCols: String*): Unit =
     df.write.mode(SaveMode.Overwrite).partitionBy(partitionCols: _*).parquet(path)
 
-  /** Bucketed + sorted table registered in the session catalog.
-    * An in-memory catalog (tests, probes, fresh clusters) dies with
-    * the JVM but leaves the warehouse directory behind, and
-    * saveAsTable refuses to adopt an orphan location — so a location
-    * no live table owns is cleared first (Hadoop FS API: works on
-    * HDFS/S3 the same as locally). Two safety rails for a SHARED
-    * warehouse dir: the location is resolved the same way saveAsTable
-    * resolves it (the name's database, or the CURRENT database — not
-    * blindly the warehouse root), and the delete only fires when the
-    * directory contains nothing but table-write artifacts (part-files
-    * / commit-protocol markers) — anything else might be live data
-    * owned by another application, and we refuse rather than delete.
-    */
   /** Run `body` with sorted-bucket scans honoring the table's sortBy
     * order — keenwa's "the index satisfies the ordering enforcer"
     * case (reference rules/implementation/index.rs:19
@@ -40,9 +27,8 @@ object Sinks {
     * behind `spark.sql.legacy.bucketedTableScan.outputOrdering`
     * (default OFF: with several files per bucket the scan concatenates
     * them and per-bucket order is NOT guaranteed, so the planner
-    * conservatively re-sorts). After a compaction that lands ONE
-    * sorted file per bucket (`Dedup.compactSignatureStore` /
-    * `Search.compactPostingsStore` / any pmod-aligned writeBucketed),
+    * conservatively re-sorts). After a write that lands ONE sorted
+    * file per bucket (any [[BucketedStore]] create or compaction),
     * the order IS guaranteed and this scope makes a store-side join
     * plan with ZERO Sort and ZERO Exchange — at 100 TB an elided sort
     * per join is real money (SinksSpec asserts both behaviors).
@@ -65,8 +51,13 @@ object Sinks {
     * table is not in this session's catalog — the cross-JVM gotcha:
     * the in-memory catalog dies with the JVM but the warehouse dir
     * survives, and Spark 4's saveAsTable then refuses with
-    * LOCATION_ALREADY_EXISTS. Deletes only when every file is a
-    * table-write artifact (see the ownership note above).
+    * LOCATION_ALREADY_EXISTS. Two safety rails for a SHARED warehouse
+    * dir: the location is resolved the way saveAsTable resolves it (the
+    * name's database, or the CURRENT database — not blindly the
+    * warehouse root), and the delete only fires when every file is a
+    * table-write artifact (part-files / commit-protocol markers) —
+    * anything else might be live data owned by another application,
+    * and we refuse rather than delete.
     */
   def clearOrphanLocation(spark: org.apache.spark.sql.SparkSession,
       table: String): Unit = {
@@ -93,14 +84,6 @@ object Sinks {
         fs.delete(loc, true)
       }
     }
-  }
-
-  def writeBucketed(df: DataFrame, table: String, buckets: Int, key: String): Unit = {
-    val spark = df.sparkSession
-    clearOrphanLocation(spark, table)
-    df.write.mode(SaveMode.Overwrite)
-      .bucketBy(buckets, key).sortBy(key)
-      .format("parquet").saveAsTable(table)
   }
 
   /** Compact a parquet directory to ~`targetFileMB`-sized files —

@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.BucketedStore
+
 /** The shared store-fold protocol of the streaming twins: merge every
   * CLOSED `batch_id=` partial into the `batch_id=-1` base when the
   * partition count exceeds `maxParts`, leaving the in-flight batch's
@@ -246,23 +248,10 @@ object StoreFold {
       s"$label fold: partitionCols must lead with batch_id, got $partitionCols")
     val dir = new Path(storePath)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(storePath + "_fold_tmp")
-    val old = new Path(storePath + "_fold_old")
-    // Crash auto-recovery, in dependency order. A fold that died
-    // leaves one of three states, each with an unambiguous known-good
-    // restore (so the next micro-batch heals the store instead of
-    // refusing to run):
-    //  - dir MISSING + old present: died between the two renames —
-    //    old IS the pre-fold store; rename it back.
-    //  - dir present + old present: died after the second rename but
-    //    before cleanup — the fold landed; old is a stale copy.
-    //  - tmp present (old gone after the steps above): tmp was never
-    //    swapped in, possibly half-written — discard; the fold reruns.
-    if (!fs.exists(dir) && fs.exists(old))
-      require(fs.rename(old, dir),
-        s"$label fold: recovery rename $old -> $storePath failed")
-    if (fs.exists(old)) fs.delete(old, true)
-    if (fs.exists(tmp)) fs.delete(tmp, true)
+    val (tmp, _) = BucketedStore.swapPaths(dir, "fold")
+    // a fold interrupted at ANY point heals here, so the next
+    // micro-batch repairs the store instead of refusing to run
+    BucketedStore.recoverSwap(fs, dir, "fold", label)
     if (!fs.exists(dir)) return false
     val parts = fs.listStatus(dir).filter(_.isDirectory)
       .map(_.getPath.getName).filter(_.startsWith("batch_id="))
@@ -348,12 +337,7 @@ object StoreFold {
         .unionByName(current)
         .write.partitionBy(partitionCols: _*).parquet(tmp.toString)
     }
-    require(fs.rename(dir, old), s"$label fold: rename $storePath -> $old failed")
-    if (!fs.rename(tmp, dir)) {
-      fs.rename(old, dir)
-      sys.error(s"$label fold: rename $tmp -> $storePath failed (original restored)")
-    }
-    fs.delete(old, true)
+    BucketedStore.swapIn(fs, dir, "fold", label)
     true
   }
 }

@@ -14,6 +14,14 @@ object GraftBridge {
   def logicalPlan(df: DataFrame): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.queryExecution.analyzed
 
+  /** A catalog table's metadata — bucket spec, location — as the
+    * session catalog holds it (`sessionState` is classic-only). */
+  def tableMetadata(spark: SparkSession,
+      table: String): org.apache.spark.sql.catalyst.catalog.CatalogTable = {
+    val state = spark.asInstanceOf[classic.SparkSession].sessionState
+    state.catalog.getTableMetadata(state.sqlParser.parseTableIdentifier(table))
+  }
+
   def ofRows(spark: SparkSession,
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)

@@ -419,12 +419,8 @@ class DedupSpec extends AnyFunSuite {
     val tuneB = "crimson dawn breaks over silver rivers while fishermen cast their woven nets into deep cold waters beneath the sleeping cliffs"
     try {
       Dedup.writeSignatureStore(docs(1L -> base, 3L -> far), "sigcad", 4)
-      def nFiles(t: String): Long = {
-        val loc = spark.sql(s"DESCRIBE TABLE EXTENDED sigcad_$t").collect()
-          .find(_.getString(0) == "Location").get.getString(1)
-        new java.io.File(new java.net.URI(loc)).listFiles()
-          .count(_.getName.endsWith(".parquet")).toLong
-      }
+      def nFiles(t: String): Long =
+        graft.sources.BucketedStore.stats(spark, s"sigcad_$t").files.toLong
       Dedup.ingestBatch(spark, "sigcad", docs(10L -> tuneA), 0.5)
       Dedup.ingestBatch(spark, "sigcad", docs(11L -> tuneB), 0.5)
       assert(nFiles("bands") > 4, "appends must have added files")
@@ -453,7 +449,7 @@ class DedupSpec extends AnyFunSuite {
       // leave behind. A batch doc matching BOTH must merge cluster 2
       // into cluster 1 with a remap row, never a labels rewrite.
       Dedup.writeSignatureStore(docs(1L -> base, 2L -> near), "lbl", 4)
-      graft.sources.Sinks.writeBucketed(
+      graft.sources.BucketedStore.create(
         Seq((1L, 1L), (2L, 2L)).toDF("doc_id", "root"), "lbl_labels", 4, "doc_id")
       Seq.empty[(Long, Long)].toDF("old_root", "new_root")
         .write.format("parquet").saveAsTable("lbl_remap")
@@ -502,11 +498,8 @@ class DedupSpec extends AnyFunSuite {
       Dedup.writeSignatureStore(docs(1L -> base, 3L -> far), "sigcomp", 4)
       Dedup.appendToSignatureStore(docs(10L -> tuneA), "sigcomp")
       Dedup.appendToSignatureStore(docs(11L -> "completely novel content about glaciers carving deep valleys through ancient granite mountains over countless millennia"), "sigcomp")
-      def bandsFiles(): Int = {
-        val loc = spark.sql("DESCRIBE TABLE EXTENDED sigcomp_bands").collect()
-          .find(_.getString(0) == "Location").get.getString(1).stripPrefix("file:")
-        new java.io.File(loc).listFiles().count(_.getName.startsWith("part-"))
-      }
+      def bandsFiles(): Int =
+        graft.sources.BucketedStore.stats(spark, "sigcomp_bands").files
       val nBefore = bandsFiles()
       assert(nBefore >= 10, s"3 writes x 4 buckets (minus empty) expected ~12 files, got $nBefore")
       val before = Dedup.minhashPairsAgainstStore(spark, "sigcomp", docs(20L -> near), 0.5)

@@ -501,9 +501,8 @@ class MediaDedupSpec extends AnyFunSuite {
       // compaction cadence held: both tables back to one file/bucket
       spark.catalog.refreshTable("vstream_vframes")
       spark.catalog.refreshTable("vstream_vdocs")
-      val buckets = graft.operators.Dedup.bucketsOf(spark, "vstream_vframes")
-      assert(graft.operators.Dedup.tableFileCount(spark, "vstream_vframes")
-        <= buckets.toLong)
+      val st = graft.sources.BucketedStore.stats(spark, "vstream_vframes")
+      assert(st.files <= st.buckets)
     } finally dropVStore("vstream")
   }
 
@@ -649,9 +648,8 @@ class MediaDedupSpec extends AnyFunSuite {
       assert(spark.table("fpcad_remap").count() === 0L)
       for (t <- Seq("fpcad_labels", "fpcad_fpblocks", "fpcad_fps")) {
         spark.catalog.refreshTable(t)
-        val b = graft.operators.Dedup.bucketsOf(spark, t)
-        assert(graft.operators.Dedup.tableFileCount(spark, t) <= b.toLong,
-          s"$t grew past one file per bucket")
+        val st = graft.sources.BucketedStore.stats(spark, t)
+        assert(st.files <= st.buckets, s"$t grew past one file per bucket")
       }
     } finally dropStore("fpcad")
   }

@@ -70,13 +70,8 @@ class SearchSpec extends AnyFunSuite {
     Seq(table, s"${table}_docs", s"${table}_tombstones")
       .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
 
-  private def storeFiles(table: String): Int = {
-    val loc = spark.sql(s"DESCRIBE TABLE EXTENDED $table").collect()
-      .find(_.getString(0) == "Location").map(_.getString(1)).get
-    val p = new org.apache.hadoop.fs.Path(loc)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(p).count(_.getPath.getName.endsWith(".parquet"))
-  }
+  private def storeFiles(table: String): Int =
+    graft.sources.BucketedStore.stats(spark, table).files
 
   test("rankedSearch: store-served BM25 equals the direct scorer and tracks maintenance") {
     val path = Files.createTempDirectory("graft-postings").toString + "/rk"

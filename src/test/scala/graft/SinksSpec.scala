@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.{Sinks, Tables}
+import graft.sources.{BucketedStore, Sinks, Tables}
 
 /** Write-side checks: partition pruning on partitioned layout,
   * exchange-free joins on bucketed tables, format round-trips.
@@ -39,8 +39,8 @@ class SinksSpec extends AnyFunSuite {
       val df = (1L to 1000L).map(i => (i, i * 7 % 100)).toDF("k", "v")
         // pmod task alignment -> exactly one sorted file per bucket
         .repartition(4, pmod(hash(col("k")), lit(4)))
-      Sinks.writeBucketed(df, "so_left", 4, "k")
-      Sinks.writeBucketed(df.select(col("k"), col("v").as("w")), "so_right", 4, "k")
+      BucketedStore.create(df, "so_left", 4, "k")
+      BucketedStore.create(df.select(col("k"), col("v").as("w")), "so_right", 4, "k")
       def planOf() = {
         val j = spark.table("so_left").join(spark.table("so_right"), "k")
         j.collect()
@@ -66,8 +66,8 @@ class SinksSpec extends AnyFunSuite {
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      Sinks.writeBucketed(Tables.orders(spark, sf), "b_orders", 8, "o_custkey")
-      Sinks.writeBucketed(Tables.customer(spark, sf), "b_customer", 8, "c_custkey")
+      BucketedStore.create(Tables.orders(spark, sf), "b_orders", 8, "o_custkey")
+      BucketedStore.create(Tables.customer(spark, sf), "b_customer", 8, "c_custkey")
       val j = spark.table("b_orders")
         .join(spark.table("b_customer"),
           col("o_custkey") === col("c_custkey"))
@@ -95,9 +95,9 @@ class SinksSpec extends AnyFunSuite {
       // doc↔embedding join co-partitions via bucketing on id, so the
       // corpus-sized join never shuffles either side — only the
       // broadcast query fan-in and the k×Q TopKPerKey exchange remain
-      Sinks.writeBucketed(Tables.documents(spark, sf)
+      BucketedStore.create(Tables.documents(spark, sf)
         .select(col("doc_id"), col("text")), "b_h02_docs", 8, "doc_id")
-      Sinks.writeBucketed(Tables.embeddings(spark, sf)
+      BucketedStore.create(Tables.embeddings(spark, sf)
         .select(col("vec_id"), col("embedding")), "b_h02_embs", 8, "vec_id")
       val docs = spark.table("b_h02_docs").select(col("doc_id"),
         graft.functions.shingleHashes(col("text"), 3).as("sh"))
@@ -139,7 +139,7 @@ class SinksSpec extends AnyFunSuite {
     JFiles.write(orphan.resolve("part-00000-dead.parquet"), Array[Byte](1, 2, 3))
     JFiles.write(orphan.resolve("_SUCCESS"), Array[Byte]())
     try {
-      Sinks.writeBucketed(Tables.nation(spark, sf), "b_orphan", 2, "n_nationkey")
+      BucketedStore.create(Tables.nation(spark, sf), "b_orphan", 2, "n_nationkey")
       assert(spark.table("b_orphan").count() === 25)
     } finally spark.sql("DROP TABLE IF EXISTS b_orphan")
     // (2) location holding a file we did not write → refuse, data intact
@@ -149,7 +149,7 @@ class SinksSpec extends AnyFunSuite {
     JFiles.write(alien, "not ours".getBytes("UTF-8"))
     try {
       val e = intercept[IllegalArgumentException] {
-        Sinks.writeBucketed(Tables.nation(spark, sf), "b_foreign", 2, "n_nationkey")
+        BucketedStore.create(Tables.nation(spark, sf), "b_foreign", 2, "n_nationkey")
       }
       assert(e.getMessage.contains("refusing to delete"))
       assert(JFiles.exists(alien), "foreign file must survive the refusal")

@@ -501,9 +501,8 @@ class StreamingSpec extends AnyFunSuite {
       assert(spark.table("lcstream_remap").count() === 0L)
       for (t <- Seq("lcstream_labels", "lcstream_bands", "lcstream_shingles")) {
         spark.catalog.refreshTable(t)
-        val b = graft.operators.Dedup.bucketsOf(spark, t)
-        assert(graft.operators.Dedup.tableFileCount(spark, t) <= b.toLong,
-          s"$t grew past one file per bucket")
+        val st = graft.sources.BucketedStore.stats(spark, t)
+        assert(st.files <= st.buckets, s"$t grew past one file per bucket")
       }
     } finally {
       Seq("lcstream_bands", "lcstream_shingles", "lcstream_labels", "lcstream_remap")
