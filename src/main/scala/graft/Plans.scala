@@ -12,6 +12,11 @@ object Plans {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = args.lift(1).getOrElse("/root/repo/PLANS.md")
     val spark = GraftSession.local(8)
+    // every table read as several splits, the shape tables have at
+    // scale: an interactive query plans a one-split table as one
+    // partition with no exchange above it, which would hide the
+    // shuffles the notes below describe
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "64k")
     val picks = Seq(
       "q01_agg" -> "scan+filter+agg: pushed filter, pruned columns, partial agg, codegen",
       "q03_join_inner" -> "join chain: broadcast dims, single shuffle agg, top-k",
@@ -123,7 +128,10 @@ object Plans {
     val sb = new StringBuilder
     sb.append("# PLANS — executed physical plans (AQE final)\n\n")
     sb.append(s"Generated by `graft.Plans` on `$sfDir`. Regenerate: " +
-      "`sbt \"runMain graft.Plans\"`.\n")
+      "`sbt \"runMain graft.Plans\"`. Tables are read as several splits " +
+      "(`spark.sql.files.maxPartitionBytes` = 64k), as at scale; in an interactive " +
+      "(Relational, SqlMatrix) query a table read as one split plans as a single " +
+      "partition with no exchange above it.\n")
     picks.foreach { case (name, why) =>
       val df = SparkEntry.queries(name)(spark, sfDir)
       df.collect() // materialize AQE final plan

@@ -5,8 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.sources.Tables
-
 /** Core relational operator surface — one query per capability in the
   * reference's logical-operator set
   * (/root/reference/src/operators/relational/logical/mod.rs:21,
@@ -22,6 +20,10 @@ import graft.sources.Tables
   */
 object Relational {
   type QFn = (SparkSession, String) => DataFrame
+
+  /** Every query here is short SQL: one-split tables load as a single
+    * partition, with no exchange above them. */
+  private val Tables = graft.sources.Tables.interactive
 
   /** Exact sum: accumulate as decimal (order-insensitive), emit double. */
   private def dsum(c: Column, scale: Int = 2): Column =

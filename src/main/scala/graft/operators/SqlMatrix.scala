@@ -40,14 +40,7 @@ object SqlMatrix {
     * `name` on the oracle side.
     */
   private def mk(name: String, tables: Seq[String], body: String)
-      : (String, QFn, Option[String]) = {
-    val fn: QFn = (s, d) => {
-      tables.foreach(t =>
-        Tables.load(s, d, t).createOrReplaceTempView("v_" + t))
-      s.sql(subst(body, tables, "v_"))
-    }
-    (name, fn, Some(subst(body, tables, "")))
-  }
+      : (String, QFn, Option[String]) = mk2(name, tables, body, body)
 
   /** Same, but with per-side texts (needed when a scalar function is
     * spelled differently: Spark date_format vs DuckDB strftime).
@@ -56,7 +49,7 @@ object SqlMatrix {
       duckBody: String): (String, QFn, Option[String]) = {
     val fn: QFn = (s, d) => {
       tables.foreach(t =>
-        Tables.load(s, d, t).createOrReplaceTempView("v_" + t))
+        Tables.interactive.load(s, d, t).createOrReplaceTempView("v_" + t))
       s.sql(subst(sparkBody, tables, "v_"))
     }
     (name, fn, Some(subst(duckBody, tables, "")))

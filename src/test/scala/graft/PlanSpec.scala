@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.GraftTestSession.multiSplit
+
 /** Plan-shape assertions: the optimizations keenwa implements as
   * rules must actually fire in Catalyst for graft's plans — predicate
   * pushdown to parquet, column pruning, broadcast join selection,
@@ -83,11 +85,14 @@ class PlanSpec extends AnyFunSuite {
     // agg buffers aren't Tungsten-mutable, so HashAggregate can't
     // apply); what matters for the claim is WHERE the sorts run:
     // every election-side Sort is PARTITION-LOCAL and pre-shuffle
-    // (`false` global flag), never a post-shuffle sort of payload rows
-    val df = SparkEntry.queries("q89_distinct_on")(spark, sf)
-    df.collect()
-    val plan = df.queryExecution.executedPlan.toString
-      .split("== Initial Plan ==").head
+    // (`false` global flag), never a post-shuffle sort of payload rows.
+    // The shuffle exists only on multi-split input (the one-split
+    // shape is pinned below).
+    val plan = multiSplit {
+      val df = SparkEntry.queries("q89_distinct_on")(spark, sf)
+      df.collect()
+      df.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
+    }
     assert(plan.contains("partial_max"),
       "expected a map-side partial max(struct) election:\n" + plan)
     assert(!plan.contains("Window"),
@@ -107,6 +112,30 @@ class PlanSpec extends AnyFunSuite {
       "expected exactly one global Sort (the output orderBy):\n" + plan)
     assert(lines.indexWhere(_.contains("], true,")) < hashEx.head._2,
       "the global sort must be the output sort above the election:\n" + plan)
+  }
+
+  test("q89: on a one-split table the election plans no shuffle exchange") {
+    val df = SparkEntry.queries("q89_distinct_on")(spark, sf)
+    df.collect()
+    val plan = df.queryExecution.executedPlan.toString
+      .split("== Initial Plan ==").head
+    assert(plan.contains("partial_max"), plan)
+    assert(!plan.contains("Exchange"), "one-split orders needs no shuffle:\n" + plan)
+  }
+
+  test("dq01: the profile spreads orders round-robin, read as one split or several") {
+    // the multi-distinct Expand is CPU-bound and a single-row-group
+    // file reads its rows in one task however many byte splits it
+    // has, so the spread does not depend on the split count
+    def plan(): String = {
+      val df = SparkEntry.queries("dq01_profile")(spark, sf)
+      df.collect()
+      df.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
+    }
+    val one = plan()
+    assert(one.contains("RoundRobinPartitioning"), one)
+    val several = multiSplit(plan())
+    assert(several.contains("RoundRobinPartitioning"), several)
   }
 
   test("q90: time-of-day matrix is one partial-aggregable integer groupBy — no join, no window") {
