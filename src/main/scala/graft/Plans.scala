@@ -179,10 +179,9 @@ object Plans {
       val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
       val plan = try {
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        val df = graft.operators.MediaDedup.fingerprintPairsAgainstStore(
-          spark, "plans_fpstore",
-          fps.limit(50).select(col("doc_id") + 1000000L as "doc_id",
-            col("hash_hi"), col("hash_lo")), 6)
+        val df = graft.operators.MediaDedup.fingerprintStore("plans_fpstore", 6)
+          .matches(spark, fps.limit(50).select(col("doc_id") + 1000000L as "doc_id",
+            col("hash_hi"), col("hash_lo")))
         df.collect()
         df.queryExecution.executedPlan.toString
           .split("== Initial Plan ==").head
@@ -215,10 +214,9 @@ object Plans {
       val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
       val (joinPlan, dfPlan) = try {
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        val df = graft.operators.MediaDedup.videoPairsAgainstStore(
-          spark, "plans_vstore",
-          frames.limit(200).select(col("doc_id") + 1000000L as "doc_id",
-            col("hash_hi"), col("hash_lo")), 3, 50)
+        val df = graft.operators.MediaDedup.videoStore("plans_vstore", 3, 50)
+          .matches(spark, frames.limit(200).select(col("doc_id") + 1000000L as "doc_id",
+            col("hash_hi"), col("hash_lo")))
         df.collect()
         val jp = df.queryExecution.executedPlan.toString
           .split("== Initial Plan ==").head

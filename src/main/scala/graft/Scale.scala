@@ -203,8 +203,8 @@ object Scale {
         .select(col("doc_id") + 1000000000L as "doc_id",
           concat(col("text"), lit(" probe")).as("text"))
       val tb = System.nanoTime()
-      val pairs = graft.operators.Dedup
-        .minhashPairsAgainstStore(spark, "scale_sig", batch, 0.8).count()
+      val pairs = graft.operators.Dedup.signatureStore("scale_sig", 0.8)
+        .matches(spark, batch).count()
       val sec = (System.nanoTime() - tb) / 1e9
       println(f"[scale] incremental batch=$bsz%-7d $sec%8.2f s  ($pairs pairs, ${bsz / sec}%.0f docs/s)")
     }
@@ -225,8 +225,8 @@ object Scale {
           .otherwise(array_join(reverse(split(col("text"), " ")), " ")).as("text"))
       val bsz = batch.count()
       val tb = System.nanoTime()
-      val byStatus = graft.operators.Dedup
-        .ingestBatch(spark, "scale_sig", batch, 0.8)
+      val byStatus = graft.operators.Dedup.signatureStore("scale_sig", 0.8)
+        .ingest(spark, batch)
         .groupBy(col("status")).count()
         .collect().map(x => s"${x.getString(0)}=${x.getLong(1)}").sorted.mkString(" ")
       val sec = (System.nanoTime() - tb) / 1e9
@@ -260,8 +260,8 @@ object Scale {
           col("hash_hi"), col("hash_lo"))
       Seq(nVids / 64, nVids / 16, nVids / 4).foreach { bsz =>
         val tb = System.nanoTime()
-        val pairs = graft.operators.MediaDedup.videoPairsAgainstStore(
-          spark, "scale_vsig", batchOf(bsz), minShared = 4, maxDf = 50).count()
+        val pairs = graft.operators.MediaDedup.videoStore("scale_vsig", 4, 50)
+          .matches(spark, batchOf(bsz)).count()
         val sec = (System.nanoTime() - tb) / 1e9
         println(f"[scale] video batch=$bsz%-7d $sec%8.2f s  ($pairs pairs, ${bsz / sec}%.0f vids/s)")
       }
@@ -272,12 +272,12 @@ object Scale {
       // shares only it)
       val b0 = batchOf(nVids / 64)
       val tOn = System.nanoTime()
-      val pOn = graft.operators.MediaDedup.videoPairsAgainstStore(
-        spark, "scale_vsig", b0, 4, 50).count()
+      val pOn = graft.operators.MediaDedup.videoStore("scale_vsig", 4, 50)
+        .matches(spark, b0).count()
       val sOn = (System.nanoTime() - tOn) / 1e9
       val tOff = System.nanoTime()
-      val pOff = graft.operators.MediaDedup.videoPairsAgainstStore(
-        spark, "scale_vsig", b0, 4, Int.MaxValue).count()
+      val pOff = graft.operators.MediaDedup.videoStore("scale_vsig", 4, Int.MaxValue)
+        .matches(spark, b0).count()
       val sOff = (System.nanoTime() - tOff) / 1e9
       println(f"[scale] video valve: ON $sOn%.2f s / OFF $sOff%.2f s " +
         f"(${sOff / sOn}%.2fx; pairs $pOn vs $pOff — identical sets, the " +
@@ -288,12 +288,11 @@ object Scale {
       val r1 = batchOf(nVids / 16)
         .select(col("doc_id"), col("hash_hi"),
           (col("hash_lo") + 100000000L).as("hash_lo"))
-      graft.operators.MediaDedup.ingestVideoSignatureBatch(
-        spark, "scale_vsig", r1, 4, 50)
+      graft.operators.MediaDedup.videoStore("scale_vsig", 4, 50).ingest(spark, r1)
       val r2 = r1.select(col("doc_id") + 1000000000L as "doc_id",
         col("hash_hi"), col("hash_lo"))
-      val st = graft.operators.MediaDedup.ingestVideoSignatureBatch(
-        spark, "scale_vsig", r2, 4, 50)
+      val st = graft.operators.MediaDedup.videoStore("scale_vsig", 4, 50)
+        .ingest(spark, r2)
         .groupBy(col("status")).count()
         .collect().map(x => s"${x.getString(0)}=${x.getLong(1)}").sorted.mkString(" ")
       println(s"[scale] video ingest chain round2: $st (round-2 copies " +

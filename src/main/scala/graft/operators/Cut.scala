@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftBridge}
 
 /** Shared lineage cut for materialization points inside iterative
   * rounds and ingest pipelines: a RELIABLE checkpoint when the session
@@ -18,10 +18,14 @@ import org.apache.spark.sql.DataFrame
   * frame, [[MediaDedup]]/[[Dedup]]/[[Er]] ingest checkpoints) honor
   * the same dial — set one checkpoint dir and every cut in the repo
   * becomes fault-tolerant.
+  *
+  * The cut frame's size estimate is capped
+  * ([[org.apache.spark.sql.GraftBridge.capCheckpointStats]]), so the
+  * estimates of an iterative loop's rounds do not compound.
   */
 private[graft] object Cut {
-  def apply(df: DataFrame): DataFrame =
+  def apply(df: DataFrame): DataFrame = GraftBridge.capCheckpointStats(
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
       df.checkpoint(eager = true)
-    else df.localCheckpoint(true)
+    else df.localCheckpoint(true))
 }

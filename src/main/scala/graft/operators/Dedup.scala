@@ -295,7 +295,7 @@ object Dedup {
     // a missing-file window, not a torn-file window — a concurrent
     // reader fails loudly and retries; the single-writer streaming
     // loop swaps in its between-batch quiet window where it races
-    // nothing (compactSignatureStore's contract).
+    // nothing (the store compaction's contract).
     if (fs.exists(fin)) fs.delete(fin, false)
     require(fs.rename(tmp, fin), s"bloom sidecar swap failed at $fin")
   }
@@ -483,16 +483,11 @@ object Dedup {
       .filter(col("jaccard") >= jaccardMin)
   }
 
-  /** (bands keyed by skey, per-doc shingle sets) for a document set —
-    * the two frames a signature store holds. */
-  private def storeFrames(documents: DataFrame): (DataFrame, DataFrame) = {
-    val cd = shingled(documents)
-    val bands = minhashBands(cd)
+  /** (doc_id, skey): a shingled doc set's band keys, band folded into
+    * one bucketable `skey = xxhash64(band, bkey)`. */
+  private def bandsOf(shingles: DataFrame): DataFrame =
+    minhashBands(shingles)
       .select(col("doc_id"), xxhash64(col("band"), col("bkey")).as("skey"))
-    (bands, cd)
-  }
-
-  private def signatureTables(name: String) = Seq(s"${name}_bands", s"${name}_shingles")
 
   /** Materialize the corpus signature store that makes incremental
     * dedup cost ∝ batch size: the band table keyed by a single
@@ -502,11 +497,12 @@ object Dedup {
     * side — only the (small) batch shuffles. skey folding band into
     * one column is what lets the store bucket on one key; cross-band
     * skey collisions can only ADD candidates, and the exact-jaccard
-    * verify removes them.
+    * verify removes them. Ingest, delete and compaction go through
+    * [[signatureStore]].
     */
   def writeSignatureStore(corpus: DataFrame, name: String, buckets: Int = 8): Unit = {
-    val (bands, cd) = storeFrames(corpus)
-    BucketedStore.create(bands, s"${name}_bands", buckets, "skey")
+    val cd = shingled(corpus)
+    BucketedStore.create(bandsOf(cd), s"${name}_bands", buckets, "skey")
     BucketedStore.create(cd, s"${name}_shingles", buckets, "doc_id")
     // a full rebuild is a NEW store generation: the suppression-list
     // contract ("a retired id stays dead") is scoped to one
@@ -516,121 +512,35 @@ object Dedup {
     corpus.sparkSession.sql(s"DROP TABLE IF EXISTS ${name}_tombstones")
   }
 
-  /** RETIRE documents from a signature store (takedown / TTL / GDPR):
-    * [[BucketedStore.delete]]'s lazy tombstones — every read anti-joins
-    * them, [[compactSignatureStore]] drops the rows physically, and the
-    * tombstone table survives as a SUPPRESSION LIST: a retired id
-    * stays dead, so crash-replayed batches cannot re-append its
-    * signatures and it never classifies as a match again (ids are
-    * immutable per the store contract, so suppression-by-id is safe).
-    * Labels retire with the same tombstones ([[clusterLabels]] filters
-    * them; [[compactLabelStore]] drops them physically).
-    */
-  def deleteFromSignatureStore(spark: SparkSession, name: String,
-      ids: DataFrame): Unit =
-    BucketedStore.delete(spark, name, ids)
-
-  /** APPEND a batch's bands+shingles to an existing signature store —
-    * the store-maintenance half of the production loop (classify →
-    * append uniques → next batch sees them), with no overwrite and no
-    * rebuild. Each append lands at most one file per bucket: reads
-    * stay bucketed (zero store-side exchange; with >1 file per bucket
-    * the join adds a per-bucket sort, never a shuffle). Compact on
-    * cadence ([[maybeCompactSignatureStore]]).
-    */
-  def appendToSignatureStore(batch: DataFrame, name: String): Unit = {
-    val (bands, cd) = storeFrames(batch)
-    BucketedStore.append(bands, s"${name}_bands")
-    BucketedStore.append(cd, s"${name}_shingles")
-  }
-
-  /** Compact a signature store in place back to one sorted file per
-    * bucket, tombstoned docs dropped physically (reads have been
-    * filtering them since the delete) — [[BucketedStore.compact]]. */
-  def compactSignatureStore(spark: SparkSession, name: String): Unit =
-    signatureTables(name).foreach(BucketedStore.compact(spark, _, name))
-
-  /** Compaction CADENCE policy: compact the signature store only when
-    * some table's deepest bucket holds more than `maxFilesPerBucket`
-    * files — [[BucketedStore.maybeCompact]]. Returns whether it
-    * compacted. */
-  def maybeCompactSignatureStore(spark: SparkSession, name: String,
-      maxFilesPerBucket: Int): Boolean =
-    BucketedStore.maybeCompact(spark, signatureTables(name), maxFilesPerBucket)(
-      compactSignatureStore(spark, name))
-
-  /** One production ingest step: classify `batch` against the store
-    * (near-dup at `jaccardMin` → the smallest matching corpus id),
-    * append the UNIQUE docs' signatures so the next batch dedups
-    * against them, and return the classification. The classification
-    * is localCheckpoint-ed (batch-sized) before the append so the
-    * append job does not read the very tables it writes.
-    *
-    * STORE CONTRACT — doc_id is a corpus-global IDENTIFIER: one id
-    * names one immutable document. Classification excludes
-    * corpus_id == batch_id matches (that is what makes a replayed
-    * batch idempotent), so re-ingesting CHANGED content under an
-    * existing id is an update the store does not model — the self-id
-    * match is suppressed and the doc classifies as unique. Assign a
-    * fresh doc_id per content version (content-hash ids satisfy this
-    * for free). The append below also skips ids already present, so a
-    * crash-replay cannot accumulate duplicate signature rows either.
-    */
-  def ingestBatch(spark: SparkSession, name: String, batch: DataFrame,
-      jaccardMin: Double): DataFrame = {
-    val matches = minhashPairsAgainstStore(spark, name, batch, jaccardMin)
-      .groupBy(col("batch_id")).agg(min(col("corpus_id")).as("match_id"))
-    val classified = batch.select(col("doc_id"))
-      .join(matches, col("doc_id") === col("batch_id"), "left")
-      .select(col("doc_id"),
-        when(col("match_id").isNotNull, "near").otherwise("unique").as("status"),
-        coalesce(col("match_id"), lit(-1L)).as("match_id"))
-      .transform(Cut(_))
-    appendUniqueSignatures(spark, name, batch.join(
-      classified.filter(col("status") === "unique").select("doc_id"), "doc_id"))
-    classified
-  }
-
-  /** Append the batch's unique docs the store does not hold yet —
-    * [[BucketedStore.unseen]]: a retried batch whose append landed
-    * before the crash must not land its signatures twice, and a retired
-    * doc must not resurrect after compaction dropped its rows. */
-  private def appendUniqueSignatures(spark: SparkSession, name: String,
-      uniques: DataFrame): Unit =
-    appendToSignatureStore(
-      BucketedStore.unseen(spark, uniques, s"${name}_shingles", name), name)
-
-  /** [[minhashPairsAgainst]] against a materialized signature store
-    * (see [[writeSignatureStore]]): the corpus is never re-shingled,
-    * re-signed, or re-banded — per-increment cost is the batch's own
-    * shingle/sign work plus the cross-bucket candidates.
-    */
-  def minhashPairsAgainstStore(spark: SparkSession, name: String,
-      batch: DataFrame, jaccardMin: Double): DataFrame = {
-    val bd = shingled(batch)
-    val bb = minhashBands(bd)
-      .select(col("doc_id").as("batch_id"),
-        xxhash64(col("band"), col("bkey")).as("skey"))
-    val cb = BucketedStore.read(spark, s"${name}_bands", name)
-      .select(col("doc_id").as("corpus_id"), col("skey"))
-    // corpus_id =!= batch_id: a retried micro-batch whose signatures
-    // were already appended (crash between result write and append)
-    // must not match ITSELF — without this, every doc of the retry
-    // self-matches at jaccard 1.0 and uniques get reclassified as
-    // near. With it, classification is idempotent under duplicate
-    // signatures and the replayed partition overwrite lands the same
-    // rows.
-    val cands = bb.join(cb, "skey")
-      .filter(col("corpus_id") =!= col("batch_id"))
-      .select(col("batch_id"), col("corpus_id")).distinct()
-    val a = bd.select(col("doc_id").as("batch_id"), col("sh").as("sh_a"))
-    val c = BucketedStore.read(spark, s"${name}_shingles", name)
-      .select(col("doc_id").as("corpus_id"), col("sh").as("sh_b"))
-    cands.join(a, "batch_id").join(c, "corpus_id")
-      .select(col("batch_id"), col("corpus_id"),
-        graft.functions.jaccardHashes(col("sh_a"), col("sh_b")).as("jaccard"))
-      .filter(col("jaccard") >= jaccardMin)
-  }
+  /** The signature store `store` (built by [[writeSignatureStore]]) as a
+    * [[NearDupStore]] classifying at `jaccardMin`: a batch adds its
+    * shingle sets (`_shingles`, the id table) and band keys (`_bands`);
+    * its pair source is [[minhashPairsAgainst]] with the corpus side
+    * read from the store — never re-shingled, re-signed or re-banded.
+    * The batch's band keys join the bucketed `_bands` on skey (zero
+    * store-side exchange), candidates verify by exact jaccard against
+    * the bucketed `_shingles`. `corpus_id =!= batch_id` is the replay
+    * guard: a retried batch whose rows were already appended must not
+    * match ITSELF at jaccard 1.0. */
+  def signatureStore(store: String, jaccardMin: Double): NearDupStore =
+    new NearDupStore(store) {
+      protected def base(batch: DataFrame): DataFrame = shingled(batch)
+      protected val tables = Seq("_bands" -> (bandsOf _), "_shingles" -> identity[DataFrame] _)
+      protected val idTable = "_shingles"
+      protected def pairs(spark: SparkSession, rows: Map[String, DataFrame]): DataFrame = {
+        val bb = rows("_bands").select(col("doc_id").as("batch_id"), col("skey"))
+        val cb = read(spark, "_bands").select(col("doc_id").as("corpus_id"), col("skey"))
+        val cands = bb.join(cb, "skey")
+          .filter(col("corpus_id") =!= col("batch_id"))
+          .select(col("batch_id"), col("corpus_id")).distinct()
+        val a = rows("_shingles").select(col("doc_id").as("batch_id"), col("sh").as("sh_a"))
+        val c = read(spark, "_shingles").select(col("doc_id").as("corpus_id"), col("sh").as("sh_b"))
+        cands.join(a, "batch_id").join(c, "corpus_id")
+          .select(col("batch_id"), col("corpus_id"),
+            graft.functions.jaccardHashes(col("sh_a"), col("sh_b")).as("jaccard"))
+          .filter(col("jaccard") >= jaccardMin)
+      }
+    }
 
   // -------------------------------------------------------------------
   // Incremental cluster labels: connected-component ids maintained
@@ -665,34 +575,33 @@ object Dedup {
     Seq.empty[(Long, Long)].toDF("old_root", "new_root")
   }
 
-  /** Land a label store's initial (key, root) rows and an empty remap —
-    * the one label-store creation every labeled store shares. */
-  private[operators] def createLabelStore(labels: DataFrame, name: String,
-      buckets: Int, key: String = "doc_id"): Unit = {
-    val spark = labels.sparkSession
+  /** Land a label store for a corpus — the one label-store creation
+    * every labeled store shares: one connected-components run over the
+    * corpus' own near-dup `edges` (id_a, id_b), the LAST full run ever
+    * needed (ingest maintains labels from here on), each key of `ids`
+    * labeled with its component's root, singletons with their own key,
+    * and an empty remap. The closure is bounded (r19): pair sets under
+    * the 100k ceiling run the one-collect driver union-find; larger
+    * corpora fall through to the distributed fixpoint unchanged (labels
+    * proven identical). */
+  private[operators] def createLabelStore(ids: DataFrame, edges: DataFrame,
+      name: String, buckets: Int, key: String = "doc_id"): Unit = {
+    val spark = ids.sparkSession
+    val cc = connectedComponentsBounded(edges.select(col("id_a"), col("id_b")))
+    val labels = ids.join(cc, col(key) === col("id"), "left")
+      .select(col(key), coalesce(col("lab"), col(key)).as("root"))
     BucketedStore.create(labels, s"${name}_labels", buckets, key)
     graft.sources.Sinks.clearOrphanLocation(spark, s"${name}_remap")
     writeRemap(name, emptyRemap(spark))
   }
 
-  /** Initialize the label store for a corpus: one d07 connected-
-    * components run over the corpus' own near-dup pairs (the LAST full
-    * run ever needed — ingestBatchLabeled maintains labels from here
-    * on), singletons labeled by their own id, empty remap. Pair with
-    * [[writeSignatureStore]] on the same corpus.
-    */
+  /** Initialize the label store for a corpus ([[createLabelStore]] over
+    * its minhash pairs); [[NearDupStore.ingestLabeled]] maintains it.
+    * Pair with [[writeSignatureStore]] on the same corpus. */
   def writeLabelStore(corpus: DataFrame, name: String, jaccardMin: Double,
-      buckets: Int = 8): Unit = {
-    // bounded closure (r19): pair sets under the 100k ceiling run the
-    // one-collect driver union-find; larger corpora fall through to
-    // the distributed fixpoint unchanged (labels proven identical)
-    val cc = connectedComponentsBounded(
-      minhashPairs(corpus, jaccardMin).select(col("id_a"), col("id_b")))
-    val labels = corpus.select(col("doc_id"))
-      .join(cc, col("doc_id") === col("id"), "left")
-      .select(col("doc_id"), coalesce(col("lab"), col("doc_id")).as("root"))
-    createLabelStore(labels, name, buckets)
-  }
+      buckets: Int = 8): Unit =
+    createLabelStore(corpus.select(col("doc_id")), minhashPairs(corpus, jaccardMin),
+      name, buckets)
 
   /** Current (key, root) assignment: the labels table resolved one
     * hop through the broadcast remap — the labels side never shuffles.
@@ -710,36 +619,21 @@ object Dedup {
       .select(col(key), coalesce(col("new_root"), col("root")).as("root"))
   }
 
-  /** [[ingestBatch]] + incremental cluster-label maintenance: classify
-    * the batch against the signature store, attach each near-dup to
-    * the SMALLEST matched cluster root, and when one batch doc matches
-    * docs of several clusters, merge those clusters — by remap rows
-    * only, never by rewriting labels. Merge closure (doc X bridges
-    * {5,7}, doc Y bridges {3,5} → 7 must reach 3) runs d07's
-    * pointer-halving over the batch-sized merge graph. Returns
-    * (doc_id, status, match_id, cluster_id); appends the batch's
-    * labels and unique signatures, rewrites the KB remap. Cost ∝
-    * batch, replay-idempotent like ingestBatch (self-matches excluded,
-    * appends anti-joined, merge edges vanish on replay because the
-    * merge already happened). Intra-batch near-dups classify
-    * independently (same contract as ingestBatch: the store, not the
-    * batch, is the dedup frame of reference).
-    */
-  def ingestBatchLabeled(spark: SparkSession, name: String, batch: DataFrame,
-      jaccardMin: Double): DataFrame =
-    labeledIngest(spark, name, batch,
-      minhashPairsAgainstStore(spark, name, batch, jaccardMin),
-      appendUniqueSignatures(spark, name, _))
-
-  /** The label half of [[ingestBatchLabeled]], parameterized by the
-    * (batch_id, corpus_id) match-pair frame, the store-specific append
-    * and the label key column — the attach/merge/remap machinery is
-    * pair-source-agnostic, so the MEDIA stores ([[MediaDedup]]) and
-    * the ER store ([[Er.ingestBatch]]) maintain live cluster ids
-    * through this exact code path. `appendStore` receives the batch's
-    * `unique` rows and runs before the labels append, so it still sees
-    * the labels table without this batch. Returns (key, status
-    * near|unique, match_id, cluster_id). */
+  /** Incremental cluster-label maintenance for one batch, shared by the
+    * near-dup stores ([[NearDupStore.ingestLabeled]]) and the ER store
+    * ([[Er.ingestBatch]]): given the batch's (batch_id, corpus_id)
+    * match pairs, attach each matched batch key to the SMALLEST matched
+    * cluster root, and when one batch key matches several clusters,
+    * merge them — by remap rows only, never by rewriting labels. Merge
+    * closure (doc X bridges {5,7}, doc Y bridges {3,5} → 7 must reach
+    * 3) runs over the batch-sized merge graph. `appendStore` receives
+    * the batch's `unique` keys and runs before the labels append, so it
+    * still sees the labels table without this batch. Returns (key,
+    * status near|unique, match_id, cluster_id). Cost ∝ batch;
+    * replay-idempotent (appends anti-joined, merge edges vanish on
+    * replay because the merge already happened). Intra-batch near-dups
+    * classify independently: the store, not the batch, is the frame of
+    * reference. */
   private[operators] def labeledIngest(spark: SparkSession, name: String,
       batch: DataFrame, pairs: DataFrame, appendStore: DataFrame => Unit,
       key: String = "doc_id"): DataFrame = {

@@ -153,7 +153,7 @@ object Er {
   // Incremental entity resolution: a bucketed ENTITY STORE maintained
   // batch-by-batch, so the catalog is never re-blocked end-to-end —
   // the ER production loop, on the signature-store economics
-  // ([[Dedup.writeSignatureStore]] / [[Dedup.ingestBatchLabeled]]):
+  // ([[Dedup.writeSignatureStore]] / [[NearDupStore.ingestLabeled]]):
   //   `${name}_blocks` — one row per (record, block pass), keyed by
   //     skey = xxhash64(pass, block value) and carrying the record's
   //     columns (the feature inputs); bucketed+sorted by skey, so a
@@ -203,14 +203,10 @@ object Er {
       buckets: Int = 8): Unit = {
     val matches = candidatePairsMulti(records, spec.keyCol, spec.blockKeys,
       spec.features, spec.keep).filter(spec.isMatch)
-    // bounded closure — entityClusters' r19 rationale
-    val cc = Dedup.connectedComponentsBounded(
-      matches.select(col("a_key").as("id_a"), col("b_key").as("id_b")))
-    val labels = records.select(col(spec.keyCol).as("rkey"))
-      .join(cc, col("rkey") === col("id"), "left")
-      .select(col("rkey"), coalesce(col("lab"), col("rkey")).as("root"))
     BucketedStore.create(blockRows(records, spec), s"${name}_blocks", buckets, "skey")
-    Dedup.createLabelStore(labels, name, buckets, "rkey")
+    Dedup.createLabelStore(records.select(col(spec.keyCol).as("rkey")),
+      matches.select(col("a_key").as("id_a"), col("b_key").as("id_b")),
+      name, buckets, "rkey")
   }
 
   /** Current (rkey, root) entity assignment — [[Dedup.clusterLabels]]
@@ -230,7 +226,7 @@ object Er {
     * against them too. Returns (keyCol, status matched|unique,
     * match_id, entity_id).
     *
-    * Contract mirrors [[Dedup.ingestBatch]]: the store, not the batch,
+    * Contract mirrors [[NearDupStore.ingest]]: the store, not the batch,
     * is the frame of reference (intra-batch pairs link on the next
     * round via the appended records); keys are immutable identifiers;
     * replay is idempotent (self-matches excluded, appends anti-joined

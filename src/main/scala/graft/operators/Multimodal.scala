@@ -1074,7 +1074,7 @@ object Multimodal {
       val isB =
         pmod(pmod(col("doc_id"), lit(1000003L)) * lit(427799L), lit(1000003L)) % 5 === 0
       MediaDedup.writeFingerprintStore(s, "m14_store", fps.filter(!isB), 6)
-      MediaDedup.ingestFingerprintBatch(s, "m14_store", fps.filter(isB), 6)
+      MediaDedup.fingerprintStore("m14_store", 6).ingest(s, fps.filter(isB))
         .orderBy("doc_id")
     }, Some("""
       WITH img AS (
@@ -1134,8 +1134,8 @@ object Multimodal {
       val isB =
         pmod(pmod(col("doc_id"), lit(1000003L)) * lit(427799L), lit(1000003L)) % 5 === 0
       MediaDedup.writeVideoSignatureStore(s, "m15_store", frames.filter(!isB))
-      MediaDedup.ingestVideoSignatureBatch(s, "m15_store", frames.filter(isB),
-          minShared = 3, maxDf = 50)
+      MediaDedup.videoStore("m15_store", minShared = 3, maxDf = 50)
+        .ingest(s, frames.filter(isB))
         .orderBy("doc_id")
     }, Some("""
       WITH v AS (SELECT doc_id, 8 + (doc_id * 13) % 24 AS w,
@@ -1200,8 +1200,8 @@ object Multimodal {
         pmod(pmod(col("doc_id"), lit(1000003L)) * lit(427799L), lit(1000003L)) % 5
       MediaDedup.writeFingerprintStore(s, "m16_store",
         fps.filter(bucket === 1), 2)
-      MediaDedup.ingestFingerprintBatch(s, "m16_store",
-        fps.filter(bucket === 0), 2)
+      MediaDedup.fingerprintStore("m16_store", 2)
+        .ingest(s, fps.filter(bucket === 0))
         .orderBy("doc_id")
     }, Some(AudioFpSql + """
       , flag AS (SELECT doc_id,

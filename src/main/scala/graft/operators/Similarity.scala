@@ -1318,7 +1318,7 @@ object Similarity {
     * cheap table), sidecars untouched, searches partition-prune
     * exactly as before. The directory swap is not transactional:
     * schedule in the ingest quiet window (same caveat as
-    * compactSignatureStore).
+    * the near-dup store compaction).
     */
   /** Compaction CADENCE policy for the index: compact only when some
     * inverted list (cell directory) exceeds `maxFilesPerCell` files —

@@ -1,118 +1,50 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-/** Streaming incremental near-dup dedup — the real ingest shape at
-  * 100 TB: a document stream is classified micro-batch by micro-batch
-  * against the materialized signature store
-  * ([[graft.operators.Dedup.writeSignatureStore]]), and each batch's
-  * UNIQUE docs' signatures are appended so every later micro-batch
-  * dedups against everything that came before, without ever touching
-  * the corpus again (per-batch cost ∝ batch size; the store side of
-  * the classify join is bucketed and exchange-free).
-  *
-  * foreachBatch because the classify-then-append step is a batch
-  * pipeline over each micro-batch (two actions: the classification
-  * write and the store append) — not expressible as a single
-  * incremental operator. The result sink is IDEMPOTENT under
-  * micro-batch retry: classifications land partitioned by
-  * micro_batch with dynamic partition overwrite, so a batch retried
-  * after a crash mid-write replaces exactly its own partition
-  * instead of appending duplicate rows. (The store append itself is
-  * not transactional — a crash between the result write and the
-  * append can re-append a batch's signatures. That is safe because
-  * classification excludes corpus rows with the batch doc's own id
-  * (Dedup.minhashPairsAgainstStore filters corpus_id =!= batch_id),
-  * so a replayed batch cannot self-match its already-appended
-  * signatures: duplicate signatures affect store size, not results.)
+import graft.operators.Dedup
+
+/** Streaming incremental near-dup dedup: a document stream is
+  * classified micro-batch by micro-batch against the materialized
+  * signature store ([[Dedup.writeSignatureStore]]), and each batch's
+  * unique docs are appended, so every later micro-batch dedups against
+  * everything that came before. Every stream here runs [[IngestLoop]],
+  * which documents the sink and its idempotence under retry.
   */
 object DedupStream {
 
-  /** Start the pipeline: `docStream` must be a streaming DataFrame of
-    * (doc_id, text). Classifications land at `outPath` as parquet with
-    * a micro_batch column; progress checkpoints at `checkpoint`.
-    */
+  /** Classify a stream of (doc_id, text) through
+    * [[graft.operators.NearDupStore.ingest]] on the signature store; the
+    * (doc_id, status, match_id) rows land at `outPath`. With
+    * `maxFilesPerBucket` the store compacts on that cadence. */
   def start(store: String, docStream: DataFrame, jaccardMin: Double,
       outPath: String, checkpoint: String,
       maxFilesPerBucket: Option[Int] = None): StreamingQuery =
-    docStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val classified = graft.operators.Dedup
-          .ingestBatch(batch.sparkSession, store, batch, jaccardMin)
-        classified.withColumn("micro_batch", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("micro_batch")
-          .parquet(outPath)
-        // compaction cadence: self-triggering, in the single writer's
-        // between-batch quiet window (the directory swap races nothing)
-        maxFilesPerBucket.foreach { n =>
-          graft.operators.Dedup
-            .maybeCompactSignatureStore(batch.sparkSession, store, n)
-        }
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
+    IngestLoop.nearDup(Dedup.signatureStore(store, jaccardMin), docStream,
+      outPath, checkpoint, maxFilesPerBucket)
 
-  /** [[start]] + live cluster labels: each micro-batch classifies
-    * against the signature store AND maintains the incremental
-    * connected-component label store
-    * ([[graft.operators.Dedup.ingestBatchLabeled]]), so every emitted
-    * row carries the doc's CURRENT cluster_id — a batch-2 near-dup of
-    * a batch-1 unique joins that doc's cluster with no d07 rerun.
-    * Same idempotent dynamic-partition result sink; the label append
-    * and remap rewrite are replay-safe the same way the signature
-    * append is (anti-joined ids, merges vanish on replay).
-    *
-    * `maxFilesPerBucket` is the unlabeled twin's compaction parity
-    * PLUS the label layer's: on cadence it compacts the signature
-    * store ([[graft.operators.Dedup.maybeCompactSignatureStore]]) AND
-    * the label store
-    * ([[graft.operators.Dedup.maybeCompactLabelStore]], which also
-    * folds the remap when it outgrows `maxRemapRows` — every label
-    * read pays the remap broadcast, so a months-long labeled stream
-    * would otherwise grow store files and remap rows unboundedly).
-    */
+  /** [[start]] with live cluster labels
+    * ([[graft.operators.NearDupStore.ingestLabeled]]): each row carries
+    * the doc's CURRENT cluster_id. `maxFilesPerBucket` compacts the
+    * signature store and the label store, which also folds the remap
+    * once it outgrows `maxRemapRows` ([[Dedup.maybeCompactLabelStore]]). */
   def startLabeled(store: String, docStream: DataFrame, jaccardMin: Double,
       outPath: String, checkpoint: String,
       maxFilesPerBucket: Option[Int] = None,
       maxRemapRows: Long = 100000L): StreamingQuery =
-    docStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val labeled = graft.operators.Dedup
-          .ingestBatchLabeled(batch.sparkSession, store, batch, jaccardMin)
-        labeled.withColumn("micro_batch", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("micro_batch")
-          .parquet(outPath)
-        // both stores grow per batch (signature append + label append
-        // + remap rewrite) — compact each on its own trigger in the
-        // single writer's between-batch quiet window
-        maxFilesPerBucket.foreach { n =>
-          graft.operators.Dedup
-            .maybeCompactSignatureStore(batch.sparkSession, store, n)
-          graft.operators.Dedup
-            .maybeCompactLabelStore(batch.sparkSession, store, n, maxRemapRows)
-        }
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
+    IngestLoop.nearDupLabeled(Dedup.signatureStore(store, jaccardMin),
+      docStream, outPath, checkpoint, maxFilesPerBucket, maxRemapRows)
 
   /** Streaming decontamination — d20's production loop: the reference
-    * bloom is built ONCE ([[graft.operators.Dedup.writeBloomSidecar]])
+    * bloom is built ONCE ([[Dedup.writeBloomSidecar]])
     * and every micro-batch probes the same sidecar bytes (loaded once
     * here, not per batch), confirming candidates against `ref` so
     * per-doc counts stay exact. Per-batch cost: one map-only probe of
     * the batch + one candidate-broadcast confirm pass over `ref`; the
     * sidecar rebuilds only when the reference corpus changes. Output
     * (doc_id, n_shared, contaminated) lands partitioned by
-    * micro_batch with dynamic overwrite — idempotent under retry like
-    * [[start]].
+    * micro_batch through [[IngestLoop]], idempotent under retry.
     *
     * CONTRACT: `ref` and the sidecar must describe the same corpus.
     * The bloom has no false positives that survive the confirm, but a
@@ -121,7 +53,7 @@ object DedupStream {
     * even though `ref` contains it). `refreshGrowthFactor` closes that
     * gap on a cadence: before each micro-batch the reference's row
     * count is compared against the count stored in the sidecar at
-    * build time ([[graft.operators.Dedup.maybeRefreshBloomSidecar]]),
+    * build time ([[Dedup.maybeRefreshBloomSidecar]]),
     * and past the factor the bloom is rebuilt, atomically swapped, and
     * reloaded — so reference growth is screened from the NEXT batch
     * on. Stale window: rows added since the last refresh are missed
@@ -136,35 +68,23 @@ object DedupStream {
       bloomNumBits: Long = 1L << 23): StreamingQuery = {
     // loaded once, reloaded only when the refresh cadence swaps the
     // sidecar — never re-read per batch
-    var (n, bf) = graft.operators.Dedup
-      .readBloomSidecar(docStream.sparkSession, sidecarPath)
-    docStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        // `ref` is by-name: a batch DataFrame snapshots its file
-        // listing at creation, so a growing reference directory needs
-        // a fresh plan per micro-batch (pass `spark.read.parquet(dir)`
-        // as the argument) — both the growth probe and the confirm
-        // join below must see the CURRENT reference
-        val refDf = ref
-        refreshGrowthFactor.foreach { f =>
-          if (graft.operators.Dedup.maybeRefreshBloomSidecar(spark,
-              sidecarPath, refDf, f, bloomExpectedItems, bloomNumBits)) {
-            val reloaded = graft.operators.Dedup
-              .readBloomSidecar(spark, sidecarPath)
-            n = reloaded._1; bf = reloaded._2
-          }
+    var (n, bf) = Dedup.readBloomSidecar(docStream.sparkSession, sidecarPath)
+    IngestLoop.start(docStream, outPath, checkpoint) { batch =>
+      val spark = batch.sparkSession
+      // `ref` is by-name: a batch DataFrame snapshots its file
+      // listing at creation, so a growing reference directory needs
+      // a fresh plan per micro-batch (pass `spark.read.parquet(dir)`
+      // as the argument) — both the growth probe and the confirm
+      // join below must see the CURRENT reference
+      val refDf = ref
+      refreshGrowthFactor.foreach { f =>
+        if (Dedup.maybeRefreshBloomSidecar(spark,
+            sidecarPath, refDf, f, bloomExpectedItems, bloomNumBits)) {
+          val reloaded = Dedup.readBloomSidecar(spark, sidecarPath)
+          n = reloaded._1; bf = reloaded._2
         }
-        graft.operators.Dedup
-          .bloomDecontaminateWith(batch, refDf, bf, n, minShared)
-          .withColumn("micro_batch", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("micro_batch")
-          .parquet(outPath)
-        ()
       }
-      .option("checkpointLocation", checkpoint)
-      .start()
+      Dedup.bloomDecontaminateWith(batch, refDf, bf, n, minShared)
+    }
   }
 }

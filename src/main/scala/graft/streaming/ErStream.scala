@@ -1,50 +1,27 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Er
 
-/** Streaming incremental entity resolution — the record-linkage
-  * ingest loop run continuously: a record stream is resolved
+/** Streaming incremental entity resolution: a record stream is resolved
   * micro-batch by micro-batch against the bucketed entity store
-  * ([[Er.writeEntityStore]]), each batch's records are appended so
-  * every later micro-batch links against everything that came before
-  * (batch 2 finds batch 1's records — the catalog is never
-  * re-blocked), and entity merges land as KB remap rows.
-  *
-  * foreachBatch for the same reason as [[DedupStream]]: block →
-  * match → attach/merge → append is a batch pipeline with several
-  * actions. The result sink is idempotent under micro-batch retry
-  * (dynamic partition overwrite on micro_batch), and
-  * [[Er.ingestBatch]] itself is replay-idempotent (self-matches
-  * excluded, appends anti-joined on keys the store already holds,
-  * merge edges vanish on replay).
+  * ([[Er.writeEntityStore]]) through [[Er.ingestBatch]], each batch's
+  * records appended so later micro-batches link against them, entity
+  * merges landing as KB remap rows. Runs [[IngestLoop]], which
+  * documents the sink and its idempotence under retry.
   */
 object ErStream {
 
   /** `recordStream` columns must match the store's record schema
     * (including `spec.keyCol`). Per-record resolutions land at
-    * `outPath` with a micro_batch column; store compaction triggers
-    * itself on the `maxFilesPerBucket` cadence.
-    */
+    * `outPath`; the store compacts on the `maxFilesPerBucket` cadence
+    * ([[Er.maybeCompactEntityStore]]). */
   def start(store: String, recordStream: DataFrame, spec: Er.LinkSpec,
       outPath: String, checkpoint: String,
       maxFilesPerBucket: Option[Int] = None): StreamingQuery =
-    recordStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val resolved = Er.ingestBatch(batch.sparkSession, store, batch, spec)
-        resolved.withColumn("micro_batch", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("micro_batch")
-          .parquet(outPath)
-        maxFilesPerBucket.foreach { n =>
-          Er.maybeCompactEntityStore(batch.sparkSession, store, n)
-        }
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
+    IngestLoop.start(recordStream, outPath, checkpoint,
+      maxFilesPerBucket.map(n => spark => Er.maybeCompactEntityStore(spark, store, n)))(
+      b => Er.ingestBatch(b.sparkSession, store, b, spec))
 }

@@ -1,158 +1,51 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-/** Streaming incremental PERCEPTUAL dedup — [[DedupStream]]'s loop at
-  * the media layer: a fingerprint stream (doc_id, hash_hi, hash_lo —
-  * image dHash, audio Haitsma–Kalker, whatever upstream decode
-  * produced) classifies micro-batch by micro-batch against the
-  * bucketed fingerprint store
-  * ([[graft.operators.MediaDedup.writeFingerprintStore]]); each
-  * batch's UNIQUE fingerprints append so every later micro-batch
-  * dedups against everything that came before. Per-batch cost ∝
-  * batch size — the store side of the classify join is bucketed and
-  * exchange-free; the corpus is never re-fingerprinted.
-  *
-  * Same idempotence story as [[DedupStream]], with a STRONGER guard:
-  * the result sink is dynamic-partition-overwrite on micro_batch (a
-  * retried batch replaces exactly its own partition), and a crash
-  * between the result write and the store append is absorbed by the
-  * classify join excluding ALL current-batch ids from the corpus
-  * side (not just each doc's own id — so even two mutually-near
-  * uniques appended before the crash replay to the identical
-  * classification) plus the append-side anti-join (re-appends are
-  * skipped).
+import graft.operators.MediaDedup
+
+/** Streaming incremental PERCEPTUAL dedup — [[DedupStream]]'s streams
+  * on the media stores: a fingerprint stream (doc_id, hash_hi, hash_lo —
+  * image dHash, audio Haitsma–Kalker) classifies against the bucketed
+  * fingerprint store ([[MediaDedup.writeFingerprintStore]]), a
+  * frame-hash stream against the video-signature store
+  * ([[MediaDedup.writeVideoSignatureStore]]). Every stream here runs
+  * [[IngestLoop]], which documents the sink and its idempotence under
+  * retry; each new video's frames must arrive WHOLE in one micro-batch.
   */
 object MediaDedupStream {
 
-  /** Start the pipeline: `fpStream` must be a streaming DataFrame of
-    * (doc_id, hash_hi, hash_lo). Classifications land at `outPath` as
-    * parquet with a micro_batch column; progress checkpoints at
-    * `checkpoint`. `maxHamming` must match the store's dial tier
-    * (the scheme check fails the first batch fast otherwise). */
+  /** Classify a fingerprint stream; `maxHamming` must match the store's
+    * dial tier (the scheme check fails the first batch fast otherwise). */
   def start(store: String, fpStream: DataFrame, maxHamming: Int,
       outPath: String, checkpoint: String,
       maxFilesPerBucket: Option[Int] = None): StreamingQuery =
-    fpStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val classified = graft.operators.MediaDedup
-          .ingestFingerprintBatch(batch.sparkSession, store, batch, maxHamming)
-        classified.withColumn("micro_batch", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("micro_batch")
-          .parquet(outPath)
-        // self-triggering compaction in the single writer's
-        // between-batch quiet window (DedupStream's cadence contract)
-        maxFilesPerBucket.foreach { n =>
-          graft.operators.MediaDedup
-            .maybeCompactFingerprintStore(batch.sparkSession, store, n)
-        }
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
+    IngestLoop.nearDup(MediaDedup.fingerprintStore(store, maxHamming), fpStream,
+      outPath, checkpoint, maxFilesPerBucket)
 
-  /** [[start]] + live cluster labels ([[DedupStream.startLabeled]]'s
-    * media twin): each micro-batch classifies against the fingerprint
-    * store AND maintains the incremental label store
-    * ([[graft.operators.MediaDedup.ingestFingerprintBatchLabeled]]),
-    * so every emitted row carries the doc's CURRENT cluster_id — a
-    * batch-2 near-dup of a batch-1 unique joins that doc's cluster
-    * with no full CC rerun. Same idempotent dynamic-partition sink;
-    * label append and remap rewrite replay-safe the same way.
-    * `maxFilesPerBucket` compacts the fingerprint store AND the label
-    * store (remap folded past `maxRemapRows`) on the unlabeled twin's
-    * self-triggering cadence — [[DedupStream.startLabeled]]'s
-    * bounded-growth parity at the media layer. */
+  /** [[start]] with live cluster labels ([[DedupStream.startLabeled]]'s
+    * media twin). */
   def startLabeled(store: String, fpStream: DataFrame, maxHamming: Int,
       outPath: String, checkpoint: String,
       maxFilesPerBucket: Option[Int] = None,
       maxRemapRows: Long = 100000L): StreamingQuery =
-    fpStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val labeled = graft.operators.MediaDedup
-          .ingestFingerprintBatchLabeled(batch.sparkSession, store, batch,
-            maxHamming)
-        labeled.withColumn("micro_batch", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("micro_batch")
-          .parquet(outPath)
-        maxFilesPerBucket.foreach { n =>
-          graft.operators.MediaDedup
-            .maybeCompactFingerprintStore(batch.sparkSession, store, n)
-          graft.operators.Dedup
-            .maybeCompactLabelStore(batch.sparkSession, store, n, maxRemapRows)
-        }
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
+    IngestLoop.nearDupLabeled(MediaDedup.fingerprintStore(store, maxHamming), fpStream,
+      outPath, checkpoint, maxFilesPerBucket, maxRemapRows)
 
-  /** Streaming VIDEO-signature dedup — [[start]]'s loop on the
-    * set-of-frame-hashes store
-    * ([[graft.operators.MediaDedup.writeVideoSignatureStore]]):
-    * `frameStream` is a streaming DataFrame of (doc_id, hash_hi,
-    * hash_lo) frame-hash rows in which each new video's frames arrive
-    * WHOLE in one micro-batch (the ingest contract — a video split
-    * across batches would classify and append a partial signature).
-    * Per batch: one bucketed fkey join against the store with the
-    * maxDf stop-frame valve re-derived from the store's CURRENT df
-    * counts, uniques' signatures appended, classifications landed
-    * idempotently (dynamic partition overwrite + the batch-wide
-    * corpus-exclusion replay guard). */
+  /** Classify a stream of frame-hash rows against the video store, the
+    * maxDf stop-frame valve re-derived from the store every batch. */
   def startVideo(store: String, frameStream: DataFrame, minShared: Int,
       maxDf: Int, outPath: String, checkpoint: String,
       maxFilesPerBucket: Option[Int] = None): StreamingQuery =
-    frameStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val classified = graft.operators.MediaDedup
-          .ingestVideoSignatureBatch(batch.sparkSession, store, batch,
-            minShared, maxDf)
-        classified.withColumn("micro_batch", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("micro_batch")
-          .parquet(outPath)
-        maxFilesPerBucket.foreach { n =>
-          graft.operators.MediaDedup
-            .maybeCompactVideoSignatureStore(batch.sparkSession, store, n)
-        }
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
+    IngestLoop.nearDup(MediaDedup.videoStore(store, minShared, maxDf), frameStream,
+      outPath, checkpoint, maxFilesPerBucket)
 
-  /** [[startVideo]] + live cluster labels ([[startLabeled]]'s video
-    * twin): every emitted row carries the video's CURRENT cluster_id
-    * via [[graft.operators.MediaDedup.ingestVideoSignatureBatchLabeled]];
-    * same compaction parity (video store on files, label store on
-    * files OR remap growth). */
+  /** [[startVideo]] with live cluster labels. */
   def startVideoLabeled(store: String, frameStream: DataFrame,
       minShared: Int, maxDf: Int, outPath: String, checkpoint: String,
       maxFilesPerBucket: Option[Int] = None,
       maxRemapRows: Long = 100000L): StreamingQuery =
-    frameStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val labeled = graft.operators.MediaDedup
-          .ingestVideoSignatureBatchLabeled(batch.sparkSession, store,
-            batch, minShared, maxDf)
-        labeled.withColumn("micro_batch", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("micro_batch")
-          .parquet(outPath)
-        maxFilesPerBucket.foreach { n =>
-          graft.operators.MediaDedup
-            .maybeCompactVideoSignatureStore(batch.sparkSession, store, n)
-          graft.operators.Dedup
-            .maybeCompactLabelStore(batch.sparkSession, store, n, maxRemapRows)
-        }
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
+    IngestLoop.nearDupLabeled(MediaDedup.videoStore(store, minShared, maxDf), frameStream,
+      outPath, checkpoint, maxFilesPerBucket, maxRemapRows)
 }

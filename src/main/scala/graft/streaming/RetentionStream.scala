@@ -25,7 +25,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * MAINTENANCE: every append lands one more parquet file, and a
   * months-long stream would degrade on file listing alone — so the
   * same self-triggering cadence as the signature store
-  * ([[graft.operators.Dedup.maybeCompactSignatureStore]]): when the
+  * ([[graft.operators.NearDupStore.maybeCompact]]): when the
   * store's file count passes `maxStoreFiles`, it is rewritten to
   * size-based file counts ([[graft.sources.Sinks.compactParquet]]'s
   * checked rename swap) in the single writer's between-batch quiet

@@ -22,6 +22,27 @@ object GraftBridge {
     state.catalog.getTableMetadata(state.sqlParser.parseTableIdentifier(table))
   }
 
+  /** A checkpointed frame whose carried size estimate is capped at
+    * `spark.sql.defaultSizeInBytes`, the size the planner assumes for
+    * a relation it knows nothing about. A checkpoint keeps its input's
+    * estimate, and a join's estimate is the product of its children's:
+    * in a loop of cut-and-join rounds the products compound into
+    * numbers with ever more digits, and planning a round spends
+    * minutes multiplying them. Estimates under the cap — every frame
+    * small enough to broadcast — are kept as they are. */
+  def capCheckpointStats(cut: DataFrame): DataFrame = cut.queryExecution.logical match {
+    case r: execution.LogicalRDD =>
+      val spark = cut.sparkSession.asInstanceOf[classic.SparkSession]
+      val cap = BigInt(spark.sessionState.conf.defaultSizeInBytes)
+      val st = r.stats
+      if (st.sizeInBytes <= cap) cut
+      else classic.Dataset.ofRows(spark,
+        execution.LogicalRDD(r.output, r.rdd, r.outputPartitioning,
+          r.outputOrdering, r.isStreaming)(
+          spark, Some(st.copy(sizeInBytes = cap)), Some(r.constraints)))
+    case _ => cut
+  }
+
   def ofRows(spark: SparkSession,
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)

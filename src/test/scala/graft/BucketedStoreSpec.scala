@@ -53,7 +53,7 @@ class BucketedStoreSpec extends AnyFunSuite {
       val before = files()
       // a four-partition batch: unaligned, each task writes its own
       // file for every bucket it holds rows of
-      Dedup.appendToSignatureStore(df(batch1), "bsa_sig")
+      Dedup.signatureStore("bsa_sig", 0.5).ingest(spark, df(batch1))
       Search.appendToPostingsStore(df(batch1), "bsa_post")
       val after = files()
       for (t <- tables) {
@@ -74,10 +74,10 @@ class BucketedStoreSpec extends AnyFunSuite {
     try {
       Dedup.writeSignatureStore(df(seedDocs), sig, 4)
       Search.writePostingsStore(df(seedDocs), path, post, nBuckets = 4)
-      Dedup.ingestBatch(spark, sig, df(batch1), 0.5).collect()
+      Dedup.signatureStore(sig, 0.5).ingest(spark, df(batch1)).collect()
       Search.appendToPostingsStore(df(batch1), post)
       crash(Seq(s"${sig}_bands", s"${sig}_shingles", post, s"${post}_docs"))
-      val classified = Dedup.ingestBatch(spark, sig, df(batch2), 0.5)
+      val classified = Dedup.signatureStore(sig, 0.5).ingest(spark, df(batch2))
         .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
       Search.appendToPostingsStore(df(batch2), post)
       val ranked = Search.rankedSearch(spark, post, Seq("w3", "w17", "edited"), 10)
@@ -120,7 +120,7 @@ class BucketedStoreSpec extends AnyFunSuite {
       val staged = copies.map { case (fs, loc, _, _) =>
         val s = new Path(s"${loc}_staged"); copy(fs, loc, s); s
       }
-      Dedup.compactSignatureStore(spark, ts.head.stripSuffix("_bands"))
+      Dedup.signatureStore(ts.head.stripSuffix("_bands"), 0.5).compact(spark)
       Search.compactPostingsStore(spark, ts(2))
       for (((fs, _, _, old), s) <- copies.zip(staged)) assert(fs.rename(s, old))
     }

@@ -232,7 +232,7 @@ class DedupSpec extends AnyFunSuite {
     try {
       Dedup.writeSignatureStore(corpus, "sigstore", 4)
       // (1) same answer as the recompute path
-      val viaStore = Dedup.minhashPairsAgainstStore(spark, "sigstore", batch, 0.5)
+      val viaStore = Dedup.signatureStore("sigstore", 0.5).matches(spark, batch)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       val direct = Dedup.minhashPairsAgainst(corpus, batch, 0.5)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -276,14 +276,14 @@ class DedupSpec extends AnyFunSuite {
       Dedup.writeSignatureStore(docs(1L -> base, 3L -> far), "sigapp", 4)
       val n0 = spark.table("sigapp_shingles").count()
       // batch 1: doc 10 is brand new (appended), doc 11 near-dups corpus doc 1
-      val b1 = Dedup.ingestBatch(spark, "sigapp", docs(10L -> tuneA, 11L -> near), 0.5)
+      val b1 = Dedup.signatureStore("sigapp", 0.5).ingest(spark, docs(10L -> tuneA, 11L -> near))
         .collect().map(r => r.getLong(0) -> ((r.getString(1), r.getLong(2)))).toMap
       assert(b1(10L) === (("unique", -1L)))
       assert(b1(11L) === (("near", 1L)))
       assert(spark.table("sigapp_shingles").count() === n0 + 1) // only the unique appended
       // batch 2: doc 20 near-dups BATCH 1's doc 10 — visible only
       // because the append landed in the store
-      val b2 = Dedup.ingestBatch(spark, "sigapp", docs(20L -> tuneB), 0.5)
+      val b2 = Dedup.signatureStore("sigapp", 0.5).ingest(spark, docs(20L -> tuneB))
         .collect().map(r => r.getLong(0) -> ((r.getString(1), r.getLong(2)))).toMap
       assert(b2(20L) === (("near", 10L)))
       // post-append reads stay bucketed and exchange-free on the store
@@ -323,13 +323,13 @@ class DedupSpec extends AnyFunSuite {
     try {
       Dedup.writeSignatureStore(docs(1L -> base, 3L -> far), "sigretry", 4)
       val batch = docs(10L -> tuneA, 11L -> near)
-      val first = Dedup.ingestBatch(spark, "sigretry", batch, 0.5)
+      val first = Dedup.signatureStore("sigretry", 0.5).ingest(spark, batch)
         .collect().map(r => r.getLong(0) -> ((r.getString(1), r.getLong(2)))).toMap
       assert(first(10L) === (("unique", -1L)))
       // replay the same batch: doc 10's signatures are now IN the
       // store; without the corpus_id =!= batch_id guard it would match
       // itself and flip to ("near", 10)
-      val retry = Dedup.ingestBatch(spark, "sigretry", batch, 0.5)
+      val retry = Dedup.signatureStore("sigretry", 0.5).ingest(spark, batch)
         .collect().map(r => r.getLong(0) -> ((r.getString(1), r.getLong(2)))).toMap
       assert(retry === first, s"retry must be idempotent: $retry vs $first")
     } finally {
@@ -344,20 +344,19 @@ class DedupSpec extends AnyFunSuite {
     try {
       Dedup.writeSignatureStore(docs(1L -> base, 3L -> far), "sigdel", 4)
       Dedup.writeLabelStore(docs(1L -> base, 3L -> far), "sigdel", 0.5, 4)
-      def classify() = Dedup.minhashPairsAgainstStore(
-        spark, "sigdel", docs(2L -> near), 0.5)
+      def classify() = Dedup.signatureStore("sigdel", 0.5).matches(spark, docs(2L -> near))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(classify() === Set((2L, 1L)))
       assert(Dedup.clusterLabels(spark, "sigdel")
         .filter(col("doc_id") === 1L).count() === 1)
-      Dedup.deleteFromSignatureStore(spark, "sigdel", Seq(1L).toDF("doc_id"))
+      Dedup.signatureStore("sigdel", 0.5).delete(spark, Seq(1L).toDF("doc_id"))
       // lazy delete: reads filter immediately, rows still on disk
       assert(classify() === Set.empty, "tombstoned doc must stop matching")
       assert(Dedup.clusterLabels(spark, "sigdel")
         .filter(col("doc_id") === 1L).count() === 0)
       assert(spark.table("sigdel_shingles").filter(col("doc_id") === 1L).count() === 1)
       // compaction reclaims the bytes; answers unchanged
-      Dedup.compactSignatureStore(spark, "sigdel")
+      Dedup.signatureStore("sigdel", 0.5).compact(spark)
       Dedup.compactLabelStore(spark, "sigdel")
       Seq("sigdel_shingles", "sigdel_bands", "sigdel_labels").foreach { t =>
         assert(spark.table(t).filter(col("doc_id") === 1L).count() === 0,
@@ -366,7 +365,7 @@ class DedupSpec extends AnyFunSuite {
       assert(classify() === Set.empty)
       // the id stays dead: a crash-replayed batch carrying doc 1 can
       // not resurrect its signatures through the ingest append
-      Dedup.ingestBatch(spark, "sigdel", docs(1L -> base), 0.5)
+      Dedup.signatureStore("sigdel", 0.5).ingest(spark, docs(1L -> base))
       assert(spark.table("sigdel_shingles").filter(col("doc_id") === 1L).count() === 0)
       // ...but only within the store GENERATION: a full rebuild under
       // the same name resets the suppression list — fresh content
@@ -390,9 +389,8 @@ class DedupSpec extends AnyFunSuite {
     import spark.implicits._
     try {
       Dedup.writeSignatureStore(docs(1L -> base, 3L -> far), "sigceil", 4)
-      Dedup.deleteFromSignatureStore(spark, "sigceil", Seq(3L).toDF("doc_id"))
-      def classify() = Dedup.minhashPairsAgainstStore(
-        spark, "sigceil", docs(2L -> near, 4L -> far), 0.5)
+      Dedup.signatureStore("sigceil", 0.5).delete(spark, Seq(3L).toDF("doc_id"))
+      def classify() = Dedup.signatureStore("sigceil", 0.5).matches(spark, docs(2L -> near, 4L -> far))
       def pairs(df: org.apache.spark.sql.DataFrame) =
         df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       val viaBroadcast = pairs(classify())
@@ -421,19 +419,18 @@ class DedupSpec extends AnyFunSuite {
       Dedup.writeSignatureStore(docs(1L -> base, 3L -> far), "sigcad", 4)
       def nFiles(t: String): Long =
         graft.sources.BucketedStore.stats(spark, s"sigcad_$t").files.toLong
-      Dedup.ingestBatch(spark, "sigcad", docs(10L -> tuneA), 0.5)
-      Dedup.ingestBatch(spark, "sigcad", docs(11L -> tuneB), 0.5)
+      Dedup.signatureStore("sigcad", 0.5).ingest(spark, docs(10L -> tuneA))
+      Dedup.signatureStore("sigcad", 0.5).ingest(spark, docs(11L -> tuneB))
       assert(nFiles("bands") > 4, "appends must have added files")
-      def classify() = Dedup.minhashPairsAgainstStore(
-        spark, "sigcad", docs(20L -> near), 0.5)
+      def classify() = Dedup.signatureStore("sigcad", 0.5).matches(spark, docs(20L -> near))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       val before = classify()
       assert(before === Set((20L, 1L)))
       // over threshold → compacts; a second call finds nothing to do
-      assert(Dedup.maybeCompactSignatureStore(spark, "sigcad", 1) === true)
+      assert(Dedup.signatureStore("sigcad", 0.5).maybeCompact(spark, 1) === true)
       assert(nFiles("bands") <= 4 && nFiles("shingles") <= 4,
         "compaction must collapse to <= one file per bucket")
-      assert(Dedup.maybeCompactSignatureStore(spark, "sigcad", 1) === false)
+      assert(Dedup.signatureStore("sigcad", 0.5).maybeCompact(spark, 1) === false)
       assert(classify() === before)
     } finally {
       Seq("bands", "shingles").foreach(t => spark.sql(s"DROP TABLE IF EXISTS sigcad_$t"))
@@ -455,7 +452,7 @@ class DedupSpec extends AnyFunSuite {
         .write.format("parquet").saveAsTable("lbl_remap")
       val labelFilesBefore = spark.table("lbl_labels").inputFiles.toSet
 
-      val out = Dedup.ingestBatchLabeled(spark, "lbl", docs(10L -> base), 0.5)
+      val out = Dedup.signatureStore("lbl", 0.5).ingestLabeled(spark, docs(10L -> base))
         .collect().map(r => r.getLong(0) ->
           ((r.getString(1), r.getLong(2), r.getLong(3)))).toMap
       assert(out(10L) === (("near", 1L, 1L)))
@@ -472,7 +469,7 @@ class DedupSpec extends AnyFunSuite {
 
       // replay the same batch: same classification, no label-row dups,
       // no new merges (the merge already happened)
-      val replay = Dedup.ingestBatchLabeled(spark, "lbl", docs(10L -> base), 0.5)
+      val replay = Dedup.signatureStore("lbl", 0.5).ingestLabeled(spark, docs(10L -> base))
         .collect().map(r => r.getLong(0) ->
           ((r.getString(1), r.getLong(2), r.getLong(3)))).toMap
       assert(replay === out)
@@ -496,17 +493,17 @@ class DedupSpec extends AnyFunSuite {
     val tuneA = "autumn winds carry golden leaves across the quiet valley where shepherds guide their flocks home before the early mountain dusk settles"
     try {
       Dedup.writeSignatureStore(docs(1L -> base, 3L -> far), "sigcomp", 4)
-      Dedup.appendToSignatureStore(docs(10L -> tuneA), "sigcomp")
-      Dedup.appendToSignatureStore(docs(11L -> "completely novel content about glaciers carving deep valleys through ancient granite mountains over countless millennia"), "sigcomp")
+      Dedup.signatureStore("sigcomp", 0.5).ingest(spark, docs(10L -> tuneA))
+      Dedup.signatureStore("sigcomp", 0.5).ingest(spark, docs(11L -> "completely novel content about glaciers carving deep valleys through ancient granite mountains over countless millennia"))
       def bandsFiles(): Int =
         graft.sources.BucketedStore.stats(spark, "sigcomp_bands").files
       val nBefore = bandsFiles()
       assert(nBefore >= 10, s"3 writes x 4 buckets (minus empty) expected ~12 files, got $nBefore")
-      val before = Dedup.minhashPairsAgainstStore(spark, "sigcomp", docs(20L -> near), 0.5)
+      val before = Dedup.signatureStore("sigcomp", 0.5).matches(spark, docs(20L -> near))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      Dedup.compactSignatureStore(spark, "sigcomp")
+      Dedup.signatureStore("sigcomp", 0.5).compact(spark)
       assert(bandsFiles() <= 4, s"at most one file per bucket after compaction, got ${bandsFiles()}")
-      val after = Dedup.minhashPairsAgainstStore(spark, "sigcomp", docs(20L -> near), 0.5)
+      val after = Dedup.signatureStore("sigcomp", 0.5).matches(spark, docs(20L -> near))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(after === before && after === Set((20L, 1L)))
       // still a bucketed table (the zero-exchange contract survives)

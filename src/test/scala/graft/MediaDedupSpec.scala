@@ -34,15 +34,15 @@ class MediaDedupSpec extends AnyFunSuite {
 
   private def classify(name: String, batch: org.apache.spark.sql.DataFrame,
       maxHamming: Int) =
-    MediaDedup.ingestFingerprintBatch(spark, name, batch, maxHamming)
+    MediaDedup.fingerprintStore(name, maxHamming).ingest(spark, batch)
       .collect().map(r => r.getLong(0) -> ((r.getString(1), r.getLong(2)))).toMap
 
   test("fingerprint store: classify via store equals truth; store side reads with zero exchange") {
     try {
       MediaDedup.writeFingerprintStore(spark, "fpstore",
         fps(1L -> h1, 3L -> h3), 6)
-      val got = MediaDedup.fingerprintPairsAgainstStore(spark, "fpstore",
-        fps(2L -> flip(h1, 5, 40), 5L -> flip(h3, 0, 1, 2, 3, 4, 5, 6, 7)), 6)
+      val got = MediaDedup.fingerprintStore("fpstore", 6).matches(spark,
+        fps(2L -> flip(h1, 5, 40), 5L -> flip(h3, 0, 1, 2, 3, 4, 5, 6, 7)))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       assert(got === Set((2L, 1L, 2L))) // doc 5 is 8 bits from h3: out
       // the store side of the skey join must not shuffle — the
@@ -96,7 +96,7 @@ class MediaDedupSpec extends AnyFunSuite {
       MediaDedup.writeFingerprintStore(spark, "fpdel",
         fps(1L -> h1, 3L -> h3), 6)
       assert(classify("fpdel", fps(2L -> flip(h1, 9)), 6)(2L) === (("near", 1L)))
-      MediaDedup.deleteFromFingerprintStore(spark, "fpdel",
+      MediaDedup.fingerprintStore("fpdel", 6).delete(spark,
         Seq(1L, 2L).toDF("doc_id"))
       // retired ids no longer match; 4 lands as a fresh unique
       assert(classify("fpdel", fps(4L -> flip(h1, 21)), 6)(4L) === (("unique", -1L)))
@@ -105,7 +105,7 @@ class MediaDedupSpec extends AnyFunSuite {
       // doc 2 classified "near" so never entered; 1 is lazily
       // deleted — still on disk until compaction
       assert(before === Set(1L, 3L, 4L))
-      MediaDedup.compactFingerprintStore(spark, "fpdel")
+      MediaDedup.fingerprintStore("fpdel", 6).compact(spark)
       val after = spark.table("fpdel_fps").as[(Long, Long, Long)]
         .collect().map(_._1).toSet
       assert(after === Set(3L, 4L)) // reclaimed physically
@@ -121,8 +121,8 @@ class MediaDedupSpec extends AnyFunSuite {
     try {
       MediaDedup.writeFingerprintStore(spark, "fpdial", fps(1L -> h1), 6)
       val e = intercept[IllegalArgumentException] {
-        MediaDedup.fingerprintPairsAgainstStore(spark, "fpdial",
-          fps(2L -> flip(h1, 4)), 2)
+        MediaDedup.fingerprintStore("fpdial", 2).matches(spark,
+          fps(2L -> flip(h1, 4)))
       }
       assert(e.getMessage.contains("scheme"))
     } finally dropStore("fpdial")
@@ -211,15 +211,15 @@ class MediaDedupSpec extends AnyFunSuite {
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(init === Map(1L -> 1L, 3L -> 1L, 40L -> 40L, 5L -> 5L))
       // attach: near doc joins the existing cluster
-      val a = MediaDedup.ingestFingerprintBatchLabeled(spark, "fplbl",
-          fps(10L -> flip(h1, 2)), 6)
+      val a = MediaDedup.fingerprintStore("fplbl", 6).ingestLabeled(spark,
+          fps(10L -> flip(h1, 2)))
         .collect().map(r => r.getLong(0) ->
           ((r.getString(1), r.getLong(2), r.getLong(3)))).toMap
       assert(a(10L) === (("near", 1L, 1L)))
       // bridge: doc 20 matches BOTH clusters -> 40's cluster merges
       // into root 1 by a remap row, labels never rewritten
-      val b = MediaDedup.ingestFingerprintBatchLabeled(spark, "fplbl",
-          fps(20L -> x), 6)
+      val b = MediaDedup.fingerprintStore("fplbl", 6).ingestLabeled(spark,
+          fps(20L -> x))
         .collect().map(r => r.getLong(0) ->
           ((r.getString(1), r.getLong(2), r.getLong(3)))).toMap
       assert(b(20L)._1 === "near")
@@ -229,8 +229,8 @@ class MediaDedupSpec extends AnyFunSuite {
       assert(after(40L) === 1L, s"bridged cluster must resolve to 1: $after")
       assert(after(20L) === 1L && after(10L) === 1L)
       // replay idempotence: the merge already happened, edges vanish
-      val replay = MediaDedup.ingestFingerprintBatchLabeled(spark, "fplbl",
-          fps(20L -> x), 6)
+      val replay = MediaDedup.fingerprintStore("fplbl", 6).ingestLabeled(spark,
+          fps(20L -> x))
         .collect().map(r => r.getLong(0) ->
           ((r.getString(1), r.getLong(2), r.getLong(3)))).toMap
       assert(replay === b, s"replay must be idempotent: $replay vs $b")
@@ -323,7 +323,7 @@ class MediaDedupSpec extends AnyFunSuite {
 
   private def vclassify(name: String, batch: org.apache.spark.sql.DataFrame,
       minShared: Int, maxDf: Int) =
-    MediaDedup.ingestVideoSignatureBatch(spark, name, batch, minShared, maxDf)
+    MediaDedup.videoStore(name, minShared, maxDf).ingest(spark, batch)
       .collect().map(r => r.getLong(0) -> ((r.getString(1), r.getLong(2)))).toMap
 
   test("video store: classify equals truth, uniques chain via append, replay idempotent (incl. mutually-near batch)") {
@@ -397,8 +397,8 @@ class MediaDedupSpec extends AnyFunSuite {
         // key join would re-shuffle the store; the only Exchange-like
         // line allowed in the leg is the batch-id replay guard's
         // BroadcastExchange, which moves batch ids, not store rows)
-        val j = MediaDedup.videoPairsAgainstStore(spark, "vplan",
-          vframes(9L -> Seq(1001, 1002, 9001)), minShared = 2, maxDf = 50)
+        val j = MediaDedup.videoStore("vplan", minShared = 2, maxDf = 50).matches(spark,
+          vframes(9L -> Seq(1001, 1002, 9001)))
         j.collect()
         val plan = j.queryExecution.executedPlan.toString
           .split("== Initial Plan ==").head
@@ -439,12 +439,12 @@ class MediaDedupSpec extends AnyFunSuite {
         vframes(1L -> Seq(1001, 1002), 3L -> Seq(3001, 3002)))
       assert(vclassify("vdel", vframes(2L -> Seq(1001, 1002)), 2, 50)(2L)
         === (("near", 1L)))
-      MediaDedup.deleteFromVideoSignatureStore(spark, "vdel",
+      MediaDedup.videoStore("vdel", 2, 50).delete(spark,
         Seq(1L, 2L).toDF("doc_id"))
       // retired v1 no longer matches; v4 (same frames) lands fresh
       assert(vclassify("vdel", vframes(4L -> Seq(1001, 1002)), 2, 50)(4L)
         === (("unique", -1L)))
-      MediaDedup.compactVideoSignatureStore(spark, "vdel")
+      MediaDedup.videoStore("vdel", 2, 50).compact(spark)
       val docs = spark.table("vdel_vdocs").as[Long].collect().toSet
       assert(docs === Set(3L, 4L)) // 1 reclaimed physically, 2 never entered
       // suppression: a crash-replayed v1 matches the NEW holder of its
@@ -519,15 +519,15 @@ class MediaDedupSpec extends AnyFunSuite {
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(init === Map(1L -> 1L, 2L -> 1L, 40L -> 40L, 41L -> 40L))
       // attach: near video joins the existing cluster
-      val a = MediaDedup.ingestVideoSignatureBatchLabeled(spark, "vlbl",
-          vframes(10L -> Seq(1001, 1002, 1003, 9001)), 3, 50)
+      val a = MediaDedup.videoStore("vlbl", 3, 50).ingestLabeled(spark,
+          vframes(10L -> Seq(1001, 1002, 1003, 9001)))
         .collect().map(r => r.getLong(0) ->
           ((r.getString(1), r.getLong(2), r.getLong(3)))).toMap
       assert(a(10L) === (("near", 1L, 1L)))
       // bridge: video 20 shares 3 frames with BOTH clusters -> 40's
       // cluster merges into root 1 by a remap row only
-      val b = MediaDedup.ingestVideoSignatureBatchLabeled(spark, "vlbl",
-          vframes(20L -> Seq(1001, 1002, 1003, 4001, 4002, 4003)), 3, 50)
+      val b = MediaDedup.videoStore("vlbl", 3, 50).ingestLabeled(spark,
+          vframes(20L -> Seq(1001, 1002, 1003, 4001, 4002, 4003)))
         .collect().map(r => r.getLong(0) ->
           ((r.getString(1), r.getLong(2), r.getLong(3)))).toMap
       assert(b(20L)._1 === "near")
@@ -537,8 +537,8 @@ class MediaDedupSpec extends AnyFunSuite {
       assert(after(40L) === 1L && after(41L) === 1L, after.toString)
       assert(after(20L) === 1L && after(10L) === 1L)
       // replay idempotence: the merge already happened, edges vanish
-      val replay = MediaDedup.ingestVideoSignatureBatchLabeled(spark, "vlbl",
-          vframes(20L -> Seq(1001, 1002, 1003, 4001, 4002, 4003)), 3, 50)
+      val replay = MediaDedup.videoStore("vlbl", 3, 50).ingestLabeled(spark,
+          vframes(20L -> Seq(1001, 1002, 1003, 4001, 4002, 4003)))
         .collect().map(r => r.getLong(0) ->
           ((r.getString(1), r.getLong(2), r.getLong(3)))).toMap
       assert(replay === b, s"replay must be idempotent: $replay vs $b")

@@ -126,6 +126,22 @@ class PlanGuardSpec extends AnyFunSuite {
         "the site here with its frame-bound rationale")
   }
 
+  test("one implementation: bucketBy only in BucketedStore, the micro_batch ingest sink only in IngestLoop") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    def sitesOf(re: scala.util.matching.Regex): Set[String] =
+      java.nio.file.Files.walk(root).iterator().asScala
+        .filter(_.toString.endsWith(".scala"))
+        .filter(p => re.findFirstIn(java.nio.file.Files.readString(p)).isDefined)
+        .map(_.toString).toSet
+    assert(sitesOf("""\.bucketBy\(""".r) ===
+      Set("src/main/scala/graft/sources/BucketedStore.scala"),
+      "a hand-rolled bucketBy skips BucketedStore's aligned write path")
+    assert(sitesOf("""partitionBy\(\s*"micro_batch"\s*\)""".r) ===
+      Set("src/main/scala/graft/streaming/IngestLoop.scala"),
+      "a store-ingest stream lands its micro_batch sink through IngestLoop")
+  }
+
   test("oracle SQL never sums raw doubles (SURVEY §4 determinism rule)") {
     // every sum(...) in an oracle must aggregate decimals/ints, not raw
     // double columns whose addition order would change low bits
