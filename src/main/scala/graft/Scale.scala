@@ -524,7 +524,7 @@ object Scale {
       val incr = runP(Some(256), "incr")
       // parity gate: the dial must not change published CONTENT
       def pubSum(tag: String): (Long, Long) = {
-        val d = graft.streaming.EwmaStream.readPublished(spark,
+        val d = graft.streaming.StoreFold.readPublished(spark,
           s"$work/ewmaP_out_$tag")
         val r = d.agg(count(lit(1)), sum(col("ewma_cents"))).head
         (r.getLong(0), r.getLong(1))

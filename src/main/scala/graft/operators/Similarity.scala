@@ -1251,8 +1251,17 @@ object Similarity {
         graft.functions.pqCodes(residual, rcb, m, k).as("codes"))
   }
 
+  /** Heal an interrupted [[compactIvfPqIndex]] swap of `codes`
+    * ([[graft.sources.BucketedStore.recoverSwap]]): appends and
+    * compactions call this before they touch the inverted lists. */
+  private def healCodes(fs: org.apache.hadoop.fs.FileSystem, path: String): Unit =
+    graft.sources.BucketedStore.recoverSwap(fs,
+      new org.apache.hadoop.fs.Path(s"$path/codes"), "compact", s"ivf-pq $path")
+
   def appendToIvfPqIndex(newVectors: DataFrame, path: String): Unit = {
     import org.apache.spark.sql.SaveMode
+    healCodes(new org.apache.hadoop.fs.Path(path).getFileSystem(
+      newVectors.sparkSession.sparkContext.hadoopConfiguration), path)
     assignToStoredCells(newVectors, path)
       .write.mode(SaveMode.Append).partitionBy("cell").parquet(s"$path/codes")
   }
@@ -1281,6 +1290,7 @@ object Similarity {
     // differs, FileSystem.get would rename/delete on the wrong FS.
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    healCodes(fs, path)
     // a batch already folded into compacted part files must NOT
     // re-land on checkpoint replay (its batch-<id>.parquet name is
     // gone, so the rename-overwrite convergence no longer covers it)
@@ -1316,9 +1326,10 @@ object Similarity {
     * task↔name alignment needed here, unlike the bucketed signature
     * store). One maintenance shuffle of codes (m bytes/vector — the
     * cheap table), sidecars untouched, searches partition-prune
-    * exactly as before. The directory swap is not transactional:
-    * schedule in the ingest quiet window (same caveat as
-    * the near-dup store compaction).
+    * exactly as before. The rewrite lands through
+    * [[graft.sources.BucketedStore.swapIn]] (a crash at any point heals
+    * on the next append or compaction); schedule it in the ingest quiet
+    * window (same caveat as the near-dup store compaction).
     */
   /** Compaction CADENCE policy for the index: compact only when some
     * inverted list (cell directory) exceeds `maxFilesPerCell` files —
@@ -1333,6 +1344,7 @@ object Similarity {
     require(maxFilesPerCell >= 1, s"need maxFilesPerCell >= 1, got $maxFilesPerCell")
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    healCodes(fs, path)
     val cells = fs.listStatus(new org.apache.hadoop.fs.Path(s"$path/codes"))
       .filter(_.getPath.getName.startsWith("cell="))
     val worst =
@@ -1346,12 +1358,14 @@ object Similarity {
   def compactIvfPqIndex(spark: SparkSession, path: String): Unit = {
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    healCodes(fs, path)
     // Record every batch id whose file is being folded away BEFORE the
     // rewrite: compaction erases per-batch file identity, so a
     // checkpoint replay of one of these batches after compaction would
     // re-append rows the compacted part files already contain. The
     // idempotent append consults this KB sidecar and skips such ids.
     val codesDir = new org.apache.hadoop.fs.Path(s"$path/codes")
+    val (tmp, _) = graft.sources.BucketedStore.swapPaths(codesDir, "compact")
     val batchIds = fs.listStatus(codesDir)
       .filter(_.getPath.getName.startsWith("cell="))
       .flatMap(d => fs.listStatus(d.getPath))
@@ -1372,15 +1386,12 @@ object Similarity {
       // still resolve the schema, filters/pruning trivially match
       // nothing.
       codes.limit(0).repartition(1)
-        .write.mode("overwrite").parquet(s"$path/codes_compact")
+        .write.mode("overwrite").parquet(tmp.toString)
     else
       codes.repartition(ncells, col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(s"$path/codes_compact")
+        .write.mode("overwrite").partitionBy("cell").parquet(tmp.toString)
     writeCompactedBatchIds(fs, path, batchIds)
-    val dst = new org.apache.hadoop.fs.Path(s"$path/codes")
-    fs.delete(dst, true)
-    require(fs.rename(new org.apache.hadoop.fs.Path(s"$path/codes_compact"), dst),
-      s"compact swap failed at $path/codes")
+    graft.sources.BucketedStore.swapIn(fs, codesDir, "compact", s"ivf-pq $path")
   }
 
   private val BatchFileName = """batch-(\d+)\.parquet""".r

@@ -90,17 +90,20 @@ object Sinks {
     * the small-files remediation every long-running 100 TB ingest
     * needs (file-count pressure on the namenode/listing, tiny-row-
     * group scan overhead). Size-based partition count from the actual
-    * on-disk footprint.
+    * on-disk footprint. The rewrite lands through
+    * [[BucketedStore.swapIn]] (tag `compact`), and a crash at any
+    * point heals on the next call.
     */
   def compactParquet(spark: org.apache.spark.sql.SparkSession, path: String,
       targetFileMB: Int = 128): Unit = {
     import org.apache.hadoop.fs.Path
     // Hadoop FileSystem API throughout: a 100 TB ingest lives on
-    // HDFS/S3/GCS, where java.io.File cannot reach. (Object-store
-    // renames are copies, not atomic — same swap protocol, weaker
-    // atomicity; a transactional table format is the next step up.)
+    // HDFS/S3/GCS, where java.io.File cannot reach.
     val dir = new Path(path)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // a compaction that died at any point heals first (the directory is
+    // restored from `_compact_old` if it died between the renames)
+    BucketedStore.recoverSwap(fs, dir, "compact", "compactParquet")
     require(fs.exists(dir) && fs.getFileStatus(dir).isDirectory,
       s"compactParquet: $path is not a directory")
     // a repartition+rewrite would FLATTEN a Hive-partitioned layout (and
@@ -110,27 +113,14 @@ object Sinks {
     require(subdirs.isEmpty,
       s"compactParquet: $path has a partitioned layout (${subdirs.head.getPath.getName}, ...); " +
         "compact each leaf partition directory instead")
-    val tmp = new Path(path + "_compact_tmp")
-    val old = new Path(path + "_compact_old")
-    // leftovers from a crashed prior run: bail rather than silently
-    // swapping stale data in (or deleting the only good backup)
-    require(!fs.exists(tmp) && !fs.exists(old),
-      s"compactParquet: stale $tmp or $old exists — inspect/remove before rerunning")
     val bytes = entries
       .filter(e => e.isFile && e.getPath.getName.endsWith(".parquet"))
       .map(_.getLen).sum
     val parts = math.max(1, (bytes / (targetFileMB * 1024L * 1024L)).toInt)
+    val (tmp, _) = BucketedStore.swapPaths(dir, "compact")
     spark.read.parquet(path).repartition(parts)
       .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    // atomic-ish swap; every rename checked — a silent no-op here would
-    // leave the data uncompacted while claiming success
-    require(fs.rename(dir, old), s"compactParquet: rename $path -> $old failed")
-    if (!fs.rename(tmp, dir)) { // restore the original before failing
-      fs.rename(old, dir)
-      sys.error(s"compactParquet: rename $tmp -> $path failed (original restored)")
-    }
-    fs.delete(old, true)
-    ()
+    BucketedStore.swapIn(fs, dir, "compact", "compactParquet")
   }
 
   /** Z-order clustered parquet: globally sort by the Morton code of

@@ -10,20 +10,15 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * keys × buckets-touched-per-batch, never event volume), the same
   * no-executor-memory pattern as every streaming state in graft.
   *
-  * Per micro-batch: exact batch bucket counts (one batch-sized
-  * partial-agg shuffle) land as THIS batch's partial in a
-  * `batch_id=` partition with dynamic overwrite — a replayed batch
-  * replaces its OWN partial, never double-counts. The published
-  * anomaly table = [[graft.operators.Timeseries.anomalousFromCounts]]
-  * over the store's per-(key, bucket) sums — a pure function of the
-  * store, so replay converges and the output always equals the batch
-  * operator run on every event seen so far (StreamingSpec gates
-  * exactly this).
-  *
-  * Unlike the Misra-Gries partials ([[HeavyHitterStream]]), plain
-  * counts merge LOSSLESSLY — the fold cadence just sums closed
-  * partials into the `batch_id=-1` base, excluding the in-flight
-  * batch so its replay still overwrites its own partition.
+  * Per micro-batch ([[StoreFold]]'s loop): exact batch bucket counts
+  * (one batch-sized partial-agg shuffle) land as THIS batch's partial.
+  * The published anomaly table =
+  * [[graft.operators.Timeseries.anomalousFromCounts]] over the store's
+  * per-(key, bucket) sums — a pure function of the store, so the output
+  * always equals the batch operator run on every event seen so far
+  * (StreamingSpec gates exactly this). Unlike the Misra-Gries partials
+  * ([[HeavyHitterStream]]), plain counts merge LOSSLESSLY — the fold
+  * just sums closed partials.
   */
 object AnomalyStream {
 
@@ -35,10 +30,9 @@ object AnomalyStream {
       .groupBy(col("event_type"), col("bucket"))
       .agg(count(lit(1)).as("n"))
 
-  /** The store's merged per-(key, bucket) counts. */
-  def mergedCounts(spark: SparkSession, storePath: String): DataFrame =
-    spark.read.parquet(storePath)
-      .groupBy(col("event_type"), col("bucket"))
+  /** Lossless counts merge — the published read and the fold. */
+  private def merge(parts: DataFrame): DataFrame =
+    parts.groupBy(col("event_type"), col("bucket"))
       .agg(sum(col("n")).as("n"))
 
   /** Current published anomalies: the ts03 flag over the merged
@@ -46,48 +40,19 @@ object AnomalyStream {
   def publishedAnomalies(spark: SparkSession, storePath: String,
       num: Long, den: Long): DataFrame =
     graft.operators.Timeseries.anomalousFromCounts(
-      mergedCounts(spark, storePath), num, den)
-
-  /** Counts-sum fold on the shared [[StoreFold]] protocol —
-    * lossless (counts are mergeable). */
-  def maybeCompactPartials(spark: SparkSession, storePath: String,
-      maxParts: Int, keepBatchId: Long): Boolean =
-    StoreFold.foldPartials(spark, storePath, "anomaly", maxParts,
-      keepBatchId, closed => closed
-        .groupBy(col("event_type"), col("bucket"))
-        .agg(sum(col("n")).as("n")))
+      merge(spark.read.parquet(storePath)), num, den)
 
   /** `eventStream` must carry (event_type, ts_ns). Published
     * anomalies land at `outPath` (full overwrite — anomaly-sized);
-    * count partials accumulate at `storePath`, folded whenever the
-    * partition count passes `maxStoreParts` (None = never).
-    */
-  /** `publishEvery`: publish on every n-th batch ([[DriftStream]]'s
-    * cadence contract — the store absorbs every batch losslessly, an
-    * off-cadence table is exactly the previous publish point). */
+    * count partials accumulate at `storePath`, folded past
+    * `maxStoreParts` (None = never). */
   def start(storePath: String, eventStream: DataFrame, bucketNs: Long,
       num: Long, den: Long, outPath: String, checkpoint: String,
       maxStoreParts: Option[Int] = None,
-      publishEvery: Int = 1): StreamingQuery = {
-    require(publishEvery >= 1, s"need publishEvery >= 1, got $publishEvery")
-    eventStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        batchCounts(batch, bucketNs)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(storePath)
-        if (batchId % publishEvery == 0)
-          publishedAnomalies(spark, storePath, num, den)
-            .write.mode("overwrite").parquet(outPath)
-        maxStoreParts.foreach { n =>
-          maybeCompactPartials(spark, storePath, n, batchId)
-        }
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
-  }
+      publishEvery: Int = 1): StreamingQuery =
+    StoreFold.start(eventStream, checkpoint, StoreFold.Twin(
+      Seq(StoreFold.Sub(storePath, "anomaly", merge)),
+      StoreFold.Every(outPath, publishEvery,
+        publishedAnomalies(_, storePath, num, den)),
+      maxStoreParts, (batch, _) => Seq(batchCounts(batch, bucketNs))))
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -11,7 +11,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * arrival-time).
   *
   * State = per-(key, bucket, batch) bar PARTIALS in `batch_id=`
-  * partitions with dynamic overwrite (the [[AnomalyStream]] layout).
+  * partitions with dynamic overwrite (the [[StoreFold]] layout).
   * Each field's merge is associative/commutative: n/total sum
   * (decimal-exact), high max, low min, and open/close ride
   * min/max(struct(ts, id, value)) — the (ts, id) total order makes
@@ -73,57 +73,18 @@ object BarStream {
         col("c.v").as("close"),
         col("total").cast("double").as("total"))
 
-  /** Current published bars, ts02's output shape (values as DOUBLE
-    * per §4's decimal-sum convention). */
-  def publishedBars(spark: SparkSession, storePath: String,
-      keyCol: String): DataFrame =
-    barsOf(spark.read.parquet(storePath), keyCol)
-
-  /** Read the published table regardless of publish mode (drops the
-    * `pk` partition column incremental mode adds). */
-  def readPublished(spark: SparkSession, outPath: String): DataFrame =
-    StoreFold.readPublished(spark, outPath)
-
-  /** Five-field bar merge on the shared [[StoreFold]] protocol. */
-  def maybeCompactPartials(spark: SparkSession, storePath: String,
-      keyCol: String, maxParts: Int, keepBatchId: Long,
-      partitionCols: Seq[String] = Seq("batch_id")): Boolean =
-    StoreFold.foldPartials(spark, storePath, "bar", maxParts,
-      keepBatchId, merge(_, keyCol), partitionCols)
-
   /** `eventStream` must carry (event_id, `keyCol`, ts_ns, value).
-    *
-    * `publishEvery`: publish on every n-th batch ([[DriftStream]]'s
-    * cadence contract). `incrementalPubParts`: the bar merge is
-    * KEY-LOCAL, so [[EwmaStream]]'s touched-pk incremental publish
-    * applies verbatim — store and published table partitioned by
-    * `pk = pmod(hash(key), p)`, each publish re-merges only the pk
-    * partitions this batch's keys touch and dynamically overwrites
-    * just those published dirs (read through [[readPublished]]).
-    * The dials are MUTUALLY EXCLUSIVE (enforced): a skipped batch's
-    * touched pks would otherwise never be republished unless a later
-    * batch touched them again — and incremental publish is cheap
-    * per-batch by construction, which is the point of the dial. */
+    * The bar merge is KEY-LOCAL, so both [[StoreFold.KeyLocal]] dials
+    * apply: `publishEvery` cadence, or `incrementalPubParts` touched-pk
+    * publish (read through [[StoreFold.readPublished]]). */
   def start(storePath: String, eventStream: DataFrame, keyCol: String,
       bucketNs: Long, outPath: String, checkpoint: String,
       maxStoreParts: Option[Int] = None,
       publishEvery: Int = 1,
-      incrementalPubParts: Option[Int] = None): StreamingQuery = {
-    StoreFold.requireDials(incrementalPubParts, publishEvery)
-    eventStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // per-batch store/publish/fold body shared with the other
-        // key-local twins — [[StoreFold.publishBatch]]
-        StoreFold.publishBatch(batch.sparkSession, "bar",
-          storePath, outPath, batchId,
-          partials(batch, keyCol, bucketNs),
-          storeKeyCol = keyCol, pubKeyCol = keyCol,
-          publish = st => barsOf(st, keyCol),
-          merge = merge(_, keyCol),
-          maxStoreParts, incrementalPubParts, publishEvery)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
-  }
+      incrementalPubParts: Option[Int] = None): StreamingQuery =
+    StoreFold.start(eventStream, checkpoint, StoreFold.Twin(
+      Seq(StoreFold.Sub(storePath, "bar", merge(_, keyCol))),
+      StoreFold.KeyLocal(outPath, publishEvery, incrementalPubParts,
+        storeKeyCol = keyCol, pubKeyCol = keyCol, barsOf(_, keyCol)),
+      maxStoreParts, (batch, _) => Seq(partials(batch, keyCol, bucketNs))))
 }

@@ -11,10 +11,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * snapshot is the MERGE target, the change feed is what downstream
   * incremental consumers subscribe to.
   *
-  * State = per-key latest-state partials in `batch_id=` partitions
-  * with dynamic overwrite (the [[AnomalyStream]] pattern: a replayed
-  * batch replaces its OWN partial, never double-applies). The
-  * snapshot is a pure function of the store: per-key
+  * State = per-key latest-state partials on the [[StoreFold]] loop.
+  * The snapshot is a pure function of the store: per-key
   * `max(struct(ts, is_del, attrs))` — event-time latest-wins, so the
   * merge is associative/commutative/idempotent and LOSSLESS under
   * the fold cadence, and late/out-of-order data cannot regress state
@@ -27,9 +25,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *
   * The published change feed for batch N = diff(snapshot(store \ N),
   * snapshot(store)) — both legs pure functions of the post-write
-  * store, so a crash between store write and feed publish replays to
-  * the identical feed (feed rows land in their own `batch_id=`
-  * partition with dynamic overwrite, idempotent).
+  * store, landing as the feed's own `batch_id=N` partition
+  * ([[StoreFold.Feed]]), so a replay rewrites the identical feed.
   *
   * SCALE: per batch, the batch-sized partial agg + one store-sized
   * per-key max + the snapshot-sized diff join; the store is bounded
@@ -78,58 +75,29 @@ object CdcStream {
       attrCols: Seq[String], excludeBatch: Option[Long] = None): DataFrame =
     snapshotOf(spark.read.parquet(storePath), keyCol, attrCols, excludeBatch)
 
-  /** Max-merge every closed partial into the `batch_id=-1` base when
-    * the partition count exceeds `maxParts` — latest-wins merge is
-    * lossless, so this is the counts fold of [[AnomalyStream]] with
-    * max(struct) instead of sum. Tombstones are KEPT in the base
-    * (they must keep outranking older live rows that could arrive
-    * late); checked tmp/old rename swap, single-writer quiet window.
-    */
-  def maybeCompactPartials(spark: SparkSession, storePath: String,
-      keyCol: String, attrCols: Seq[String], maxParts: Int,
-      keepBatchId: Long): Boolean =
-    StoreFold.foldPartials(spark, storePath, "cdc", maxParts,
-      keepBatchId, closed => latest(closed, keyCol, "_ts", attrCols, None))
-
   /** `updateStream` must carry `keyCol`, `tsCol` and `attrCols`.
     * Rows matching `deleteWhen` (a SQL boolean over those columns)
     * are tombstones. Change-feed rows (key, change_type,
     * old_/new_ attrs) land in `feedPath/batch_id=N`; the live
-    * snapshot is [[snapshot]] over `storePath`.
+    * snapshot is [[snapshot]] over `storePath`. The fold max-merges
+    * closed partials (latest-wins is lossless) and KEEPS tombstones in
+    * the base: they must keep outranking older live rows that could
+    * arrive late.
     */
   def start(storePath: String, updateStream: DataFrame, keyCol: String,
       tsCol: String, attrCols: Seq[String], deleteWhen: Option[String],
       feedPath: String, checkpoint: String,
       maxStoreParts: Option[Int] = None): StreamingQuery =
-    updateStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        latest(batch, keyCol, tsCol, attrCols, deleteWhen)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(storePath)
-        // ONE store read serves both diff legs (cache released after
-        // the feed write) — not two list+scan passes per batch
-        val store = spark.read.parquet(storePath).cache()
-        try {
-          val prev = snapshotOf(store, keyCol, attrCols,
-            excludeBatch = Some(batchId)).drop("_ts")
-          val cur = snapshotOf(store, keyCol, attrCols, None).drop("_ts")
-          graft.operators.Warehouse
-            .snapshotDiff(prev, cur, Seq(keyCol), attrCols)
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(feedPath)
-        } finally store.unpersist()
-        maxStoreParts.foreach { n =>
-          maybeCompactPartials(spark, storePath, keyCol, attrCols, n, batchId)
-        }
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
+    StoreFold.start(updateStream, checkpoint, StoreFold.Twin(
+      Seq(StoreFold.Sub(storePath, "cdc",
+        latest(_, keyCol, "_ts", attrCols, None))),
+      StoreFold.Feed(feedPath, { (store, batchId) =>
+        val prev = snapshotOf(store, keyCol, attrCols,
+          excludeBatch = Some(batchId)).drop("_ts")
+        val cur = snapshotOf(store, keyCol, attrCols, None).drop("_ts")
+        graft.operators.Warehouse
+          .snapshotDiff(prev, cur, Seq(keyCol), attrCols)
+      }),
+      maxStoreParts,
+      (batch, _) => Seq(latest(batch, keyCol, tsCol, attrCols, deleteWhen))))
 }

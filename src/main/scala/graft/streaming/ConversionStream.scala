@@ -13,7 +13,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * so far (StreamingSpec gates this, including a conversion whose
   * signup and purchase arrive in different batches).
   *
-  * STATE, both on the shared [[StoreFold]] protocol:
+  * STATE, two sub-stores of the [[StoreFold]] loop:
   *   - `pending/` signups awaiting their first at-or-after purchase:
   *     signup rows (event_id, user_id, tns, resolved=0) plus
   *     RESOLUTION MARKERS (event_id, resolved=1) appended when the
@@ -33,8 +33,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * signup has seen NO purchase ≥ its tns yet, so the first batch
   * containing one decides the match globally — the incremental
   * resolution replays the batch as-of-forward semantics bit-exactly,
-  * and each signup resolves exactly once (replay overwrites its own
-  * batch partition).
+  * and each signup resolves exactly once.
   */
 object ConversionStream {
 
@@ -48,22 +47,13 @@ object ConversionStream {
   private def histMerge(df: DataFrame): DataFrame =
     df.groupBy(col("lag_s")).agg(sum(col("n")).as("n"))
 
-  private def readOr(spark: SparkSession, path: String,
-      schema: String): DataFrame =
-    try spark.read.parquet(path).drop("batch_id")
-    catch {
-      case _: org.apache.spark.sql.AnalysisException =>
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType.fromDDL(schema))
-    }
-
   private def pendingView(spark: SparkSession, storePath: String): DataFrame =
-    pendingMerge(readOr(spark, s"$storePath/pending",
+    pendingMerge(StoreFold.readOr(spark, s"$storePath/pending",
       "event_id BIGINT, user_id BIGINT, tns BIGINT, resolved INT"))
 
   private def histView(spark: SparkSession, storePath: String): DataFrame =
-    histMerge(readOr(spark, s"$storePath/hist", "lag_s BIGINT, n BIGINT"))
+    histMerge(StoreFold.readOr(spark, s"$storePath/hist",
+      "lag_s BIGINT, n BIGINT"))
 
   /** The published report, batch `conversionLag()`'s exact output
     * shape — one row always (n_converted=0 + NULL percentiles on a
@@ -80,8 +70,11 @@ object ConversionStream {
       .crossJoin(broadcast(thr(0.9, "p90_lag_s")))
   }
 
-  private[streaming] def processBatch(spark: SparkSession, storePath: String,
-      batch: DataFrame, tolNs: Long, batchId: Long): Unit = {
+  /** This batch's hist and pending partials, resolved against the
+    * pending store. */
+  private def partials(storePath: String, batch: DataFrame,
+      tolNs: Long): Seq[DataFrame] = {
+    val spark = batch.sparkSession
     val ev = batch.withColumn("tns", expr("(ts_ns div 1000) * 1000"))
     val newSignups = ev.filter(col("event_type") === "signup")
       .select(col("event_id"), col("user_id"), col("tns"))
@@ -110,48 +103,26 @@ object ConversionStream {
       .unionByName(resolvedAll.select(col("event_id"),
         lit(null).cast("bigint").as("user_id"),
         lit(null).cast("bigint").as("tns"), lit(1).as("resolved")))
-    histPartial.withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(s"$storePath/hist")
-    pendingPartial.withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(s"$storePath/pending")
-  }
-
-  /** Fold both stores' closed partials on the shared protocol. */
-  def maybeCompactPartials(spark: SparkSession, storePath: String,
-      maxParts: Int, keepBatchId: Long): Boolean = {
-    val a = StoreFold.foldPartials(spark, s"$storePath/hist", "conv-hist",
-      maxParts, keepBatchId, histMerge)
-    val b = StoreFold.foldPartials(spark, s"$storePath/pending", "conv-pending",
-      maxParts, keepBatchId, pendingMerge)
-    a || b
+    Seq(histPartial, pendingPartial)
   }
 
   /** `eventStream` must carry (user_id, event_id, ts_ns, event_type).
-    */
-  /** `publishEvery`: publish on every n-th batch ([[DriftStream]]'s
-    * cadence contract — the published report elects global
-    * percentiles over the whole lag histogram, so cadence, not
-    * key-local incremental, is the right dial). */
+    * The published report elects global percentiles over the whole lag
+    * histogram, so `publishEvery` cadence, not key-local incremental
+    * publish, is the dial. */
+  private[graft] def twin(storePath: String, tolNs: Long, outPath: String,
+      maxStoreParts: Option[Int] = None,
+      publishEvery: Int = 1): StoreFold.Twin =
+    StoreFold.Twin(
+      Seq(StoreFold.Sub(s"$storePath/hist", "conv-hist", histMerge),
+        StoreFold.Sub(s"$storePath/pending", "conv-pending", pendingMerge)),
+      StoreFold.Every(outPath, publishEvery, publishedConversion(_, storePath)),
+      maxStoreParts, (batch, _) => partials(storePath, batch, tolNs))
+
   def start(storePath: String, eventStream: DataFrame, tolNs: Long,
       outPath: String, checkpoint: String,
       maxStoreParts: Option[Int] = None,
-      publishEvery: Int = 1): StreamingQuery = {
-    require(publishEvery >= 1, s"need publishEvery >= 1, got $publishEvery")
-    eventStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        processBatch(spark, storePath, batch, tolNs, batchId)
-        if (batchId % publishEvery == 0)
-          publishedConversion(spark, storePath)
-            .write.mode("overwrite").parquet(outPath)
-        maxStoreParts.foreach { n =>
-          maybeCompactPartials(spark, storePath, n, batchId)
-        }
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
-  }
+      publishEvery: Int = 1): StreamingQuery =
+    StoreFold.start(eventStream, checkpoint,
+      twin(storePath, tolNs, outPath, maxStoreParts, publishEvery))
 }

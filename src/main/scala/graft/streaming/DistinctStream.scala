@@ -14,7 +14,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * State = per-(key, batch) serialized DataSketches HLL sketches
   * (`hll_sketch_agg` binaries, KB each — lgK=12 ≈ 1.6% rse) in
   * `batch_id=` partitions with dynamic overwrite — the
-  * [[AnomalyStream]] layout with sketch bytes instead of counts.
+  * [[StoreFold]] layout with sketch bytes instead of counts.
   * Published estimate = `hll_sketch_estimate(hll_union_agg(...))`
   * over the store: HLL union is register-wise max — associative,
   * commutative, idempotent — so the published table is a pure
@@ -46,11 +46,6 @@ object DistinctStream {
       keyCol: String): DataFrame =
     estimatesOf(spark.read.parquet(storePath), keyCol)
 
-  /** Read the published table regardless of publish mode (drops the
-    * `pk` partition column incremental mode adds). */
-  def readPublished(spark: SparkSession, outPath: String): DataFrame =
-    StoreFold.readPublished(spark, outPath)
-
   /** Register-wise HLL union of closed partials; keeps the `pk`
     * partition column when the store carries one (functionally
     * dependent on the key). */
@@ -62,42 +57,20 @@ object DistinctStream {
       .agg(hll_union_agg(col("sk"), lit(false)).as("sk"))
   }
 
-  def maybeCompactPartials(spark: SparkSession, storePath: String,
-      keyCol: String, maxParts: Int, keepBatchId: Long,
-      partitionCols: Seq[String] = Seq("batch_id")): Boolean =
-    StoreFold.foldPartials(spark, storePath, "distinct", maxParts,
-      keepBatchId, mergeSketches(_, keyCol), partitionCols)
-
   /** `eventStream` must carry `keyCol` and `idCol`. Estimates land at
     * `outPath` (key-count rows); sketch partials accumulate at
-    * `storePath`, folded past `maxStoreParts`.
-    *
-    * `publishEvery`: publish on every n-th batch ([[DriftStream]]'s
-    * cadence contract). `incrementalPubParts`: the HLL union is
-    * KEY-LOCAL, so [[EwmaStream]]'s touched-pk incremental publish
-    * applies verbatim (read through [[readPublished]]). The dials are
-    * MUTUALLY EXCLUSIVE (enforced — [[BarStream]]'s rationale: a
-    * skipped batch's touched pks would never be republished). */
+    * `storePath`, folded past `maxStoreParts`. The HLL union is
+    * KEY-LOCAL, so both [[StoreFold.KeyLocal]] dials apply
+    * (`publishEvery` cadence or `incrementalPubParts` touched-pk
+    * publish, read through [[StoreFold.readPublished]]). */
   def start(storePath: String, eventStream: DataFrame, keyCol: String,
       idCol: String, outPath: String, checkpoint: String,
       maxStoreParts: Option[Int] = None,
       publishEvery: Int = 1,
-      incrementalPubParts: Option[Int] = None): StreamingQuery = {
-    StoreFold.requireDials(incrementalPubParts, publishEvery)
-    eventStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // per-batch store/publish/fold body shared with the other
-        // key-local twins — [[StoreFold.publishBatch]]
-        StoreFold.publishBatch(batch.sparkSession, "distinct",
-          storePath, outPath, batchId,
-          batchSketches(batch, keyCol, idCol),
-          storeKeyCol = keyCol, pubKeyCol = keyCol,
-          publish = st => estimatesOf(st, keyCol),
-          merge = mergeSketches(_, keyCol),
-          maxStoreParts, incrementalPubParts, publishEvery)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
-  }
+      incrementalPubParts: Option[Int] = None): StreamingQuery =
+    StoreFold.start(eventStream, checkpoint, StoreFold.Twin(
+      Seq(StoreFold.Sub(storePath, "distinct", mergeSketches(_, keyCol))),
+      StoreFold.KeyLocal(outPath, publishEvery, incrementalPubParts,
+        storeKeyCol = keyCol, pubKeyCol = keyCol, estimatesOf(_, keyCol)),
+      maxStoreParts, (batch, _) => Seq(batchSketches(batch, keyCol, idCol))))
 }

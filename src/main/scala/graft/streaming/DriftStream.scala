@@ -9,13 +9,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * far — the production shape of distribution monitoring, where the
   * PSI table updates as data lands instead of on a nightly batch.
   *
-  * State = per-batch (value → cohort counts) partials in `batch_id=`
-  * partitions with dynamic overwrite (the [[AnomalyStream]] pattern:
-  * a replayed batch replaces its OWN partial, never double-counts).
-  * Counts sum is lossless and associative, so the store-fold cadence
-  * merges closed partials without changing any published number, and
-  * the published table is a PURE function of the store — crash
-  * between store write and publish replays identically.
+  * State = per-batch (value → cohort counts) partials on the
+  * [[StoreFold]] loop. Counts sum is lossless and associative, so the
+  * fold merges closed partials without changing any published number.
   *
   * Late data is handled by construction: PSI is a whole-history
   * statistic, so a late event simply lands in its batch's partial
@@ -30,59 +26,27 @@ import org.apache.spark.sql.streaming.StreamingQuery
   */
 object DriftStream {
 
+  private def merge(parts: DataFrame): DataFrame =
+    parts.groupBy("c").agg(sum("na").as("na"), sum("nb").as("nb"))
+
   /** Current published PSI table: dq06 over the merged store. */
   def publishedPsi(spark: SparkSession, storePath: String,
       bins: Int): DataFrame =
     graft.operators.Quality.psiFromCounts(
-      spark.read.parquet(storePath)
-        .groupBy("c").agg(sum("na").as("na"), sum("nb").as("nb")),
-      bins)
-
-  /** Counts-sum fold of closed partials (lossless). */
-  def maybeCompactPartials(spark: SparkSession, storePath: String,
-      maxParts: Int, keepBatchId: Long): Boolean =
-    StoreFold.foldPartials(spark, storePath, "drift", maxParts,
-      keepBatchId, closed => closed.groupBy("c")
-        .agg(sum("na").as("na"), sum("nb").as("nb")))
+      merge(spark.read.parquet(storePath)), bins)
 
   /** `stream` must carry `valCol` (integer-quantized value) and
     * `grpCol` (cohort boolean). The PSI table lands at `outPath`
-    * (overwrite per publish).
-    *
-    * `publishEvery`: PSI re-bins GLOBALLY (one late value can move
-    * every bin boundary), so there is no key-local incremental
-    * publish — the honest dial is cadence: publish on every
-    * `publishEvery`-th batch (batchId % publishEvery == 0; default 1
-    * = every batch). The store still absorbs every batch losslessly,
-    * so an off-cadence published table is exactly the previous
-    * publish point's batch-twin output — staleness is bounded by the
-    * cadence, correctness never is, and a crash replay of a publish
-    * batch republishes identically (the publish is a pure function
-    * of the store).
-    */
+    * (overwrite per publish). PSI re-bins GLOBALLY (one late value can
+    * move every bin boundary), so there is no key-local incremental
+    * publish — `publishEvery` cadence is the dial. */
   def start(storePath: String, stream: DataFrame, valCol: String,
       grpCol: String, bins: Int, outPath: String, checkpoint: String,
       maxStoreParts: Option[Int] = None,
-      publishEvery: Int = 1): StreamingQuery = {
-    require(publishEvery >= 1, s"need publishEvery >= 1, got $publishEvery")
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        graft.operators.Quality.valueCohortCounts(batch, valCol, grpCol)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(storePath)
-        if (batchId % publishEvery == 0)
-          publishedPsi(spark, storePath, bins)
-            .write.mode("overwrite").parquet(outPath)
-        maxStoreParts.foreach { n =>
-          maybeCompactPartials(spark, storePath, n, batchId)
-        }
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
-  }
+      publishEvery: Int = 1): StreamingQuery =
+    StoreFold.start(stream, checkpoint, StoreFold.Twin(
+      Seq(StoreFold.Sub(storePath, "drift", merge)),
+      StoreFold.Every(outPath, publishEvery, publishedPsi(_, storePath, bins)),
+      maxStoreParts, (batch, _) => Seq(graft.operators.Quality
+        .valueCohortCounts(batch, valCol, grpCol))))
 }

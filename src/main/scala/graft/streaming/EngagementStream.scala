@@ -12,14 +12,12 @@ import graft.operators.Sessionize
   * statistic: the DISTINCT (user, day) presence set. So the stream
   * stores presence rows, not events.
   *
-  * State = per-(user, day, batch) distinct presence rows in
-  * `batch_id=` partitions with dynamic overwrite (the [[AnomalyStream]]
-  * layout). Presence union is idempotent — a replayed batch re-writes
-  * its own partition, a duplicate (user, day) across batches collapses
-  * in the store-wide DISTINCT — so the published table is a pure
-  * function of the presence SET: replay converges, and the fold
-  * cadence (DISTINCT over closed partials into `batch_id=-1`, the
-  * shared [[StoreFold]] protocol) cannot change any published row.
+  * State = per-(user, day, batch) distinct presence rows on the
+  * [[StoreFold]] loop. Presence union is idempotent — a duplicate
+  * (user, day) across batches collapses in the store-wide DISTINCT —
+  * so the published table is a pure function of the presence SET, and
+  * the fold (DISTINCT over closed partials) cannot change any
+  * published row.
   *
   * Published = [[Sessionize.stickinessFromPresence]] over the store:
   * per-user disjoint coverage intervals → per-day ±1 nets → one
@@ -34,53 +32,30 @@ import graft.operators.Sessionize
   */
 object EngagementStream {
 
+  /** The presence SET of partials — the published read and the fold. */
+  private def presence(parts: DataFrame): DataFrame =
+    parts.select(col("user_id"), col("day")).distinct()
+
   /** Published stickiness table from the presence store. */
   def published(spark: SparkSession, storePath: String,
       windowDays: Int): DataFrame =
     Sessionize.stickinessFromPresence(
-      spark.read.parquet(storePath)
-        .select(col("user_id"), col("day")).distinct(),
-      windowDays)
-
-  /** Presence-set fold on the shared [[StoreFold]] protocol —
-    * DISTINCT over closed partials, published rows invariant. */
-  def maybeCompactPartials(spark: SparkSession, storePath: String,
-      maxParts: Int, keepBatchId: Long): Boolean =
-    StoreFold.foldPartials(spark, storePath, "engagement", maxParts,
-      keepBatchId,
-      closed => closed.select(col("user_id"), col("day")).distinct())
+      presence(spark.read.parquet(storePath)), windowDays)
 
   /** `eventStream` must carry `user_id` and `ts`. The stickiness
     * table lands at `outPath` (full overwrite — grid-day rows);
     * presence partials accumulate at `storePath`, folded past
-    * `maxStoreParts`. */
-  /** `publishEvery`: publish on every n-th batch ([[DriftStream]]'s
-    * cadence contract — the histogram re-bins over the global
-    * calendar window, so cadence is the right dial). */
+    * `maxStoreParts`. The histogram re-bins over the global calendar
+    * window, so `publishEvery` cadence is the dial. */
   def start(storePath: String, eventStream: DataFrame, windowDays: Int,
       outPath: String, checkpoint: String,
       maxStoreParts: Option[Int] = None,
-      publishEvery: Int = 1): StreamingQuery = {
-    require(publishEvery >= 1, s"need publishEvery >= 1, got $publishEvery")
-    eventStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        batch.select(col("user_id"), col("ts").cast("date").as("day"))
-          .distinct()
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(storePath)
-        if (batchId % publishEvery == 0)
-          published(spark, storePath, windowDays)
-            .write.mode("overwrite").parquet(outPath)
-        maxStoreParts.foreach { n =>
-          maybeCompactPartials(spark, storePath, n, batchId)
-        }
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
-  }
+      publishEvery: Int = 1): StreamingQuery =
+    StoreFold.start(eventStream, checkpoint, StoreFold.Twin(
+      Seq(StoreFold.Sub(storePath, "engagement", presence)),
+      StoreFold.Every(outPath, publishEvery,
+        published(_, storePath, windowDays)),
+      maxStoreParts, (batch, _) => Seq(batch
+        .select(col("user_id"), col("ts").cast("date").as("day"))
+        .distinct())))
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -22,42 +22,33 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *
   * PUBLISH MODES. The fold is key-local (key a's ewma never reads key
   * b's buckets), so a batch can only change the published rows of the
-  * keys it touches:
-  *  - Full (default): re-merge the whole store and overwrite the
-  *    published table. Simple, but per-batch publish cost grows with
-  *    ACCUMULATED keys × buckets over a months-long stream even when
-  *    each batch touches a bounded working set.
-  *  - Incremental (`incrementalPubParts = Some(p)`): store and
-  *    published table gain a `pk = pmod(hash(k), p)` partition
-  *    column; each batch recomputes the fold ONLY over store rows in
-  *    the pk partitions its keys touch and dynamically overwrites
-  *    just those published partitions. pk-granular (not raw-key)
-  *    pruning is forced by overwrite semantics: a rewritten pk
-  *    directory must carry ALL its keys' rows, so untouched keys
-  *    sharing a touched pk are recomputed too (their values are
-  *    unchanged — rewriting them is a no-op by value). Per-batch
-  *    publish cost is then ∝ touched-pk store rows ≈
-  *    (1-(1-1/p)^T)·store for T touched keys — flat when the batch
-  *    working set is bounded, regardless of how much history has
-  *    accumulated (Scale's ewmaStoreFold probe measures this across
-  *    48 batches). Read the published table through [[readPublished]]
-  *    (drops `pk`); content is publish-mode-independent.
+  * keys it touches, and both [[StoreFold.KeyLocal]] dials apply. Full
+  * (default) re-merges the whole store: per-batch publish cost grows
+  * with ACCUMULATED keys × buckets over a months-long stream even when
+  * each batch touches a bounded working set. Incremental
+  * (`incrementalPubParts = Some(p)`) re-merges only the touched pk
+  * partitions: publish cost ∝ touched-pk store rows ≈
+  * (1-(1-1/p)^T)·store for T touched keys — flat when the batch
+  * working set is bounded, however much history has accumulated
+  * (Scale's ewmaStoreFold probe measures this across 48 batches).
+  * Read the published table through [[StoreFold.readPublished]];
+  * content is publish-mode-independent.
   *
   * SCALE: per batch, one batch-sized partial agg + a touched-pk-sized
   * (incremental) or store-sized (full) re-merge + fold; events never
   * cross a batch boundary twice — only (key, bucket, total) partials
-  * do. The per-batch `touched` collect is ≤ p ints (KB, bounded by
-  * the dial, never data-sized). The fold under the dial is ITSELF
-  * incremental ([[StoreFold]]'s pk-store path): it re-merges only
-  * the touched pk dirs and parallel byte-copies the rest into the
-  * swap target, so untouched history never re-encodes; the residual
+  * do. The fold under the dial is ITSELF incremental ([[StoreFold]]'s
+  * pk-store path): it re-merges only the touched pk dirs and parallel
+  * byte-copies the rest into the swap target, so untouched history never re-encodes; the residual
   * per-fold constant (pruned-read listing + up-to-p copies) is
   * amortized by `maxStoreParts` — a LARGER value than the
   * full-publish default is usually right in incremental mode.
   */
 object EwmaStream {
 
-  private def partials(df: DataFrame, keyCol: String, bucketNs: Long)
+  /** Per-(key, bucket) decimal totals of one frame — also
+    * [[HoltStream]]'s partials. */
+  private[streaming] def partials(df: DataFrame, keyCol: String, bucketNs: Long)
       : DataFrame =
     df.select(col(keyCol).cast("string").as("k"),
         expr(s"ts_ns div ${bucketNs}L").as("bucket"),
@@ -68,7 +59,7 @@ object EwmaStream {
   /** Lossless bucket-total merge; keeps the `pk` partition column
     * when the store carries one (pk is functionally dependent on k,
     * so grouping by it never splits a key). */
-  private def merge(parts: DataFrame): DataFrame = {
+  private[streaming] def merge(parts: DataFrame): DataFrame = {
     val keys =
       if (parts.columns.contains("pk")) Seq("k", "bucket", "pk")
       else Seq("k", "bucket")
@@ -76,61 +67,24 @@ object EwmaStream {
       .agg(sum(col("total")).cast("decimal(38,2)").as("total"))
   }
 
-  private def foldFromStore(store: DataFrame, keyCol: String,
-      alphaDen: Long): DataFrame =
-    graft.operators.Timeseries.ewmaFromCents(
-      merge(store)
-        .select(col("k"), col("bucket"),
-          (col("total") * 100).cast("long").as("cents")),
-      alphaDen, keyCol)
+  /** Exact per-(key, bucket) cents over store partials. */
+  private[streaming] def cents(store: DataFrame): DataFrame =
+    merge(store).select(col("k"), col("bucket"),
+      (col("total") * 100).cast("long").as("cents"))
 
-  /** Current published trend, ts08's output shape (full-publish
-    * recompute over the whole store). */
-  def publishedEwma(spark: SparkSession, storePath: String,
-      keyCol: String, alphaDen: Long): DataFrame =
-    foldFromStore(spark.read.parquet(storePath), keyCol, alphaDen)
-
-  /** Read the published table regardless of publish mode (drops the
-    * `pk` partition column incremental mode adds). */
-  def readPublished(spark: SparkSession, outPath: String): DataFrame =
-    StoreFold.readPublished(spark, outPath)
-
-  /** Bucket-total merge on the shared [[StoreFold]] protocol. */
-  def maybeCompactPartials(spark: SparkSession, storePath: String,
-      maxParts: Int, keepBatchId: Long,
-      partitionCols: Seq[String] = Seq("batch_id")): Boolean =
-    StoreFold.foldPartials(spark, storePath, "ewma", maxParts,
-      keepBatchId, merge, partitionCols)
-
-  /** `eventStream` must carry (`keyCol`, ts_ns, value).
-    *
-    * `publishEvery`: publish on every n-th batch ([[DriftStream]]'s
-    * cadence contract), full-publish mode only — MUTUALLY EXCLUSIVE
-    * with `incrementalPubParts` (enforced; [[BarStream]]'s rationale:
-    * a skipped batch's touched pks would never be republished). The
-    * per-batch store/publish/fold body is [[StoreFold.publishBatch]]
-    * — shared by all five key-local twins, so the touched-pk prune,
-    * the reserved-`pk` guard, and the restart dial marker live once.
-    * The publish-side pk hash rides keyCol: the fold output's keyCol
-    * IS the store's string k, so both sides bucket identically. */
+  /** `eventStream` must carry (`keyCol`, ts_ns, value). The
+    * publish-side pk hash rides keyCol: the fold output's keyCol IS the
+    * store's string k, so both sides bucket identically. */
   def start(storePath: String, eventStream: DataFrame, keyCol: String,
       bucketNs: Long, alphaDen: Long, outPath: String, checkpoint: String,
       maxStoreParts: Option[Int] = None,
       incrementalPubParts: Option[Int] = None,
-      publishEvery: Int = 1): StreamingQuery = {
-    StoreFold.requireDials(incrementalPubParts, publishEvery)
-    eventStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        StoreFold.publishBatch(batch.sparkSession, "ewma",
-          storePath, outPath, batchId,
-          partials(batch, keyCol, bucketNs),
-          storeKeyCol = "k", pubKeyCol = keyCol,
-          publish = st => foldFromStore(st, keyCol, alphaDen),
-          merge = merge,
-          maxStoreParts, incrementalPubParts, publishEvery)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
-  }
+      publishEvery: Int = 1): StreamingQuery =
+    StoreFold.start(eventStream, checkpoint, StoreFold.Twin(
+      Seq(StoreFold.Sub(storePath, "ewma", merge)),
+      StoreFold.KeyLocal(outPath, publishEvery, incrementalPubParts,
+        storeKeyCol = "k", pubKeyCol = keyCol,
+        st => graft.operators.Timeseries.ewmaFromCents(cents(st),
+          alphaDen, keyCol)),
+      maxStoreParts, (batch, _) => Seq(partials(batch, keyCol, bucketNs))))
 }

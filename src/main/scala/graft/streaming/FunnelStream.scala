@@ -20,9 +20,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *     carries the whole entry state for continuation.
   *   - `closed/` CLOSED-session counters: (lvl, n) rows summed —
   *     at most stages+1 rows per partial.
-  * Both live in `batch_id=` partitions on the shared [[StoreFold]]
-  * protocol (replay overwrites its own partition; fold merges closed
-  * partials losslessly).
+  * Both are sub-stores of the [[StoreFold]] loop (with the `late/`
+  * contract monitor below); each fold merges closed partials
+  * losslessly.
   *
   * WHY one integer suffices: when a session continues into a new
   * batch, every new event is later than every event already folded
@@ -59,18 +59,8 @@ object FunnelStream {
   private def closedMerge(df: DataFrame): DataFrame =
     df.groupBy(col("lvl")).agg(sum(col("n")).as("n"))
 
-  private def readOr(spark: SparkSession, path: String,
-      schema: String): DataFrame =
-    try spark.read.parquet(path).drop("batch_id")
-    catch {
-      case _: org.apache.spark.sql.AnalysisException =>
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType.fromDDL(schema))
-    }
-
   private def openState(spark: SparkSession, storePath: String): DataFrame =
-    openMerge(readOr(spark, s"$storePath/open",
+    openMerge(StoreFold.readOr(spark, s"$storePath/open",
       "user_id BIGINT, last_ts BIGINT, lvl INT"))
 
   private def lateMerge(df: DataFrame): DataFrame =
@@ -85,14 +75,15 @@ object FunnelStream {
     * alerts on this instead of discovering a silent drift later.
     */
   def lateEvents(spark: SparkSession, storePath: String): Long = {
-    val r = lateMerge(readOr(spark, s"$storePath/late",
+    val r = lateMerge(StoreFold.readOr(spark, s"$storePath/late",
       "user_id BIGINT, n BIGINT"))
       .agg(coalesce(sum(col("n")), lit(0L))).head()
     r.getLong(0)
   }
 
   private def closedCounts(spark: SparkSession, storePath: String): DataFrame =
-    closedMerge(readOr(spark, s"$storePath/closed", "lvl INT, n BIGINT"))
+    closedMerge(StoreFold.readOr(spark, s"$storePath/closed",
+      "lvl INT, n BIGINT"))
 
   /** The published report, batch `funnel()`'s exact output shape. */
   def publishedFunnel(spark: SparkSession, storePath: String,
@@ -114,12 +105,12 @@ object FunnelStream {
   }
 
   /** One micro-batch: continue/split per-user sessions against the
-    * open store, run the batch window chain with synthetic seeds,
-    * land closed-session counters + new open state as this batch's
-    * partials. */
-  private[streaming] def processBatch(spark: SparkSession, storePath: String,
-      batch: DataFrame, stages: Seq[String], gapNs: Long,
-      batchId: Long): Unit = {
+    * open store, run the batch window chain with synthetic seeds, and
+    * return this batch's late, closed-session and open-state partials
+    * (in that order, open last). */
+  private def partials(storePath: String, batch: DataFrame,
+      stages: Seq[String], gapNs: Long): Seq[DataFrame] = {
+    val spark = batch.sparkSession
     import spark.implicits._
     val k = stages.length
     val prior = openState(spark, storePath).localCheckpoint(true)
@@ -194,54 +185,24 @@ object FunnelStream {
       .filter(col("last_ts").isNotNull && col("ts_ns") < col("last_ts"))
       .groupBy(col("user_id")).agg(count(lit(1)).as("n"))
       .localCheckpoint(true)
-    latePartial.withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(s"$storePath/late")
-    closedPartial.withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(s"$storePath/closed")
-    openPartial.withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(s"$storePath/open")
-  }
-
-  /** Fold both stores' closed partials on the shared protocol. */
-  def maybeCompactPartials(spark: SparkSession, storePath: String,
-      maxParts: Int, keepBatchId: Long): Boolean = {
-    val a = StoreFold.foldPartials(spark, s"$storePath/closed", "funnel-closed",
-      maxParts, keepBatchId, closedMerge)
-    val b = StoreFold.foldPartials(spark, s"$storePath/open", "funnel-open",
-      maxParts, keepBatchId, openMerge)
-    val c = StoreFold.foldPartials(spark, s"$storePath/late", "funnel-late",
-      maxParts, keepBatchId, lateMerge)
-    a || b || c
+    Seq(latePartial, closedPartial, openPartial)
   }
 
   /** `eventStream` must carry (user_id, event_id, ts_ns, event_type).
-    */
-  /** `publishEvery`: publish on every n-th batch ([[DriftStream]]'s
-    * cadence contract — the funnel report is one global row, so
-    * cadence is the right dial). */
+    * The funnel report is one global row, so `publishEvery` cadence is
+    * the dial. */
   def start(storePath: String, eventStream: DataFrame, stages: Seq[String],
       gapNs: Long, outPath: String, checkpoint: String,
       maxStoreParts: Option[Int] = None,
       publishEvery: Int = 1): StreamingQuery = {
     require(stages.nonEmpty && stages.distinct == stages,
       s"need distinct non-empty stages, got $stages")
-    require(publishEvery >= 1, s"need publishEvery >= 1, got $publishEvery")
-    eventStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        processBatch(spark, storePath, batch, stages, gapNs, batchId)
-        if (batchId % publishEvery == 0)
-          publishedFunnel(spark, storePath, stages)
-            .write.mode("overwrite").parquet(outPath)
-        maxStoreParts.foreach { n =>
-          maybeCompactPartials(spark, storePath, n, batchId)
-        }
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
+    StoreFold.start(eventStream, checkpoint, StoreFold.Twin(
+      Seq(StoreFold.Sub(s"$storePath/late", "funnel-late", lateMerge),
+        StoreFold.Sub(s"$storePath/closed", "funnel-closed", closedMerge),
+        StoreFold.Sub(s"$storePath/open", "funnel-open", openMerge)),
+      StoreFold.Every(outPath, publishEvery,
+        publishedFunnel(_, storePath, stages)),
+      maxStoreParts, (batch, _) => partials(storePath, batch, stages, gapNs)))
   }
 }

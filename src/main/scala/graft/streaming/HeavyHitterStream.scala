@@ -9,13 +9,12 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * every streaming state in graft (no executor memory, no watermark-
   * unbounded state), and replay-idempotent.
   *
-  * Per micro-batch: exact batch token counts (one batch-sized
-  * partial-agg shuffle) are MG-truncated to `cap` counters and land
-  * as THIS batch's partial in a `batch_id=` partition with dynamic
-  * overwrite — a replayed batch replaces its OWN partial, never
-  * double-counts. The published sketch is the bulk MG-merge of every
-  * partial: sum counts per token, subtract the (cap+1)-th largest
-  * combined count, drop non-positives.
+  * Per micro-batch ([[StoreFold]]'s loop): exact batch token counts
+  * (one batch-sized partial-agg shuffle) are MG-truncated to `cap`
+  * counters and land as THIS batch's partial. The published sketch is
+  * the bulk MG-merge of every partial: sum counts per token, subtract
+  * the (cap+1)-th largest combined count, drop non-positives; the fold
+  * merges closed partials the same way.
   *
   * GUARANTEE (mergeable summaries, Agarwal et al. 2012, PODS — the
   * same bound t15's batch gate checks): every decrement of Δ at ANY
@@ -27,12 +26,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * StreamingSpec gates exactly this against exact whole-stream
   * counts.
   *
-  * Store growth is batches × cap rows (KB per batch);
-  * `maxStoreParts` folds closed partials into one base partial
-  * (`batch_id=-1`) on the signature-store cadence. The fold EXCLUDES
-  * the current batch's partition so a replay of the in-flight batch
-  * still overwrites its own partial (the fold only touches batches
-  * the checkpoint has already committed).
+  * Store growth is batches × cap rows (KB per batch) until
+  * `maxStoreParts` folds closed partials into one base partial.
   */
 object HeavyHitterStream {
 
@@ -54,81 +49,25 @@ object HeavyHitterStream {
       filter(split(trim(col("text")), " "), w => w =!= "")).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
 
+  /** Bulk MG-merge of (w, cnt) partials. */
+  private def merge(parts: DataFrame, cap: Int): DataFrame =
+    mgTruncate(parts.groupBy(col("w")).agg(sum(col("cnt")).as("cnt")), cap)
+
   /** The current published sketch: bulk MG-merge of all partials. */
   def publishedSketch(spark: SparkSession, storePath: String, cap: Int): DataFrame =
-    mgTruncate(spark.read.parquet(storePath)
-      .groupBy(col("w")).agg(sum(col("cnt")).as("cnt")), cap)
-
-  /** Fold every partial EXCEPT `keepBatchId`'s into one base partial
-    * (`batch_id=-1`) when the partition count exceeds `maxParts`.
-    * Same checked tmp/old rename-swap protocol as
-    * [[graft.sources.Sinks.compactParquet]]; runs in the single
-    * writer's between-batch quiet window. Returns whether it folded.
-    */
-  def maybeCompactPartials(spark: SparkSession, storePath: String,
-      cap: Int, maxParts: Int, keepBatchId: Long): Boolean = {
-    import org.apache.hadoop.fs.Path
-    require(maxParts >= 1, s"need maxParts >= 1, got $maxParts")
-    val dir = new Path(storePath)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) return false
-    val parts = fs.listStatus(dir).filter(_.isDirectory)
-      .map(_.getPath.getName).filter(_.startsWith("batch_id="))
-    if (parts.length <= maxParts) return false
-    val tmp = new Path(storePath + "_fold_tmp")
-    val old = new Path(storePath + "_fold_old")
-    require(!fs.exists(tmp) && !fs.exists(old),
-      s"heavy-hitter fold: stale $tmp or $old exists — inspect/remove first")
-    // partition-column type is inferred on read — pin it to LONG
-    val all = spark.read.parquet(storePath)
-      .select(col("w"), col("cnt"), col("batch_id").cast("long").as("batch_id"))
-    val closed = all.filter(col("batch_id") =!= keepBatchId)
-      .groupBy(col("w")).agg(sum(col("cnt")).as("cnt"))
-    val folded = mgTruncate(closed, cap).withColumn("batch_id", lit(-1L))
-    val current = all.filter(col("batch_id") === keepBatchId)
-    // materialize BEFORE touching the live directory
-    folded.unionByName(current)
-      .write.partitionBy("batch_id").parquet(tmp.toString)
-    require(fs.rename(dir, old), s"fold: rename $storePath -> $old failed")
-    if (!fs.rename(tmp, dir)) {
-      fs.rename(old, dir)
-      sys.error(s"fold: rename $tmp -> $storePath failed (original restored)")
-    }
-    fs.delete(old, true)
-    true
-  }
+    merge(spark.read.parquet(storePath), cap)
 
   /** `docStream` must carry (doc_id, text). Published sketch lands at
     * `outPath` (full overwrite, ≤ cap rows); partials accumulate at
-    * `storePath`, folded whenever the partition count passes
-    * `maxStoreParts` (None = never).
-    */
-  /** `publishEvery`: publish on every n-th batch ([[DriftStream]]'s
-    * cadence contract — the MG merge truncates against the GLOBAL
-    * sketch, so cadence is the right dial). */
+    * `storePath`, folded past `maxStoreParts` (None = never). The MG
+    * merge truncates against the GLOBAL sketch, so `publishEvery`
+    * cadence is the dial. */
   def start(storePath: String, docStream: DataFrame, cap: Int,
       outPath: String, checkpoint: String,
       maxStoreParts: Option[Int] = None,
-      publishEvery: Int = 1): StreamingQuery = {
-    require(publishEvery >= 1, s"need publishEvery >= 1, got $publishEvery")
-    docStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        mgTruncate(batchCounts(batch), cap)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(storePath)
-        if (batchId % publishEvery == 0)
-          publishedSketch(spark, storePath, cap)
-            .write.mode("overwrite").parquet(outPath)
-        maxStoreParts.foreach { n =>
-          maybeCompactPartials(spark, storePath, cap, n, batchId)
-        }
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
-  }
+      publishEvery: Int = 1): StreamingQuery =
+    StoreFold.start(docStream, checkpoint, StoreFold.Twin(
+      Seq(StoreFold.Sub(storePath, "heavy-hitter", merge(_, cap))),
+      StoreFold.Every(outPath, publishEvery, publishedSketch(_, storePath, cap)),
+      maxStoreParts, (batch, _) => Seq(mgTruncate(batchCounts(batch), cap))))
 }

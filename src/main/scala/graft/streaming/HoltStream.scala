@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming Holt double-exponential smoothing — ts15 kept
@@ -20,10 +19,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * (StreamingSpec gates this, late-event case included).
   *
   * The fold is KEY-LOCAL (two registers per key, never reading
-  * another key's buckets), so both publish dials apply verbatim
-  * through [[StoreFold.publishBatch]]: `publishEvery` cadence, or
-  * `incrementalPubParts` touched-pk publish (mutually exclusive,
-  * require-enforced).
+  * another key's buckets), so both [[StoreFold.KeyLocal]] dials
+  * apply: `publishEvery` cadence, or `incrementalPubParts` touched-pk
+  * publish (read through [[StoreFold.readPublished]]).
   *
   * SCALE: [[EwmaStream]]'s exact budget — per batch one batch-sized
   * partial agg + a touched-pk-sized (incremental) or store-sized
@@ -33,73 +31,21 @@ import org.apache.spark.sql.streaming.StreamingQuery
   */
 object HoltStream {
 
-  private def partials(df: DataFrame, keyCol: String, bucketNs: Long)
-      : DataFrame =
-    df.select(col(keyCol).cast("string").as("k"),
-        expr(s"ts_ns div ${bucketNs}L").as("bucket"),
-        col("value").cast("decimal(18,2)").as("vd"))
-      .groupBy(col("k"), col("bucket"))
-      .agg(sum(col("vd")).cast("decimal(38,2)").as("total"))
-
-  /** Lossless bucket-total merge; keeps the `pk` partition column
-    * when the store carries one (functionally dependent on k). */
-  private def merge(parts: DataFrame): DataFrame = {
-    val keys =
-      if (parts.columns.contains("pk")) Seq("k", "bucket", "pk")
-      else Seq("k", "bucket")
-    parts.groupBy(keys.map(col): _*)
-      .agg(sum(col("total")).cast("decimal(38,2)").as("total"))
-  }
-
-  private def foldFromStore(store: DataFrame, keyCol: String,
-      alphaDen: Long, betaDen: Long): DataFrame =
-    graft.operators.Timeseries.holtFromCents(
-      merge(store)
-        .select(col("k"), col("bucket"),
-          (col("total") * 100).cast("long").as("cents")),
-      alphaDen, betaDen, keyCol)
-
-  /** Current published forecast, ts15's output shape (full-publish
-    * recompute over the whole store). */
-  def publishedHolt(spark: SparkSession, storePath: String,
-      keyCol: String, alphaDen: Long, betaDen: Long): DataFrame =
-    foldFromStore(spark.read.parquet(storePath), keyCol, alphaDen, betaDen)
-
-  /** Read the published table regardless of publish mode (drops the
-    * `pk` partition column incremental mode adds). */
-  def readPublished(spark: SparkSession, outPath: String): DataFrame =
-    StoreFold.readPublished(spark, outPath)
-
-  /** Bucket-total merge on the shared [[StoreFold]] protocol. */
-  def maybeCompactPartials(spark: SparkSession, storePath: String,
-      maxParts: Int, keepBatchId: Long,
-      partitionCols: Seq[String] = Seq("batch_id")): Boolean =
-    StoreFold.foldPartials(spark, storePath, "holt", maxParts,
-      keepBatchId, merge, partitionCols)
-
-  /** `eventStream` must carry (`keyCol`, ts_ns, value). Dials and
-    * per-batch body are [[StoreFold.publishBatch]]'s — the publish-
-    * side pk hash rides keyCol (the fold output's keyCol IS the
+  /** `eventStream` must carry (`keyCol`, ts_ns, value). The
+    * publish-side pk hash rides keyCol (the fold output's keyCol IS the
     * store's string k, [[EwmaStream]]'s contract). */
   def start(storePath: String, eventStream: DataFrame, keyCol: String,
       bucketNs: Long, alphaDen: Long, betaDen: Long, outPath: String,
       checkpoint: String,
       maxStoreParts: Option[Int] = None,
       incrementalPubParts: Option[Int] = None,
-      publishEvery: Int = 1): StreamingQuery = {
-    StoreFold.requireDials(incrementalPubParts, publishEvery)
-    eventStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        StoreFold.publishBatch(batch.sparkSession, "holt",
-          storePath, outPath, batchId,
-          partials(batch, keyCol, bucketNs),
-          storeKeyCol = "k", pubKeyCol = keyCol,
-          publish = st => foldFromStore(st, keyCol, alphaDen, betaDen),
-          merge = merge,
-          maxStoreParts, incrementalPubParts, publishEvery)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
-  }
+      publishEvery: Int = 1): StreamingQuery =
+    StoreFold.start(eventStream, checkpoint, StoreFold.Twin(
+      Seq(StoreFold.Sub(storePath, "holt", EwmaStream.merge)),
+      StoreFold.KeyLocal(outPath, publishEvery, incrementalPubParts,
+        storeKeyCol = "k", pubKeyCol = keyCol,
+        st => graft.operators.Timeseries.holtFromCents(EwmaStream.cents(st),
+          alphaDen, betaDen, keyCol)),
+      maxStoreParts,
+      (batch, _) => Seq(EwmaStream.partials(batch, keyCol, bucketNs))))
 }

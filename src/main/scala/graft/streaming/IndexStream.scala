@@ -28,7 +28,7 @@ object IndexStream {
     * compact the inverted lists iff some cell directory exceeds this
     * many files ([[graft.operators.Similarity.maybeCompactIvfPqIndex]]).
     * Runs in the between-batch quiet window of the single writer, so
-    * the non-transactional directory swap races nothing. */
+    * the directory swap races nothing. */
   def start(indexPath: String, vecStream: DataFrame,
       checkpoint: String, maxFilesPerCell: Option[Int] = None): StreamingQuery =
     vecStream.writeStream

@@ -27,10 +27,12 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * same self-triggering cadence as the signature store
   * ([[graft.operators.NearDupStore.maybeCompact]]): when the
   * store's file count passes `maxStoreFiles`, it is rewritten to
-  * size-based file counts ([[graft.sources.Sinks.compactParquet]]'s
-  * checked rename swap) in the single writer's between-batch quiet
-  * window. Contents are already distinct (the anti-join invariant), so
-  * compaction is a pure rewrite — the matrix is unchanged.
+  * size-based file counts ([[graft.sources.Sinks.compactParquet]]) in
+  * the single writer's between-batch quiet window. Contents are
+  * already distinct (the anti-join invariant), so compaction is a pure
+  * rewrite — the matrix is unchanged. Each batch first heals a
+  * compaction swap that died (`_compact_old` restored), so the batch
+  * never reads a missing store as an empty one.
   */
 object RetentionStream {
 
@@ -65,14 +67,10 @@ object RetentionStream {
     * is their GLOBAL min week, so one late pair can move a user
     * between cohorts and change two cohorts' whole rows, and cohort
     * membership cannot be pruned without a cohort→users index. The
-    * honest dial is therefore cadence, not incremental publish
-    * ([[DriftStream]]'s contract): the anti-join append absorbs
-    * every batch, the matrix recomputes only on every
-    * `publishEvery`-th batch (default 1 = every batch), and an
-    * off-cadence published matrix is exactly the previous publish
-    * point's batch-twin output. Replay still converges: a replayed
-    * batch appends nothing and a replayed publish recomputes the
-    * same pure function of the store.
+    * honest dial is therefore cadence ([[StoreFold]]'s cadence
+    * contract): the anti-join append absorbs every batch. Replay still
+    * converges: a replayed batch appends nothing and a replayed
+    * publish recomputes the same pure function of the store.
     */
   def start(storePath: String, eventStream: DataFrame,
       outPath: String, checkpoint: String,
@@ -82,6 +80,10 @@ object RetentionStream {
     eventStream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
+        val dir = new org.apache.hadoop.fs.Path(storePath)
+        graft.sources.BucketedStore.recoverSwap(
+          dir.getFileSystem(spark.sparkContext.hadoopConfiguration), dir,
+          "compact", "retention")
         val pairs = graft.operators.Sessionize.activityWeeks(batch)
         val existing =
           try spark.read.parquet(storePath).persist()

@@ -1,30 +1,60 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.sources.BucketedStore
 
-/** The shared store-fold protocol of the streaming twins: merge every
-  * CLOSED `batch_id=` partial into the `batch_id=-1` base when the
-  * partition count exceeds `maxParts`, leaving the in-flight batch's
-  * partial untouched (so its replay still overwrites its own
-  * partition). Crash-safe via the checked tmp/old rename swap, run in
-  * the single writer's between-batch quiet window; a fold interrupted
-  * at ANY point auto-recovers on the next call (the entry block
-  * restores the known-good store from `_fold_old` / discards a
-  * never-swapped `_fold_tmp`), so no crash state needs manual repair.
+/** The one per-batch loop of every streaming twin that keeps its state
+  * as `batch_id=` partials, and the fold protocol those partials share
+  * (the analytics twins: [[AnomalyStream]], [[BarStream]],
+  * [[CdcStream]], [[ConversionStream]], [[DistinctStream]],
+  * [[DriftStream]], [[EngagementStream]], [[EwmaStream]],
+  * [[FunnelStream]], [[HeavyHitterStream]], [[HoltStream]],
+  * [[ThresholdStream]], [[TransitionStream]]). A twin is a [[Twin]]
+  * definition — its sub-stores, each with a lossless merge; its
+  * partials for a batch; its [[Publish]] — and [[start]] runs it under
+  * foreachBatch. Every micro-batch ([[runBatch]]):
+  *  1. HEAL every sub-store ([[BucketedStore.recoverSwap]]) before the
+  *     twin reads its prior state and before any write: a fold that
+  *     died between its two renames left the store's whole history in
+  *     `_fold_old`, and a partial written first would re-create the
+  *     store directory, publish one batch, and make the history look
+  *     like a stale pre-swap copy to delete.
+  *  2. WRITE each partial into its sub-store's `batch_id=<id>`
+  *     partition with dynamic overwrite.
+  *  3. PUBLISH — always a pure function of the post-write store.
+  *  4. FOLD each sub-store past `maxStoreParts` ([[foldPartials]]).
   *
-  * Each twin supplies only its MERGE (counts sum, latest-wins
-  * max(struct), HLL register union, bar-field merges, histogram sum)
-  * — the merge must be lossless/associative over its partials;
-  * everything protocol-critical (stale-dir guard, swap ordering,
-  * rollback on a failed second rename) lives HERE once.
+  * IDEMPOTENT UNDER RETRY: a replayed batch overwrites its OWN
+  * partials (never double-counts) and republishes the same pure
+  * function of the store, so a crash at any step converges on replay.
+  * Partials that read prior state (a boundary store, open sessions,
+  * pending signups) run after the heal and before this batch's writes.
   *
-  * `merge` receives the closed partials (with their `batch_id`
-  * column) and returns the folded frame WITHOUT `batch_id`; the
-  * protocol stamps `-1` and column-aligns before the partitioned
-  * write.
+  * CADENCE (`publishEvery = n`, default 1): publish on every n-th
+  * batch (`batchId % n == 0`). The store still absorbs every batch
+  * losslessly, so an off-cadence published table is exactly the
+  * previous publish point's batch-twin output — staleness is bounded
+  * by the cadence, correctness never is. It is the dial of every twin
+  * whose published table is a global rollup (re-binned histograms,
+  * global percentiles, a sketch truncated against the global total,
+  * a types² matrix, a one-row report); the key-local twins also have
+  * the touched-pk incremental publish ([[KeyLocal]]), and the two
+  * dials are mutually exclusive.
+  *
+  * THE FOLD merges every CLOSED `batch_id=` partial into the
+  * `batch_id=-1` base when the partition count exceeds `maxParts`,
+  * leaving the in-flight batch's partial untouched (so its replay
+  * still overwrites its own partition). Each twin supplies only its
+  * MERGE (counts sum, latest-wins max(struct), HLL register union,
+  * bar-field merges, Misra-Gries truncate) — lossless/associative over
+  * its partials; the swap ([[BucketedStore.swapIn]], via
+  * `<store>_fold_tmp` / `_fold_old`) runs in the single writer's
+  * between-batch quiet window, and a fold interrupted at ANY point
+  * heals on the next batch (or the next [[foldPartials]] call).
   *
   * Secondary-partitioned stores (batch_id × pk, the
   * incremental-publish layout) get an INCREMENTAL fold: only the pk
@@ -35,17 +65,202 @@ import graft.sources.BucketedStore
   * still built in full and lands via the same whole-dir rename swap.
   */
 object StoreFold {
+
+  /** One `batch_id=`-partial store of a twin. `merge` receives closed
+    * partials (with their `batch_id` column, and `pk` when the store
+    * carries one) and returns the folded frame WITHOUT `batch_id`;
+    * the fold stamps `-1` and column-aligns before the partitioned
+    * write. `label` names the store in errors. */
+  final case class Sub(path: String, label: String,
+      merge: DataFrame => DataFrame)
+
+  /** How a twin publishes once its partials have landed. */
+  sealed trait Publish
+
+  /** On every `every`-th batch, `table` (over the store) overwrites
+    * `outPath`. */
+  final case class Every(outPath: String, every: Int,
+      table: SparkSession => DataFrame) extends Publish {
+    require(every >= 1, s"need publishEvery >= 1, got $every")
+  }
+
+  /** The publish of a key-local twin (one store; `table` never reads
+    * across keys), with its two dials:
+    *  - `parts = None`: `table(whole store)` overwrites `outPath` on
+    *    [[Every]]'s cadence.
+    *  - `parts = Some(p)` (`incrementalPubParts`): store and published
+    *    table gain a `pk = pmod(hash(key), p)` partition column; each
+    *    batch recomputes `table` ONLY over store rows in the pk
+    *    partitions its keys touch and dynamically overwrites just those
+    *    published dirs. pk-granular (not raw-key) pruning is forced by
+    *    overwrite semantics: a rewritten pk dir must carry ALL its
+    *    keys' rows. The `touched` collect is ≤ p ints (dial-bounded,
+    *    never data-sized); writes `repartition(pk)` first, so file
+    *    counts track DIR counts. Read the table through
+    *    [[readPublished]].
+    * `table` receives pk-LESS store rows and must return a frame keyed
+    * by `pubKeyCol` whose hash matches the store-side `storeKeyCol`
+    * hash (same string/typed values). The dial is fixed for the life
+    * of a store and `pk` is a reserved column name under it (both
+    * checked per batch). */
+  final case class KeyLocal(outPath: String, every: Int,
+      parts: Option[Int], storeKeyCol: String, pubKeyCol: String,
+      table: DataFrame => DataFrame) extends Publish {
+    parts.foreach(p => require(p >= 1, s"need incrementalPubParts >= 1, got $p"))
+    require(every >= 1, s"need publishEvery >= 1, got $every")
+    require(every == 1 || parts.isEmpty,
+      "publishEvery and incrementalPubParts do not compose: a skipped " +
+        "batch's touched pk partitions would never be republished " +
+        "unless a later batch touched the same keys")
+  }
+
+  /** A change feed: every batch, `rows(store, batchId)` over one cached
+    * read of the (single) store lands as this batch's own `batch_id=`
+    * partition of `outPath` — a replay overwrites its own feed rows. */
+  final case class Feed(outPath: String,
+      rows: (DataFrame, Long) => DataFrame) extends Publish
+
+  /** A fold twin: `partials(batch, batchId)` returns one frame per sub,
+    * in `subs` order (which is also the write order); it may read the
+    * subs' prior state. [[KeyLocal]] and [[Feed]] twins keep one
+    * store. */
+  final case class Twin(subs: Seq[Sub], publish: Publish,
+      maxStoreParts: Option[Int],
+      partials: (DataFrame, Long) => Seq[DataFrame]) {
+    require(subs.nonEmpty, "a twin needs at least one store")
+    publish match {
+      case _: Every =>
+      case _ => require(subs.size == 1,
+        s"${subs.head.label}: a key-local or feed publish reads one store")
+    }
+
+    /** The incremental-publish dial, when this twin runs under one. */
+    private[StoreFold] def pkParts: Option[Int] = publish match {
+      case k: KeyLocal => k.parts
+      case _ => None
+    }
+  }
+
+  /** Run `t` over `stream`, one [[runBatch]] per micro-batch. */
+  def start(stream: DataFrame, checkpoint: String, t: Twin): StreamingQuery =
+    stream.writeStream
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        runBatch(batch.sparkSession, t, batch, batchId)
+      }
+      .option("checkpointLocation", checkpoint)
+      .start()
+
+  /** One micro-batch of `t`: heal, write, publish, fold. */
+  def runBatch(spark: SparkSession, t: Twin, batch: DataFrame,
+      batchId: Long): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    t.subs.foreach { s =>
+      val dir = new Path(s.path)
+      BucketedStore.recoverSwap(dir.getFileSystem(conf), dir, "fold", s.label)
+    }
+    val parts = t.partials(batch, batchId)
+    require(parts.size == t.subs.size,
+      s"${t.subs.head.label}: ${parts.size} partials for ${t.subs.size} stores")
+    val store = t.subs.head
+    val written = t.publish match {
+      case k: KeyLocal =>
+        // `pk` is the dial's reserved rewrite-granularity column — a
+        // twin whose data schema carried one would have it silently
+        // swallowed by readPublished/the fold prune. Checked BEFORE the
+        // marker write so a rejected call leaves no side effect behind.
+        k.parts.foreach { _ =>
+          require(!parts.head.columns.contains("pk"),
+            s"${store.label}: the partials schema carries a 'pk' column — " +
+              "the name is reserved by incrementalPubParts (it becomes the " +
+              "key-hash partition column of the store and published table)")
+        }
+        checkDialMarker(spark, store.label, store.path, k.parts, published = false)
+        checkDialMarker(spark, store.label, k.outPath, k.parts, published = true)
+        k.parts.fold(parts)(p =>
+          Seq(parts.head.withColumn("pk", pmod(hash(col(k.storeKeyCol)), lit(p)))))
+      case _ => parts
+    }
+    t.subs.zip(written).foreach { case (s, df) =>
+      writePartial(df, s.path, batchId, t.pkParts.isDefined)
+    }
+    val publish = t.publish match {
+      case KeyLocal(out, n, None, _, _, table) =>
+        Every(out, n, s => table(s.read.parquet(store.path)))
+      case p => p
+    }
+    publish match {
+      case Every(out, n, table) =>
+        if (batchId % n == 0) table(spark).write.mode("overwrite").parquet(out)
+      case KeyLocal(out, _, Some(p), _, pubKeyCol, table) =>
+        // bounded collect: ≤ p distinct pk ints (the dial), never
+        // key- or data-sized
+        val touched = written.head.select("pk").distinct()
+          .collect().map(_.getInt(0))
+        if (touched.nonEmpty) {
+          val pub = table(spark.read.parquet(store.path)
+            .filter(col("pk").isin(touched.map(Int.box): _*)).drop("pk"))
+          require(!pub.columns.contains("pk"),
+            s"${store.label}: the published schema carries a 'pk' column — " +
+              "reserved by incrementalPubParts (readPublished drops " +
+              "the partition column of that name)")
+          pub.withColumn("pk", pmod(hash(col(pubKeyCol)), lit(p)))
+            .repartition(col("pk")) // one file per touched pk dir
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("pk").parquet(out)
+        }
+      case Feed(out, rows) =>
+        // one store read serves every leg of the feed (released after
+        // the write) — not one list+scan pass per leg
+        val st = spark.read.parquet(store.path).cache()
+        try writePartial(rows(st, batchId), out, batchId, pk = false)
+        finally st.unpersist()
+      case _: KeyLocal => // mapped to Every above
+    }
+    t.maxStoreParts.foreach(n => fold(spark, t, n, batchId))
+  }
+
+  /** Fold every sub-store of `t` past `maxParts`, keeping batch
+    * `keepBatchId`'s partial; returns whether any store folded. */
+  def fold(spark: SparkSession, t: Twin, maxParts: Int,
+      keepBatchId: Long): Boolean = {
+    val cols = if (t.pkParts.isDefined) Seq("batch_id", "pk") else Seq("batch_id")
+    t.subs.map(s => foldPartials(spark, s.path, s.label, maxParts,
+      keepBatchId, s.merge, cols)).contains(true)
+  }
+
+  /** `df` as batch `batchId`'s partition of `path`, dynamic overwrite;
+    * with `pk`, one file per (batch, pk) dir (plain hash repartition
+    * IS task-aligned for directory partitioning). */
+  private def writePartial(df: DataFrame, path: String, batchId: Long,
+      pk: Boolean): Unit = {
+    val rows = df.withColumn("batch_id", lit(batchId))
+    val w = (if (pk) rows.repartition(col("pk")) else rows)
+      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+    if (pk) w.partitionBy("batch_id", "pk").parquet(path)
+    else w.partitionBy("batch_id").parquet(path)
+  }
+
+  /** A sub-store's rows without `batch_id`, or no rows of `schema`
+    * (DDL) before its first partial lands. */
+  private[streaming] def readOr(spark: SparkSession, path: String,
+      schema: String): DataFrame =
+    try spark.read.parquet(path).drop("batch_id")
+    catch {
+      case _: org.apache.spark.sql.AnalysisException =>
+        spark.createDataFrame(
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+          org.apache.spark.sql.types.StructType.fromDDL(schema))
+    }
+
   /** Read a published table regardless of publish mode: incremental
     * publish adds a `pk` key-hash partition column (rewrite
     * granularity, not content) — drop it so readers see the same
-    * shape either way. Shared by every twin with the
-    * `incrementalPubParts` dial. `pk` is dropped ONLY when it is a
-    * DIRECTORY partition column of the table (a full-publish payload
-    * that legitimately carries a `pk` data column passes through
-    * untouched; under the dial the name is reserved —
-    * [[publishBatch]] require-enforces it). */
+    * shape either way. `pk` is dropped ONLY when it is a DIRECTORY
+    * partition column of the table (a full-publish payload that
+    * legitimately carries a `pk` data column passes through
+    * untouched; under the dial the name is reserved). */
   def readPublished(spark: SparkSession, outPath: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
     val df = spark.read.parquet(outPath)
     if (!df.columns.contains("pk")) return df
     val dir = new Path(outPath)
@@ -53,23 +268,6 @@ object StoreFold {
     val pkIsDir = fs.exists(dir) && fs.listStatus(dir).exists(s =>
       s.isDirectory && s.getPath.getName.startsWith("pk="))
     if (pkIsDir) df.drop("pk") else df
-  }
-
-  /** Start-time dial validation shared by every publish-dialed twin:
-    * the two dials are MUTUALLY EXCLUSIVE — `publishEvery` skips
-    * whole publishes (recompute-family cadence), `incrementalPubParts`
-    * republishes only touched pk partitions; composed, a skipped
-    * batch's touched pks would never be republished unless a later
-    * batch touched the same keys. */
-  def requireDials(incrementalPubParts: Option[Int],
-      publishEvery: Int): Unit = {
-    incrementalPubParts.foreach(p =>
-      require(p >= 1, s"need incrementalPubParts >= 1, got $p"))
-    require(publishEvery >= 1, s"need publishEvery >= 1, got $publishEvery")
-    require(publishEvery == 1 || incrementalPubParts.isEmpty,
-      "publishEvery and incrementalPubParts do not compose: a skipped " +
-        "batch's touched pk partitions would never be republished " +
-        "unless a later batch touched the same keys")
   }
 
   /** The publish dial is FIXED for the life of a store/outPath: under
@@ -89,7 +287,6 @@ object StoreFold {
     * published table — exactly what the marker exists to prevent. */
   private def checkDialMarker(spark: SparkSession, label: String,
       path: String, dial: Option[Int], published: Boolean): Unit = {
-    import org.apache.hadoop.fs.Path
     val want = dial.map(p => s"pk=$p").getOrElse("full")
     val marker = new Path(path + "_dial")
     val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -138,101 +335,6 @@ object StoreFold {
     }
   }
 
-  /** The shared per-batch body of every publish-dialed twin — store
-    * the batch's partials, publish, fold. Hoisted so the touched-pk
-    * prune, the one-file-per-dir write discipline, the reserved-`pk`
-    * guard, and the dial marker live ONCE (the key-local twins
-    * previously re-implemented this ~identically), and so Scale's
-    * `ewmaPublishDial` probe honestly covers all of them: the twins
-    * differ only in the `batchPartials`/`publish`/`merge` they plug
-    * in, never in the publish path itself.
-    *
-    *  - Full mode (`incrementalPubParts = None`): store partials in
-    *    `batch_id=` partitions; on-cadence (`publishEvery`) batches
-    *    recompute `publish(whole store)` and overwrite `outPath`.
-    *  - Incremental mode (`Some(p)`): store and published table gain
-    *    a `pk = pmod(hash(key), p)` partition column; each batch
-    *    recomputes `publish` ONLY over store rows in the pk
-    *    partitions its keys touch and dynamically overwrites just
-    *    those published dirs. The `touched` collect is ≤ p ints
-    *    (dial-bounded, never data-sized). Writes `repartition(pk)`
-    *    first: plain hash repartition IS task-aligned for directory
-    *    partitioning, so file counts track DIR counts.
-    *
-    * `publish` receives pk-LESS store rows (pruned in incremental
-    * mode, the whole store in full mode) and must return a frame
-    * keyed by `pubKeyCol` whose hash matches the store-side
-    * `storeKeyCol` hash (same string/typed values); `merge` is the
-    * twin's lossless fold merge (sees `pk` when the store carries
-    * one). */
-  def publishBatch(spark: SparkSession, label: String,
-      storePath: String, outPath: String, batchId: Long,
-      batchPartials: DataFrame, storeKeyCol: String, pubKeyCol: String,
-      publish: DataFrame => DataFrame, merge: DataFrame => DataFrame,
-      maxStoreParts: Option[Int], incrementalPubParts: Option[Int],
-      publishEvery: Int): Unit = {
-    requireDials(incrementalPubParts, publishEvery)
-    // `pk` is the dial's reserved rewrite-granularity column — a twin
-    // whose data schema carried one would have it silently swallowed
-    // by readPublished/the fold prune. Checked BEFORE the marker write
-    // so a rejected call leaves no side effect behind.
-    incrementalPubParts.foreach { _ =>
-      require(!batchPartials.columns.contains("pk"),
-        s"$label: the partials schema carries a 'pk' column — the " +
-          "name is reserved by incrementalPubParts (it becomes the " +
-          "key-hash partition column of the store and published table)")
-    }
-    checkDialMarker(spark, label, storePath, incrementalPubParts,
-      published = false)
-    checkDialMarker(spark, label, outPath, incrementalPubParts,
-      published = true)
-    incrementalPubParts match {
-      case None =>
-        batchPartials
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(storePath)
-        if (batchId % publishEvery == 0)
-          publish(spark.read.parquet(storePath))
-            .write.mode("overwrite").parquet(outPath)
-        maxStoreParts.foreach { n =>
-          foldPartials(spark, storePath, label, n, batchId, merge)
-        }
-      case Some(p) =>
-        val part = batchPartials
-          .withColumn("pk", pmod(hash(col(storeKeyCol)), lit(p)))
-        part.withColumn("batch_id", lit(batchId))
-          .repartition(col("pk")) // ~one file per pk dir
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id", "pk")
-          .parquet(storePath)
-        // bounded collect: ≤ p distinct pk ints (the dial), never
-        // key- or data-sized
-        val touched = part.select("pk").distinct()
-          .collect().map(_.getInt(0))
-        if (touched.nonEmpty) {
-          val pruned = spark.read.parquet(storePath)
-            .filter(col("pk").isin(touched.map(Int.box): _*))
-          val pub = publish(pruned.drop("pk"))
-          require(!pub.columns.contains("pk"),
-            s"$label: the published schema carries a 'pk' column — " +
-              "reserved by incrementalPubParts (readPublished drops " +
-              "the partition column of that name)")
-          pub.withColumn("pk", pmod(hash(col(pubKeyCol)), lit(p)))
-            .repartition(col("pk")) // one file per touched pk dir
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("pk").parquet(outPath)
-        }
-        maxStoreParts.foreach { n =>
-          foldPartials(spark, storePath, label, n, batchId, merge,
-            Seq("batch_id", "pk"))
-        }
-    }
-  }
 
   /** `partitionCols` must start with `batch_id`; twins whose store
     * carries a secondary partition column (the incremental-publish
@@ -242,7 +344,6 @@ object StoreFold {
       maxParts: Int, keepBatchId: Long,
       merge: DataFrame => DataFrame,
       partitionCols: Seq[String] = Seq("batch_id")): Boolean = {
-    import org.apache.hadoop.fs.Path
     require(maxParts >= 1, s"need maxParts >= 1, got $maxParts")
     require(partitionCols.headOption.contains("batch_id"),
       s"$label fold: partitionCols must lead with batch_id, got $partitionCols")

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -11,7 +11,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * freshest distribution.
   *
   * State = per-(group, score) count partials in `batch_id=`
-  * partitions with dynamic overwrite (the [[AnomalyStream]] layout —
+  * partitions with dynamic overwrite (the [[StoreFold]] layout —
   * counts merge LOSSLESSLY, a replayed batch replaces its own
   * partial). The published threshold table is
   * [[graft.operators.TextOps.percentileThresholds]] over the
@@ -31,8 +31,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * and published table by `pk = pmod(hash(group), n)` and re-elects
   * only the touched pk partitions via dynamic overwrite — per-batch
   * publish cost ∝ touched groups' histograms, flat however many
-  * groups have accumulated. Read through [[readPublished]]; content
-  * is publish-mode-independent.
+  * groups have accumulated. Read through [[StoreFold.readPublished]];
+  * content is publish-mode-independent.
   */
 object ThresholdStream {
 
@@ -51,57 +51,21 @@ object ThresholdStream {
     parts.groupBy(keys.map(col): _*).agg(sum(col("n")).as("n"))
   }
 
-  /** Current published thresholds: one (group, thr) row per group
-    * from the merged store histogram (full-publish recompute). */
-  def publishedThresholds(spark: SparkSession, storePath: String,
-      group: String, score: String, p: Double): DataFrame =
-    graft.operators.TextOps.percentileThresholds(
-      mergeCounts(spark.read.parquet(storePath), group, score)
-        .select(col(group), col(score), col("n")),
-      group, score, p)
-
-  /** Read the published table regardless of publish mode (drops the
-    * `pk` partition column incremental mode adds). */
-  def readPublished(spark: SparkSession, outPath: String): DataFrame =
-    StoreFold.readPublished(spark, outPath)
-
-  /** Histogram-sum fold on the shared [[StoreFold]] protocol. */
-  def maybeCompactPartials(spark: SparkSession, storePath: String,
-      group: String, score: String, maxParts: Int,
-      keepBatchId: Long,
-      partitionCols: Seq[String] = Seq("batch_id")): Boolean =
-    StoreFold.foldPartials(spark, storePath, "threshold", maxParts,
-      keepBatchId, closed => mergeCounts(closed, group, score),
-      partitionCols)
-
   /** `scoredStream` must carry `group` and integer `score` columns.
-    * Thresholds land at `outPath` (group-count rows; full overwrite,
-    * or touched-pk dynamic overwrite in incremental mode); count
-    * partials accumulate at `storePath`, folded past
-    * `maxStoreParts`. */
+    * Thresholds land at `outPath` (group-count rows); count partials
+    * accumulate at `storePath`, folded past `maxStoreParts`. */
   def start(storePath: String, scoredStream: DataFrame, group: String,
       score: String, p: Double, outPath: String, checkpoint: String,
       maxStoreParts: Option[Int] = None,
       incrementalPubParts: Option[Int] = None,
-      publishEvery: Int = 1): StreamingQuery = {
-    StoreFold.requireDials(incrementalPubParts, publishEvery)
-    scoredStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // per-batch store/publish/fold body shared with the other
-        // key-local twins — [[StoreFold.publishBatch]]
-        StoreFold.publishBatch(batch.sparkSession, "threshold",
-          storePath, outPath, batchId,
-          batchCounts(batch, group, score),
-          storeKeyCol = group, pubKeyCol = group,
-          publish = st => graft.operators.TextOps.percentileThresholds(
-            mergeCounts(st, group, score)
-              .select(col(group), col(score), col("n")),
-            group, score, p),
-          merge = closed => mergeCounts(closed, group, score),
-          maxStoreParts, incrementalPubParts, publishEvery)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
-  }
+      publishEvery: Int = 1): StreamingQuery =
+    StoreFold.start(scoredStream, checkpoint, StoreFold.Twin(
+      Seq(StoreFold.Sub(storePath, "threshold", mergeCounts(_, group, score))),
+      StoreFold.KeyLocal(outPath, publishEvery, incrementalPubParts,
+        storeKeyCol = group, pubKeyCol = group,
+        st => graft.operators.TextOps.percentileThresholds(
+          mergeCounts(st, group, score)
+            .select(col(group), col(score), col("n")),
+          group, score, p)),
+      maxStoreParts, (batch, _) => Seq(batchCounts(batch, group, score))))
 }

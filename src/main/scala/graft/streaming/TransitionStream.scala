@@ -19,8 +19,7 @@ import graft.operators.Basket
   * row IS the minimal cross-batch state — user-sized, never
   * event-volume.
   *
-  * Both stores ride the [[StoreFold]] layout (`batch_id=` partitions,
-  * dynamic overwrite):
+  * Both stores ride the [[StoreFold]] loop:
   *  - pairs: (src, dst, n) per batch — counts SUM (lossless,
   *    associative), fold = one groupBy.
   *  - bound: (user_id, ts_ns, event_id, event_type) last event per
@@ -76,70 +75,47 @@ object TransitionStream {
       .filter(col("batch_id") < batchId)
       .drop("batch_id"))
 
+  /** Summed pair counts — the published read and the fold. */
+  private def pairCounts(parts: DataFrame): DataFrame =
+    parts.groupBy(col("src"), col("dst")).agg(sum(col("n")).as("n"))
+
   /** Published transition table from the summed pair store. */
   def published(spark: SparkSession, pairsPath: String): DataFrame =
-    Basket.transitionsFromCounts(
-      spark.read.parquet(pairsPath)
-        .groupBy(col("src"), col("dst"))
-        .agg(sum(col("n")).as("n")))
+    Basket.transitionsFromCounts(pairCounts(spark.read.parquet(pairsPath)))
 
-  def maybeCompactPartials(spark: SparkSession, pairsPath: String,
-      boundPath: String, maxParts: Int, keepBatchId: Long): Boolean = {
-    val a = StoreFold.foldPartials(spark, pairsPath, "transitions",
-      maxParts, keepBatchId, closed => closed
-        .groupBy(col("src"), col("dst")).agg(sum(col("n")).as("n")))
-    val b = StoreFold.foldPartials(spark, boundPath, "transitions-bound",
-      maxParts, keepBatchId, closed => lastPerUser(closed))
-    a || b
+  /** `events` must carry `user_id`, `ts_ns`, `event_id`, `event_type`
+    * with per-user non-decreasing event time across batches. The
+    * transition table lands at `outPath` (full overwrite); pair and
+    * boundary partials accumulate under `storePath`/pairs and /bound,
+    * folded past `maxStoreParts`. The matrix is types², a global
+    * rollup, so `publishEvery` cadence is the dial. */
+  private[graft] def twin(storePath: String, outPath: String,
+      maxStoreParts: Option[Int] = None,
+      publishEvery: Int = 1): StoreFold.Twin = {
+    val pairsPath = s"$storePath/pairs"
+    val boundPath = s"$storePath/bound"
+    StoreFold.Twin(
+      Seq(StoreFold.Sub(pairsPath, "transitions", pairCounts),
+        StoreFold.Sub(boundPath, "transitions-bound", lastPerUser)),
+      StoreFold.Every(outPath, publishEvery, published(_, pairsPath)),
+      maxStoreParts,
+      { (batch, batchId) =>
+        val spark = batch.sparkSession
+        val bound = new org.apache.hadoop.fs.Path(boundPath)
+        val prev =
+          if (bound.getFileSystem(spark.sparkContext.hadoopConfiguration)
+              .exists(bound)) boundBefore(spark, boundPath, batchId)
+          else spark.emptyDataFrame
+            .withColumn("user_id", lit(0L))
+            .withColumn("event_type", lit("")).limit(0)
+        Seq(pairsOf(batch, prev), lastPerUser(batch))
+      })
   }
 
-  /** `eventStream` must carry `user_id`, `ts_ns`, `event_id`,
-    * `event_type` with per-user non-decreasing event time across
-    * batches. Transition table lands at `outPath` (full overwrite);
-    * pair/boundary partials accumulate under `storePath`/pairs and
-    * /bound, folded past `maxStoreParts`. */
-  /** `publishEvery`: publish on every n-th batch ([[DriftStream]]'s
-    * cadence contract — the transition matrix is types², a global
-    * rollup, so cadence is the right dial). */
   def start(storePath: String, eventStream: DataFrame, outPath: String,
       checkpoint: String, maxStoreParts: Option[Int] = None,
       publishEvery: Int = 1)
-      : StreamingQuery = {
-    require(publishEvery >= 1, s"need publishEvery >= 1, got $publishEvery")
-    val pairsPath = s"$storePath/pairs"
-    val boundPath = s"$storePath/bound"
-    eventStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val haveBound = new org.apache.hadoop.fs.Path(boundPath)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .exists(new org.apache.hadoop.fs.Path(boundPath))
-        val prev =
-          if (haveBound) boundBefore(spark, boundPath, batchId)
-          else batch.sparkSession.emptyDataFrame
-            .withColumn("user_id", lit(0L))
-            .withColumn("event_type", lit("")).limit(0)
-        pairsOf(batch, prev)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(pairsPath)
-        lastPerUser(batch)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(boundPath)
-        if (batchId % publishEvery == 0)
-          published(spark, pairsPath)
-            .write.mode("overwrite").parquet(outPath)
-        maxStoreParts.foreach { n =>
-          maybeCompactPartials(spark, pairsPath, boundPath, n, batchId)
-        }
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
-  }
+      : StreamingQuery =
+    StoreFold.start(eventStream, checkpoint,
+      twin(storePath, outPath, maxStoreParts, publishEvery))
 }

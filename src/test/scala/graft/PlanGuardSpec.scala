@@ -140,6 +140,9 @@ class PlanGuardSpec extends AnyFunSuite {
     assert(sitesOf("""partitionBy\(\s*"micro_batch"\s*\)""".r) ===
       Set("src/main/scala/graft/streaming/IngestLoop.scala"),
       "a store-ingest stream lands its micro_batch sink through IngestLoop")
+    assert(sitesOf("""partitionBy\(\s*"batch_id"""".r) ===
+      Set("src/main/scala/graft/streaming/StoreFold.scala"),
+      "a batch_id= partial twin writes, publishes and folds through StoreFold")
   }
 
   test("oracle SQL never sums raw doubles (SURVEY §4 determinism rule)") {

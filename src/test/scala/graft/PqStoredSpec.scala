@@ -292,6 +292,38 @@ class PqStoredSpec extends AnyFunSuite {
     }
   }
 
+  test("IVF-PQ compaction crash states heal on the next append, no code rows lost") {
+    import org.apache.hadoop.fs.{FileUtil, Path}
+    val conf = spark.sparkContext.hadoopConfiguration
+    val batch = emb.filter(col("vec_id") < 20)
+      .select((col("vec_id") + 90000L).as("vec_id"), col("embedding"))
+    val n = emb.count()
+    // the three states the codes swap can die in, each left on disk
+    val crashStates: Seq[(String, (org.apache.hadoop.fs.FileSystem, Path, Path, Path) => Unit)] = Seq(
+      "between the two renames" -> { (fs, codes, tmp, old) =>
+        assert(fs.rename(codes, old))
+        assert(FileUtil.copy(fs, old, fs, tmp, false, conf))
+      },
+      "after the swap, before cleanup" ->
+        ((fs, codes, _, old) => assert(FileUtil.copy(fs, codes, fs, old, false, conf))),
+      "mid-write of the tmp output" ->
+        ((fs, codes, tmp, _) => assert(FileUtil.copy(fs, codes, fs, tmp, false, conf))))
+    for ((state, crash) <- crashStates) {
+      val path = tmp("ivfpqheal")
+      Similarity.writeIvfPqIndex(emb, path, 8, 16)
+      Similarity.compactIvfPqIndex(spark, path)
+      val codes = new Path(s"$path/codes")
+      val fs = codes.getFileSystem(conf)
+      val (tmpDir, oldDir) = graft.sources.BucketedStore.swapPaths(codes, "compact")
+      crash(fs, codes, tmpDir, oldDir)
+      Similarity.appendToIvfPqIndexIdempotent(batch, path, 7L)
+      assert(!fs.exists(tmpDir) && !fs.exists(oldDir), s"$state: leftovers")
+      assert(spark.read.parquet(s"$path/codes").count() === n + 20, state)
+      Similarity.compactIvfPqIndex(spark, path)
+      assert(spark.read.parquet(s"$path/codes").count() === n + 20, state)
+    }
+  }
+
   test("IVF-PQ delete: tombstoned vector stops ranking, compact drops its codes, stays dead") {
     val path = tmp("ivfpqdelete")
     Similarity.writeIvfPqIndex(emb, path, 8, 16)

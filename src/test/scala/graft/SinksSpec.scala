@@ -212,15 +212,33 @@ class SinksSpec extends AnyFunSuite {
     assert(spark.read.parquet(path).count() === 25)
   }
 
-  test("compactParquet refuses stale swap dirs and partitioned layouts") {
+  test("compactParquet heals crash states, refuses partitioned layouts") {
+    import org.apache.hadoop.fs.{FileUtil, Path}
     val path = tmp("graft-compact-guard")
-    Tables.nation(spark, sf).write.mode("overwrite").parquet(path)
-    val stale = new java.io.File(path + "_compact_old")
-    stale.mkdirs()
-    intercept[IllegalArgumentException] {
+    Tables.nation(spark, sf).repartition(5).write.mode("overwrite").parquet(path)
+    val rows = spark.read.parquet(path).collect().map(_.toSeq).toSet
+    val conf = spark.sparkContext.hadoopConfiguration
+    val dir = new Path(path)
+    val fs = dir.getFileSystem(conf)
+    val (tmpDir, oldDir) = BucketedStore.swapPaths(dir, "compact")
+    // the three states a compaction swap can die in, each left on disk:
+    // the next compaction heals it and compacts the original rows
+    val crashStates: Seq[(String, () => Unit)] = Seq(
+      "between the two renames" -> (() => {
+        assert(fs.rename(dir, oldDir))
+        assert(FileUtil.copy(fs, oldDir, fs, tmpDir, false, conf))
+      }),
+      "after the swap, before cleanup" ->
+        (() => assert(FileUtil.copy(fs, dir, fs, oldDir, false, conf))),
+      "mid-write of the tmp output" ->
+        (() => assert(FileUtil.copy(fs, dir, fs, tmpDir, false, conf))))
+    for ((state, crash) <- crashStates) {
+      crash()
       Sinks.compactParquet(spark, path)
+      assert(!fs.exists(tmpDir) && !fs.exists(oldDir), s"$state: leftovers")
+      assert(spark.read.parquet(path).collect().map(_.toSeq).toSet === rows,
+        state)
     }
-    stale.delete()
     val part = tmp("graft-compact-part")
     Sinks.writePartitioned(Tables.nation(spark, sf), part, "n_regionkey")
     intercept[IllegalArgumentException] {

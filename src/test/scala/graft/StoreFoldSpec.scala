@@ -36,6 +36,15 @@ class StoreFoldSpec extends AnyFunSuite {
     (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
 
+  /** A one-store key-local twin whose batch IS its partial. */
+  private def keyLocal(store: String, out: String, dial: Option[Int],
+      merge: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame = merge,
+      maxStoreParts: Option[Int] = None): StoreFold.Twin =
+    StoreFold.Twin(Seq(StoreFold.Sub(store, "t", merge)),
+      StoreFold.KeyLocal(out, 1, dial, "k", "k",
+        st => st.groupBy(col("k")).agg(sum(col("v")).cast("long").as("v"))),
+      maxStoreParts, (batch, _) => Seq(batch))
+
   test("fold folds closed partials and keeps the in-flight batch") {
     val path = freshStore()
     assert(StoreFold.foldPartials(spark, path, "t", maxParts = 2,
@@ -152,18 +161,17 @@ class StoreFoldSpec extends AnyFunSuite {
       .toString + "/store"
     val out = java.nio.file.Files.createTempDirectory("graft-rsv-out").toString
     val partials = Seq((1L, 10L, 99)).toDF("k", "v", "pk")
+    def twin(dial: Option[Int]) = StoreFold.Twin(
+      Seq(StoreFold.Sub(store, "t", merge)),
+      StoreFold.KeyLocal(out, 1, dial, "k", "k", identity), None,
+      (batch, _) => Seq(batch))
     val e = intercept[IllegalArgumentException] {
-      StoreFold.publishBatch(spark, "t", store, out, 0L, partials,
-        "k", "k", identity, merge,
-        maxStoreParts = None, incrementalPubParts = Some(4),
-        publishEvery = 1)
+      StoreFold.runBatch(spark, twin(Some(4)), partials, 0L)
     }
     assert(e.getMessage.contains("reserved"))
     // ...and in full mode the same frame passes through untouched:
     // a legitimate pk DATA column is only forbidden under the dial
-    StoreFold.publishBatch(spark, "t", store, out, 0L, partials,
-      "k", "k", identity, merge,
-      maxStoreParts = None, incrementalPubParts = None, publishEvery = 1)
+    StoreFold.runBatch(spark, twin(None), partials, 0L)
     val pub = StoreFold.readPublished(spark, out)
     assert(pub.columns.toSet === Set("k", "v", "pk", "batch_id"),
       "readPublished must keep a pk DATA column (only a pk DIRECTORY " +
@@ -175,9 +183,7 @@ class StoreFoldSpec extends AnyFunSuite {
     def partials = Seq((1L, 10L)).toDF("k", "v")
     def run(store: String, out: String, batchId: Long,
         dial: Option[Int]): Unit =
-      StoreFold.publishBatch(spark, "t", store, out, batchId, partials,
-        "k", "k", identity, merge,
-        maxStoreParts = None, incrementalPubParts = dial, publishEvery = 1)
+      StoreFold.runBatch(spark, keyLocal(store, out, dial), partials, batchId)
     // p changed across a restart
     val s1 = java.nio.file.Files.createTempDirectory("graft-dial1")
       .toString + "/store"
@@ -218,10 +224,100 @@ class StoreFoldSpec extends AnyFunSuite {
     val (f, dir) = fs(s)
     f.mkdirs(dir)
     f.create(new org.apache.hadoop.fs.Path(s + "/_SUCCESS"), true).close()
-    StoreFold.publishBatch(spark, "t", s, o, 0L,
-      Seq((1L, 10L)).toDF("k", "v"), "k", "k", identity, merge,
-      maxStoreParts = None, incrementalPubParts = Some(4), publishEvery = 1)
+    StoreFold.runBatch(spark, keyLocal(s, o, Some(4)),
+      Seq((1L, 10L)).toDF("k", "v"), 0L)
     assert(StoreFold.readPublished(spark, o)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet === Set((1L, 10L)))
+  }
+
+  /** The three states a fold swap can die in, each left on disk for
+    * the store at `path` after a completed fold (the states
+    * [[graft.sources.BucketedStore.swapIn]] can leave between its
+    * steps). */
+  private val crashStates: Seq[(String, String => Unit)] = {
+    import org.apache.hadoop.fs.{FileUtil, Path}
+    def copy(from: String, to: String): Unit = {
+      val (f, src) = fs(from)
+      assert(FileUtil.copy(f, src, f, new Path(to), false,
+        spark.sparkContext.hadoopConfiguration))
+    }
+    Seq(
+      "between the two renames" -> { path =>
+        val (f, dir) = fs(path)
+        assert(f.rename(dir, new Path(path + "_fold_old")))
+        copy(path + "_fold_old", path + "_fold_tmp")
+      },
+      "after the swap, before cleanup" -> { path =>
+        copy(path, path + "_fold_old")
+      },
+      "mid-write of the tmp output" -> { path =>
+        copy(path, path + "_fold_tmp")
+      })
+  }
+
+  test("the loop heals a crashed fold before it writes: published totals keep the whole history") {
+    import spark.implicits._
+    val batch = Seq((1L, 10L), (2L, 1L)).toDF("k", "v")
+    // the incremental dial's store carries pk; its merge keeps it
+    def pkMerge(df: org.apache.spark.sql.DataFrame) = {
+      val keys = if (df.columns.contains("pk")) Seq("k", "pk") else Seq("k")
+      df.groupBy(keys.map(col): _*).agg(sum(col("v")).cast("long").as("v"))
+    }
+    def every(store: String, out: String) = StoreFold.Twin(
+      Seq(StoreFold.Sub(store, "t", merge)),
+      StoreFold.Every(out, 1, _ => merge(spark.read.parquet(store))),
+      Some(1), (b, _) => Seq(b))
+    val twins: Seq[(String, (String, String) => StoreFold.Twin)] = Seq(
+      "cadence publish" -> every,
+      "touched-pk publish" -> ((s, o) =>
+        keyLocal(s, o, Some(2), pkMerge, maxStoreParts = Some(1))))
+    for ((kind, twinOf) <- twins; (state, crash) <- crashStates) {
+      val dir = java.nio.file.Files.createTempDirectory("graft-heal").toString
+      val (store, out) = (s"$dir/store", s"$dir/out")
+      val twin = twinOf(store, out)
+      for (b <- 0L to 2L) {
+        // batch 1's fold (2 parts > maxStoreParts = 1) landed; its
+        // swap then "died" in `state` before batch 2
+        if (b == 2L) crash(store)
+        StoreFold.runBatch(spark, twin, batch, b)
+        val published = StoreFold.readPublished(spark, out)
+          .select(col("k"), col("v")).collect()
+          .map(r => r.getLong(0) -> r.getLong(1)).toMap
+        assert(published === Map(1L -> 10L * (b + 1), 2L -> (b + 1)),
+          s"$kind, crash $state, after batch $b")
+      }
+      val (f, _) = fs(store)
+      assert(!f.exists(new org.apache.hadoop.fs.Path(store + "_fold_old")) &&
+        !f.exists(new org.apache.hadoop.fs.Path(store + "_fold_tmp")),
+        s"$kind, crash $state: swap leftovers survived")
+    }
+  }
+
+  test("a multi-store twin heals every sub-store: streaming transitions equal batch ar03 across crashed folds") {
+    import spark.implicits._
+    val batches = Seq(
+      Seq((1L, 10L, 1L, "login"), (1L, 20L, 2L, "browse"),
+        (2L, 15L, 3L, "login")),
+      Seq((1L, 30L, 4L, "purchase"), (2L, 25L, 5L, "browse")),
+      Seq((2L, 40L, 6L, "purchase")))
+    def events(rows: Seq[(Long, Long, Long, String)]) =
+      rows.toDF("user_id", "ts_ns", "event_id", "event_type")
+    def matrix(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => ((r.getString(0), r.getString(1)),
+        (r.getLong(2), r.getLong(3), r.getDouble(4)))).toMap
+    for ((state, crash) <- crashStates) {
+      val dir = java.nio.file.Files.createTempDirectory("graft-heal-tr").toString
+      val (store, out) = (s"$dir/tm", s"$dir/out")
+      val twin = graft.streaming.TransitionStream.twin(store, out,
+        maxStoreParts = Some(1))
+      for ((rows, b) <- batches.zipWithIndex) {
+        if (b == 2) Seq("pairs", "bound").foreach(s => crash(s"$store/$s"))
+        StoreFold.runBatch(spark, twin, events(rows), b.toLong)
+        assert(matrix(spark.read.parquet(out)) ===
+          matrix(graft.operators.Basket.transitionMatrix(
+            events(batches.take(b + 1).flatten))),
+          s"crash $state, after batch $b")
+      }
+    }
   }
 }

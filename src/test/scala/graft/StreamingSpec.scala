@@ -1099,7 +1099,7 @@ class StreamingSpec extends AnyFunSuite {
     val q = graft.streaming.EwmaStream.start(store, stream,
       "event_type", bucketNs = 10L, alphaDen = 5L, out, ckpt,
       maxStoreParts = Some(2), incrementalPubParts = Some(p))
-    def published() = graft.streaming.EwmaStream.readPublished(spark, out)
+    def published() = graft.streaming.StoreFold.readPublished(spark, out)
       .collect().map(r => (r.getString(0), r.getLong(1)) ->
         ((r.getLong(2), r.getLong(3)))).toMap
     def batchTruth(rows: Seq[(Long, String, Long, Double)]) =
@@ -1175,7 +1175,7 @@ class StreamingSpec extends AnyFunSuite {
       df.collect().map(r => (r.getString(0), r.getLong(1)) ->
         ((r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
     def published() =
-      rowsOf(graft.streaming.HoltStream.readPublished(spark, out))
+      rowsOf(graft.streaming.StoreFold.readPublished(spark, out))
     def batchTruth(rows: Seq[(Long, String, Long, Double)]) =
       rowsOf(graft.operators.Timeseries.holtFixedPoint(
         rows.toDF("event_id", "event_type", "ts_ns", "value"),
@@ -1230,7 +1230,7 @@ class StreamingSpec extends AnyFunSuite {
     val q = graft.streaming.ThresholdStream.start(store, stream,
       "lang", "score", p = 0.4, out, ckpt, maxStoreParts = Some(2),
       incrementalPubParts = Some(nPk))
-    def published() = graft.streaming.ThresholdStream
+    def published() = graft.streaming.StoreFold
       .readPublished(spark, out)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     def batchTruth(rows: Seq[(String, Long)]) =
@@ -1289,7 +1289,7 @@ class StreamingSpec extends AnyFunSuite {
     val q = graft.streaming.BarStream.start(store, stream,
       "event_type", bucketNs = 10L, out, ckpt, maxStoreParts = Some(2),
       incrementalPubParts = Some(p))
-    def published() = graft.streaming.BarStream.readPublished(spark, out)
+    def published() = graft.streaming.StoreFold.readPublished(spark, out)
       .collect().map(r => (r.getString(0), r.getLong(1)) ->
         ((r.getLong(2), r.getDouble(3), r.getDouble(4), r.getDouble(5),
           r.getDouble(6), r.getDouble(7)))).toMap
@@ -1349,7 +1349,7 @@ class StreamingSpec extends AnyFunSuite {
     val q = graft.streaming.DistinctStream.start(store, stream,
       "event_type", "user_id", out, ckpt, maxStoreParts = Some(2),
       incrementalPubParts = Some(p))
-    def published() = graft.streaming.DistinctStream
+    def published() = graft.streaming.StoreFold
       .readPublished(spark, out)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     def fullTruth() = graft.streaming.DistinctStream
@@ -1635,8 +1635,8 @@ class StreamingSpec extends AnyFunSuite {
       assert(r.getAs[Long]("p90_lag_s") === 40L)
       // the final pending state holds exactly u1's unanswered second
       // signup; u3's signup is GONE (resolved unconverted, final)
-      graft.streaming.ConversionStream.maybeCompactPartials(
-        spark, store, 1, 2L)
+      graft.streaming.StoreFold.fold(spark,
+        graft.streaming.ConversionStream.twin(store, tol, out), 1, 2L)
       // merged view (a resolution marker may sit in the kept
       // in-flight partial while its signup row folded into the base)
       val pend = spark.read.parquet(s"$store/pending")
