@@ -131,16 +131,11 @@ object Plans {
       "`sbt \"runMain graft.Plans\"`. Tables are read as several splits " +
       "(`spark.sql.files.maxPartitionBytes` = 64k), as at scale; in an interactive " +
       "(Relational, SqlMatrix) query a table read as one split plans as a single " +
-      "partition with no exchange above it.\n")
+      "partition with no exchange above it. Expression ids, lambda variables " +
+      "and plan ids are renumbered per plan in first-seen order.\n")
     picks.foreach { case (name, why) =>
       val df = SparkEntry.queries(name)(spark, sfDir)
-      df.collect() // materialize AQE final plan
-      // cap line length: large literals (the d20 bloom is numBits/8
-      // bytes of hex) would otherwise dump megabytes into the evidence
-      val plan = df.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
-        .linesIterator.map(l => if (l.length > 400) l.take(400) + "…<truncated>" else l)
-        .mkString("\n")
-      sb.append(s"\n## $name\n\n$why\n\n```\n${plan.trim}\n```\n")
+      sb.append(s"\n## $name\n\n$why\n\n```\n${shown(df)}\n```\n")
     }
     // Not a queries entry: src03's oracle proves ORC VALUE fidelity;
     // this exhibit pins its PLAN claim — the ORC read side keeps the
@@ -155,17 +150,13 @@ object Plans {
       val df = spark.read.orc(orcDir)
         .filter(org.apache.spark.sql.functions.col("l_quantity") <= 10.0)
         .select("l_orderkey", "l_quantity")
-      df.collect()
-      val plan = df.queryExecution.executedPlan.toString
-        .split("== Initial Plan ==").head
-        .linesIterator.map(l => if (l.length > 400) l.take(400) + "…<truncated>" else l)
-        .mkString("\n")
+      val plan = shown(df)
       sb.append("\n## src03_orc_pushdown (evidence exhibit)\n\n" +
         "ORC scan keeps parquet's pushdown path: the quantity predicate " +
         "reaches PushedFilters and ReadSchema prunes to the 2 referenced " +
         "columns (src03's oracle row proves the VALUE/type fidelity; " +
         "this pins the plan claim)\n\n" +
-        s"```\n${plan.trim}\n```\n")
+        s"```\n$plan\n```\n")
     }
     // Not a queries entry: m14's exhibit above shows only the
     // checkpointed classification scan — this pins the PROBE JOIN's
@@ -182,11 +173,7 @@ object Plans {
         val df = graft.operators.MediaDedup.fingerprintStore("plans_fpstore", 6)
           .matches(spark, fps.limit(50).select(col("doc_id") + 1000000L as "doc_id",
             col("hash_hi"), col("hash_lo")))
-        df.collect()
-        df.queryExecution.executedPlan.toString
-          .split("== Initial Plan ==").head
-          .linesIterator.map(l => if (l.length > 400) l.take(400) + "…<truncated>" else l)
-          .mkString("\n")
+        shown(df)
       } finally {
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
         Seq("_fpblocks", "_fps", "_fpdial")
@@ -197,7 +184,7 @@ object Plans {
         "force the merge-join shape): the store side scans " +
         "`Bucketed: true` with NO Exchange — the bucketed write WAS " +
         "its shuffle; only the batch side exchanges\n\n" +
-        s"```\n${plan.trim}\n```\n")
+        s"```\n$plan\n```\n")
     }
     // m15's equivalent: the entry exhibit above shows only the
     // checkpointed classification scan — this pins the VIDEO store's
@@ -217,20 +204,9 @@ object Plans {
         val df = graft.operators.MediaDedup.videoStore("plans_vstore", 3, 50)
           .matches(spark, frames.limit(200).select(col("doc_id") + 1000000L as "doc_id",
             col("hash_hi"), col("hash_lo")))
-        df.collect()
-        val jp = df.queryExecution.executedPlan.toString
-          .split("== Initial Plan ==").head
-          .linesIterator.map(l => if (l.length > 400) l.take(400) + "…<truncated>" else l)
-          .mkString("\n")
-        val cnt = spark.table("plans_vstore_vframes")
+        (shown(df), shown(spark.table("plans_vstore_vframes")
           .groupBy(col("fkey"), col("hash_hi"), col("hash_lo"))
-          .agg(count(lit(1)).as("df"))
-        cnt.collect()
-        val cp = cnt.queryExecution.executedPlan.toString
-          .split("== Initial Plan ==").head
-          .linesIterator.map(l => if (l.length > 400) l.take(400) + "…<truncated>" else l)
-          .mkString("\n")
-        (jp, cp)
+          .agg(count(lit(1)).as("df"))))
       } finally {
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
         Seq("_vframes", "_vdocs")
@@ -244,14 +220,41 @@ object Plans {
         "hash verify rides as the non-equi hamming-0 join condition, " +
         "and the hot-frame valve anti-joins the BATCH side; only the " +
         "batch side exchanges\n\n" +
-        s"```\n${joinPlan.trim}\n```\n" +
+        s"```\n$joinPlan\n```\n" +
         "\nthe maxDf valve's store-df count, re-derived per probe: " +
         "grouping includes the bucket column, so the bucketed scan " +
         "satisfies the aggregation — NO Exchange in the whole plan\n\n" +
-        s"```\n${dfPlan.trim}\n```\n")
+        s"```\n$dfPlan\n```\n")
     }
     Files.writeString(Paths.get(out), sb.toString)
     println(s"[plans] wrote $out")
     spark.stop()
+  }
+
+  /** The AQE final plan of `df`, run first, as one section shows it:
+    * expression ids (`#1071`), lambda-variable suffixes (`x_12`) and
+    * plan ids renumbered in first-seen order and JVM lambda class names
+    * stripped of their per-run suffix, so a regeneration differs only
+    * where a plan changed; lines capped at 400 characters (large
+    * literals — the d20 bloom is numBits/8 bytes of hex — would
+    * otherwise dump megabytes into the evidence). */
+  private def shown(df: org.apache.spark.sql.DataFrame): String = {
+    df.collect()
+    val plan = df.queryExecution.executedPlan.toString
+      .split("== Initial Plan ==").head.trim
+    def renumber(text: String, re: scala.util.matching.Regex,
+        show: (scala.util.matching.Regex.Match, Int) => String): String = {
+      val ids = scala.collection.mutable.LinkedHashMap.empty[String, Int]
+      re.replaceAllIn(text, m => scala.util.matching.Regex.quoteReplacement(
+        show(m, ids.getOrElseUpdate(m.group(2), ids.size + 1))))
+    }
+    val lambdas = renumber(plan, """(lambda \w+?)_(\d+)#""".r,
+      (m, i) => s"${m.group(1)}_$i#")
+    val exprs = renumber(lambdas, """(#)(\d+)""".r, (_, i) => s"#$i")
+    renumber(exprs, """(plan_id=)(\d+)""".r, (_, i) => s"plan_id=$i")
+      .replaceAll("""\$Lambda\$\d+/0x\p{XDigit}+@\p{XDigit}+""",
+        java.util.regex.Matcher.quoteReplacement("$Lambda"))
+      .linesIterator.map(l => if (l.length > 400) l.take(400) + "…<truncated>" else l)
+      .mkString("\n")
   }
 }

@@ -112,55 +112,48 @@ object Pipeline {
       .orderBy("doc_id")
   }
 
+  /** BM25 partials (uid, w, ts) of `documents`' chunks for the
+    * distinct query terms `terms` (w): the chunk → words → dl → tf
+    * build p03 and [[retrievalTopKBatch]] share. uid packs the chunk
+    * key (d11's convention); the query terms prune by broadcast
+    * semi-join before any shuffle. words, dl and tf each have two
+    * readers, so each is cut: one chunker + tokenize pass instead of
+    * four (r20 plan audit: uncut, the chunk_text subtree appeared 12x
+    * in one plan).
+    */
+  private def chunkPartials(documents: DataFrame, terms: DataFrame): DataFrame = {
+    val chunks = TextOps.chunkOverlap(documents)
+      .select((col("doc_id") * 1048576 + col("chunk_id")).as("uid"),
+        col("chunk_text"))
+    val words = Cut(chunks.select(col("uid"),
+      explode(split(col("chunk_text"), " ")).as("w"))
+      .filter(col("w") =!= ""))
+    val dl = Cut(words.groupBy(col("uid")).agg(count(lit(1)).as("dl")))
+    val tf = Cut(words.join(broadcast(terms), "w")
+      .groupBy(col("uid"), col("w")).agg(count(lit(1)).as("tf")))
+    Search.bm25Partials(Search.withDocFreq(tf, "w"), dl, "uid", "w")
+  }
+
   /** BATCH retrieval — p03's chunk→BM25 chain over a query TABLE of
     * (query_id, term) rows: ONE chunk-corpus pass serves the whole
     * query set. The per-(chunk, term) BM25 partial score is
     * query-INDEPENDENT (tf, df, dl and the corpus stats mention no
-    * query), so it is computed once; queries enter only at the end —
-    * a broadcast join fans each scored (chunk, term) row across
+    * query), so it is computed once ([[chunkPartials]] over the
+    * distinct term set of ALL queries); queries enter only at the end
+    * — a broadcast join fans each scored (chunk, term) row across
     * exactly the queries containing that term, one
     * groupBy(query_id, chunk) sums the partials (decimal-exact, so
     * order-free), and per-query top-k runs on the bounded-heap
     * TopKPerKey operator. Adding a query costs broadcast rows and
     * fan-out of the rows that survive the term prune — never another
-    * corpus scan, never a per-query job loop. The distinct term set
-    * of ALL queries drives the same broadcast semi-join prune t07
-    * uses, so corpus work stays ∝ matched terms.
+    * corpus scan, never a per-query job loop.
     */
   def retrievalTopKBatch(documents: DataFrame, queries: DataFrame, k: Int,
       excludeSelfDoc: Boolean = false): DataFrame = {
-    val chunks = TextOps.chunkOverlap(documents)
-      .select((col("doc_id") * 1048576 + col("chunk_id")).as("uid"),
-        col("chunk_text"))
-    // words feeds BOTH the doc-length agg and the tf agg — without the
-    // cut each reader re-runs the chunker + tokenize over the corpus
-    // (r20 plan audit: the chunk_text subtree appeared 12x in one
-    // plan); dl and tf are read twice each and are chunk-count /
-    // query-term sized, so their cuts are cheap and keep the stats,
-    // dfreq and partials readers off the corpus entirely
-    val words = Cut(chunks.select(col("uid"),
-      explode(split(col("chunk_text"), " ")).as("w"))
-      .filter(col("w") =!= ""))
-    val dl = Cut(words.groupBy(col("uid")).agg(count(lit(1)).as("dl")))
-    val stats = dl.agg(count(lit(1)).as("n_chunks"), sum(col("dl")).as("sum_dl"))
     val q = queries.select(col("query_id").cast("long").as("query_id"),
       col("term").as("w"))
-    val terms = q.select(col("w")).distinct()
-    val tf = Cut(words.join(broadcast(terms), "w")
-      .groupBy(col("uid"), col("w")).agg(count(lit(1)).as("tf")))
-    val dfreq = tf.groupBy(col("w")).agg(count(lit(1)).as("df"))
-    val avgdl = col("sum_dl").cast("double") / col("n_chunks")
-    val idf = round(log(lit(1.0) +
-      ((col("n_chunks") - col("df")).cast("double") + lit(0.5)) /
-        (col("df").cast("double") + lit(0.5))), 6)
-    val tfFac = (col("tf").cast("double") * lit(2.2)) /
-      (col("tf").cast("double") +
-        lit(1.2) * (lit(0.25) + lit(0.75) * col("dl").cast("double") / avgdl))
-    val partials = tf.join(broadcast(dfreq), "w").join(dl, "uid")
-      .crossJoin(broadcast(stats))
-      .select(col("uid"), col("w"),
-        round(idf * tfFac, 10).cast("decimal(28,10)").as("ts"))
-    val scored = partials.join(broadcast(q), "w")
+    val scored = chunkPartials(documents, q.select(col("w")).distinct())
+      .join(broadcast(q), "w")
       .groupBy(col("query_id"), col("uid")).agg(sum(col("ts")).as("sdec"))
       .filter(if (excludeSelfDoc) expr("uid div 1048576") =!= col("query_id")
         else lit(true))
@@ -282,43 +275,20 @@ object Pipeline {
         start % ${Pack.Cap} AS bin_offset
       FROM c ORDER BY doc_id""")),
 
-    // ---- RETRIEVAL pipeline: t16's chunker feeding t07's BM25, one
-    //      Catalyst plan — the RAG ingest+query shape (chunk the
+    // ---- RETRIEVAL pipeline: t16's chunker feeding the BM25 scorer,
+    //      one Catalyst plan — the RAG ingest+query shape (chunk the
     //      corpus, score chunks against a query, return top chunks).
-    //      Chunk key packs into uid (d11's convention) so the whole
-    //      BM25 chain runs per-chunk unchanged; the query is doc 0's
-    //      distinct words, its own chunks excluded from ranking.
-    //      Shuffle budget = t07's on the chunk corpus (tokenize once,
-    //      broadcast query-term semi-join BEFORE any shuffle, KB
-    //      stats broadcasts); the chunker itself adds zero shuffles.
-    //      Oracle chains t16's CTE into t07's chain verbatim ----
+    //      The query is doc 0's distinct words, its own chunks
+    //      excluded from ranking; the chunker itself adds zero
+    //      shuffles. Oracle chains t16's CTE into t07's chain
+    //      verbatim ----
     ("p03_retrieval_pipeline", (s: SparkSession, d: String) => {
-      val chunks = TextOps.chunkOverlap(
-        Tables.documents(s, d).repartition(s.sparkContext.defaultParallelism))
-        .select((col("doc_id") * 1048576 + col("chunk_id")).as("uid"),
-          col("chunk_text"))
-      // retrievalTopKBatch's cut points: words/dl/tf all have two
-      // readers — one chunker+tokenize pass instead of four
-      val words = Cut(chunks.select(col("uid"),
-        explode(split(col("chunk_text"), " ")).as("w"))
-        .filter(col("w") =!= ""))
-      val dl = Cut(words.groupBy(col("uid")).agg(count(lit(1)).as("dl")))
-      val stats = dl.agg(count(lit(1)).as("n_chunks"), sum(col("dl")).as("sum_dl"))
       val qterms = Tables.documents(s, d).filter(col("doc_id") === 0)
         .select(explode(split(trim(col("text")), " ")).as("w"))
         .filter(col("w") =!= "").distinct()
-      val tf = Cut(words.join(broadcast(qterms), "w")
-        .groupBy(col("uid"), col("w")).agg(count(lit(1)).as("tf")))
-      val dfreq = tf.groupBy(col("w")).agg(count(lit(1)).as("df"))
-      val avgdl = col("sum_dl").cast("double") / col("n_chunks")
-      val idf = round(log(lit(1.0) +
-        ((col("n_chunks") - col("df")).cast("double") + lit(0.5)) /
-          (col("df").cast("double") + lit(0.5))), 6)
-      val tfFac = (col("tf").cast("double") * lit(2.2)) /
-        (col("tf").cast("double") +
-          lit(1.2) * (lit(0.25) + lit(0.75) * col("dl").cast("double") / avgdl))
-      tf.join(broadcast(dfreq), "w").join(dl, "uid").crossJoin(broadcast(stats))
-        .select(col("uid"), round(idf * tfFac, 10).cast("decimal(28,10)").as("ts"))
+      chunkPartials(
+        Tables.documents(s, d).repartition(s.sparkContext.defaultParallelism),
+        qterms)
         .groupBy(col("uid")).agg(sum(col("ts")).as("sdec"))
         .filter(col("uid") >= 1048576) // exclude doc 0's own chunks
         .select(expr("uid div 1048576").as("doc_id"),

@@ -1,16 +1,17 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.sources.{BucketedStore, Tables}
 
-/** Exact-match retrieval over an inverted index: positional postings,
-  * boolean conjunctive search, and exact phrase search — the
-  * complement to [[TextOps]]'s ranked BM25 (p03/p04). A curation
-  * pipeline uses these for contamination audits ("which documents
-  * contain this benchmark sentence verbatim?") where ranked retrieval
-  * is the wrong tool.
+/** Retrieval over an inverted index: positional postings, boolean
+  * conjunctive search, exact phrase search, and the one BM25 scorer
+  * ([[bm25Partials]]) every ranked path scores through. A curation
+  * pipeline uses the exact-match modes for contamination audits
+  * ("which documents contain this benchmark sentence verbatim?")
+  * where ranked retrieval is the wrong tool.
   *
   * Reference anchor: keenwa's relational surface (logical/mod.rs) —
   * postings are a plain (word, doc, pos) relation and both query
@@ -104,28 +105,20 @@ object Search {
     BucketedStore.append(fresh.select(col("doc_id"), docLen), s"${table}_docs")
   }
 
-  /** BM25 (k1=1.2, b=0.75) top-k over a postings relation: rank the
-    * documents matching ANY of `terms` by summed term score. Within-
-    * corpus statistics only — tf = posting rows per (word, doc), df =
-    * docs per word (both from the TERM-FILTERED postings: map-only
-    * over a scan, bucket-pruned on a stored index), N/avgdl from the
-    * (doc_id, dl) relation (the store registry — a slim sidecar whose
-    * one-row aggregate is the only full relation pass; a production
-    * store folds it into compact-time stats). Exchanges after the
-    * term filter are candidate-sized: (word, doc) tf groupBy, word df
-    * groupBy, doc-keyed score sum, then a k-row TakeOrdered. Score
-    * discipline = t07's (TextOps.scala:781): idf rounded to 6, term
-    * scores to 10, summed as decimal(28,10) so addition order cannot
-    * move low bits, final score rounded to 6 (§4 money rule).
+  /** THE BM25 scorer (Okapi, k1 = 1.2, b = 0.75, Lucene's
+    * non-negative idf) — t07, p03, p04, [[bm25Rank]] and
+    * [[rankedSearch]] supply only their inputs and their ranking.
+    * `tf` is (key, term, tf, df) — df attached by [[withDocFreq]] or
+    * counted over a scan already partitioned by term; `dl` is
+    * (key, dl), whose one-row aggregate gives N and avgdl (broadcast).
+    * Returns the per-(key, term) partials `ts`: idf rounded to 6
+    * places after ln (kills the last-ulp libm divergence between
+    * engines), term scores to 10, as decimal(28,10) so a caller's sum
+    * is addition-order-independent.
     */
-  def bm25Rank(postings: DataFrame, doclens: DataFrame,
-      terms: Seq[String], k: Int): DataFrame = {
-    require(terms.nonEmpty && k >= 1, "need terms and k >= 1")
-    val stats = doclens.agg(count(lit(1)).as("n_docs"),
-      sum(col("dl")).as("sum_dl"))
-    val tf = postings.filter(col("word").isin(terms: _*))
-      .groupBy(col("doc_id"), col("word")).agg(count(lit(1)).as("tf"))
-    val dfreq = tf.groupBy(col("word")).agg(count(lit(1)).as("df"))
+  private[operators] def bm25Partials(tf: DataFrame, dl: DataFrame,
+      key: String, term: String): DataFrame = {
+    val stats = dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
     val avgdl = col("sum_dl").cast("double") / col("n_docs")
     val idf = round(log(lit(1.0) +
       ((col("n_docs") - col("df")).cast("double") + lit(0.5)) /
@@ -133,27 +126,50 @@ object Search {
     val tfFac = (col("tf").cast("double") * lit(2.2)) /
       (col("tf").cast("double") +
         lit(1.2) * (lit(0.25) + lit(0.75) * col("dl").cast("double") / avgdl))
-    tf.join(broadcast(dfreq), "word")
-      .join(doclens.select(col("doc_id"), col("dl")), "doc_id")
-      .crossJoin(broadcast(stats))
-      .select(col("doc_id"),
+    tf.join(dl.select(col(key), col("dl")), key).crossJoin(broadcast(stats))
+      .select(col(key), col(term),
         round(idf * tfFac, 10).cast("decimal(28,10)").as("ts"))
-      .groupBy(col("doc_id")).agg(sum(col("ts")).as("sdec"))
-      .select(col("doc_id"), round(col("sdec").cast("double"), 6).as("bm25"))
-      .orderBy(desc("bm25"), col("doc_id")).limit(k)
   }
+
+  /** `tf` with each term's document frequency `df`: a
+    * partial-aggregable groupBy(term), broadcast back. */
+  private[operators] def withDocFreq(tf: DataFrame, term: String): DataFrame =
+    tf.join(broadcast(tf.groupBy(col(term)).agg(count(lit(1)).as("df"))), term)
+
+  /** BM25 top-k over a postings relation: the documents matching ANY
+    * of `terms`, by summed term score rounded to 6 (§4 money rule).
+    * tf and df come from the TERM-FILTERED postings, N/avgdl from the
+    * (doc_id, dl) relation; every exchange after the term filter is
+    * candidate-sized, then a k-row TakeOrdered.
+    */
+  def bm25Rank(postings: DataFrame, doclens: DataFrame,
+      terms: Seq[String], k: Int): DataFrame =
+    rank(postings, doclens, terms, k, withDocFreq(_, "word"))
 
   /** Ranked retrieval SERVED FROM the maintained store: the postings
     * side bucket-prunes to the query terms' buckets, the registry
     * supplies dl (and N/avgdl), and both read through the tombstone
     * filter — so append/delete/compact all reflect in the ranking
-    * with no rebuild. Query cost ∝ the query terms' posting lists +
-    * one slim registry pass, never corpus postings size.
+    * with no rebuild. The store buckets on word, so df is a per-word
+    * count over the scan's own partitioning: no exchange, and the
+    * postings are read once. Query cost ∝ the query terms' posting
+    * lists + one slim registry pass, never corpus postings size.
     */
   def rankedSearch(spark: SparkSession, table: String,
-      terms: Seq[String], k: Int): DataFrame = {
-    bm25Rank(readPostings(spark, table),
-      BucketedStore.read(spark, s"${table}_docs", table), terms, k)
+      terms: Seq[String], k: Int): DataFrame =
+    rank(readPostings(spark, table),
+      BucketedStore.read(spark, s"${table}_docs", table), terms, k,
+      _.withColumn("df", count(lit(1)).over(Window.partitionBy(col("word")))))
+
+  private def rank(postings: DataFrame, doclens: DataFrame,
+      terms: Seq[String], k: Int, docFreq: DataFrame => DataFrame): DataFrame = {
+    require(terms.nonEmpty && k >= 1, "need terms and k >= 1")
+    val tf = postings.filter(col("word").isin(terms: _*))
+      .groupBy(col("doc_id"), col("word")).agg(count(lit(1)).as("tf"))
+    bm25Partials(docFreq(tf), doclens, "doc_id", "word")
+      .groupBy(col("doc_id")).agg(sum(col("ts")).as("sdec"))
+      .select(col("doc_id"), round(col("sdec").cast("double"), 6).as("bm25"))
+      .orderBy(desc("bm25"), col("doc_id")).limit(k)
   }
 
   /** RETIRE documents (takedown / TTL): the shared lazy tombstones —

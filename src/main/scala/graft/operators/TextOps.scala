@@ -1048,14 +1048,11 @@ object TextOps {
         CASE WHEN length(sc) >= 40 THEN right(sc, 40) ELSE sc END AS scrubbed_tail
       FROM scr ORDER BY doc_id""")),
 
-    // ---- BM25 retrieval scoring (Okapi, Lucene's non-negative idf):
-    //      query = distinct terms of doc 0. Scale shape: tokenize once,
+    // ---- BM25 retrieval scoring ([[Search.bm25Partials]]): query =
+    //      distinct terms of doc 0. Scale shape: tokenize once,
     //      broadcast-semi-join down to query terms EARLY (the tf stream
     //      is docs x query-terms, not docs x vocab), df + corpus stats
-    //      are tiny broadcasts. Float discipline: idf is rounded to 6dp
-    //      after ln (kills the last-ulp libm divergence), per-term
-    //      scores to 10dp, and the per-doc sum runs in decimal so it is
-    //      aggregation-order-independent ----
+    //      are tiny broadcasts ----
     ("t07_bm25", (s: SparkSession, d: String) => {
       val docs = Tables.documents(s, d)
         .repartition(s.sparkContext.defaultParallelism)
@@ -1064,20 +1061,10 @@ object TextOps {
         explode(split(trim(col("text")), " ")).as("w"))
         .filter(col("w") =!= "")
       val dl = words.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
-      val stats = dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
       val qterms = words.filter(col("doc_id") === 0).select(col("w")).distinct()
       val tf = words.join(broadcast(qterms), "w")
         .groupBy(col("doc_id"), col("w")).agg(count(lit(1)).as("tf"))
-      val dfreq = tf.groupBy(col("w")).agg(count(lit(1)).as("df"))
-      val avgdl = col("sum_dl").cast("double") / col("n_docs")
-      val idf = round(log(lit(1.0) +
-        ((col("n_docs") - col("df")).cast("double") + lit(0.5)) /
-          (col("df").cast("double") + lit(0.5))), 6)
-      val tfFac = (col("tf").cast("double") * lit(2.2)) /
-        (col("tf").cast("double") +
-          lit(1.2) * (lit(0.25) + lit(0.75) * col("dl").cast("double") / avgdl))
-      tf.join(broadcast(dfreq), "w").join(dl, "doc_id").crossJoin(broadcast(stats))
-        .select(col("doc_id"), round(idf * tfFac, 10).cast("decimal(28,10)").as("ts"))
+      Search.bm25Partials(Search.withDocFreq(tf, "w"), dl, "doc_id", "w")
         .groupBy(col("doc_id")).agg(sum(col("ts")).as("sdec"))
         .select(col("doc_id"), round(col("sdec").cast("double"), 6).as("bm25"))
         .filter(col("doc_id") =!= 0)

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.operators.Cut
+
 /** Streaming conversion-lag report — ss08 kept continuously: for
   * every signup matched to the user's FIRST purchase at-or-after it
   * within `tolNs`, the running conversion count and EXACT p50/p90 lag
@@ -47,20 +49,13 @@ object ConversionStream {
   private def histMerge(df: DataFrame): DataFrame =
     df.groupBy(col("lag_s")).agg(sum(col("n")).as("n"))
 
-  private def pendingView(spark: SparkSession, storePath: String): DataFrame =
-    pendingMerge(StoreFold.readOr(spark, s"$storePath/pending",
-      "event_id BIGINT, user_id BIGINT, tns BIGINT, resolved INT"))
-
-  private def histView(spark: SparkSession, storePath: String): DataFrame =
-    histMerge(StoreFold.readOr(spark, s"$storePath/hist",
-      "lag_s BIGINT, n BIGINT"))
-
   /** The published report, batch `conversionLag()`'s exact output
     * shape — one row always (n_converted=0 + NULL percentiles on a
     * conversion-free stream, the same contract). */
   def publishedConversion(spark: SparkSession, storePath: String): DataFrame = {
-    val hist = histView(spark, storePath).withColumn("_g", lit(0))
-      .localCheckpoint(true)
+    val hist = Cut(StoreFold.state(spark,
+      StoreFold.Sub(s"$storePath/hist", "conv-hist", histMerge),
+      "lag_s BIGINT, n BIGINT").withColumn("_g", lit(0)))
     def thr(p: Double, out: String) =
       graft.operators.TextOps.percentileThresholds(hist, "_g", "lag_s", p)
         .select(col("thr").as(out))
@@ -71,9 +66,9 @@ object ConversionStream {
   }
 
   /** This batch's hist and pending partials, resolved against the
-    * pending store. */
-  private def partials(storePath: String, batch: DataFrame,
-      tolNs: Long): Seq[DataFrame] = {
+    * signups older batches left pending. */
+  private def partials(pending: StoreFold.Sub, batch: DataFrame,
+      batchId: Long, tolNs: Long): Seq[DataFrame] = {
     val spark = batch.sparkSession
     val ev = batch.withColumn("tns", expr("(ts_ns div 1000) * 1000"))
     val newSignups = ev.filter(col("event_type") === "signup")
@@ -82,17 +77,17 @@ object ConversionStream {
       .select(col("user_id"), col("tns").as("p_tns"))
       .groupBy(col("user_id"), col("p_tns")).agg(count(lit(1)).as("_c"))
       .drop("_c")
-    val cands = pendingView(spark, storePath)
+    val cands = Cut(StoreFold.state(spark, pending,
+        "event_id BIGINT, user_id BIGINT, tns BIGINT, resolved INT",
+        before = batchId)
       .select(col("event_id"), col("user_id"), col("tns"))
-      .unionByName(newSignups)
-      .localCheckpoint(true)
+      .unionByName(newSignups))
     // first purchase at-or-after each candidate signup, batch-sized
     val first = cands.join(purchases, Seq("user_id"))
       .filter(col("p_tns") >= col("tns"))
       .groupBy(col("event_id")).agg(min(col("p_tns")).as("fp"))
-    val resolvedAll = cands.join(first, Seq("event_id"))
-      .select(col("event_id"), col("tns"), col("fp"))
-      .localCheckpoint(true)
+    val resolvedAll = Cut(cands.join(first, Seq("event_id"))
+      .select(col("event_id"), col("tns"), col("fp")))
     val lags = resolvedAll.filter(col("fp") - col("tns") <= tolNs)
       .select(expr("(fp - tns) div 1000000000L").as("lag_s"))
     val histPartial = lags.groupBy(col("lag_s")).agg(count(lit(1)).as("n"))
@@ -112,12 +107,15 @@ object ConversionStream {
     * publish, is the dial. */
   private[graft] def twin(storePath: String, tolNs: Long, outPath: String,
       maxStoreParts: Option[Int] = None,
-      publishEvery: Int = 1): StoreFold.Twin =
+      publishEvery: Int = 1): StoreFold.Twin = {
+    val pending = StoreFold.Sub(s"$storePath/pending", "conv-pending",
+      pendingMerge)
     StoreFold.Twin(
-      Seq(StoreFold.Sub(s"$storePath/hist", "conv-hist", histMerge),
-        StoreFold.Sub(s"$storePath/pending", "conv-pending", pendingMerge)),
+      Seq(StoreFold.Sub(s"$storePath/hist", "conv-hist", histMerge), pending),
       StoreFold.Every(outPath, publishEvery, publishedConversion(_, storePath)),
-      maxStoreParts, (batch, _) => partials(storePath, batch, tolNs))
+      maxStoreParts,
+      (batch, batchId) => partials(pending, batch, batchId, tolNs))
+  }
 
   def start(storePath: String, eventStream: DataFrame, tolNs: Long,
       outPath: String, checkpoint: String,

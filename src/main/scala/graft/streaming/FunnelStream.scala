@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.operators.Cut
+
 /** Streaming funnel — ss04 kept continuously: the full ordered-stage
   * conversion report (n_sessions, per-stage reach counts and ratios)
   * re-published every micro-batch, equal to batch
@@ -59,12 +61,16 @@ object FunnelStream {
   private def closedMerge(df: DataFrame): DataFrame =
     df.groupBy(col("lvl")).agg(sum(col("n")).as("n"))
 
-  private def openState(spark: SparkSession, storePath: String): DataFrame =
-    openMerge(StoreFold.readOr(spark, s"$storePath/open",
-      "user_id BIGINT, last_ts BIGINT, lvl INT"))
-
   private def lateMerge(df: DataFrame): DataFrame =
     df.groupBy(col("user_id")).agg(sum(col("n")).as("n"))
+
+  private def lateSub(storePath: String) =
+    StoreFold.Sub(s"$storePath/late", "funnel-late", lateMerge)
+  private def closedSub(storePath: String) =
+    StoreFold.Sub(s"$storePath/closed", "funnel-closed", closedMerge)
+  private def openSub(storePath: String) =
+    StoreFold.Sub(s"$storePath/open", "funnel-open", openMerge)
+  private val openSchema = "user_id BIGINT, last_ts BIGINT, lvl INT"
 
   /** CONTRACT MONITOR: total events that arrived BEFORE their user's
     * already-folded last_ts — i.e. violations of the per-user
@@ -75,21 +81,16 @@ object FunnelStream {
     * alerts on this instead of discovering a silent drift later.
     */
   def lateEvents(spark: SparkSession, storePath: String): Long = {
-    val r = lateMerge(StoreFold.readOr(spark, s"$storePath/late",
-      "user_id BIGINT, n BIGINT"))
+    val r = StoreFold.state(spark, lateSub(storePath), "user_id BIGINT, n BIGINT")
       .agg(coalesce(sum(col("n")), lit(0L))).head()
     r.getLong(0)
   }
 
-  private def closedCounts(spark: SparkSession, storePath: String): DataFrame =
-    closedMerge(StoreFold.readOr(spark, s"$storePath/closed",
-      "lvl INT, n BIGINT"))
-
   /** The published report, batch `funnel()`'s exact output shape. */
   def publishedFunnel(spark: SparkSession, storePath: String,
       stages: Seq[String]): DataFrame = {
-    val perLevel = closedCounts(spark, storePath)
-      .unionByName(openState(spark, storePath)
+    val perLevel = StoreFold.state(spark, closedSub(storePath), "lvl INT, n BIGINT")
+      .unionByName(StoreFold.state(spark, openSub(storePath), openSchema)
         .groupBy(col("lvl")).agg(count(lit(1)).as("n")))
     val aggs = sum(col("n")).as("n_sessions") +:
       stages.zipWithIndex.map { case (st, i) =>
@@ -105,15 +106,15 @@ object FunnelStream {
   }
 
   /** One micro-batch: continue/split per-user sessions against the
-    * open store, run the batch window chain with synthetic seeds, and
-    * return this batch's late, closed-session and open-state partials
-    * (in that order, open last). */
-  private def partials(storePath: String, batch: DataFrame,
+    * open state of older batches, run the batch window chain with
+    * synthetic seeds, and return this batch's late, closed-session and
+    * open-state partials (in that order, open last). */
+  private def partials(storePath: String, batch: DataFrame, batchId: Long,
       stages: Seq[String], gapNs: Long): Seq[DataFrame] = {
     val spark = batch.sparkSession
     import spark.implicits._
-    val k = stages.length
-    val prior = openState(spark, storePath).localCheckpoint(true)
+    val prior = Cut(StoreFold.state(spark, openSub(storePath), openSchema,
+      before = batchId))
     val ev = batch.select(col("user_id"), col("event_type"),
       col("ts_ns"), col("event_id"))
     val wOrd = Window.partitionBy(col("user_id"))
@@ -122,7 +123,7 @@ object FunnelStream {
       prior.select(col("user_id"), col("last_ts"), col("lvl").as("lvl0")),
       Seq("user_id"), "left")
     // sess 0 = continuation of the stored open session; 1.. = fresh
-    val sessed = withPrior
+    val sessed = Cut(withPrior
       .withColumn("prev_ts",
         coalesce(lag(col("ts_ns"), 1).over(wOrd), col("last_ts")))
       .withColumn("is_new",
@@ -131,8 +132,7 @@ object FunnelStream {
       .withColumn("sess", sum(col("is_new")).over(
         wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .select(col("user_id"), col("event_type"), col("ts_ns"),
-        col("event_id"), col("sess"))
-      .localCheckpoint(true)
+        col("event_id"), col("sess")))
     // users whose first batch row CONTINUES the open session
     val contUsers = sessed.groupBy(col("user_id"))
       .agg(min(col("sess")).as("s0")).filter(col("s0") === 0L)
@@ -158,9 +158,8 @@ object FunnelStream {
     }
     val lvlExpr = stages.map(st =>
       when(col(s"t_$st").isNotNull, 1).otherwise(0)).reduce(_ + _)
-    val perSess = chained.groupBy(col("user_id"), col("sess"))
-      .agg(max(col("ts_ns")).as("end_ts"), max(lvlExpr).as("lvl"))
-      .localCheckpoint(true)
+    val perSess = Cut(chained.groupBy(col("user_id"), col("sess"))
+      .agg(max(col("ts_ns")).as("end_ts"), max(lvlExpr).as("lvl")))
     val maxSess = perSess.groupBy(col("user_id"))
       .agg(max(col("sess")).as("max_sess"))
     // closed this batch: every non-last batch session, plus the stored
@@ -172,37 +171,39 @@ object FunnelStream {
       .join(sessed.select(col("user_id")).distinct(), Seq("user_id"))
       .join(contUsers, Seq("user_id"), "left_anti")
       .select(col("lvl"))
-    val closedPartial = closedNew.unionByName(closedPrior)
-      .groupBy(col("lvl")).agg(count(lit(1)).as("n"))
-      .localCheckpoint(true)
-    val openPartial = perSess.join(maxSess, "user_id")
+    val closedPartial = Cut(closedNew.unionByName(closedPrior)
+      .groupBy(col("lvl")).agg(count(lit(1)).as("n")))
+    val openPartial = Cut(perSess.join(maxSess, "user_id")
       .filter(col("sess") === col("max_sess"))
-      .select(col("user_id"), col("end_ts").as("last_ts"), col("lvl"))
-      .localCheckpoint(true)
+      .select(col("user_id"), col("end_ts").as("last_ts"), col("lvl")))
     // contract monitor: events earlier than the user's folded last_ts
     // (one batch-sized agg; rides the already-joined prior frame)
-    val latePartial = withPrior
+    val latePartial = Cut(withPrior
       .filter(col("last_ts").isNotNull && col("ts_ns") < col("last_ts"))
-      .groupBy(col("user_id")).agg(count(lit(1)).as("n"))
-      .localCheckpoint(true)
+      .groupBy(col("user_id")).agg(count(lit(1)).as("n")))
     Seq(latePartial, closedPartial, openPartial)
   }
 
   /** `eventStream` must carry (user_id, event_id, ts_ns, event_type).
     * The funnel report is one global row, so `publishEvery` cadence is
     * the dial. */
+  private[graft] def twin(storePath: String, stages: Seq[String],
+      gapNs: Long, outPath: String, maxStoreParts: Option[Int] = None,
+      publishEvery: Int = 1): StoreFold.Twin = {
+    require(stages.nonEmpty && stages.distinct == stages,
+      s"need distinct non-empty stages, got $stages")
+    StoreFold.Twin(
+      Seq(lateSub(storePath), closedSub(storePath), openSub(storePath)),
+      StoreFold.Every(outPath, publishEvery,
+        publishedFunnel(_, storePath, stages)),
+      maxStoreParts,
+      (batch, batchId) => partials(storePath, batch, batchId, stages, gapNs))
+  }
+
   def start(storePath: String, eventStream: DataFrame, stages: Seq[String],
       gapNs: Long, outPath: String, checkpoint: String,
       maxStoreParts: Option[Int] = None,
-      publishEvery: Int = 1): StreamingQuery = {
-    require(stages.nonEmpty && stages.distinct == stages,
-      s"need distinct non-empty stages, got $stages")
-    StoreFold.start(eventStream, checkpoint, StoreFold.Twin(
-      Seq(StoreFold.Sub(s"$storePath/late", "funnel-late", lateMerge),
-        StoreFold.Sub(s"$storePath/closed", "funnel-closed", closedMerge),
-        StoreFold.Sub(s"$storePath/open", "funnel-open", openMerge)),
-      StoreFold.Every(outPath, publishEvery,
-        publishedFunnel(_, storePath, stages)),
-      maxStoreParts, (batch, _) => partials(storePath, batch, stages, gapNs)))
-  }
+      publishEvery: Int = 1): StreamingQuery =
+    StoreFold.start(eventStream, checkpoint,
+      twin(storePath, stages, gapNs, outPath, maxStoreParts, publishEvery))
 }

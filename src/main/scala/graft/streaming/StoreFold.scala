@@ -32,7 +32,9 @@ import graft.sources.BucketedStore
   * partials (never double-counts) and republishes the same pure
   * function of the store, so a crash at any step converges on replay.
   * Partials that read prior state (a boundary store, open sessions,
-  * pending signups) run after the heal and before this batch's writes.
+  * pending signups) run after the heal and before this batch's writes,
+  * and read it through [[state]]: only partials with `batch_id < b`,
+  * so a replay never sees its own partial as prior state.
   *
   * CADENCE (`publishEvery = n`, default 1): publish on every n-th
   * batch (`batchId % n == 0`). The store still absorbs every batch
@@ -121,9 +123,9 @@ object StoreFold {
       rows: (DataFrame, Long) => DataFrame) extends Publish
 
   /** A fold twin: `partials(batch, batchId)` returns one frame per sub,
-    * in `subs` order (which is also the write order); it may read the
-    * subs' prior state. [[KeyLocal]] and [[Feed]] twins keep one
-    * store. */
+    * in `subs` order (which is also the write order); it reads a sub's
+    * prior state only through [[state]] with `before = batchId`.
+    * [[KeyLocal]] and [[Feed]] twins keep one store. */
   final case class Twin(subs: Seq[Sub], publish: Publish,
       maxStoreParts: Option[Int],
       partials: (DataFrame, Long) => Seq[DataFrame]) {
@@ -241,17 +243,25 @@ object StoreFold {
     else w.partitionBy("batch_id").parquet(path)
   }
 
-  /** A sub-store's rows without `batch_id`, or no rows of `schema`
-    * (DDL) before its first partial lands. */
-  private[streaming] def readOr(spark: SparkSession, path: String,
-      schema: String): DataFrame =
-    try spark.read.parquet(path).drop("batch_id")
-    catch {
-      case _: org.apache.spark.sql.AnalysisException =>
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType.fromDDL(schema))
-    }
+  /** Sub `s`'s state: its partials with `batch_id < before` (all of
+    * them by default) through its merge, or no rows of `schema` (DDL)
+    * before its first partial lands. The one read of a twin's store: a
+    * twin's `partials(batch, b)` reads its prior state with
+    * `before = b` (the fold base `-1` merges only closed, older
+    * batches), so a batch replayed after its partials landed reads the
+    * same state as its first run, never its own partial. */
+  def state(spark: SparkSession, s: Sub, schema: String,
+      before: Long = Long.MaxValue): DataFrame = {
+    val parts =
+      try spark.read.parquet(s.path)
+      catch {
+        case _: org.apache.spark.sql.AnalysisException =>
+          spark.createDataFrame(
+            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+            org.apache.spark.sql.types.StructType.fromDDL(s"$schema, batch_id BIGINT"))
+      }
+    s.merge(parts.filter(col("batch_id") < before).drop("batch_id"))
+  }
 
   /** Read a published table regardless of publish mode: incremental
     * publish adds a `pk` key-hash partition column (rewrite

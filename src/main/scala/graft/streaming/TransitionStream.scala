@@ -24,10 +24,10 @@ import graft.operators.Basket
   *    associative), fold = one groupBy.
   *  - bound: (user_id, ts_ns, event_id, event_type) last event per
   *    user per batch — fold = per-user argmax by (ts, id), and batch
-  *    b only ever reads partitions with batch_id < b (the fold base
-  *    `-1` qualifies: it merges strictly older batches), so a
-  *    REPLAYED batch recomputes its pairs from the same immutable
-  *    prior state and overwrites its own partitions — idempotent.
+  *    b reads it through [[StoreFold.state]] (partitions with
+  *    batch_id < b), so a REPLAYED batch recomputes its pairs from the
+  *    same immutable prior state and overwrites its own partitions —
+  *    idempotent.
   *
   * Published = [[Basket.transitionsFromCounts]] over the summed pair
   * store. StreamingSpec asserts published == batch ar03 over the
@@ -66,15 +66,6 @@ object TransitionStream {
         col("m.event_id").as("event_id"),
         col("m.event_type").as("event_type"))
 
-  /** Boundary state of batches strictly older than `batchId`: the
-    * per-user argmax over qualifying partitions (the fold base -1
-    * merges only closed — strictly older — batches). */
-  private def boundBefore(spark: SparkSession, boundPath: String,
-      batchId: Long): DataFrame =
-    lastPerUser(spark.read.parquet(boundPath)
-      .filter(col("batch_id") < batchId)
-      .drop("batch_id"))
-
   /** Summed pair counts — the published read and the fold. */
   private def pairCounts(parts: DataFrame): DataFrame =
     parts.groupBy(col("src"), col("dst")).agg(sum(col("n")).as("n"))
@@ -93,23 +84,17 @@ object TransitionStream {
       maxStoreParts: Option[Int] = None,
       publishEvery: Int = 1): StoreFold.Twin = {
     val pairsPath = s"$storePath/pairs"
-    val boundPath = s"$storePath/bound"
+    val bound = StoreFold.Sub(s"$storePath/bound", "transitions-bound",
+      lastPerUser)
     StoreFold.Twin(
-      Seq(StoreFold.Sub(pairsPath, "transitions", pairCounts),
-        StoreFold.Sub(boundPath, "transitions-bound", lastPerUser)),
+      Seq(StoreFold.Sub(pairsPath, "transitions", pairCounts), bound),
       StoreFold.Every(outPath, publishEvery, published(_, pairsPath)),
       maxStoreParts,
-      { (batch, batchId) =>
-        val spark = batch.sparkSession
-        val bound = new org.apache.hadoop.fs.Path(boundPath)
-        val prev =
-          if (bound.getFileSystem(spark.sparkContext.hadoopConfiguration)
-              .exists(bound)) boundBefore(spark, boundPath, batchId)
-          else spark.emptyDataFrame
-            .withColumn("user_id", lit(0L))
-            .withColumn("event_type", lit("")).limit(0)
-        Seq(pairsOf(batch, prev), lastPerUser(batch))
-      })
+      (batch, batchId) => Seq(
+        pairsOf(batch, StoreFold.state(batch.sparkSession, bound,
+          "user_id BIGINT, ts_ns BIGINT, event_id BIGINT, event_type STRING",
+          before = batchId)),
+        lastPerUser(batch)))
   }
 
   def start(storePath: String, eventStream: DataFrame, outPath: String,

@@ -22,7 +22,7 @@ class PlanGuardSpec extends AnyFunSuite {
     "d14_mix_rebalance", // broadcast 1-row corpus total (n, k)
     "t15_heavy_hitters", // broadcast 1-row token total + 1-row MG sketch
     "p02_pipeline_full", // broadcast 1-row mix total (d14's rate stage)
-    "p03_retrieval_pipeline", // broadcast 1-row chunk-corpus stats (t07's shape)
+    "p03_retrieval_pipeline", // broadcast 1-row chunk-corpus stats (the BM25 scorer's)
     "p04_batch_retrieval", // same 1-row stats crossJoin as p03 (the query
                            // table joins by TERM — an equi hash join, not NL)
     "t19_bigram_surprisal", // broadcast 1-row vocab size
@@ -34,7 +34,7 @@ class PlanGuardSpec extends AnyFunSuite {
     "dq05_chi2_drift", // broadcast 1-row grand total (expected counts)
     "dq06_psi_drift", // broadcast 1-row min/max + 1-row cohort totals
     "dq07_benford", // broadcast 1-row grand total
-    "ix04_ranked_search", // broadcast 1-row corpus stats (t07's shape)
+    "ix04_ranked_search", // broadcast 1-row corpus stats (the BM25 scorer's)
     "t24_tfidf_keywords", // broadcast 1-row doc count
     "ar02_sequential_rules", // broadcast 1-row session total (lift's N)
     "rj03_max_concurrency", // broadcast 1-row session count + 1-row max
@@ -126,14 +126,20 @@ class PlanGuardSpec extends AnyFunSuite {
         "the site here with its frame-bound rationale")
   }
 
-  test("one implementation: bucketBy only in BucketedStore, the micro_batch ingest sink only in IngestLoop") {
+  /** Main sources whose text matches every one of `res`. */
+  private def sitesOf(res: scala.util.matching.Regex*): Set[String] = {
     import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Paths.get("src/main/scala")
-    def sitesOf(re: scala.util.matching.Regex): Set[String] =
-      java.nio.file.Files.walk(root).iterator().asScala
-        .filter(_.toString.endsWith(".scala"))
-        .filter(p => re.findFirstIn(java.nio.file.Files.readString(p)).isDefined)
-        .map(_.toString).toSet
+    java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      .iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filter { p =>
+        val text = java.nio.file.Files.readString(p)
+        res.forall(_.findFirstIn(text).isDefined)
+      }
+      .map(_.toString).toSet
+  }
+
+  test("one implementation: bucketBy only in BucketedStore, the micro_batch ingest sink only in IngestLoop") {
     assert(sitesOf("""\.bucketBy\(""".r) ===
       Set("src/main/scala/graft/sources/BucketedStore.scala"),
       "a hand-rolled bucketBy skips BucketedStore's aligned write path")
@@ -143,6 +149,17 @@ class PlanGuardSpec extends AnyFunSuite {
     assert(sitesOf("""partitionBy\(\s*"batch_id"""".r) ===
       Set("src/main/scala/graft/streaming/StoreFold.scala"),
       "a batch_id= partial twin writes, publishes and folds through StoreFold")
+    assert(sitesOf("""localCheckpoint\(""".r)
+      .filter(_.startsWith("src/main/scala/graft/streaming/")) === Set.empty,
+      "a streaming twin cuts lineage through Cut, so a configured " +
+        "checkpoint dir reaches it")
+  }
+
+  test("one BM25 scorer: its constants appear only in Search") {
+    assert(sitesOf("""lit\(2\.2\)""".r, """lit\(0\.75\)""".r) ===
+      Set("src/main/scala/graft/operators/Search.scala"),
+      "a ranked-retrieval path supplies tf/df/dl to Search.bm25Partials, " +
+        "never its own BM25 formula")
   }
 
   test("oracle SQL never sums raw doubles (SURVEY §4 determinism rule)") {

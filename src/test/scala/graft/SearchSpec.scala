@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,7 +12,7 @@ import graft.operators.Search
 /** Constructed-frame semantics + stored-index plan shape for the
   * inverted-index family (ix01/ix02 cover sf-data parity).
   */
-class SearchSpec extends AnyFunSuite {
+class SearchSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = GraftTestSession.spark
   import spark.implicits._
 
@@ -104,6 +106,34 @@ class SearchSpec extends AnyFunSuite {
         Seq("a", "c"), 10).collect().map(r => (r.getLong(0), r.getDouble(1)))
       assert(after.toSeq === expectAfter.toSeq)
     } finally dropStore("r_postings")
+  }
+
+  test("rankedSearch reads the postings once: df comes from the tf scan's word partitioning") {
+    val path = Files.createTempDirectory("graft-postings").toString + "/sc"
+    try {
+      Search.writePostingsStore(docs.filter(col("doc_id") <= 2L),
+        path, "s_postings", nBuckets = 4)
+      Search.appendToPostingsStore(docs.filter(col("doc_id") > 2L), "s_postings")
+      /** Postings scans in the executed (AQE final) plan, and the ranking. */
+      def served() = {
+        val q = Search.rankedSearch(spark, "s_postings", Seq("a", "c"), 10)
+        val ranked = q.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+        val scans = collect(q.queryExecution.executedPlan) {
+          case s: FileSourceScanExec
+              if s.relation.location.rootPaths.exists(_.toString.endsWith(path)) => s
+        }
+        (scans.size, ranked)
+      }
+      def direct(live: org.apache.spark.sql.DataFrame) =
+        Search.bm25Rank(Search.postings(live),
+          live.select(col("doc_id"),
+            size(split(trim(col("text")), " +")).cast("bigint").as("dl")),
+          Seq("a", "c"), 10).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      assert(served() === (1, direct(docs)))
+      // a tombstone adds an anti-join above the scan, not a second read
+      Search.deleteFromPostingsStore(spark, "s_postings", Seq(3L).toDF("doc_id"))
+      assert(served() === (1, direct(docs.filter(col("doc_id") =!= 3L))))
+    } finally dropStore("s_postings")
   }
 
   test("postings store maintenance: append / tombstone / compact keep queries exact") {

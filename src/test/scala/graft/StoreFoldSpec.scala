@@ -320,4 +320,52 @@ class StoreFoldSpec extends AnyFunSuite {
       }
     }
   }
+
+  test("a replayed batch reads only older partials: funnel and conversion replays equal the unreplayed run") {
+    import spark.implicits._
+    def events(rows: Seq[(Long, Long, Long, String)]) =
+      rows.toDF("user_id", "event_id", "ts_ns", "event_type")
+    val stages = Seq("signup", "view", "purchase")
+    // funnel: u1's session continues into batch 1 and ends it with two
+    // events (a replay that saw its own open partial would count the
+    // earlier one late); u2's batch-0 session is closed by batch 1's gap
+    val funnelBatches = Seq(
+      Seq((1L, 1L, 10L, "signup"), (2L, 2L, 15L, "signup")),
+      Seq((1L, 3L, 20L, "view"), (1L, 4L, 30L, "purchase"),
+        (2L, 5L, 400L, "view")))
+    // conversion: u1's batch-0 signup converts in batch 1; u3 signs up
+    // and converts inside batch 1; u2 stays pending
+    val G = 1000000000L
+    val convBatches = Seq(
+      Seq((1L, 1L, 10 * G, "signup"), (2L, 2L, 20 * G, "signup")),
+      Seq((1L, 3L, 12 * G, "purchase"), (3L, 4L, 30 * G, "signup"),
+        (3L, 5L, 31 * G, "purchase")))
+    def run(twin: StoreFold.Twin, batches: Seq[Seq[(Long, Long, Long, String)]],
+        replay: Boolean): Unit = {
+      for ((rows, b) <- batches.zipWithIndex)
+        StoreFold.runBatch(spark, twin, events(rows), b.toLong)
+      if (replay)
+        StoreFold.runBatch(spark, twin, events(batches.last),
+          batches.size - 1L)
+    }
+    def rows(out: String) = spark.read.parquet(out).collect().map(_.toSeq).toSeq
+    for (maxParts <- Seq(None, Some(1))) {
+      val results = Seq(false, true).map { replay =>
+        val dir = java.nio.file.Files.createTempDirectory("graft-replay").toString
+        val fn = graft.streaming.FunnelStream.twin(s"$dir/fn", stages, 100L,
+          s"$dir/fn_out", maxParts)
+        run(fn, funnelBatches, replay)
+        val cv = graft.streaming.ConversionStream.twin(s"$dir/cv", 50 * G,
+          s"$dir/cv_out", maxParts)
+        run(cv, convBatches, replay)
+        (graft.streaming.FunnelStream.lateEvents(spark, s"$dir/fn"),
+          rows(s"$dir/fn_out"), rows(s"$dir/cv_out"))
+      }
+      val (once, replayed) = (results.head, results(1))
+      assert(once._1 === 0L, s"maxStoreParts $maxParts")
+      assert(replayed._1 === once._1, s"funnel late events, maxStoreParts $maxParts")
+      assert(replayed._2 === once._2, s"funnel report, maxStoreParts $maxParts")
+      assert(replayed._3 === once._3, s"conversion report, maxStoreParts $maxParts")
+    }
+  }
 }
