@@ -38,7 +38,7 @@ object Plans {
       "p01_pipeline" -> "end-to-end pipeline: gate fused into the scan, ntext-window keep-set, shard-window packing — one scan, two shuffles",
       "p02_pipeline_full" -> "FIVE-stage pipeline in one AQE plan: eval split + gate fused into every scan branch, dedup window, decontamination semi-join (AQE-elided when clean), broadcast mix rates, shard-window packing — no stage materializes",
       "m04_audio_stats" -> "audio PCM stats: per-partition javax.sound decode, zero shuffles before the sort",
-      "s09_ivfpq_search" -> "IVF-PQ STORED search: partition-pruned codes-only scan (PartitionFilters on cell, ReadSchema = vec_id+codes — never the embedding), AdcDist kernel, TakeOrdered, zero shuffles",
+      "s09_ivfpq_search" -> "IVF-PQ STORED search: codes-only scan of the cell-bucketed BucketedStore table, bucket-pruned to the probed cells (the cell IN filter selects their buckets' files; ReadSchema = vec_id+cell+codes — never the embedding), AdcDist kernel, TakeOrdered, zero shuffles",
       "t16_chunk_overlap" -> "chunking: one generator (sequence+posexplode) with codegen slice/array_join pipelined into the scan — zero shuffles before the output sort",
       "p03_retrieval_pipeline" -> "retrieval pipeline: chunker fused into the BM25 tokenize scan (generator feeds explode with no exchange between), broadcast query-term semi-join before the first shuffle, KB stats broadcasts, TakeOrdered top-20",
       "d17_mixture_sample" -> "token-budget mixture: tiny histogram agg (phase A, driver KB) then ONE bucket-parallel window — Exchange hashes (source, b), never source alone, so no per-source serial stage",
@@ -47,7 +47,7 @@ object Plans {
       "d18_canonical_dedup" -> "canonical election: d05 LSH pairs + d07 CC, then ONE partial-aggregable groupBy(cluster) — max(struct) combines map-side, no per-cluster window, no second shuffle after the label join",
       "s12_batch_search" -> "BATCH exact search: TWO scans total (one corpus pass + the broadcast Q-row query table), CosSim kernel per (vec, query), TopKPerKey bounds the only exchange at k x Q rows — no per-query job loop",
       "s13_batch_pq_search" -> "BATCH stored-PQ search: exactly ONE FileScan (codes-only, no embedding column), concatenated slot-indexed LUTs broadcast as a literal, generator fan-out to (query, vec) pairs, TopKPerKey per query",
-      "s14_batch_ivfpq_search" -> "BATCH IVF-PQ stored search: ONE codes-only FileScan partition-pruned to the UNION of per-query probe lists (PartitionFilters on cell), per-(query,cell) LUT segments selected by slot, TopKPerKey per query",
+      "s14_batch_ivfpq_search" -> "BATCH IVF-PQ stored search: ONE codes-only FileScan bucket-pruned to the UNION of per-query probe lists (the cell IN filter selects their buckets' files), per-(query,cell) LUT segments selected by slot, TopKPerKey per query",
       "p04_batch_retrieval" -> "BATCH retrieval: one chunk-corpus pass, query-independent per-(chunk,term) BM25 partials, broadcast (query,term) fan-in join, decimal-exact sum, TopKPerKey per query — queries never trigger another corpus scan",
       "d19_semantic_dedup" -> "SemDeDup: zero-shuffle PqAssign cell map (centroids are codegen literals in the scan projection — no centroid join anywhere); the within-cell pair join is an equi-join ON CELL (AQE broadcasts the gate-corpus side here; at scale it is one cell-key exchange), so the quadratic stage never leaves its cell; drop set aggregates on id_b and broadcasts back",
       "s15_batch_matryoshka" -> "BATCH matryoshka: one corpus scan, prefix-cosine per (vec, query), TopKPerKey shortlist CARRIES the full vectors so the re-rank stage is heap-local — no second scan, no vec_id join between stages",

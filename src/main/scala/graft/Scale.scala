@@ -178,10 +178,11 @@ object Scale {
       f"stored search ${tInline / tStored}%.1fx faster than inline recompute")
 
     // ---- index append probe: ANN maintenance must cost ∝ BATCH, not
-    // index — appendToIvfPqIndex never reads the stored codes, it
-    // assigns against the KB sidecars and lands one file per touched
-    // cell. Appending the 1x base corpus into the Nx index should run
-    // at ~build-time/N.
+    // index — appendToIvfPqIndex assigns against the KB sidecars,
+    // reads only the stored vec_id column (its replay guard, 8 B per
+    // vector) and lands at most one file per touched bucket. Appending
+    // the 1x base corpus into the Nx index should run at ~build-time/N
+    // plus that id read.
     val appBatch = emb.select((col("vec_id") + 10000000L).as("vec_id"), col("embedding"))
     timeV("ivfpqAppend")({
       graft.operators.Similarity.appendToIvfPqIndex(appBatch, s"$work/ivfpq"); n0

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
+import graft.sources.{BucketedStore, Tables}
 import graft.functions.{vectorCosine, vectorDot}
 import graft.operators.Dedup
 
@@ -182,8 +182,7 @@ object Similarity {
     val lutsFlat = qs.flatMap { case (_, q) =>
       adcLutFlat(rot.map(rotateQuery(_, q)).getOrElse(q), cbFlat, m, k) }
     val qids = array(qs.map(q => lit(q._1)): _*)
-    val scored = dropTombstonedVecs(spark, path,
-      spark.read.parquet(s"$path/codes"))
+    val scored = readPqCodes(spark, path)
       .select(col("vec_id"), col("codes"),
         posexplode(qids).as(Seq("slot", "query_id")))
       .filter(if (excludeSelf) col("vec_id") =!= col("query_id") else lit(true))
@@ -520,8 +519,7 @@ object Similarity {
   }
 
   /** The rotation as a KB text sidecar beside the codebook (`dim` on
-    * the first line, then one row per line) — same single-file
-    * atomic-rename pattern as the compacted-batches sidecar. */
+    * the first line, then one row per line). */
   def writeOpqSidecar(spark: SparkSession, path: String, r: Array[Double]): Unit = {
     val d = math.sqrt(r.length.toDouble).toInt
     require(d * d == r.length, s"rotation length ${r.length} is not square")
@@ -702,6 +700,43 @@ object Similarity {
     }
   }
 
+  /** The catalog name of the index at `path`: the IVF-PQ index's
+    * `codes` table, and the tombstone scope of the IVF-PQ and the flat
+    * PQ index alike. A SHA-256 digest of the qualified path, so two
+    * indexes never share a table or a tombstone set. */
+  private[graft] def indexTable(spark: SparkSession, path: String): String = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val q = p.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(p)
+    "graft_index_" + java.security.MessageDigest.getInstance("SHA-256")
+      .digest(q.toString.getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString
+  }
+
+  /** The preamble of every index build: a rebuild at `path` is a NEW
+    * generation. It forgets the memoized sidecars, drops the previous
+    * generation's tombstones (they retired content this build no longer
+    * carries), and writes the OPQ rotation — or clears a previous
+    * build's, so a plain rebuild over an OPQ path never rotates queries
+    * against unrotated codes. Returns the vectors to quantize (rotated
+    * under OPQ). */
+  private def newIndexGeneration(embeddings: DataFrame, path: String, m: Int,
+      opq: Boolean): DataFrame = {
+    val spark = embeddings.sparkSession
+    pqSidecarCache.remove(path)
+    ivfSidecarCache.remove(path)
+    opqRotationCache.remove(path)
+    spark.sql(s"DROP TABLE IF EXISTS ${indexTable(spark, path)}_tombstones")
+    if (opq) {
+      val rMat = opqParametricRotation(embeddings, m)
+      writeOpqSidecar(spark, path, rMat)
+      rotateEmbeddings(embeddings, rMat)
+    } else {
+      val p = new org.apache.hadoop.fs.Path(s"$path/opq_rotation.txt")
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      if (fs.exists(p)) fs.delete(p, false)
+      embeddings
+    }
+  }
+
   /** With `opq = true` the index is OPQ-built end-to-end
     * ([[opqParametricRotation]]): the rotation is learned from the
     * data, persisted beside the codebook ([[writeOpqSidecar]]), the
@@ -718,31 +753,19 @@ object Similarity {
     */
   def writePqIndex(embeddings: DataFrame, path: String,
       m: Int = 8, k: Int = 16, opq: Boolean = false): Unit = {
-    pqSidecarCache.remove(path)
-    opqRotationCache.remove(path)
     val spark = embeddings.sparkSession
-    val (src, cbFlat) =
+    val src = newIndexGeneration(embeddings, path, m, opq)
+    val cbFlat =
       if (opq) {
-        val rMat = opqParametricRotation(embeddings, m)
-        writeOpqSidecar(spark, path, rMat)
-        val rotated = rotateEmbeddings(embeddings, rMat)
         // rotated vectors are array<double> (MatVec), so the first-k
         // codebook collect reads doubles — same data-sampled choice
         // as the unrotated branch
-        val cb = rotated.filter(col("vec_id") < k)
+        val cb = src.filter(col("vec_id") < k)
           .select(col("vec_id"), col("embedding")).collect()
           .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).toMap
         require(cb.size == k, s"codebook needs vec_ids 0..${k - 1}")
-        (rotated, pqFlat(cb, k))
-      } else {
-        // a rebuild WITHOUT opq over a previously-OPQ path must not
-        // leave the stale rotation behind — searches would rotate
-        // queries against unrotated codes
-        val p = new org.apache.hadoop.fs.Path(s"$path/opq_rotation.txt")
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(p)) fs.delete(p, false)
-        (embeddings, pqFlat(pqCodebook(embeddings, k), k))
-      }
+        pqFlat(cb, k)
+      } else pqFlat(pqCodebook(src, k), k)
     src.select(col("vec_id"),
         graft.functions.pqCodes(col("embedding"), cbFlat, m, k).as("codes"))
       .write.mode("overwrite").parquet(s"$path/codes")
@@ -772,7 +795,7 @@ object Similarity {
     // one driver-side d² multiply — and nothing else changes
     val q1 = opqRotationOpt(spark, path).map(rotateQuery(_, q)).getOrElse(q)
     val lutFlat = adcLutFlat(q1, cbFlat, m, k)
-    dropTombstonedVecs(spark, path, spark.read.parquet(s"$path/codes"))
+    readPqCodes(spark, path)
       .filter(col("vec_id") =!= excludeId)
       .select(col("vec_id"),
         graft.functions.adcDist(col("codes"), lit(0), lutFlat, m, k).as("adc"))
@@ -780,47 +803,23 @@ object Similarity {
       .select(col("vec_id"), round(col("adc"), 6).as("adc_dist"))
   }
 
+  /** A [[writePqIndex]] index's codes minus its tombstoned vectors. */
+  private def readPqCodes(spark: SparkSession, path: String): DataFrame =
+    BucketedStore.dropTombstoned(spark, indexTable(spark, path),
+      spark.read.parquet(s"$path/codes"), "vec_id")
+
   /** RETIRE vectors from a stored PQ / IVF-PQ index (takedown / TTL):
-    * append their ids to the KB tombstone sidecar at
-    * `$path/tombstones`. Lazy, mirroring the signature store's
-    * pattern: searches anti-join the tombstone set (a zero-shuffle
-    * broadcast filter up to the [[graft.sources.BucketedStore.tombstoneBroadcastMax]] byte
-    * ceiling, a shuffle-hash anti-join beyond it — the codes-only scan
-    * shape is unchanged), [[compactIvfPqIndex]] drops the code rows physically,
-    * and the sidecar survives compaction as a suppression list so a
-    * crash-replayed append batch containing a retired vector stays
-    * masked at read time.
+    * [[BucketedStore.delete]] into the index's tombstone scope. Lazy:
+    * searches anti-join the KB tombstone set (broadcast under
+    * [[BucketedStore.tombstoneBroadcastMax]], shuffle-hash beyond it —
+    * the codes-only scan shape is unchanged), [[compactIvfPqIndex]]
+    * drops the code rows physically, and the set survives compaction as
+    * a suppression list, so a crash-replayed append of a retired vector
+    * stays out. A rebuild at the path starts with no tombstones.
     */
   def deleteFromIvfPqIndex(vecIds: DataFrame, path: String): Unit = {
-    import org.apache.spark.sql.SaveMode
-    vecIds.select(col("vec_id").cast("bigint")).coalesce(1)
-      .write.mode(SaveMode.Append).parquet(s"$path/tombstones")
-  }
-
-  /** `codes` minus tombstoned vectors — broadcast anti-join against
-    * the sidecar when it is under the [[graft.sources.BucketedStore.tombstoneBroadcastMax]]
-    * byte ceiling, a shuffle-hash anti-join beyond it (a whole-index
-    * takedown can outgrow any broadcast threshold; the codes-only
-    * partition-pruned scan shape is unchanged either way, the fallback
-    * just adds one exchange of each side), or unchanged when no delete
-    * ever happened (stores that never delete keep their join-free
-    * plan). Eagerly [[compactIvfPqIndex]] after a mass delete to drop
-    * the rows physically — the sidecar survives as a suppression list,
-    * so the fallback's shuffle persists until the retired ids age out
-    * of the replay contract. */
-  private def dropTombstonedVecs(spark: SparkSession, path: String,
-      codes: DataFrame): DataFrame = {
-    val tp = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    val fs = tp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(tp)) codes
-    else {
-      val t = spark.read.parquet(s"$path/tombstones")
-      val bytes = fs.listStatus(tp)
-        .filter(_.getPath.getName.endsWith(".parquet")).map(_.getLen).sum
-      if (bytes <= graft.sources.BucketedStore.tombstoneBroadcastMax(spark))
-        codes.join(broadcast(t), Seq("vec_id"), "left_anti")
-      else codes.join(t.hint("shuffle_hash"), Seq("vec_id"), "left_anti")
-    }
+    val spark = vecIds.sparkSession
+    BucketedStore.delete(spark, indexTable(spark, path), vecIds.select(col("vec_id").as("doc_id")))
   }
 
   /** IVF-PQ (Jégou et al.): the billion-scale ANN layout composed
@@ -991,14 +990,22 @@ object Similarity {
   /** Materialize the IVF-PQ index at `path` — the layout the search
     * half of a 100 TB ANN deployment actually reads:
     *
-    *   - `codes/`: (vec_id, codes binary(m)) PARTITIONED BY cell —
-    *     one directory per coarse cell, i.e. the inverted lists;
-    *     probing nprobe cells IS partition pruning, so a search
-    *     touches ~nprobe/ncells of m bytes/vector and never the
-    *     4·dim-byte embeddings.
+    *   - `codes/`: (vec_id, cell, codes binary(m)), an external
+    *     [[BucketedStore]] table bucketed on `cell` with one bucket per
+    *     stored centroid — the inverted lists. Probing nprobe cells IS
+    *     bucket pruning, so a search touches ~nprobe/ncells of m
+    *     bytes/vector and never the 4·dim-byte embeddings. Appends,
+    *     deletes, compaction and crash healing are the shared store's
+    *     (one file per bucket per append, [[BucketedStore.stats]] sees
+    *     the index like every other store).
     *   - `meta_cent/`, `meta_rcb/`, `meta_conf/`: KB-sized sidecars
-    *     (per-cell centroids, residual codebook, shape) that make the
-    *     index self-contained — search needs the index path only.
+    *     (per-cell centroids, residual codebook, shape).
+    *
+    * The codes table lives in the session catalog under a name derived
+    * from `path`, so the index is searched by its path within the
+    * session that built it. A rebuild at a reused path is a new
+    * generation: it replaces the codes and drops the previous
+    * generation's tombstones.
     *
     * Build is one codegen scan of the corpus (residual subtraction
     * against the broadcast centroid map, PqCodes kernel) plus the
@@ -1019,22 +1026,8 @@ object Similarity {
     */
   def writeIvfPqIndex(embeddings: DataFrame, path: String,
       m: Int = 8, k: Int = 16, opq: Boolean = false): Unit = {
-    ivfSidecarCache.remove(path)
-    opqRotationCache.remove(path)
     val spark = embeddings.sparkSession
-    val src =
-      if (opq) {
-        val rMat = opqParametricRotation(embeddings, m)
-        writeOpqSidecar(spark, path, rMat)
-        rotateEmbeddings(embeddings, rMat)
-      } else {
-        // a rebuild WITHOUT opq over a previously-OPQ path must not
-        // leave the stale rotation behind (writePqIndex precedent)
-        val p = new org.apache.hadoop.fs.Path(s"$path/opq_rotation.txt")
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(p)) fs.delete(p, false)
-        embeddings
-      }
+    val src = newIndexGeneration(embeddings, path, m, opq)
     val cents = cellCentroids(src)
     val dim = cents.head._2.length
     val rcb = residualCodebookFlat(src, cents, k)
@@ -1042,9 +1035,9 @@ object Similarity {
       Seq(lit(l), array(c.map(lit(_)): _*)) }: _*)
     val residual = transform(col("embedding"),
       (x, i) => x.cast("double") - element_at(element_at(centMap, col("label")), i + 1))
-    src.select(col("vec_id"), col("label").as("cell"),
-        graft.functions.pqCodes(residual, rcb, m, k).as("codes"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/codes")
+    BucketedStore.create(src.select(col("vec_id"), col("label").as("cell"),
+        graft.functions.pqCodes(residual, rcb, m, k).as("codes")),
+      indexTable(spark, path), cents.size, "cell", path = Some(s"$path/codes"))
     import spark.implicits._
     cents.toSeq.flatMap { case (l, c) =>
       c.zipWithIndex.map { case (v, p) => (l, p, v) } }
@@ -1057,11 +1050,12 @@ object Similarity {
       .coalesce(1).write.mode("overwrite").parquet(s"$path/meta_conf")
   }
 
-  /** Search a [[writeIvfPqIndex]] index from its path alone — the
-    * embedding table is NEVER touched. Driver loads the KB sidecars,
-    * ranks cells by in-order centroid cosine, builds one m×k LUT per
-    * probed cell, and the scan reads ONLY the probed cells' partitions
-    * (partition pruning = inverted-list selection): per row, m byte
+  /** Search a [[writeIvfPqIndex]] index — the embedding table is NEVER
+    * touched. Driver loads the KB sidecars, ranks cells by in-order
+    * centroid cosine, builds one m×k LUT per probed cell, and the scan
+    * reads ONLY the files of the buckets the probed cells hash to
+    * (bucket pruning = inverted-list selection; it holds on the
+    * non-bucketed read the planner picks here too): per row, m byte
     * loads + m adds in the AdcDist kernel, TakeOrdered top-k, zero
     * shuffles. Bit-identical to [[ivfPqSearch]].
     */
@@ -1091,6 +1085,13 @@ object Similarity {
       (m, k, dim, cents, rcb)
     })
 
+  /** The index's live code rows: its store table, refreshed, minus its
+    * tombstoned vectors ([[BucketedStore.read]]). */
+  private def readCodes(spark: SparkSession, path: String): DataFrame = {
+    val t = indexTable(spark, path)
+    BucketedStore.read(spark, t, t, "vec_id")
+  }
+
   def ivfPqSearchStored(spark: SparkSession, path: String, q: Array[Double],
       nprobe: Int, topK: Int, excludeId: Long = -1L): DataFrame = {
     val (m, k, dim, cents, rcb) = readIvfSidecars(spark, path)
@@ -1109,7 +1110,7 @@ object Similarity {
     val slot = coalesce(element_at(slotOf, col("cell")),
       raise_error(concat(lit("ivfPqSearchStored: cell outside probe map: "),
         col("cell").cast("string"))))
-    dropTombstonedVecs(spark, path, spark.read.parquet(s"$path/codes"))
+    readCodes(spark, path)
       .filter(col("cell").isin(probes: _*) && col("vec_id") =!= excludeId)
       .select(col("vec_id"), col("cell").cast("bigint").as("cell"),
         graft.functions.adcDist(col("codes"), slot, lutsFlat, m, k).as("adc"))
@@ -1118,16 +1119,16 @@ object Similarity {
   }
 
   /** BATCH IVF-PQ stored search — [[ivfPqSearchStored]] over a query
-    * DATAFRAME: s09's partition pruning composed with s13's
+    * DATAFRAME: s09's bucket pruning composed with s13's
     * slot-indexed LUT trick, closing the set-at-a-time serving shape
     * for the layout that actually ships at billion scale.
     *
     *   - per-query probe lists come from the memoized centroid
     *     sidecar (driver metadata, KB);
-    *   - the scan's partition filter is the UNION of every query's
-    *     probed cells — partition pruning still bounds IO at
-    *     |∪probes| / ncells of the codes, and stays codes-only
-    *     (m bytes/vector, tombstone-filtered, never the embeddings);
+    *   - the scan's cell filter is the UNION of every query's probed
+    *     cells — bucket pruning still bounds IO at the buckets
+    *     ∪probes hashes to, and stays codes-only (m bytes/vector,
+    *     tombstone-filtered, never the embeddings);
     *   - the per-(query, probed-cell) ADC LUTs concatenate into ONE
     *     flat literal; a cell → [(slot, query_id)] map literal fans
     *     each code row out across exactly the queries that probe ITS
@@ -1183,8 +1184,7 @@ object Similarity {
       Seq(lit(cell), array(cellEntries(cell).map { case ((qid, _, _), slot) =>
         struct(lit(slot).as("slot"), lit(qid).as("query_id")) }: _*))
     }: _*)
-    val scored = dropTombstonedVecs(spark, path,
-      spark.read.parquet(s"$path/codes"))
+    val scored = readCodes(spark, path)
       .filter(col("cell").isin(probedCells: _*))
       .select(col("vec_id"), col("cell").cast("bigint").as("cell"), col("codes"),
         explode(element_at(entryMap, col("cell").cast("int"))).as("e"))
@@ -1197,29 +1197,8 @@ object Similarity {
         round(col("adc"), 6).as("adc_dist"))
   }
 
-  /** APPEND vectors to a [[writeIvfPqIndex]] index in place — the
-    * maintenance half a continuously-ingesting deployment needs (the
-    * signature store's append/compact loop, at the ANN layer).
-    *
-    * Assignment: nearest STORED centroid (max in-order cosine, ties to
-    * the smaller cell — the probe-ranking rule), not any label column:
-    * the stored sidecars ARE the quantizer, and an appended vector has
-    * no say in the cell geometry. Residuals are coded against the
-    * assigned cell's centroid with the stored residual codebook —
-    * centroids and codebook are NOT retrained (the standard IVF append
-    * contract; re-train + full rebuild is the rebalance operation, not
-    * the append). The write lands one more parquet file per TOUCHED
-    * cell directory — an inverted-list append; searches started before
-    * see the old lists, after see old+new. Cost ∝ batch: one scan of
-    * the new vectors (the per-cell ranking is an interpreted HOF fold,
-    * fine at batch sizes; promote to a kernel if appends reach table
-    * scale) + one partitioned write. The store side is never read.
-    * Compact with [[compactIvfPqIndex]] when cadence leaves many small
-    * files per cell.
-    */
   /** Assign `newVectors` to the stored quantizer: nearest sidecar
-    * centroid + residual codes — the shared map stage of both append
-    * paths. One codegen scan, no shuffle. */
+    * centroid + residual codes. One codegen scan, no shuffle. */
   private def assignToStoredCells(newVectors: DataFrame, path: String): DataFrame = {
     val spark = newVectors.sparkSession
     val (m, k, _, cents, rcb) = readIvfSidecars(spark, path)
@@ -1251,200 +1230,63 @@ object Similarity {
         graft.functions.pqCodes(residual, rcb, m, k).as("codes"))
   }
 
-  /** Heal an interrupted [[compactIvfPqIndex]] swap of `codes`
-    * ([[graft.sources.BucketedStore.recoverSwap]]): appends and
-    * compactions call this before they touch the inverted lists. */
-  private def healCodes(fs: org.apache.hadoop.fs.FileSystem, path: String): Unit =
-    graft.sources.BucketedStore.recoverSwap(fs,
-      new org.apache.hadoop.fs.Path(s"$path/codes"), "compact", s"ivf-pq $path")
-
+  /** APPEND vectors to a [[writeIvfPqIndex]] index in place — the
+    * maintenance half a continuously-ingesting deployment needs (the
+    * signature store's append/compact loop, at the ANN layer).
+    *
+    * Assignment: nearest STORED centroid (max in-order cosine, ties to
+    * the smaller cell — the probe-ranking rule), not any label column:
+    * the stored sidecars ARE the quantizer, and an appended vector has
+    * no say in the cell geometry. Residuals are coded against the
+    * assigned cell's centroid with the stored residual codebook —
+    * centroids and codebook are NOT retrained (the standard IVF append
+    * contract; re-train + full rebuild is the rebalance operation, not
+    * the append). The write is a [[BucketedStore.append]]: at most one
+    * more file per touched bucket; searches started before see the old
+    * lists, after see old+new.
+    *
+    * Replay-safe: [[BucketedStore.unseen]] drops the vectors the codes
+    * table already holds and the tombstoned ones, so a batch replayed
+    * after a crash — before or after a compaction — lands nothing
+    * twice, and the codes table is its own replay guard (one job
+    * commit, no window between two writes). The cost: an append reads
+    * the stored `vec_id` column (8 bytes/vector) — a broadcast at
+    * small scale, one exchange of ids at large. Compact with
+    * [[maybeCompactIvfPqIndex]] on cadence.
+    */
   def appendToIvfPqIndex(newVectors: DataFrame, path: String): Unit = {
-    import org.apache.spark.sql.SaveMode
-    healCodes(new org.apache.hadoop.fs.Path(path).getFileSystem(
-      newVectors.sparkSession.sparkContext.hadoopConfiguration), path)
-    assignToStoredCells(newVectors, path)
-      .write.mode(SaveMode.Append).partitionBy("cell").parquet(s"$path/codes")
-  }
-
-  /** [[appendToIvfPqIndex]] made IDEMPOTENT under micro-batch replay —
-    * the streaming-ingest contract ([[graft.streaming.IndexStream]]):
-    * a plain append retried after a crash would double the batch's
-    * code rows and a search would return duplicate vec_ids. Commit
-    * protocol: (1) stage the batch's codes at a per-batch staging dir
-    * (mode=overwrite, so a retry rewrites the identical staging), one
-    * file per touched cell (repartition by cell before the
-    * partitioned write — equal cells colocate, so dynamic
-    * partitioning emits exactly one file per cell directory); (2)
-    * rename each staged file to the DETERMINISTIC name
-    * `codes/cell=X/batch-<id>.parquet` (replacing any prior attempt's
-    * file); (3) drop staging. Every step converges under replay from
-    * any crash point, so at-least-once foreachBatch delivery yields
-    * exactly-once index contents. Cost is still ∝ batch: one assign
-    * scan + one small shuffle (batch-sized) + ncells-touched renames.
-    */
-  def appendToIvfPqIndexIdempotent(newVectors: DataFrame, path: String,
-      batchId: Long): Unit = {
     val spark = newVectors.sparkSession
-    // resolve the filesystem OF `path` (not the default FS): on a
-    // deployment where the index lives on s3a/hdfs while defaultFS
-    // differs, FileSystem.get would rename/delete on the wrong FS.
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    healCodes(fs, path)
-    // a batch already folded into compacted part files must NOT
-    // re-land on checkpoint replay (its batch-<id>.parquet name is
-    // gone, so the rename-overwrite convergence no longer covers it)
-    if (compactedBatchIds(fs, path).contains(batchId)) return
-    val staging = s"$path/codes_staging/batch=$batchId"
-    val assigned = assignToStoredCells(newVectors, path)
-    val ncells = readIvfSidecars(spark, path)._4.size
-    assigned.repartition(ncells, col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(staging)
-    val stagingPath = new org.apache.hadoop.fs.Path(staging)
-    fs.listStatus(stagingPath).filter(_.getPath.getName.startsWith("cell="))
-      .foreach { cellDir =>
-        val parts = fs.listStatus(cellDir.getPath)
-          .filter(_.getPath.getName.endsWith(".parquet"))
-        require(parts.length == 1,
-          s"staging ${cellDir.getPath} has ${parts.length} files (want 1)")
-        val target = new org.apache.hadoop.fs.Path(
-          s"$path/codes/${cellDir.getPath.getName}/batch-$batchId.parquet")
-        fs.mkdirs(target.getParent)
-        if (fs.exists(target)) fs.delete(target, false)
-        require(fs.rename(parts.head.getPath, target),
-          s"commit rename failed for $target")
-      }
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/codes_staging"), true)
+    val t = indexTable(spark, path)
+    BucketedStore.append(
+      BucketedStore.unseen(spark, assignToStoredCells(newVectors, path), t, t, "vec_id"), t)
   }
 
-  /** Compact an IVF-PQ index's inverted lists: every append lands one
-    * more file per touched cell directory, and many small files cost
-    * open/footer overhead per search. Rewriting `codes/` with each
-    * cell hashed to ONE task restores exactly one file per cell
-    * directory (dynamic partitioning writes one file per (task, cell),
-    * and repartition-by-cell puts each cell wholly in one task — no
-    * task↔name alignment needed here, unlike the bucketed signature
-    * store). One maintenance shuffle of codes (m bytes/vector — the
-    * cheap table), sidecars untouched, searches partition-prune
-    * exactly as before. The rewrite lands through
-    * [[graft.sources.BucketedStore.swapIn]] (a crash at any point heals
-    * on the next append or compaction); schedule it in the ingest quiet
-    * window (same caveat as the near-dup store compaction).
+  /** Compact an IVF-PQ index's inverted lists to one sorted file per
+    * bucket, dropping tombstoned vectors physically
+    * ([[BucketedStore.compact]]: the rewrite swaps in under the
+    * unchanged catalog entry, and a crash at any point heals on the
+    * next append or compaction). Sidecars untouched; searches prune
+    * exactly as before. Schedule it in the ingest quiet window (same
+    * caveat as the near-dup store compaction).
     */
-  /** Compaction CADENCE policy for the index: compact only when some
-    * inverted list (cell directory) exceeds `maxFilesPerCell` files —
-    * each append touches a cell with one more file, so the threshold
-    * bounds per-search file-open amplification while amortizing the
-    * compaction shuffle over the appends that caused it. Returns
-    * whether it compacted; [[graft.streaming.IndexStream]] calls this
-    * per micro-batch when given a threshold.
+  def compactIvfPqIndex(spark: SparkSession, path: String): Unit = {
+    val t = indexTable(spark, path)
+    BucketedStore.compact(spark, t, t, "vec_id")
+  }
+
+  /** Compaction CADENCE for the index ([[BucketedStore.maybeCompact]]):
+    * compact only when some bucket holds more than `maxFilesPerBucket`
+    * files — each append adds at most one file per touched bucket, so
+    * the threshold bounds per-search file-open amplification while
+    * amortizing the compaction over the appends that caused it.
+    * Returns whether it compacted; [[graft.streaming.IndexStream]]
+    * calls this per micro-batch when given a threshold.
     */
   def maybeCompactIvfPqIndex(spark: SparkSession, path: String,
-      maxFilesPerCell: Int): Boolean = {
-    require(maxFilesPerCell >= 1, s"need maxFilesPerCell >= 1, got $maxFilesPerCell")
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    healCodes(fs, path)
-    val cells = fs.listStatus(new org.apache.hadoop.fs.Path(s"$path/codes"))
-      .filter(_.getPath.getName.startsWith("cell="))
-    val worst =
-      if (cells.isEmpty) 0
-      else cells.map(d => fs.listStatus(d.getPath)
-        .count(_.getPath.getName.endsWith(".parquet"))).max
-    if (worst > maxFilesPerCell) { compactIvfPqIndex(spark, path); true }
-    else false
-  }
-
-  def compactIvfPqIndex(spark: SparkSession, path: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    healCodes(fs, path)
-    // Record every batch id whose file is being folded away BEFORE the
-    // rewrite: compaction erases per-batch file identity, so a
-    // checkpoint replay of one of these batches after compaction would
-    // re-append rows the compacted part files already contain. The
-    // idempotent append consults this KB sidecar and skips such ids.
-    val codesDir = new org.apache.hadoop.fs.Path(s"$path/codes")
-    val (tmp, _) = graft.sources.BucketedStore.swapPaths(codesDir, "compact")
-    val batchIds = fs.listStatus(codesDir)
-      .filter(_.getPath.getName.startsWith("cell="))
-      .flatMap(d => fs.listStatus(d.getPath))
-      .map(_.getPath.getName)
-      .collect { case BatchFileName(id) => id.toLong }
-      .toSet ++ compactedBatchIds(fs, path)
-    // tombstoned vectors drop out physically here (searches have been
-    // filtering them since the delete); the sidecar survives as a
-    // suppression list against crash-replayed appends
-    val codes = dropTombstonedVecs(spark, path,
-      spark.read.parquet(s"$path/codes"))
-    val ncells = codes.select("cell").distinct().count().toInt
-    if (ncells == 0)
-      // fully-tombstoned index: repartition(0, …) would throw (killing
-      // e.g. a streaming maybeCompact caller) and a 0-row partitionBy
-      // write leaves a schema-less dir. Compact to one explicit empty
-      // schema-bearing part file with `cell` as a data column — reads
-      // still resolve the schema, filters/pruning trivially match
-      // nothing.
-      codes.limit(0).repartition(1)
-        .write.mode("overwrite").parquet(tmp.toString)
-    else
-      codes.repartition(ncells, col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(tmp.toString)
-    writeCompactedBatchIds(fs, path, batchIds)
-    graft.sources.BucketedStore.swapIn(fs, codesDir, "compact", s"ivf-pq $path")
-  }
-
-  private val BatchFileName = """batch-(\d+)\.parquet""".r
-
-  /** Batch ids whose rows live in compacted part files (KB sidecar,
-    * one id per line, closed by an `end:<count>` terminator). Written
-    * atomically (tmp + overwriting rename — never delete-then-rename,
-    * which would lose the sidecar and re-enable replay duplication if
-    * the process died between the two). A .tmp is authoritative when
-    * the .txt is missing ONLY if it is self-validating: the terminator
-    * line must be present and match the id count, which a crash
-    * mid-tmp-write (possible before the FIRST compaction ever produces
-    * a .txt) cannot fake — a truncated trailing id would otherwise
-    * parse as a valid-but-wrong batch id and silently suppress a
-    * legitimate checkpoint replay (row loss). An invalid tmp is
-    * ignored: the worst case is a re-compaction, never a lost batch. */
-  private def compactedBatchIds(fs: org.apache.hadoop.fs.FileSystem,
-      path: String): Set[Long] = {
-    def parse(f: org.apache.hadoop.fs.Path,
-        requireTerminator: Boolean): Option[Set[Long]] = {
-      val in = fs.open(f)
-      val lines =
-        try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-          .filter(_.nonEmpty).toVector
-        finally in.close()
-      val (idLines, term) = lines.span(!_.startsWith("end:"))
-      val ids = idLines.flatMap(l => scala.util.Try(l.toLong).toOption)
-      val valid = ids.size == idLines.size &&
-        (!requireTerminator || term.headOption.contains(s"end:${idLines.size}"))
-      if (valid) Some(ids.toSet) else None
-    }
-    val p = new org.apache.hadoop.fs.Path(s"$path/compacted_batches.txt")
-    val tmp = new org.apache.hadoop.fs.Path(s"$path/compacted_batches.tmp")
-    // a corrupt renamed .txt is external damage — fail loud (treating it
-    // as empty would silently re-enable replay duplication)
-    if (fs.exists(p)) parse(p, requireTerminator = false)
-      .getOrElse(sys.error(s"corrupt compacted-batches sidecar at $p"))
-    else if (fs.exists(tmp)) parse(tmp, requireTerminator = true).getOrElse(Set.empty)
-    else Set.empty
-  }
-
-  private def writeCompactedBatchIds(fs: org.apache.hadoop.fs.FileSystem,
-      path: String, ids: Set[Long]): Unit = {
-    val tmp = new org.apache.hadoop.fs.Path(s"$path/compacted_batches.tmp")
-    val dst = new org.apache.hadoop.fs.Path(s"$path/compacted_batches.txt")
-    val body = (ids.toSeq.sorted.map(_.toString) :+ s"end:${ids.size}")
-      .mkString("\n")
-    val out = fs.create(tmp, true)
-    try out.write(body.getBytes("UTF-8"))
-    finally out.close()
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(fs.getUri,
-      fs.getConf)
-    fc.rename(tmp, dst, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+      maxFilesPerBucket: Int): Boolean = {
+    val t = indexTable(spark, path)
+    BucketedStore.maybeCompact(spark, Seq(t), maxFilesPerBucket)(
+      compactIvfPqIndex(spark, path))
   }
 
   /** Exact L2² distance to a broadcast query vector, as the IN-ORDER
@@ -1882,9 +1724,9 @@ object Similarity {
       ORDER BY adc, vec_id LIMIT 20""")),
 
     // ---- IVF-PQ over the STORED index: the entry materializes the
-    //      inverted-list layout (codes partitioned by cell + metadata
-    //      sidecars), then searches from the path alone — the probed
-    //      cells' partitions are the only files read, and the
+    //      inverted-list layout (codes bucketed by cell + metadata
+    //      sidecars), then searches it — the files of the probed
+    //      cells' buckets are the only files read, and the
     //      embedding column is never touched. The oracle replays the
     //      WHOLE index: decimal-exact centroids, probe ranking,
     //      residual codebook, per-vector residual codes, per-cell
@@ -2116,7 +1958,7 @@ object Similarity {
 
     // ---- BATCH IVF-PQ stored search: 3 queries, nprobe=2 each —
     //      per-query probe lists from the centroid sidecar, ONE
-    //      codes-only scan partition-pruned to the UNION of probed
+    //      codes-only scan bucket-pruned to the UNION of probed
     //      cells, per-(query,cell) LUT segments selected by slot via
     //      a cell→(slot,query) generator fan-out, per-query top-5 on
     //      TopKPerKey. The oracle replays the whole index AND the

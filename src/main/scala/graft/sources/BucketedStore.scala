@@ -6,8 +6,9 @@ import org.apache.spark.sql.execution.datasources.BucketingUtils
 import org.apache.spark.sql.functions._
 
 /** The one owner of graft's bucketed store tables — the signature,
-  * label, perceptual, ER and postings stores all keep their rows here
-  * and add only their own frames, keys and tombstone scope. keenwa's
+  * label, perceptual, ER and postings stores and the IVF-PQ index all
+  * keep their rows here and add only their own frames, keys and
+  * tombstone scope. keenwa's
   * catalog index support (reference src/catalog/mod.rs) maps to a
   * bucketed + sorted table: an equal-key join reads the store side with
   * zero exchange, and key predicates prune to the buckets holding the
@@ -133,8 +134,9 @@ object BucketedStore {
 
   /** Compact a store table to one sorted file per bucket, dropping
     * `scope`'s tombstoned rows physically. */
-  def compact(spark: SparkSession, table: String, scope: String): Unit =
-    rewrite(spark, table, read(spark, table, scope))
+  def compact(spark: SparkSession, table: String, scope: String,
+      idCol: String = "doc_id"): Unit =
+    rewrite(spark, table, read(spark, table, scope, idCol))
 
   /** Replace a store table's rows with `rows` (same layout, one sorted
     * file per bucket): written through a throwaway external table into

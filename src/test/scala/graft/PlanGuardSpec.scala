@@ -155,6 +155,15 @@ class PlanGuardSpec extends AnyFunSuite {
         "checkpoint dir reaches it")
   }
 
+  test("one implementation: the IVF-PQ index keeps its codes and tombstones in BucketedStore") {
+    assert(sitesOf("""partitionBy\(\s*"cell"""".r) === Set.empty,
+      "the IVF-PQ codes are a BucketedStore table bucketed on cell, not a cell= partitioning")
+    assert(sitesOf("""compacted_batches""".r) === Set.empty,
+      "the codes table is its own replay guard (BucketedStore.unseen), no compacted-batches sidecar")
+    assert(sitesOf("""/tombstones"""".r) === Set.empty,
+      "every index delete goes through BucketedStore.delete, no path tombstone sidecar")
+  }
+
   test("one BM25 scorer: its constants appear only in Search") {
     assert(sitesOf("""lit\(2\.2\)""".r, """lit\(0\.75\)""".r) ===
       Set("src/main/scala/graft/operators/Search.scala"),

@@ -279,7 +279,18 @@ class PlanSpec extends AnyFunSuite {
     assert(!plan.contains("embedding"), plan.take(3000))
     assert(plan.contains("Generate"), plan.take(3000))
     assert(plan.contains("TopKPerKey"), plan.take(3000))
-    assert(plan.contains("PartitionFilters"), plan.take(3000))
+    // the scan reads only the buckets of the union of s14's probe
+    // lists (queries vec_id 0..2, nprobe = 2)
+    val Seq(scan) = IndexScan.scans(df.queryExecution.executedPlan)
+    val index = scan.relation.location.rootPaths.head.getParent.toString
+    val emb = graft.sources.Tables.embeddings(spark, sf)
+    val probed = (0L until 3L).flatMap { id =>
+      val q = emb.filter(col("vec_id") === id).select(col("embedding"))
+        .head().getSeq[Float](0).map(_.toDouble).toArray
+      graft.operators.Similarity.ivfPqSearchStored(spark, index, q, 2, 1000000)
+        .collect().map(_.getLong(1).toInt)
+    }.toSet
+    IndexScan.assertReadsOnlyCells(spark, df, index, probed)
   }
 
   test("p04: batch retrieval is query-count-invariant — no per-query corpus scans") {

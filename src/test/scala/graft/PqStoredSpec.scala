@@ -8,8 +8,8 @@ import graft.sources.Tables
 
 /** The stored-index contract for PQ search (the 100 TB scale shape):
   * the search half must read the CODES table — m bytes per vector —
-  * and never the embedding column; IVF probing must land as partition
-  * pruning on the cell directories; and both stored paths must be
+  * and never the embedding column; IVF probing must land as bucket
+  * pruning on the cell-bucketed codes table; and both stored paths must be
   * bit-identical to their inline (recompute-from-embeddings)
   * baselines.
   */
@@ -226,10 +226,11 @@ class PqStoredSpec extends AnyFunSuite {
     // no embedding anywhere in the read schema
     assert(plan.contains("codes"), plan)
     assert(!plan.contains("embedding"), s"search must not read embeddings:\n$plan")
-    // probing = partition pruning on the cell directories (the
-    // inverted lists): the scan carries a cell partition filter
-    assert(plan.contains("PartitionFilters") && plan.contains("cell"),
-      s"probe set must prune partitions:\n$plan")
+    // probing = bucket pruning on the cell-bucketed codes table (the
+    // inverted lists): the scan reads only the probed cells' buckets
+    val probes = Similarity.ivfPqSearchStored(spark, path, q, 3, 1000000)
+      .collect().map(_.getLong(1).toInt).toSet
+    IndexScan.assertReadsOnlyCells(spark, df, path, probes)
     // and the only exchange is the driver-side TakeOrdered collect —
     // a single zero-shuffle scan
     assert(!plan.contains("Exchange hashpartitioning"), plan)
@@ -249,6 +250,8 @@ class PqStoredSpec extends AnyFunSuite {
     import spark.implicits._
     val newVec = Seq((90000L, cent.map(_.toFloat).toSeq)).toDF("vec_id", "embedding")
       .select(col("vec_id"), col("embedding").cast("array<float>"))
+    val filesBefore = graft.sources.BucketedStore
+      .stats(spark, Similarity.indexTable(spark, path)).files
     Similarity.appendToIvfPqIndex(newVec, path)
     val df = Similarity.ivfPqSearchStored(spark, path, cent, 3, 10)
     val rows = df.collect()
@@ -261,10 +264,11 @@ class PqStoredSpec extends AnyFunSuite {
     assert(!plan.contains("embedding"), plan)
     assert(!plan.contains("Exchange hashpartitioning"), plan)
     // and the appended file landed as one MORE file in the cell-0
-    // inverted list, not a rewrite
-    val cell0 = new java.io.File(s"$path/codes/cell=0")
-      .listFiles().count(_.getName.endsWith(".parquet"))
-    assert(cell0 >= 2, s"expected appended file in cell=0, saw $cell0")
+    // inverted list (its bucket), not a rewrite
+    val table = Similarity.indexTable(spark, path)
+    assert(graft.sources.BucketedStore.stats(spark, table).files === filesBefore + 1)
+    assert(graft.sources.BucketedStore.stats(spark, table).filesPerBucket >= 2,
+      "expected the appended file beside the build's file in cell 0's bucket")
   }
 
   test("IVF-PQ compact: one file per cell directory, identical results") {
@@ -283,13 +287,10 @@ class PqStoredSpec extends AnyFunSuite {
     assert(before.exists(_._1 == 90000L), before.mkString(", "))
     Similarity.compactIvfPqIndex(spark, path)
     assert(search() === before)
-    val cellDirs = new java.io.File(s"$path/codes").listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("cell="))
-    assert(cellDirs.nonEmpty)
-    cellDirs.foreach { dir =>
-      val n = dir.listFiles().count(_.getName.endsWith(".parquet"))
-      assert(n === 1, s"${dir.getName}: $n files after compact")
-    }
+    // one file per inverted list: every bucket holds one file
+    val st = graft.sources.BucketedStore.stats(spark, Similarity.indexTable(spark, path))
+    assert(st.files > 0)
+    assert(st.filesPerBucket === 1, s"$st after compact")
   }
 
   test("IVF-PQ compaction crash states heal on the next append, no code rows lost") {
@@ -316,7 +317,7 @@ class PqStoredSpec extends AnyFunSuite {
       val fs = codes.getFileSystem(conf)
       val (tmpDir, oldDir) = graft.sources.BucketedStore.swapPaths(codes, "compact")
       crash(fs, codes, tmpDir, oldDir)
-      Similarity.appendToIvfPqIndexIdempotent(batch, path, 7L)
+      Similarity.appendToIvfPqIndex(batch, path)
       assert(!fs.exists(tmpDir) && !fs.exists(oldDir), s"$state: leftovers")
       assert(spark.read.parquet(s"$path/codes").count() === n + 20, state)
       Similarity.compactIvfPqIndex(spark, path)
@@ -363,6 +364,24 @@ class PqStoredSpec extends AnyFunSuite {
     Similarity.deleteFromIvfPqIndex(Seq(0L).toDF("vec_id"), flat)
     assert(!Similarity.pqSearchStored(spark, flat, q, 5)
       .collect().exists(_.getLong(0) == 0L))
+  }
+
+  test("IVF-PQ compaction of a fully tombstoned index: searches find nothing, a later append is found") {
+    val path = tmp("ivfpqallgone")
+    Similarity.writeIvfPqIndex(emb, path, 8, 16)
+    val cent = spark.read.parquet(s"$path/meta_cent")
+      .filter(col("cell") === 0).orderBy("pos").collect().map(_.getDouble(2))
+    Similarity.deleteFromIvfPqIndex(emb.select("vec_id"), path)
+    Similarity.compactIvfPqIndex(spark, path)
+    val table = Similarity.indexTable(spark, path)
+    assert(graft.sources.BucketedStore.stats(spark, table).files === 0,
+      "compaction must drop every tombstoned code row")
+    assert(Similarity.ivfPqSearchStored(spark, path, cent, 3, 10).count() === 0)
+    import spark.implicits._
+    val newVec = Seq((90000L, cent.map(_.toFloat).toSeq)).toDF("vec_id", "embedding")
+    Similarity.appendToIvfPqIndex(newVec, path)
+    assert(Similarity.ivfPqSearchStored(spark, path, cent, 3, 10)
+      .collect().map(_.getLong(0)).toSeq === Seq(90000L))
   }
 
   test("IVF-PQ delete past the broadcast ceiling: shuffle-hash fallback, codes-only, answers unchanged") {
@@ -421,21 +440,9 @@ class PqStoredSpec extends AnyFunSuite {
       Similarity.ivfPqSearchStored(spark, path, q, 2, 1000000)
         .collect().map(_.getLong(1))
     }.toSet
-    // the exchange makes this plan adaptive — unwrap AQE/stage nodes
-    // to reach the actual FileSourceScanExec
-    def scans(p: org.apache.spark.sql.execution.SparkPlan)
-        : Seq[org.apache.spark.sql.execution.FileSourceScanExec] = p match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        scans(a.executedPlan)
-      case s: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-        scans(s.plan)
-      case f: org.apache.spark.sql.execution.FileSourceScanExec => Seq(f)
-      case other => other.children.flatMap(scans)
-    }
-    val scan = scans(df.queryExecution.executedPlan).headOption
-      .getOrElse(fail("no file scan in batch stored search plan"))
-    assert(scan.selectedPartitions.partitionCount === probedUnion.size,
-      s"expected ${probedUnion.size} probed cells, scanned ${scan.selectedPartitions.partitionCount}")
+    // the exchange makes this plan adaptive — IndexScan unwraps
+    // AQE/stage nodes to reach the actual FileSourceScanExec
+    IndexScan.assertReadsOnlyCells(spark, df, path, probedUnion.map(_.toInt))
     // scale shape: one codes-only FileScan, generator fan-out (no
     // join), the only exchange is TopKPerKey's k×queries-bounded one
     val plan = df.queryExecution.executedPlan.toString
@@ -445,8 +452,6 @@ class PqStoredSpec extends AnyFunSuite {
     assert(!plan.contains("Join"), plan.take(3000))
     assert(plan.contains("Generate"), plan.take(3000))
     assert(plan.contains("TopKPerKey"), plan.take(3000))
-    assert(plan.contains("PartitionFilters") && plan.contains("cell"),
-      s"probe union must prune partitions:\n${plan.take(3000)}")
   }
 
   test("stored IVF-PQ reads only the probed cells' files") {
@@ -456,13 +461,12 @@ class PqStoredSpec extends AnyFunSuite {
       .head().getSeq[Float](0).map(_.toDouble).toArray
     val df = Similarity.ivfPqSearchStored(spark, path, q, 2, 10, excludeId = 0L)
     df.collect()
-    // the partitions actually selected by the executed scan: with
-    // nprobe=2, exactly 2 cell directories survive pruning (inputFiles
+    // the files the executed scan actually read: with nprobe=2,
+    // exactly the files of the 2 probed cells' buckets (inputFiles
     // would NOT do here — it lists the relation unpruned)
-    val scan = df.queryExecution.executedPlan.collectLeaves()
-      .collectFirst { case f: org.apache.spark.sql.execution.FileSourceScanExec => f }
-      .getOrElse(fail("no file scan in stored search plan"))
-    assert(scan.selectedPartitions.partitionCount == 2,
-      s"expected 2 probed cells, scanned ${scan.selectedPartitions.partitionCount}")
+    val probes = Similarity.ivfPqSearchStored(spark, path, q, 2, 1000000)
+      .collect().map(_.getLong(1).toInt).toSet
+    assert(probes.size === 2)
+    IndexScan.assertReadsOnlyCells(spark, df, path, probes)
   }
 }

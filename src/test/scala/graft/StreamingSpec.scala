@@ -579,6 +579,19 @@ class StreamingSpec extends AnyFunSuite {
     assert(streamed === batch && streamed.nonEmpty)
   }
 
+  /** Land `rows` as one (vec_id, embedding) parquet file `name` in a
+    * stream source directory. */
+  private def addVecFile(src: java.nio.file.Path, name: String,
+      rows: Seq[(Long, Seq[Float])]): Unit = {
+    import spark.implicits._
+    val stage = Files.createTempDirectory("graft-vec-stage")
+    rows.toDF("vec_id", "embedding").coalesce(1)
+      .write.mode("overwrite").parquet(stage.toString)
+    val part = new java.io.File(stage.toString).listFiles()
+      .find(_.getName.endsWith(".parquet")).get
+    Files.move(part.toPath, src.resolve(name))
+  }
+
   test("streaming ANN ingest: batch-2 vector searchable codes-only; batch replay doesn't double") {
     import spark.implicits._
     import graft.operators.Similarity
@@ -589,21 +602,11 @@ class StreamingSpec extends AnyFunSuite {
     val cent = spark.read.parquet(s"$path/meta_cent")
       .filter(col("cell") === 0).orderBy("pos").collect().map(_.getDouble(2))
 
-    def addFile(src: java.nio.file.Path, name: String,
-        rows: Seq[(Long, Seq[Float])]): Unit = {
-      val stage = Files.createTempDirectory("graft-istream-stage")
-      rows.toDF("vec_id", "embedding").coalesce(1)
-        .write.mode("overwrite").parquet(stage.toString)
-      val part = new java.io.File(stage.toString).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      Files.move(part.toPath, src.resolve(name))
-    }
-
     val src = Files.createTempDirectory("graft-istream-src")
     val ckpt = Files.createTempDirectory("graft-istream-ckpt").toString
     val b1Vec = emb.filter(col("vec_id") === 5L).select(col("embedding"))
       .head().getSeq[Float](0).toSeq
-    addFile(src, "b1.parquet", Seq(91000L -> b1Vec))
+    addVecFile(src, "b1.parquet", Seq(91000L -> b1Vec))
     val stream = spark.readStream
       .schema("vec_id LONG, embedding ARRAY<FLOAT>").parquet(src.toString)
     val q = graft.streaming.IndexStream.start(path, stream, ckpt)
@@ -611,7 +614,7 @@ class StreamingSpec extends AnyFunSuite {
       q.processAllAvailable()
       // micro-batch 2: the cell-0 centroid itself — must be found
       // FIRST by a centroid-query search as soon as the batch lands
-      addFile(src, "b2.parquet", Seq(92000L -> cent.map(_.toFloat).toSeq))
+      addVecFile(src, "b2.parquet", Seq(92000L -> cent.map(_.toFloat).toSeq))
       q.processAllAvailable()
     } finally q.stop()
     val df = Similarity.ivfPqSearchStored(spark, path, cent, 3, 10)
@@ -623,9 +626,9 @@ class StreamingSpec extends AnyFunSuite {
     assert(!plan.contains("embedding"), plan)
     assert(spark.read.parquet(s"$path/codes").count() === baseCodes + 2)
     // at-least-once replay: re-commit batch 0 with identical rows —
-    // the deterministic rename commit must converge, not append
-    Similarity.appendToIvfPqIndexIdempotent(
-      Seq(91000L -> b1Vec).toDF("vec_id", "embedding"), path, 0L)
+    // the codes table is its own replay guard, nothing lands twice
+    Similarity.appendToIvfPqIndex(
+      Seq(91000L -> b1Vec).toDF("vec_id", "embedding"), path)
     assert(spark.read.parquet(s"$path/codes").count() === baseCodes + 2)
     assert(Similarity.ivfPqSearchStored(spark, path, cent, 3, 10)
       .collect().head.getLong(0) === 92000L)
@@ -639,51 +642,83 @@ class StreamingSpec extends AnyFunSuite {
     Similarity.writeIvfPqIndex(emb, path, 8, 16)
     val cent = spark.read.parquet(s"$path/meta_cent")
       .filter(col("cell") === 0).orderBy("pos").collect().map(_.getDouble(2))
-    def cellFiles(): Map[String, Int] =
-      new java.io.File(s"$path/codes").listFiles()
-        .filter(f => f.isDirectory && f.getName.startsWith("cell="))
-        .map(d => d.getName ->
-          d.listFiles().count(_.getName.endsWith(".parquet"))).toMap
-    def addFile(src: java.nio.file.Path, name: String,
-        rows: Seq[(Long, Seq[Float])]): Unit = {
-      val stage = Files.createTempDirectory("graft-cad-stage")
-      rows.toDF("vec_id", "embedding").coalesce(1)
-        .write.mode("overwrite").parquet(stage.toString)
-      val part = new java.io.File(stage.toString).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      Files.move(part.toPath, src.resolve(name))
-    }
+    // the deepest bucket's file count: cell 0's bucket, which every
+    // batch below lands in
+    def depth(): Int = graft.sources.BucketedStore
+      .stats(spark, Similarity.indexTable(spark, path)).filesPerBucket
+    val baseCodes = spark.read.parquet(s"$path/codes").count()
     val src = Files.createTempDirectory("graft-cad-src")
     val ckpt = Files.createTempDirectory("graft-cad-ckpt").toString
-    // every batch lands in cell 0 (all rows are its centroid), so the
-    // cell-0 list grows one file per batch: 1 (base) → 2 → 3 (trips
-    // the >2 threshold) — compaction must fire ONCE, at batch 1
-    addFile(src, "b1.parquet", Seq(93001L -> cent.map(_.toFloat).toSeq))
+    // every batch lands in cell 0 (all rows are its centroid), so
+    // cell 0's bucket grows one file per batch: 1 (base) → 2 → 3
+    // (trips the >2 threshold) — compaction must fire ONCE, at batch 1
+    addVecFile(src, "b1.parquet", Seq(93001L -> cent.map(_.toFloat).toSeq))
     val stream = spark.readStream
       .schema("vec_id LONG, embedding ARRAY<FLOAT>").parquet(src.toString)
     val q = graft.streaming.IndexStream.start(path, stream, ckpt,
-      maxFilesPerCell = Some(2))
+      maxFilesPerBucket = Some(2))
     try {
       q.processAllAvailable()
-      assert(cellFiles()("cell=0") === 2, "below threshold: no compaction yet")
-      addFile(src, "b2.parquet", Seq(93002L -> cent.map(_.toFloat).toSeq))
-      q.processAllAvailable() // 3 files > 2 → compact, back to 1 per cell
-      assert(cellFiles().values.max === 1, s"compaction must collapse files: ${cellFiles()}")
-      addFile(src, "b3.parquet", Seq(93003L -> cent.map(_.toFloat).toSeq))
+      assert(depth() === 2, "below threshold: no compaction yet")
+      addVecFile(src, "b2.parquet", Seq(93002L -> cent.map(_.toFloat).toSeq))
+      q.processAllAvailable() // 3 files > 2 → compact, back to 1 per bucket
+      assert(depth() === 1, "compaction must collapse files")
+      addVecFile(src, "b3.parquet", Seq(93003L -> cent.map(_.toFloat).toSeq))
       q.processAllAvailable() // 2 files <= 2 → no second compaction
-      assert(cellFiles()("cell=0") === 2, s"no second compaction expected: ${cellFiles()}")
+      assert(depth() === 2, "no second compaction expected")
     } finally q.stop()
-    // exactly one compaction: the replay guard recorded batches 0+1
-    // (folded into the rewrite) and NOT batch 2 (landed after)
-    val folded = scala.io.Source.fromFile(s"$path/compacted_batches.txt")
-      .getLines().filter(_.nonEmpty).filterNot(_.startsWith("end:"))
-      .map(_.toLong).toSet
-    assert(folded === Set(0L, 1L), s"compacted batch ids: $folded")
+    // replaying batches 0 and 1 (folded into the compaction) and 2
+    // (landed after it) adds no code rows: the replay guard outlives
+    // the rewrite
+    assert(spark.read.parquet(s"$path/codes").count() === baseCodes + 3)
+    Seq(93001L, 93002L, 93003L).foreach { id =>
+      Similarity.appendToIvfPqIndex(
+        Seq(id -> cent.map(_.toFloat).toSeq).toDF("vec_id", "embedding"), path)
+      assert(spark.read.parquet(s"$path/codes").count() === baseCodes + 3, s"replayed $id")
+    }
     // results: all three streamed centroid copies rank at the top of a
     // centroid-query search, through append → compact → append
     val top = Similarity.ivfPqSearchStored(spark, path, cent, 3, 10)
       .collect().map(_.getLong(0)).take(3).toSet
     assert(top === Set(93001L, 93002L, 93003L), s"got $top")
+  }
+
+  test("streaming ANN ingest: a rebuild at a reused path is a new generation") {
+    import spark.implicits._
+    import graft.operators.Similarity
+    val emb = graft.sources.Tables.embeddings(spark, sf)
+    val path = Files.createTempDirectory("graft-ivfpq-regen").toString
+    // stream one batch into the index from a fresh checkpoint, with a
+    // one-file cadence: the batch's append trips a compaction
+    def streamOne(id: Long, v: Seq[Float]): Unit = {
+      val src = Files.createTempDirectory("graft-regen-src")
+      val ckpt = Files.createTempDirectory("graft-regen-ckpt").toString
+      addVecFile(src, "b0.parquet", Seq(id -> v))
+      val q = graft.streaming.IndexStream.start(path, spark.readStream
+        .schema("vec_id LONG, embedding ARRAY<FLOAT>").parquet(src.toString), ckpt, Some(1))
+      try q.processAllAvailable() finally q.stop()
+    }
+    Similarity.writeIvfPqIndex(emb, path, 8, 16)
+    val cent = spark.read.parquet(s"$path/meta_cent")
+      .filter(col("cell") === 0).orderBy("pos").collect().map(_.getDouble(2))
+    def top(q: Array[Double]) = Similarity.ivfPqSearchStored(spark, path, q, 3, 20)
+      .collect().map(_.getLong(0)).toSeq
+    streamOne(94001L, cent.map(_.toFloat).toSeq)
+    assert(top(cent).head === 94001L)
+    // rebuild, then a new stream's batch 0: the new generation takes
+    // it, whatever the old generation compacted
+    Similarity.writeIvfPqIndex(emb, path, 8, 16)
+    streamOne(94002L, cent.map(_.toFloat).toSeq)
+    assert(top(cent).head === 94002L, top(cent).mkString(", "))
+    assert(!top(cent).contains(94001L), "the rebuild replaced the old generation's codes")
+    // tombstones are per generation too
+    val q0 = emb.filter(col("vec_id") === 0L).select(col("embedding"))
+      .head().getSeq[Float](0).map(_.toDouble).toArray
+    assert(top(q0).contains(0L))
+    Similarity.deleteFromIvfPqIndex(Seq(0L).toDF("vec_id"), path)
+    assert(!top(q0).contains(0L))
+    Similarity.writeIvfPqIndex(emb, path, 8, 16)
+    assert(top(q0).contains(0L), "a rebuild must not inherit the old generation's tombstones")
   }
 
   test("streaming heavy hitters: MG guarantee holds across batches, fold cadence bounds the store") {
