@@ -34,6 +34,8 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    System.err.println(f"[verify] codegen: ${Codegen.compiles()}%d classes " +
+      f"compiled in ${Codegen.compileSeconds()}%.1f s")
     spark.stop()
   }
 }

@@ -127,9 +127,13 @@ class PlanGuardSpec extends AnyFunSuite {
   }
 
   /** Main sources whose text matches every one of `res`. */
-  private def sitesOf(res: scala.util.matching.Regex*): Set[String] = {
+  private def sitesOf(res: scala.util.matching.Regex*): Set[String] =
+    sitesIn("src/main/scala", res: _*)
+
+  /** Sources under `root` whose text matches every one of `res`. */
+  private def sitesIn(root: String, res: scala.util.matching.Regex*): Set[String] = {
     import scala.jdk.CollectionConverters._
-    java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    java.nio.file.Files.walk(java.nio.file.Paths.get(root))
       .iterator().asScala
       .filter(_.toString.endsWith(".scala"))
       .filter { p =>
@@ -162,6 +166,15 @@ class PlanGuardSpec extends AnyFunSuite {
       "the codes table is its own replay guard (BucketedStore.unseen), no compacted-batches sidecar")
     assert(sitesOf("""/tombstones"""".r) === Set.empty,
       "every index delete goes through BucketedStore.delete, no path tombstone sidecar")
+  }
+
+  test("one session factory: every graft JVM builds its session through GraftSession") {
+    val builder = """SparkSession\s*\.\s*builder\b""".r
+    assert(Seq("src/main/scala", "src/test/scala", "perfbench/src/main/scala")
+      .flatMap(sitesIn(_, builder)).toSet ===
+      Set("src/main/scala/graft/GraftSession.scala"),
+      "a session built elsewhere misses GraftSession's confs, the codegen " +
+        "cache size among them (a static conf: the first session decides it)")
   }
 
   test("one BM25 scorer: its constants appear only in Search") {
