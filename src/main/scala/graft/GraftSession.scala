@@ -19,6 +19,14 @@ import org.apache.spark.sql.SparkSession
   * it takes effect only if it is on the builder of the JVM's first
   * session, before anything compiles. Every graft JVM (tests, Verify,
   * Plans, the tools, the benchmark harness) builds its session here.
+  *
+  * Local files go through [[graft.sources.GraftLocalFileSystem]] (and
+  * [[graft.sources.GraftLocalFs]] for `FileContext`): Hadoop's local
+  * filesystem forks a `chmod` child process for every file and
+  * directory it creates when libhadoop is absent; these set the same
+  * permission bits through `java.nio`. Hadoop caches one `file:`
+  * filesystem per JVM, so one made before the JVM's first session
+  * keeps Hadoop's class.
   */
 object GraftSession {
 
@@ -65,6 +73,10 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      .config("spark.hadoop.fs.file.impl",
+        classOf[graft.sources.GraftLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[graft.sources.GraftLocalFs].getName)
 
   def local(cores: Int = 32): SparkSession = {
     val s = builder(s"local[$cores]", cores).getOrCreate()

@@ -132,7 +132,9 @@ object Plans {
       "(`spark.sql.files.maxPartitionBytes` = 64k), as at scale; in an interactive " +
       "(Relational, SqlMatrix) query a table read as one split plans as a single " +
       "partition with no exchange above it. Expression ids, lambda variables " +
-      "and plan ids are renumbered per plan in first-seen order.\n")
+      "and plan ids are renumbered per plan in first-seen order; the stored " +
+      "indexes' per-JVM root and the table name digested from it print as " +
+      "`run_<jvm>` and `graft_index_<digest>`.\n")
     picks.foreach { case (name, why) =>
       val df = SparkEntry.queries(name)(spark, sfDir)
       sb.append(s"\n## $name\n\n$why\n\n```\n${shown(df)}\n```\n")
@@ -233,8 +235,10 @@ object Plans {
 
   /** The AQE final plan of `df`, run first, as one section shows it:
     * expression ids (`#1071`), lambda-variable suffixes (`x_12`) and
-    * plan ids renumbered in first-seen order and JVM lambda class names
-    * stripped of their per-run suffix, so a regeneration differs only
+    * plan ids renumbered in first-seen order, JVM lambda class names
+    * stripped of their per-run suffix, and the stored indexes' per-JVM
+    * root (`graft_idx/run_<pid>_<hex>`) and the catalog name digested
+    * from it printed as placeholders, so a regeneration differs only
     * where a plan changed; lines capped at 400 characters (large
     * literals — the d20 bloom is numBits/8 bytes of hex — would
     * otherwise dump megabytes into the evidence). */
@@ -254,6 +258,8 @@ object Plans {
     renumber(exprs, """(plan_id=)(\d+)""".r, (_, i) => s"plan_id=$i")
       .replaceAll("""\$Lambda\$\d+/0x\p{XDigit}+@\p{XDigit}+""",
         java.util.regex.Matcher.quoteReplacement("$Lambda"))
+      .replaceAll("""/graft_idx/run_\d+_\p{XDigit}+""", "/graft_idx/run_<jvm>")
+      .replaceAll("""graft_index_\p{XDigit}{64}""", "graft_index_<digest>")
       .linesIterator.map(l => if (l.length > 400) l.take(400) + "…<truncated>" else l)
       .mkString("\n")
   }

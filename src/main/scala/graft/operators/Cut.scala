@@ -19,13 +19,12 @@ import org.apache.spark.sql.{DataFrame, GraftBridge}
   * the same dial — set one checkpoint dir and every cut in the repo
   * becomes fault-tolerant.
   *
-  * The cut frame's size estimate is capped
-  * ([[org.apache.spark.sql.GraftBridge.capCheckpointStats]]), so the
-  * estimates of an iterative loop's rounds do not compound.
+  * A cut frame reports the bytes the materializing job measured
+  * ([[org.apache.spark.sql.GraftBridge.cut]]), so the static planner
+  * broadcasts a batch-sized cut and an iterative loop's estimates do
+  * not compound from round to round.
   */
 private[graft] object Cut {
-  def apply(df: DataFrame): DataFrame = GraftBridge.capCheckpointStats(
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-      df.checkpoint(eager = true)
-    else df.localCheckpoint(true))
+  def apply(df: DataFrame): DataFrame =
+    GraftBridge.cut(df, df.sparkSession.sparkContext.getCheckpointDir.isDefined)
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -96,11 +96,18 @@ object Search {
     * next contamination audit sees them). Each append writes at most
     * one file per bucket: reads stay bucketed (per-bucket sort, never
     * a shuffle); compact on cadence. Replay-safe
-    * ([[BucketedStore.unseen]] against the registry): docs it already
-    * holds are skipped, and tombstoned ids stay dead.
+    * ([[BucketedStore.unseen]] against the registry, evaluated once and
+    * cut, so both appends write the same docs): docs it already holds
+    * are skipped, and tombstoned ids stay dead. The registry is
+    * appended last; a crash between the two appends replays the batch's
+    * postings a second time, as exact duplicate rows. Ranked search
+    * ignores them (its tf counts distinct positions), and so do
+    * conjunctive and phrase search (they count distinct words and
+    * slots); [[proximitySearch]] counts each duplicate pair, until
+    * [[compactPostingsStore]] drops the duplicates.
     */
   def appendToPostingsStore(batch: DataFrame, table: String): Unit = {
-    val fresh = BucketedStore.unseen(batch.sparkSession, batch, s"${table}_docs", table)
+    val fresh = Cut(BucketedStore.unseen(batch.sparkSession, batch, s"${table}_docs", table))
     BucketedStore.append(postings(fresh), table)
     BucketedStore.append(fresh.select(col("doc_id"), docLen), s"${table}_docs")
   }
@@ -144,7 +151,7 @@ object Search {
     */
   def bm25Rank(postings: DataFrame, doclens: DataFrame,
       terms: Seq[String], k: Int): DataFrame =
-    rank(postings, doclens, terms, k, withDocFreq(_, "word"))
+    rank(postings, doclens, terms, k, count(lit(1)), withDocFreq(_, "word"))
 
   /** Ranked retrieval SERVED FROM the maintained store: the postings
     * side bucket-prunes to the query terms' buckets, the registry
@@ -153,19 +160,24 @@ object Search {
     * with no rebuild. The store buckets on word, so df is a per-word
     * count over the scan's own partitioning: no exchange, and the
     * postings are read once. Query cost ∝ the query terms' posting
-    * lists + one slim registry pass, never corpus postings size.
+    * lists + one slim registry pass, never corpus postings size. tf
+    * counts distinct positions, so the duplicate postings a replayed
+    * append leaves ([[appendToPostingsStore]]) count once; the scan's
+    * word partitioning makes that free of an exchange too.
     */
   def rankedSearch(spark: SparkSession, table: String,
       terms: Seq[String], k: Int): DataFrame =
     rank(readPostings(spark, table),
       BucketedStore.read(spark, s"${table}_docs", table), terms, k,
+      countDistinct(col("pos")),
       _.withColumn("df", count(lit(1)).over(Window.partitionBy(col("word")))))
 
   private def rank(postings: DataFrame, doclens: DataFrame,
-      terms: Seq[String], k: Int, docFreq: DataFrame => DataFrame): DataFrame = {
+      terms: Seq[String], k: Int, tfOf: Column,
+      docFreq: DataFrame => DataFrame): DataFrame = {
     require(terms.nonEmpty && k >= 1, "need terms and k >= 1")
     val tf = postings.filter(col("word").isin(terms: _*))
-      .groupBy(col("doc_id"), col("word")).agg(count(lit(1)).as("tf"))
+      .groupBy(col("doc_id"), col("word")).agg(tfOf.as("tf"))
     bm25Partials(docFreq(tf), doclens, "doc_id", "word")
       .groupBy(col("doc_id")).agg(sum(col("ts")).as("sdec"))
       .select(col("doc_id"), round(col("sdec").cast("double"), 6).as("bm25"))
@@ -184,12 +196,15 @@ object Search {
   private def postingsTables(table: String) = Seq(table, s"${table}_docs")
 
   /** Compact back to ONE sorted file per bucket (postings and
-    * registry), dropping tombstoned rows physically —
-    * [[BucketedStore.compact]]: the catalog entries and the postings'
-    * build path stay the store's identity.
+    * registry), dropping tombstoned rows and the exact duplicate
+    * postings a replayed append left ([[appendToPostingsStore]])
+    * physically — [[BucketedStore.rewrite]]: the catalog entries and the
+    * postings' build path stay the store's identity.
     */
-  def compactPostingsStore(spark: SparkSession, table: String): Unit =
-    postingsTables(table).foreach(BucketedStore.compact(spark, _, table))
+  def compactPostingsStore(spark: SparkSession, table: String): Unit = {
+    BucketedStore.rewrite(spark, table, readPostings(spark, table).distinct())
+    BucketedStore.compact(spark, s"${table}_docs", table)
+  }
 
   /** Self-triggering compaction cadence ([[BucketedStore.maybeCompact]]):
     * compact when either store table's deepest bucket exceeds

@@ -14,13 +14,14 @@ import org.apache.spark.sql.functions._
   * zero exchange, and key predicates prune to the buckets holding the
   * keys.
   *
-  *  - ONE WRITE PATH. Create, append and compaction all repartition on
-  *    the writer's own bucket id, `pmod(hash(key), n)`, before
+  *  - ONE WRITE PATH. Create, compaction and large appends repartition
+  *    on the writer's own bucket id, `pmod(hash(key), n)`, before
   *    `bucketBy`: equal ids land in one task, so every bucket's rows of
   *    one write come from exactly one task and one write lands at most
   *    one (sorted) file per bucket. Repartitioning on the raw key does
   *    NOT task-align with bucketBy on Spark 4 — same-bucket keys split
-  *    across tasks and one append lands tasks × buckets files.
+  *    across tasks and one append lands tasks × buckets files. A
+  *    batch-sized append is one task, aligned by construction.
   *  - THE CATALOG KNOWS THE LAYOUT. Bucket count, bucket column, sort
   *    columns and location come from the table's catalog entry, so no
   *    caller re-supplies what the table already knows.
@@ -40,7 +41,7 @@ import org.apache.spark.sql.functions._
 object BucketedStore {
   /** A bucketed table's layout, from its catalog entry. */
   final case class Layout(buckets: Int, key: String, sortCols: Seq[String],
-      location: Path)
+      location: Path, columns: Seq[String])
 
   /** Store health: data files, their bytes, the bucket count and the
     * deepest bucket's file count (the append depth since the last
@@ -54,7 +55,7 @@ object BucketedStore {
     require(spec.bucketColumnNames.size == 1,
       s"$table: stores bucket on one column, got ${spec.bucketColumnNames}")
     Layout(spec.numBuckets, spec.bucketColumnNames.head, spec.sortColumnNames,
-      new Path(meta.location))
+      new Path(meta.location), meta.schema.fieldNames.toSeq)
   }
 
   private def fsOf(spark: SparkSession, p: Path): FileSystem =
@@ -100,10 +101,24 @@ object BucketedStore {
   }
 
   /** Append rows to a store table (its own layout, one file per bucket
-    * at most). */
+    * at most). An input estimated at no more than the largest shuffle
+    * adaptive execution coalesces into one partition
+    * ([[GraftBridge.onePartitionShuffleBytes]], 1 MB on a multi-core
+    * session under Spark's defaults) is written by ONE task with no
+    * exchange: the aligned write would run as one write task too, and
+    * one task's writer sorts its rows by bucket id, so it lands the same
+    * one sorted file per bucket without the exchange's jobs. The narrow
+    * work under the write (posexplode, PQ coding) runs in that task as
+    * well; up to the bound it is no slower than the aligned write's
+    * parallel map side (`graft.AppendSizing`, test scope). Larger inputs
+    * take the aligned write. */
   def append(df: DataFrame, table: String): Unit = {
-    val l = open(df.sparkSession, table, writer = true)
-    write(df, table, SaveMode.Append, l.buckets, l.key, l.sortCols, None)
+    val spark = df.sparkSession
+    val l = open(spark, table, writer = true)
+    if (df.queryExecution.optimizedPlan.stats.sizeInBytes <=
+        GraftBridge.onePartitionShuffleBytes(spark))
+      df.select(l.columns.map(col): _*).coalesce(1).write.insertInto(table)
+    else write(df, table, SaveMode.Append, l.buckets, l.key, l.sortCols, None)
   }
 
   /** The table's current rows, no tombstone filter. The refresh matters:

@@ -3,7 +3,8 @@ package graft
 import java.nio.file.Files
 
 import org.apache.hadoop.fs.{FileUtil, Path}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftBridge}
+import org.apache.spark.sql.execution.SparkPlanInfo
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -11,10 +12,12 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{Dedup, Search}
 import graft.sources.{BucketedStore, Sinks}
 
-/** The shared bucketed-store contract: aligned writes land at most one
-  * file per bucket, a compaction interrupted at any point heals on the
-  * next store operation with answers unchanged, and the catalog's sort
-  * spec survives append + compaction.
+/** The shared bucketed-store contract: a batch-sized append is one
+  * write task and larger writes are aligned, so either lands at most one
+  * file per bucket; a compaction interrupted at any point heals on the
+  * next store operation with answers unchanged; a replayed postings
+  * append changes no answer; and the catalog's sort spec survives
+  * append + compaction.
   */
 class BucketedStoreSpec extends AnyFunSuite {
   private lazy val spark = GraftTestSession.spark
@@ -43,25 +46,124 @@ class BucketedStoreSpec extends AnyFunSuite {
     Seq(s"${sig}_bands", s"${sig}_shingles", post, s"${post}_docs")
       .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
 
-  test("one append adds at most `buckets` files per store table") {
-    val post = Files.createTempDirectory("graft-bs-a").toString + "/post"
+  /** Plans of executions that wrote a file-source table. */
+  private def writes(run: JobProbe.Run): Seq[SparkPlanInfo] =
+    run.last.filter(JobProbe.nodes(_).exists(_.nodeName.startsWith("Execute InsertInto")))
+
+  /** Build the signature and postings stores on four buckets, run `body`,
+    * and check every store table gained at most one file per bucket. */
+  private def appendEpisode(tag: String)(body: (String, String) => Unit): Unit = {
+    val (sig, post) = (s"${tag}_sig", s"${tag}_post")
+    val path = Files.createTempDirectory("graft-bs-a").toString + "/post"
     try {
-      Dedup.writeSignatureStore(df(seedDocs), "bsa_sig", 4)
-      Search.writePostingsStore(df(seedDocs), post, "bsa_post", nBuckets = 4)
-      val tables = Seq("bsa_sig_bands", "bsa_sig_shingles", "bsa_post", "bsa_post_docs")
+      Dedup.writeSignatureStore(df(seedDocs), sig, 4)
+      Search.writePostingsStore(df(seedDocs), path, post, nBuckets = 4)
+      val tables = Seq(s"${sig}_bands", s"${sig}_shingles", post, s"${post}_docs")
       def files() = tables.map(t => t -> BucketedStore.stats(spark, t).files).toMap
       val before = files()
-      // a four-partition batch: unaligned, each task writes its own
-      // file for every bucket it holds rows of
-      Dedup.signatureStore("bsa_sig", 0.5).ingest(spark, df(batch1))
-      Search.appendToPostingsStore(df(batch1), "bsa_post")
+      body(sig, post)
       val after = files()
       for (t <- tables) {
         val added = after(t) - before(t)
         assert(added > 0 && added <= 4, s"$t: one append added $added files for 4 buckets")
         assert(BucketedStore.stats(spark, t).filesPerBucket <= 2, t)
       }
-    } finally dropAll("bsa_sig", "bsa_post")
+    } finally dropAll(sig, post)
+  }
+
+  test("one append adds at most `buckets` files per store table") {
+    appendEpisode("bsa") { (sig, post) =>
+      // a four-partition batch, batch-sized: each table's append is one
+      // write task, with no exchange between the batch and the writer
+      val run = JobProbe(spark) {
+        Dedup.signatureStore(sig, 0.5).ingest(spark, df(batch1))
+        Search.appendToPostingsStore(df(batch1), post)
+      }
+      val ws = writes(run)
+      assert(ws.size === 4, "one write per store table")
+      for (w <- ws) assert(!JobProbe.nodes(w).exists(_.nodeName == "Exchange"),
+        s"a batch-sized append plans no shuffle exchange: ${w.simpleString}")
+      val writeStages = run.stages.filter(_.recordsWritten > 0)
+      assert(writeStages.map(_.tasks) === Seq(1, 1, 1, 1), "each append is one write task")
+    }
+  }
+
+  test("an append estimated above the one-partition shuffle size keeps the aligned exchange") {
+    val key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+    appendEpisode("bsx") { (sig, post) =>
+      spark.conf.set(key, "1")
+      val run = try JobProbe(spark) {
+        Dedup.signatureStore(sig, 0.5).ingest(spark, df(batch1))
+        Search.appendToPostingsStore(df(batch1), post)
+      } finally spark.conf.unset(key)
+      val ws = writes(run)
+      assert(ws.size === 4, "one write per store table")
+      for (w <- ws) assert(JobProbe.nodes(w).exists(n => n.nodeName == "Exchange" &&
+        n.simpleString.contains("pmod(hash(")), "the aligned write's bucket-id exchange")
+    }
+  }
+
+  test("the one-task gate is the largest shuffle adaptive execution keeps in one partition") {
+    val key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+    spark.conf.set(key, "64k")
+    try {
+      val gate = GraftBridge.onePartitionShuffleBytes(spark)
+      assert(gate === 64 * 1024, "a multi-core session under parallelismFirst")
+      /** Bytes an exchange of `n` hash strings shuffled (repartitioned
+        * on a column, as the aligned write is), and the tasks that read
+        * them after adaptive coalescing. */
+      def shuffle(n: Int): (Long, Int) = {
+        val run = JobProbe(spark) {
+          spark.range(n).select(sha2(col("id").cast("string"), 512).as("h"))
+            .repartition(col("h")).collect()
+        }
+        (run.stages.map(_.shuffleWriteBytes).sum,
+          run.stages.filter(_.shuffleWriteBytes == 0).last.tasks)
+      }
+      val (small, smallTasks) = shuffle(200)
+      val (large, largeTasks) = shuffle(4000)
+      assert(small <= gate && large > 2 * gate, s"shuffles of $small and $large bytes")
+      assert(smallTasks === 1 && largeTasks > 1, s"$smallTasks and $largeTasks read tasks")
+    } finally spark.conf.unset(key)
+  }
+
+  test("a postings append replayed after its postings landed changes no search; compaction drops the duplicates") {
+    val words = batch1.head._2.split(" ")
+    val terms = words.take(3).toSeq
+    val phrase = words.slice(4, 7).toSeq
+    /** The store after batch 1, with its postings landed twice when
+      * `crashed` (the first attempt died before its registry commit). */
+    def store(tag: String, crashed: Boolean): String = {
+      val post = s"bsr_${tag}_post"
+      val path = Files.createTempDirectory("graft-bs-r").toString + "/post"
+      Search.writePostingsStore(df(seedDocs), path, post, nBuckets = 4)
+      if (crashed) BucketedStore.append(Search.postings(df(batch1)), post)
+      Search.appendToPostingsStore(df(batch1), post)
+      post
+    }
+    def answers(post: String) = (
+      Search.rankedSearch(spark, post, terms, 10).collect().toSeq,
+      Search.conjunctiveSearch(Search.readPostings(spark, post), terms)
+        .collect().map(_.getLong(0)).toSet,
+      Search.phraseSearch(Search.readPostings(spark, post), phrase)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toSet)
+    def rows(post: String) = Search.readPostings(spark, post).count()
+    // proximity counts each duplicate pair until compaction drops them
+    def near(post: String) = Search.proximitySearch(Search.readPostings(spark, post),
+      terms.distinct(0), terms.distinct(1), 30).collect().toSet
+    try {
+      val (clean, crashed) = (store("clean", crashed = false), store("crash", crashed = true))
+      val batchPostings = Search.postings(df(batch1)).count()
+      assert(rows(crashed) === rows(clean) + batchPostings, "the replay landed the postings twice")
+      val want = answers(clean)
+      assert(want._1.nonEmpty && want._2.contains(100L) && want._3.contains(100L -> 1L), want)
+      assert(answers(crashed) === want)
+      assert(near(clean).nonEmpty && near(crashed) != near(clean))
+      Search.compactPostingsStore(spark, crashed)
+      assert(rows(crashed) === rows(clean))
+      assert(answers(crashed) === want)
+      assert(near(crashed) === near(clean))
+    } finally Seq("clean", "crash").foreach(t => dropAll("bsr_none", s"bsr_${t}_post"))
   }
 
   /** Build both stores from the seed corpus and ingest batch 1; `crash`

@@ -40,4 +40,30 @@ class CutSpec extends AnyFunSuite {
     j.collect()
     assert(j.queryExecution.executedPlan.toString.contains("BroadcastHashJoin"))
   }
+
+  test("a cut frame reports the bytes its job measured, and a projection keeps them") {
+    // a join's estimate is the product of its sides'; the cut's is
+    // its 100 rows of two longs (8-byte null bitset + 2 × 8 bytes)
+    val joined = (0L until 100L).toDF("k")
+      .join((0L until 100L).toDF("k").select(col("k"), (col("k") * 2).as("v")), "k")
+    def measured() = {
+      val st = Cut(joined).queryExecution.optimizedPlan.stats
+      (st.rowCount, st.sizeInBytes)
+    }
+    assert(measured() === (None, BigInt(100 * 24)), "local cut")
+    val sc = spark.sparkContext
+    sc.setCheckpointDir(java.nio.file.Files.createTempDirectory("graft-cut").toString)
+    try assert(measured() === (None, BigInt(100 * 24)), "reliable cut")
+    finally sc.setCheckpointDir(null)
+    assert(Cut(joined.filter(col("k") < 0)).queryExecution.optimizedPlan.stats.sizeInBytes ===
+      BigInt(1), "an empty cut")
+    // 100 strings of 1000 characters: a same-width projection keeps the
+    // measured bytes (with a row count, cost-based estimation would
+    // size it as 100 rows × a 20-byte default string)
+    val text = Cut((0L until 100L).toDF("k").select(col("k"), repeat(lit("x"), 1000).as("s")))
+    val size = text.queryExecution.optimizedPlan.stats.sizeInBytes
+    assert(size >= 100 * 1000)
+    assert(text.select(col("s"), (col("k") + 1).as("k1"))
+      .queryExecution.optimizedPlan.stats.sizeInBytes === size)
+  }
 }

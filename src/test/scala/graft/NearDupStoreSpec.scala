@@ -2,13 +2,8 @@ package graft
 
 import java.nio.file.Files
 
-import scala.collection.concurrent.TrieMap
-
-import org.apache.spark.GraftSparkBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlanInfo
-import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Dedup, MediaDedup, NearDupStore}
@@ -30,23 +25,8 @@ class NearDupStoreSpec extends AnyFunSuite {
 
   /** Scans of the parquet files at `path` while `body` runs, read from
     * the final physical plan of every SQL execution it starts. */
-  private def scansOf(path: String)(body: => Unit): Int = {
-    val plans = TrieMap.empty[Long, SparkPlanInfo]
-    val l = new SparkListener {
-      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case s: SparkListenerSQLExecutionStart => plans(s.executionId) = s.sparkPlanInfo
-        case u: SparkListenerSQLAdaptiveExecutionUpdate => plans(u.executionId) = u.sparkPlanInfo
-        case _ =>
-      }
-    }
-    GraftSparkBridge.waitListenerBus(spark.sparkContext, 10000)
-    spark.sparkContext.addSparkListener(l)
-    try {
-      body
-      GraftSparkBridge.waitListenerBus(spark.sparkContext, 10000)
-      plans.values.map(scans(_, path)).sum
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
+  private def scansOf(path: String)(body: => Unit): Int =
+    JobProbe(spark)(body).last.map(scans(_, path)).sum
 
   /** `batch` written to parquet and read back: the path ingest scans. */
   private def onDisk(batch: DataFrame): (DataFrame, String) = {

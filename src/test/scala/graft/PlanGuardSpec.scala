@@ -177,6 +177,19 @@ class PlanGuardSpec extends AnyFunSuite {
         "cache size among them (a static conf: the first session decides it)")
   }
 
+  test("one session factory: local files go through graft's in-process-chmod filesystem") {
+    val conf = spark.sparkContext.getConf
+    assert(conf.get("spark.hadoop.fs.file.impl") ===
+      classOf[graft.sources.GraftLocalFileSystem].getName)
+    assert(conf.get("spark.hadoop.fs.AbstractFileSystem.file.impl") ===
+      classOf[graft.sources.GraftLocalFs].getName)
+    val hadoopConf = spark.sparkContext.hadoopConfiguration
+    assert(org.apache.hadoop.fs.FileSystem.get(new java.net.URI("file:///"), hadoopConf)
+      .isInstanceOf[graft.sources.GraftLocalFileSystem],
+      "Hadoop caches one file: filesystem per JVM: a Hadoop filesystem made " +
+        "before the first session forks chmod for every file it creates")
+  }
+
   test("one BM25 scorer: its constants appear only in Search") {
     assert(sitesOf("""lit\(2\.2\)""".r, """lit\(0\.75\)""".r) ===
       Set("src/main/scala/graft/operators/Search.scala"),

@@ -1,9 +1,11 @@
 package graft
 
+import org.apache.spark.sql.execution.SparkPlanInfo
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.GraftTestSession.multiSplit
+import graft.operators.Dedup
 
 /** Plan-shape assertions: the optimizations keenwa implements as
   * rules must actually fire in Catalyst for graft's plans — predicate
@@ -391,5 +393,33 @@ class PlanSpec extends AnyFunSuite {
     assert(cbo != literal, s"CBO did not reorder the join (still $cbo)")
     assert(cbo.indexOf("cbo_customer") < cbo.indexOf("cbo_lineitem"),
       s"the filtered dimension should join before the fact table: $cbo")
+  }
+
+  test("labeled ingest: joins between cut frames plan as static broadcast hash joins") {
+    import spark.implicits._
+    val base = "the quick brown fox jumps over the lazy dog while rain falls on the quiet hills"
+    val near = "the quick brown fox jumps over the lazy dog while snow falls on the quiet hills"
+    val fresh = "crimson dawn breaks over silver rivers while fishermen cast their woven nets"
+    val corpus = Seq(1L -> base).toDF("doc_id", "text")
+    Dedup.writeSignatureStore(corpus, "pscut", 4)
+    Dedup.writeLabelStore(corpus, "pscut", 0.5, 4)
+    try {
+      val run = JobProbe(spark) {
+        Dedup.signatureStore("pscut", 0.5)
+          .ingestLabeled(spark, Seq(10L -> near, 11L -> fresh).toDF("doc_id", "text")).collect()
+      }
+      // a join whose inputs are all cut frames (the classification,
+      // attach, label and batch frames): sized by their measured rows,
+      // so the static plan already broadcasts, before any stage runs
+      def leaves(p: SparkPlanInfo): Seq[String] =
+        if (p.children.isEmpty) Seq(p.nodeName) else p.children.flatMap(leaves)
+      val cutJoins = run.initial.flatMap(JobProbe.nodes).filter { n =>
+        n.nodeName.endsWith("Join") && leaves(n).forall(_ == "Scan ExistingRDD")
+      }
+      assert(cutJoins.nonEmpty)
+      assert(cutJoins.forall(_.nodeName == "BroadcastHashJoin"),
+        cutJoins.map(_.simpleString).mkString("\n"))
+    } finally Seq("_bands", "_shingles", "_labels", "_remap", "_tombstones")
+      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS pscut$t"))
   }
 }
